@@ -1,33 +1,37 @@
-"""Batch graph analytics on DataFrames: PageRank and triangle counting.
+"""Batch graph analytics on DataFrames, run as Pregel supersteps.
 
-The north-star approach for this engine is "GraphX/Pregel for graph
-analytics" — connected components (operators.connected_components)
-covers the entity-resolution closure; this module adds the two other
-canonical batch analytics in the same DataFrame message-passing shape:
+The reference hands these algorithms to Neo4j; here each is a
+DataFrame message-passing loop — scatter is an edges⋈vector join,
+combine a groupBy, apply a join back onto the vertex state — with a
+fixed round count (or an exact convergence witness) so every result is
+deterministic and SQL-oracle-able.  Operator families:
 
-- ``pagerank``: fixed-iteration power method.  Each iteration is one
-  edges⋈ranks join (messages = rank/outdeg), one groupBy(dst) sum
-  (combine), one left join back onto the node set (apply + dangling
-  default) — exactly Pregel's superstep as two shuffles.  Fixed
-  iteration count keeps it deterministic and SQL-oracle-able.
-- ``triangle_count``: the o1<o2<o3 wedge-closing 3-way self-join; the
-  ordered predicate counts each triangle exactly once and keeps the
-  join from enumerating permutations.
+- rank vectors: ``pagerank``, ``personalized_pagerank`` (one shared
+  power-iteration loop) and ``hits``;
+- communities: ``label_propagation``, ``louvain_refine_pass``;
+- cohesion: ``triangle_count``, ``k_core``, ``k_truss``;
+- distances and paths: ``bfs_distances``, ``multi_source_bfs``,
+  ``shortest_path_counts`` and ``brandes_dependencies`` (one shared
+  forward-σ layer loop);
+- directed structure: ``strongly_connected_components``.
 
-Scale notes (100 TB): PageRank shuffles scale with |E| per iteration;
-pre-partitioning edges by src lets every iteration reuse the layout
-(one exchange, not two).  Triangle counting's worst case is the
-hub-node wedge blow-up — the standard mitigation (degree-ordered
-orientation: orient every edge low-degree→high-degree) is what the
-o1<o2<o3 id ordering approximates on this fixture.
+Connected components live in ``operators.connected_components``.  The
+scatter-key edge cache, the edge-weight guard and the node-set rule
+are shared by every loop via ``operators.superstep``.
+
+Superstep materialization (the GraphX Pregel pattern): each round's
+iterated frame is localCheckpointed, so round r never re-derives the
+base graph through r levels of joins.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .superstep import node_set, positive_weights, scatter_cache
 
 
 def symmetric_edges(pairs: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -38,50 +42,77 @@ def symmetric_edges(pairs: DataFrame, src: str = "src", dst: str = "dst") -> Dat
     return fwd.unionByName(rev)
 
 
-def _hoisted_edge_frame(
-    edges: DataFrame, weight: str | None
-) -> tuple[DataFrame, DataFrame]:
-    """(hoisted_edges, deg): the iteration-invariant superstep input
-    shared by ``pagerank`` and ``personalized_pagerank`` (r5, measured
-    g25 6.7 → 3.4 s, g24 ~4.9 → 3.8 s at sf0.1).
+def _rank_loop(
+    edges: DataFrame,
+    nodes: DataFrame,
+    weight: str | None,
+    teleport: Column,
+    n_iter: int,
+    damping: float,
+    redistribute: bool,
+) -> DataFrame:
+    """(*nodes' columns, has_out, rank) after ``n_iter`` rounds of
+    rank' = (1−d)·t + d·(Σ msgs + dm·t) — the power iteration shared by
+    ``pagerank`` (t = 1/n) and ``personalized_pagerank`` (t = the seed
+    vector).  Messages are rank·w/Σw(out); dm is the summed rank of
+    nodes without out-edges when ``redistribute`` is set (restarted
+    along t, so total mass stays 1), else 0 (their mass leaks).
+    ``teleport`` is also the initial rank.
 
-    The (weighted) out-degree is static across iterations, so it is
-    folded into the edge frame ONCE instead of a second per-iteration
-    join, and the frame is pre-partitioned on the scatter key (``src``)
-    so every iteration's edges⋈ranks join reuses that layout — only the
-    |V| rank vector shuffles per round, never the |E| side.
+    Iteration-invariant work is hoisted OUT of the loop (r5, measured
+    g25 6.7 → 3.4 s, g24 ~4.9 → 3.8 s at sf0.1): the (weighted)
+    out-degree is static, so it is folded into the cached edge frame
+    ONCE instead of a second per-iteration join; and the dangling-mass
+    reduction reads a precomputed has_out flag carried on the rank
+    vector instead of running an |V|⋈|V| anti-join per iteration.
+    ``deg`` is checkpointed because two separately-materialized lineages
+    consume it (the edge fold and the has_out flags).  The dangling mass
+    is a one-row aggregate cross-joined back in (broadcast of a single
+    row — no driver round-trip, no extra wide shuffle).
 
-    The frame is PERSISTED (materialized via count), not
-    localCheckpointed: under AQE, ``localCheckpoint`` wraps the result
-    in a LogicalRDD whose output partitioning is
-    ``UnknownPartitioning`` (the AdaptiveSparkPlanExec parent hides the
-    final plan's partitioning at capture time — measured on this
-    build's Spark: every checkpointed repartition variant reports
-    Unknown, and the in-loop join then RE-EXCHANGED the |E| side each
-    iteration, defeating the hoist it was documented to enable).  An
-    InMemoryRelation keeps the cached plan's partitioning visible to
-    EnsureRequirements, so the loop join inserts no edge-side exchange
-    (`tests/test_plan_quality.py` pins the exchange-free edge side of a
-    live in-loop iteration plan).  Lineage growth — the reason the
-    ITERATED rank vector must checkpoint — doesn't apply here: the
-    edge frame is built once and only read in the loop.  Callers
-    unpersist it after their final superstep is materialized.
-
-    ``deg`` is checkpointed because two separately-materialized
-    lineages consume it (the edge fold and the callers' has_out flags).
-    Callers must have applied their weight-validity filter already."""
+    Superstep materialization: the rank vector is referenced once
+    (twice under redistribute) per round and the edge/node frames every
+    round, so an unmaterialized plan re-derives the base graph O(2^r)
+    times — localCheckpoint keeps round r's work to its own two
+    shuffles (measured: g21 2.7 → 1.7 s, g24 2.3 → 1.5 s at sf0.01)."""
     wcol = F.col(weight).cast("double") if weight else F.lit(1.0)
     deg = (
         edges.groupBy("src").agg(F.sum(wcol).alias("outdeg")).localCheckpoint(eager=True)
     )
-    hoisted = (
-        edges.withColumn("__w", wcol)
-        .join(deg, "src")
-        .repartition("src")
-        .persist()
-    )  # (src, dst, __w, outdeg), hash-partitioned by src for the loop
-    hoisted.count()  # materialize the cache before the loop reads it
-    return hoisted, deg
+    with scatter_cache(edges.withColumn("__w", wcol).join(deg, "src")) as hoisted:
+        nodes = (
+            nodes.join(
+                deg.select(F.col("src").alias("node"), F.lit(True).alias("has_out")),
+                "node",
+                "left",
+            )
+            .select(*nodes.columns, F.coalesce("has_out", F.lit(False)).alias("has_out"))
+            .localCheckpoint(eager=True)
+        )
+        ranks = nodes.withColumn("rank", teleport)
+        for _ in range(n_iter):
+            sums = (
+                hoisted.join(ranks, hoisted.src == ranks.node)
+                .select(
+                    F.col("dst").alias("node"),
+                    (F.col("rank") * F.col("__w") / F.col("outdeg")).alias("m"),
+                )
+                .groupBy("node")
+                .agg(F.sum("m").alias("m"))
+            )
+            nxt = nodes.join(sums, "node", "left")
+            inflow = F.coalesce(F.col("m"), F.lit(0.0))
+            if redistribute:
+                dmass = ranks.filter(~F.col("has_out")).agg(
+                    F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dm")
+                )
+                nxt = nxt.crossJoin(F.broadcast(dmass))
+                inflow = inflow + F.col("__dm") * teleport
+            ranks = nxt.select(
+                *nodes.columns,
+                (F.lit(1.0 - damping) * teleport + F.lit(damping) * inflow).alias("rank"),
+            ).localCheckpoint(eager=True)
+    return ranks
 
 
 def pagerank(
@@ -98,16 +129,13 @@ def pagerank(
     rank·w/Σw(out) — the strength-aware variant (e.g. co-publication
     count as tie strength), same plan shape (the weighted out-degree
     folds into the hoisted edge frame exactly like the count).
-    Non-positive and NULL weights are DROPPED before anything else: a
-    zero-weight tie is no tie, a zero weighted out-degree would
-    otherwise produce 0/0 = NaN messages that poison every downstream
-    rank, and a NULL weight would silently leak its node's mass (null
-    messages skip the sum while has_out still blocks redistribution).
-    The node set is derived from the POST-filter edges, so a node whose
-    every incident edge is dropped leaves the graph entirely (no rank
-    row) — a zero-strength node is no node, consistent with the edges
-    themselves; a node that keeps ≥1 in-edge but loses all out-edges
-    becomes dangling, handled by the chosen ``dangling`` mode.
+    NULL, NaN and non-positive weights are DROPPED before anything else
+    (``superstep.positive_weights``).  The node set is derived from the
+    POST-filter edges, so a node whose every incident edge is dropped
+    leaves the graph entirely (no rank row) — a zero-strength node is
+    no node, consistent with the edges themselves; a node that keeps
+    ≥1 in-edge but loses all out-edges becomes dangling, handled by the
+    chosen ``dangling`` mode.
 
     Node set = sources ∪ destinations.  ``dangling`` controls nodes
     without out-edges:
@@ -119,101 +147,19 @@ def pagerank(
     - ``"redistribute"``: the standard correction for directed graphs —
       each iteration the summed rank of dangling nodes is spread
       uniformly (d·mass/n added to every node), so total rank stays 1.
-      The mass is a one-row aggregate cross-joined back in (broadcast
-      of a single row — no driver round-trip, no extra wide shuffle).
     """
     if dangling not in ("drop", "redistribute"):
         raise ValueError(f"dangling={dangling!r}; use 'drop' or 'redistribute'")
-    # Superstep materialization (the GraphX Pregel pattern): the rank
-    # vector is referenced once (twice under redistribute) per round and
-    # the edge/node/degree frames every round, so an unmaterialized plan
-    # re-derives the base graph O(2^r) times — localCheckpoint pins each
-    # superstep's result and keeps round r's work to its own two
-    # shuffles.  Same fix as k_core; measured here: g21 2.7 → 1.7 s,
-    # g24 2.3 → 1.5 s at sf0.01.
-    #
-    # Iteration-invariant work is hoisted OUT of the loop (r5, measured
-    # g25 6.7 → 3.4 s, g24 ~4.9 → 3.8 s at sf0.1): outdeg is static, so
-    # it is folded into the edge frame once instead of a second
-    # per-iteration join; the edge frame is src-partitioned and CACHED
-    # (see _hoisted_edge_frame for why persist, not localCheckpoint) so
-    # only the |V| rank vector shuffles per round; the dangling-mass
-    # reduction reads a precomputed has_out flag carried on the rank
-    # vector instead of running an |V|⋈|V| anti-join per iteration.
-    if weight:
-        edges = edges.filter(
-            F.col(weight).isNotNull()
-            & ~F.isnan(F.col(weight).cast("double"))
-            # NaN compares GREATER than every double in Spark SQL, so a
-            # literal NaN weight passes `> 0` and poisons every
-            # downstream rank/distance (r12 review)
-            & (F.col(weight) > 0)
-        )
-    edges = edges.localCheckpoint(eager=True)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    edges = positive_weights(edges, weight).localCheckpoint(eager=True)
+    nodes = node_set(edges).localCheckpoint(eager=True)
     n = nodes.count()  # driver scalar: one tiny job, used as a literal
     if n == 0:
         # empty graph: empty ranks, not a 1/n division crash
         return nodes.select("node", F.lit(0.0).alias("pagerank"))
-    edges, deg = _hoisted_edge_frame(edges, weight)
-    nodes = nodes.join(
-        deg.select(F.col("src").alias("node"), F.lit(True).alias("has_out")),
-        "node",
-        "left",
-    ).select("node", F.coalesce("has_out", F.lit(False)).alias("has_out")
-    ).localCheckpoint(eager=True)
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    try:
-        ranks = _pagerank_loop(
-            nodes, edges, ranks, n, n_iter, damping, dangling
-        )
-    finally:
-        # a superstep failure must not leave |E| pinned in the block
-        # manager for the session's life (the multi_source_bfs guard,
-        # applied everywhere in r12)
-        edges.unpersist()
+    ranks = _rank_loop(
+        edges, nodes, weight, F.lit(1.0 / n), n_iter, damping, dangling == "redistribute"
+    )
     return ranks.select("node", F.round("rank", 6).alias("pagerank"))
-
-
-def _pagerank_loop(nodes, edges, ranks, n, n_iter, damping, dangling):
-    for _ in range(n_iter):
-        msgs = edges.join(ranks, edges.src == ranks.node).select(
-            F.col("dst").alias("node"),
-            (F.col("rank") * F.col("__w") / F.col("outdeg")).alias("m"),
-        )
-        sums = msgs.groupBy("node").agg(F.sum("m").alias("m"))
-        base = F.lit((1.0 - damping) / n)
-        if dangling == "redistribute":
-            dmass = (
-                ranks.filter(~F.col("has_out"))
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dm"))
-            )
-            ranks = (
-                nodes.join(sums, "node", "left")
-                .crossJoin(F.broadcast(dmass))
-                .select(
-                    "node",
-                    "has_out",
-                    (
-                        base
-                        + F.lit(damping) * F.col("__dm") / F.lit(float(n))
-                        + F.lit(damping) * F.coalesce(F.col("m"), F.lit(0.0))
-                    ).alias("rank"),
-                )
-            )
-        else:
-            ranks = nodes.join(sums, "node", "left").select(
-                "node",
-                "has_out",
-                (base + F.lit(damping) * F.coalesce(F.col("m"), F.lit(0.0))).alias("rank"),
-            )
-        ranks = ranks.localCheckpoint(eager=True)
-    return ranks
 
 
 def personalized_pagerank(
@@ -251,18 +197,9 @@ def personalized_pagerank(
         # EMPTY graph — the r12 sf0.1 g33 incident): it would fabricate
         # a phantom NULL node carrying the whole teleport mass
         raise ValueError("personalized_pagerank seeds must be non-NULL")
-    if weight:
-        edges = edges.filter(
-            F.col(weight).isNotNull()
-            & ~F.isnan(F.col(weight).cast("double"))
-            # NaN compares GREATER than every double in Spark SQL, so a
-            # literal NaN weight passes `> 0` and poisons every
-            # downstream rank/distance (r12 review)
-            & (F.col(weight) > 0)
-        )
-    spark = edges.sparkSession
+    edges = positive_weights(edges, weight)
     node_type = edges.schema["src"].dataType
-    sdf = spark.createDataFrame(
+    sdf = edges.sparkSession.createDataFrame(
         [(s,) for s in seed_list],
         T.StructType([T.StructField("node", node_type)]),
     ).withColumn("__r", F.lit(1.0 / len(seed_list)))
@@ -272,65 +209,12 @@ def personalized_pagerank(
     # alone would silently drop such a seed's mass and decay every rank
     # toward 0 — violating the total-mass-1 contract for e.g. a
     # canonicalized-away entity id.
-    edges = edges.localCheckpoint(eager=True)  # superstep pattern, see pagerank
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .unionByName(sdf.select("node"))
-        .distinct()
-    )
-    # Iteration-invariant hoisting, same as pagerank (see
-    # _hoisted_edge_frame); dangling mass reads the precomputed has_out
-    # flag instead of an |V|⋈|V| anti-join per iteration.
-    edges, deg = _hoisted_edge_frame(edges, weight)
-    nodes_r = (
-        nodes.join(F.broadcast(sdf), "node", "left")
-        .join(
-            deg.select(F.col("src").alias("node"), F.lit(True).alias("has_out")),
-            "node",
-            "left",
-        )
-        .select(
-            "node",
-            F.coalesce("__r", F.lit(0.0)).alias("r"),
-            F.coalesce("has_out", F.lit(False)).alias("has_out"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    ranks = nodes_r.select("node", "r", "has_out", F.col("r").alias("rank"))
-    try:
-        ranks = _ppr_loop(nodes_r, edges, ranks, n_iter, damping)
-    finally:
-        edges.unpersist()  # superstep-failure safe (r12: the msbfs guard)
+    edges = edges.localCheckpoint(eager=True)  # superstep pattern, see module
+    nodes_r = node_set(edges, sdf.select("node")).join(
+        F.broadcast(sdf), "node", "left"
+    ).select("node", F.coalesce("__r", F.lit(0.0)).alias("r"))
+    ranks = _rank_loop(edges, nodes_r, weight, F.col("r"), n_iter, damping, True)
     return ranks.select("node", F.round("rank", 6).alias("ppr"))
-
-
-def _ppr_loop(nodes_r, edges, ranks, n_iter, damping):
-    for _ in range(n_iter):
-        msgs = edges.join(ranks, edges.src == ranks.node).select(
-            F.col("dst").alias("node"),
-            (F.col("rank") * F.col("__w") / F.col("outdeg")).alias("m"),
-        )
-        sums = msgs.groupBy("node").agg(F.sum("m").alias("m"))
-        dmass = (
-            ranks.filter(~F.col("has_out"))
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dm"))
-        )
-        ranks = (
-            nodes_r.join(sums, "node", "left")
-            .crossJoin(F.broadcast(dmass))
-            .select(
-                "node",
-                "r",
-                "has_out",
-                (
-                    F.lit(1.0 - damping) * F.col("r")
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("m"), F.lit(0.0)) + F.col("__dm") * F.col("r"))
-                ).alias("rank"),
-            )
-        ).localCheckpoint(eager=True)
-    return ranks
 
 
 def label_propagation(edges: DataFrame, n_iter: int = 3) -> DataFrame:
@@ -350,38 +234,22 @@ def label_propagation(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     with a fixed round count both engines see the same oscillation,
     which is exactly what the gate needs.
     """
-    # Scatter-key cache, not checkpoint: the loop joins on edges.src
-    # every round and AQE hides a checkpointed frame's partitioning
-    # (see _hoisted_edge_frame) — persist keeps the layout visible so
-    # only the |V| label vector shuffles per round.
-    edges = edges.repartition("src").persist()
-    edges.count()
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = nodes.withColumn("label", F.col("node"))
-    try:
-        labels = _lpa_loop(nodes, edges, labels, n_iter)
-    finally:
-        edges.unpersist()  # superstep-failure safe (r12: the msbfs guard)
-    return labels
-
-
-def _lpa_loop(nodes, edges, labels, n_iter):
-    for _ in range(n_iter):
-        msgs = edges.join(labels, edges.src == labels.node).select(
-            F.col("dst").alias("node"), "label"
-        )
-        counts = msgs.groupBy("node", "label").agg(F.count(F.lit(1)).alias("c"))
-        winner = counts.groupBy("node").agg(
-            F.expr("min_by(label, struct(-c, label))").alias("label")
-        )
-        labels = nodes.join(winner, "node", "left").select(
-            "node", F.coalesce(winner.label, F.col("node")).alias("label")
-        ).localCheckpoint(eager=True)
+    # Scatter-key cache (see superstep.scatter_cache): the loop joins on
+    # edges.src every round, so only the |V| label vector shuffles.
+    with scatter_cache(edges) as edges:
+        nodes = node_set(edges).localCheckpoint(eager=True)
+        labels = nodes.withColumn("label", F.col("node"))
+        for _ in range(n_iter):
+            msgs = edges.join(labels, edges.src == labels.node).select(
+                F.col("dst").alias("node"), "label"
+            )
+            counts = msgs.groupBy("node", "label").agg(F.count(F.lit(1)).alias("c"))
+            winner = counts.groupBy("node").agg(
+                F.expr("min_by(label, struct(-c, label))").alias("label")
+            )
+            labels = nodes.join(winner, "node", "left").select(
+                "node", F.coalesce(winner.label, F.col("node")).alias("label")
+            ).localCheckpoint(eager=True)
     return labels
 
 
@@ -430,21 +298,10 @@ def hits(edges: DataFrame, n_iter: int = 3) -> DataFrame:
         # zero iterations would L1-normalize an all-zero authority
         # vector (0/0 → NULL everywhere) — reject rather than emit nulls
         raise ValueError("hits needs n_iter >= 1")
-    edges = edges.localCheckpoint(eager=True)  # superstep pattern, see pagerank
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # Persist (not localCheckpoint): AQE hides a checkpointed frame's
-    # partitioning and the loop joins would re-exchange |E| per
-    # half-step — see _hoisted_edge_frame.
-    e_src = edges.repartition("src").persist()
-    e_dst = edges.repartition("dst").persist()
-    e_src.count(), e_dst.count()  # materialize both caches pre-loop
+    edges = edges.localCheckpoint(eager=True)  # superstep pattern, see module
+    nodes = node_set(edges).localCheckpoint(eager=True)
     hub = nodes.withColumn("hub", F.lit(1.0))
-    try:
+    with scatter_cache(edges, "src") as e_src, scatter_cache(edges, "dst") as e_dst:
         for _ in range(n_iter):
             a_raw = (
                 e_src.join(hub, e_src.src == hub.node)
@@ -462,10 +319,6 @@ def hits(edges: DataFrame, n_iter: int = 3) -> DataFrame:
             hub = nodes.join(h_raw, "node", "left").select(
                 "node", F.coalesce("__h", F.lit(0.0)).alias("hub")
             ).localCheckpoint(eager=True)
-    finally:
-        # superstep-failure safe (r12: the msbfs guard everywhere)
-        e_src.unpersist()
-        e_dst.unpersist()
     asum = auth.agg(F.sum("a").alias("__as"))
     hsum = hub.agg(F.sum("hub").alias("__hs"))
     return (
@@ -584,13 +437,14 @@ def bfs_distances(
     to MIN-PLUS (Bellman-Ford supersteps): cand = dist(src) + w instead
     of dist + 1, so ``dist`` becomes the cheapest total weight over
     paths of ≤ ``max_hops`` edges (double; hop counts stay int when
-    unweighted).  NULL and non-positive weights are DROPPED up front —
-    the same guard as ``pagerank``: a NULL weight would propagate NULL
-    distances through least(), and a non-positive weight breaks both
-    termination (negative cycles) and the monotone convergence
-    argument, neither of which a distributed fixed-point should accept
-    silently.  A node whose every edge drops leaves the graph, exactly
-    like pagerank's contract.
+    unweighted).  NULL, NaN and non-positive weights are DROPPED up
+    front — the same ``superstep.positive_weights`` guard as
+    ``pagerank``: a NULL weight would propagate NULL distances through
+    least(), and a non-positive weight breaks both termination
+    (negative cycles) and the monotone convergence argument, neither of
+    which a distributed fixed-point should accept silently.  A node
+    whose every edge drops leaves the graph, exactly like pagerank's
+    contract.
 
     Fixed-hop mode relaxes from the FULL reached set each round — one
     edges⋈dist join + one groupBy min + one |V| least-fold, exactly
@@ -617,56 +471,35 @@ def bfs_distances(
     improved.  Terminates in ≤ diameter+1 rounds unweighted, ≤ |V|−1
     with positive weights.
     """
-    if weight:
-        edges = edges.filter(
-            F.col(weight).isNotNull()
-            & ~F.isnan(F.col(weight).cast("double"))
-            # NaN compares GREATER than every double in Spark SQL, so a
-            # literal NaN weight passes `> 0` and poisons every
-            # downstream rank/distance (r12 review)
-            & (F.col(weight) > 0)
-        )
-    # Scatter-key cache, not checkpoint — see _hoisted_edge_frame: the
-    # relax step joins on edges.src every round; the cached layout keeps
-    # the |E| side exchange-free so only the scatter side shuffles.
-    step = F.col(weight).cast("double") if weight else F.lit(1)
-    edges = (
-        edges.select("src", "dst", step.alias("__step")).repartition("src").persist()
-    )
-    edges.count()
-    zero = F.lit(0.0) if weight else F.lit(0)
     if source is None:
         # the g33 incident shape (min(src) over an empty graph): a NULL
         # source is always a caller bug and would silently yield empty
         raise ValueError("bfs_distances source must be non-NULL")
-    src_row = edges.sparkSession.createDataFrame([(source,)], ["node"])
-    dist = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
+    step = F.col(weight).cast("double") if weight else F.lit(1)
+    zero = F.lit(0.0) if weight else F.lit(0)
+    steps = positive_weights(edges, weight).select("src", "dst", step.alias("__step"))
+    with scatter_cache(steps) as edges:
         # an edge-less source still owns its (source, 0) row — the
         # per-seed semantics multi_source_bfs documents as shared
-        .unionByName(src_row)
-        .distinct()
-        .select(
-            "node",
-            F.when(F.col("node") == F.lit(source), zero).alias("dist"),
+        src_row = edges.sparkSession.createDataFrame([(source,)], ["node"])
+        dist = (
+            node_set(edges, src_row)
+            .select("node", F.when(F.col("node") == F.lit(source), zero).alias("dist"))
+            .localCheckpoint(eager=True)
         )
-        .localCheckpoint(eager=True)
-    )
 
-    def candidates(fr: DataFrame) -> DataFrame:
-        return (
-            edges.join(fr, edges.src == fr.node)
-            .filter(F.col("dist").isNotNull())
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("dist") + F.col("__step")).alias("cand"),
+        def candidates(fr: DataFrame) -> DataFrame:
+            return (
+                edges.join(fr, edges.src == fr.node)
+                .filter(F.col("dist").isNotNull())
+                .select(
+                    F.col("dst").alias("node"),
+                    (F.col("dist") + F.col("__step")).alias("cand"),
+                )
+                .groupBy("node")
+                .agg(F.min("cand").alias("cand"))
             )
-            .groupBy("node")
-            .agg(F.min("cand").alias("cand"))
-        )
 
-    try:
         if until_converged:
             frontier = dist.filter(F.col("dist").isNotNull())
             improved = (
@@ -695,9 +528,39 @@ def bfs_distances(
                     .select("node", F.least(F.col("dist"), F.col("cand")).alias("dist"))
                     .localCheckpoint(eager=True)
                 )
-    finally:
-        edges.unpersist()  # superstep-failure safe (r12: the msbfs guard)
     return dist.filter(F.col("dist").isNotNull())
+
+
+def _sigma_layers(
+    edges: DataFrame, dist: DataFrame, max_hops: int, keys: list[str]
+) -> list[DataFrame]:
+    """Brandes' forward pass: index k → (*keys, node, sigma) of the
+    dist-k layer, where σ(v) = Σ σ(u) over edges u→v with dist(u)=k−1
+    and dist(v)=k — every shortest path to v extends a shortest path
+    to some predecessor, each exactly once, so the count is exact and
+    INTEGER end to end.  ``keys`` is [] for one source and ["seed"]
+    for a seed set (the seed then rides every join and group key).
+
+    Per layer ONE frontier⋈edges join + map-side-combinable sum: the
+    frontier is layer-sized, ``edges`` is the caller's src-partitioned
+    ``scatter_cache``, and the layer-membership probe joins the
+    checkpointed ``dist`` table on dst."""
+    layers = [
+        dist.filter(F.col("dist") == 0)
+        .select(*keys, "node", F.lit(1).cast("long").alias("sigma"))
+        .localCheckpoint(eager=True)
+    ]
+    for k in range(1, max_hops + 1):
+        layer_k = dist.filter(F.col("dist") == k).select(*keys, F.col("node").alias("dst"))
+        layers.append(
+            edges.join(layers[-1].withColumnRenamed("node", "src"), "src")
+            .join(layer_k, [*keys, "dst"])
+            .groupBy(*keys, "dst")
+            .agg(F.sum("sigma").alias("sigma"))
+            .select(*keys, F.col("dst").alias("node"), "sigma")
+            .localCheckpoint(eager=True)
+        )
+    return layers
 
 
 def shortest_path_counts(
@@ -709,182 +572,93 @@ def shortest_path_counts(
     sampling estimators accumulate at scale).  Directed edges; pass a
     symmetrized list for undirected counting.
 
-    Layered accumulation over the :func:`bfs_distances` table: layer k
-    receives σ(v) = Σ σ(u) over edges u→v with dist(u)=k−1 and
-    dist(v)=k — every shortest path to v extends a shortest path to
-    some predecessor, each exactly once, so the count is exact and
-    INTEGER end to end (no float mass anywhere, unlike pagerank).
-    Duplicate input edges are collapsed up front (σ is a simple-graph
-    quantity; a duplicated edge would silently double every count
-    routed through it — the k_truss/connected_components distinct
-    convention, where the min-fold faces are naturally dup-immune but
-    a SUM is not).
+    Layered accumulation (``_sigma_layers``) over the
+    :func:`bfs_distances` table — integer-exact, no float mass anywhere,
+    unlike pagerank.  Duplicate input edges are collapsed up front (σ
+    is a simple-graph quantity; a duplicated edge would silently double
+    every count routed through it — the k_truss/connected_components
+    distinct convention, where the min-fold faces are naturally
+    dup-immune but a SUM is not).
 
-    Scale shape: one fixed-hop BFS (two shuffles per round), then per
-    layer ONE frontier⋈edges join + map-side-combinable sum — the
-    frontier is layer-sized, the |E| side keeps the same scatter-key
-    cache layout bfs_distances uses, and the layer-membership probe
-    joins the checkpointed dist table on dst.  Nothing quadratic: σ is
-    a per-node int64, never a path enumeration.
+    Scale shape: one fixed-hop BFS (two shuffles per round), then one
+    join + sum per layer.  Nothing quadratic: σ is a per-node int64,
+    never a path enumeration.
     """
     dist = bfs_distances(edges, source, max_hops).localCheckpoint(eager=True)
-    e = edges.select("src", "dst").distinct().repartition("src").persist()
-    e.count()
-    sig = (
-        dist.filter(F.col("dist") == 0)
-        .select("node", F.lit(1).cast("long").alias("sigma"))
-        .localCheckpoint(eager=True)
+    with scatter_cache(edges.select("src", "dst").distinct()) as e:
+        layers = _sigma_layers(e, dist, max_hops, [])
+    return reduce(
+        DataFrame.unionByName,
+        [sig.select("node", F.lit(k).alias("dist"), "sigma") for k, sig in enumerate(layers)],
     )
-    out = [sig.select("node", F.lit(0).alias("dist"), "sigma")]
-    prev = sig
-    try:
-        for k in range(1, max_hops + 1):
-            layer_k = dist.filter(F.col("dist") == k).select(
-                F.col("node").alias("dst")
-            )
-            nxt = (
-                e.join(prev.withColumnRenamed("node", "src"), "src")
-                .join(layer_k, "dst")
-                .groupBy("dst")
-                .agg(F.sum("sigma").alias("sigma"))
-                .select(F.col("dst").alias("node"), "sigma")
-                .localCheckpoint(eager=True)
-            )
-            out.append(nxt.select("node", F.lit(k).alias("dist"), "sigma"))
-            prev = nxt
-    finally:
-        e.unpersist()
-    res = out[0]
-    for df in out[1:]:
-        res = res.unionByName(df)
-    return res
 
 
-def multi_source_bfs(
-    edges: DataFrame, sources: list, max_hops: int = 4, mode: str = "dense"
-) -> DataFrame:
+def multi_source_bfs(edges: DataFrame, sources: list, max_hops: int = 4) -> DataFrame:
     """(seed, node, dist): shortest unweighted distances from EVERY
     seed in ``sources`` to every node within ``max_hops``, in ONE
     superstep loop — the landmark-distance primitive behind
     centrality sampling, graph-diameter estimation (double sweep), and
-    landmark-based shortest-path approximation at scale.
+    landmark-based shortest-path approximation at scale.  Equal to the
+    union of per-seed ``bfs_distances`` runs (a seed absent from the
+    edge list still reports (seed, seed, 0)).
 
     The naive form — one ``bfs_distances`` call per seed — re-scans
     and re-shuffles the edge set k times and serializes k fixpoint
-    loops on the driver.  Here the seed id rides the dist vector as a
-    payload column, so ALL seeds' frontiers advance in the SAME
-    relax round: state is the (seed, node, dist) vector — |S|·|V|
-    rows, the deliberate trade for touching the |E| side once per
-    round instead of once per round per seed.  Each round is one
-    edges⋈frontier join + one (seed, dst) min-fold, the same
-    superstep budget as ``bfs_distances`` regardless of seed count.
-    The edge frame keeps the scatter-key cache layout (src-partitioned
-    persist), so only the frontier moves per round; seeds enter via
-    a broadcast cross join (|S| rows — never a shuffle).
+    loops on the driver.  Here the seed id rides the state as a
+    payload column, so ALL seeds' frontiers advance in the SAME round,
+    touching the |E| side once per round instead of once per round per
+    seed.  The edge frame is the src-partitioned ``scatter_cache``, so
+    only the frontier moves per round.
 
-    Two state layouts, same results (equivalence property-tested):
-
-    - ``mode='dense'`` (default): fixed-hop full relax over the
-      |S|·|V| (seed, node, dist) vector, like ``bfs_distances``' fixed
-      mode (a frontier variant of THIS relax was measured slower for
-      landmark-sized S and reverted); fixed rounds keep it
-      SQL-oracle-able (g35 unrolls the iterations) and distances only
-      decrease, so round r yields exact ≤r-hop distances.  Right when
-      S is a landmark sample (its g35/g36 purpose) — state is bounded
-      by |S|·|V| with |S| ~ tens.
-    - ``mode='sparse'``: state is only REACHED rows — settled
-      (seed, node, dist) plus the frontier of rows first reached last
-      round; each round joins edges against the frontier only and
-      anti-joins the settled set, with an exact empty-frontier early
-      exit.  In unweighted BFS a node first reached at hop h has
-      exact distance h, so settled rows never update.  Right when S
-      grows past landmark size (state is Σ reached, not |S|·|V|) or
-      when eccentricities are far below max_hops; costs one
-      frontier-count driver action per round (the bfs_distances
-      fixpoint-witness pattern).
+    State is only REACHED rows — settled (seed, node, dist) plus the
+    frontier of rows first reached last round; each round joins edges
+    against the frontier only, takes a (seed, dst) min-fold and
+    anti-joins the settled set, with an exact empty-frontier early
+    exit.  In unweighted BFS a node first reached at hop h has exact
+    distance h, so settled rows never update.  State is Σ reached, not
+    |S|·|V|, and costs one frontier-count driver action per round (the
+    bfs_distances fixpoint-witness pattern).  A dense layout — a
+    fixed-hop full relax over the |S|·|V| vector — was measured slower
+    and removed: on the g35 graph most nodes are reached by hop 2, so
+    late frontiers are near-empty and the early exit skips whole
+    rounds (warm min-of-4 at sf0.1 on local[32]: sparse 4.97 s vs
+    dense 7.79 s).
     """
-    if mode not in ("dense", "sparse"):
-        raise ValueError(f"mode={mode!r}; must be 'dense' or 'sparse'")
-    seed_rows = [(s,) for s in sources]
-    if not seed_rows:
+    seeds = list(sources)
+    if not seeds:
         raise ValueError("multi_source_bfs needs at least one source")
-    edges = edges.select("src", "dst").repartition("src").persist()
-    edges.count()
-    spark = edges.sparkSession
-    if mode == "sparse":
-        # try/finally: a superstep failure (OOM, task abort) must not
-        # leave |E| pinned in the block manager for the session's life
-        try:
-            settled = (
-                spark.createDataFrame(seed_rows, ["seed"])
-                .distinct()
-                .select("seed", F.col("seed").alias("node"), F.lit(0).alias("dist"))
-                .localCheckpoint(eager=True)
-            )
-            frontier = settled
-            for _ in range(max_hops):
-                new = (
-                    edges.join(frontier, edges.src == frontier.node)
-                    .select(
-                        "seed",
-                        F.col("dst").alias("node"),
-                        (F.col("dist") + 1).alias("dist"),
-                    )
-                    .groupBy("seed", "node")
-                    .agg(F.min("dist").alias("dist"))
-                    .join(settled.select("seed", "node"), ["seed", "node"], "left_anti")
-                    .localCheckpoint(eager=True)  # pins the per-round lineage
-                )
-                if new.count() == 0:  # exact fixpoint witness
-                    break
-                # settled grows as a union of ≤ max_hops CHECKPOINTED frames —
-                # cheap metadata, no re-materialization of the whole set
-                settled = settled.unionByName(new)
-                frontier = new
-        finally:
-            edges.unpersist()
-        return settled
-    seeds = F.broadcast(
-        spark.createDataFrame(seed_rows, ["seed"]).distinct()
-    )
-    # Seed ids union into the node set (|S| rows) so a seed absent from
-    # the edge list still reports (seed, seed, 0) — per-seed
-    # bfs_distances semantics — instead of silently emitting no rows.
-    dist = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .unionByName(spark.createDataFrame(seed_rows, ["node"]))
-        .distinct()
-        .crossJoin(seeds)
-        .select(
-            "seed",
-            "node",
-            F.when(F.col("node") == F.col("seed"), F.lit(0)).alias("dist"),
-        )
-    )
-
-    def relax(d: DataFrame) -> DataFrame:
-        relaxed = (
-            edges.join(d, edges.src == d.node)
-            .filter(F.col("dist").isNotNull())
-            .select("seed", F.col("dst").alias("node"), (F.col("dist") + 1).alias("cand"))
-            .groupBy("seed", "node")
-            .agg(F.min("cand").alias("cand"))
-        )
-        return (
-            d.join(relaxed, ["seed", "node"], "left")
-            .select(
-                "seed", "node", F.least(F.col("dist"), F.col("cand")).alias("dist")
-            )
+    if any(s is None for s in seeds):
+        # the g33 rule (see personalized_pagerank): a NULL seed is a
+        # caller bug and would report a phantom (NULL, NULL, 0) row
+        raise ValueError("multi_source_bfs sources must be non-NULL")
+    with scatter_cache(edges.select("src", "dst")) as edges:
+        settled = (
+            edges.sparkSession.createDataFrame([(s,) for s in seeds], ["seed"])
+            .distinct()
+            .select("seed", F.col("seed").alias("node"), F.lit(0).alias("dist"))
             .localCheckpoint(eager=True)
         )
-
-    try:
+        frontier = settled
         for _ in range(max_hops):
-            dist = relax(dist)
-    finally:
-        edges.unpersist()
-    return dist.filter(F.col("dist").isNotNull())
+            new = (
+                edges.join(frontier, edges.src == frontier.node)
+                .select(
+                    "seed",
+                    F.col("dst").alias("node"),
+                    (F.col("dist") + 1).alias("dist"),
+                )
+                .groupBy("seed", "node")
+                .agg(F.min("dist").alias("dist"))
+                .join(settled.select("seed", "node"), ["seed", "node"], "left_anti")
+                .localCheckpoint(eager=True)  # pins the per-round lineage
+            )
+            if new.count() == 0:  # exact fixpoint witness
+                break
+            # settled grows as a union of ≤ max_hops CHECKPOINTED frames —
+            # cheap metadata, no re-materialization of the whole set
+            settled = settled.unionByName(new)
+            frontier = new
+    return settled
 
 
 def brandes_dependencies(
@@ -903,45 +677,20 @@ def brandes_dependencies(
     (Brandes–Pich, Riondato–Kornaropoulos) accumulates exactly this
     per-seed dependency from a seed sample.
 
-    Forward: multi-source sparse BFS (one |E| touch per round for ALL
-    seeds), then per layer k ONE edges⋈σ join keyed by (seed, dst) —
-    σ(v) = Σ σ(u) over dist-(k−1) predecessors, integer-exact.
+    Forward: ``multi_source_bfs`` (one |E| touch per round for ALL
+    seeds), then ``_sigma_layers`` keyed by (seed, dst).
     Backward: per layer k (deepest first) ONE edges⋈(σ,δ) join —
     δ(v) = Σ_{w: dist(w)=k+1, v→w} σ(v)/σ(w)·(1+δ(w)) — layer-sized
     frontiers, map-side-combinable sums, float δ over exact int64 σ.
 
     Duplicate input edges are collapsed up front (σ and δ are SUMS,
     not dup-immune min-folds — the shortest_path_counts convention).
-    The |E| frame is persisted src-partitioned once and reused by
-    every forward and backward round.
+    The |E| frame is one ``scatter_cache`` reused by every forward and
+    backward round.
     """
-    dist = multi_source_bfs(edges, sources, max_hops, mode="sparse").localCheckpoint(
-        eager=True
-    )
-    e = edges.select("src", "dst").distinct().repartition("src").persist()
-    e.count()
-    try:
-        sig = (
-            dist.filter(F.col("dist") == 0)
-            .select("seed", "node", F.lit(1).cast("long").alias("sigma"))
-            .localCheckpoint(eager=True)
-        )
-        layers = [sig]  # index k → (seed, node, sigma) of the dist-k layer
-        prev = sig
-        for k in range(1, max_hops + 1):
-            layer_k = dist.filter(F.col("dist") == k).select(
-                "seed", F.col("node").alias("dst")
-            )
-            nxt = (
-                e.join(prev.withColumnRenamed("node", "src"), "src")
-                .join(layer_k, ["seed", "dst"])
-                .groupBy("seed", "dst")
-                .agg(F.sum("sigma").alias("sigma"))
-                .select("seed", F.col("dst").alias("node"), "sigma")
-                .localCheckpoint(eager=True)
-            )
-            layers.append(nxt)
-            prev = nxt
+    dist = multi_source_bfs(edges, sources, max_hops).localCheckpoint(eager=True)
+    with scatter_cache(edges.select("src", "dst").distinct()) as e:
+        layers = _sigma_layers(e, dist, max_hops, ["seed"])
         # backward: δ at the deepest layer is 0 by definition (no
         # deeper shortest paths exist within the hop horizon)
         bw = layers[max_hops].select(
@@ -977,12 +726,7 @@ def brandes_dependencies(
                 .localCheckpoint(eager=True)
             )
             out.append(bw.select("seed", "node", F.lit(k).alias("dist"), "sigma", "delta"))
-    finally:
-        e.unpersist()
-    res = out[0]
-    for df in out[1:]:
-        res = res.unionByName(df)
-    return res
+    return reduce(DataFrame.unionByName, out)
 
 
 def louvain_refine_pass(wedges: DataFrame, labels: DataFrame) -> DataFrame:

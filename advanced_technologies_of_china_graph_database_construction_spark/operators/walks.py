@@ -15,6 +15,8 @@ same node from collapsing into one path.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -22,6 +24,7 @@ from pyspark.sql import functions as F
 # defining site every seeded-hash face imports — a private copy here
 # could silently diverge from the oracle-generation side)
 from .selection import HASH_MOD, KNUTH
+from .superstep import scatter_cache
 
 STEP_PRIME = 1_000_003
 
@@ -70,8 +73,8 @@ def deterministic_walks(
     Two r16 plan changes (guide §2.3/§2.4, measured at sf0.1 on the
     g43 chain):
 
-    - the |E| side is HOISTED out of the loop (src-partitioned persist,
-      the `_hoisted_edge_frame` discipline): the caller's edge plan —
+    - the |E| side is HOISTED out of the loop (``superstep.scatter_cache``,
+      src-partitioned): the caller's edge plan —
       for g40 a full `distinct` over the fact table plus the symmetric
       union — was re-executed by EVERY step's join; now it runs once
       and each step's join inserts no edge-side exchange, so only the
@@ -85,15 +88,13 @@ def deterministic_walks(
     """
     if n_steps < 1:
         raise ValueError("deterministic_walks needs n_steps >= 1")
-    edges = edges.select("src", "dst").repartition("src").persist()
-    edges.count()  # materialize the cache before the loop reads it
     cur = starts.select(
         F.col(id_col).alias("walk_id"),
         F.lit(0).alias("step"),
         F.col(id_col).alias("node"),
     )
     out = [cur]
-    try:
+    with scatter_cache(edges.select("src", "dst")) as edges:
         for t in range(1, n_steps + 1):
             cands = cur.join(edges, cur["node"] == edges["src"]).select(
                 "walk_id",
@@ -117,12 +118,4 @@ def deterministic_walks(
                 .localCheckpoint(eager=True)
             )
             out.append(cur)
-    finally:
-        # every step is checkpointed, so the returned union never reads
-        # the cache again; a superstep failure must not leave |E| pinned
-        # (the r12 msbfs guard)
-        edges.unpersist()
-    res = out[0]
-    for df in out[1:]:
-        res = res.unionByName(df)
-    return res
+    return reduce(DataFrame.unionByName, out)

@@ -705,14 +705,9 @@ def g35_multi_source_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     total, not once per round per seed.  The seed lookup is one tiny
     distinct+limit job, a literal like g27's min().  Non-empty at
     every sf (the doc↔keyword graph, unlike copub's MIN_SHARED
-    cliff), so the bench face tracks real multi-frontier work.
-
-    Runs the operator's SPARSE (frontier) layout — a MEASURED choice:
-    on this graph most nodes are reached by hop 2, so late frontiers
-    are near-empty and the early exit skips whole rounds; warm
-    min-of-4 at sf0.1 on local[32]: sparse 4.97 s vs dense 7.79 s
-    (~36% faster).  The oracle is layout-independent (same final
-    distances; dense/sparse equivalence is property-tested)."""
+    cliff), so the bench face tracks real multi-frontier work.  The
+    oracle unrolls the full relax; both reach the same final
+    distances."""
     from ..operators.analytics import multi_source_bfs, symmetric_edges
 
     ce = _citation_edges(spark, sf_dir)
@@ -720,7 +715,7 @@ def g35_multi_source_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
         r[0]
         for r in ce.select("src").distinct().orderBy("src").limit(N_SEEDS).collect()
     ]
-    d = multi_source_bfs(symmetric_edges(ce), seeds, MAX_HOPS, mode="sparse")
+    d = multi_source_bfs(symmetric_edges(ce), seeds, MAX_HOPS)
     return d.select("seed", F.col("node").alias("node_id"), "dist")
 
 
@@ -760,8 +755,7 @@ def g36_landmark_harmonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     centrality's defining advantage over closeness on disconnected
     graphs); the seeds themselves are excluded (dist > 0).  One
     aggregation over the multi-source BFS frame — the fold costs one
-    shuffle on top of g35's supersteps (sparse layout, g35's measured
-    choice)."""
+    shuffle on top of g35's supersteps."""
     from ..operators.analytics import multi_source_bfs, symmetric_edges
 
     ce = _citation_edges(spark, sf_dir)
@@ -769,7 +763,7 @@ def g36_landmark_harmonic(spark: SparkSession, sf_dir: str) -> DataFrame:
         r[0]
         for r in ce.select("src").distinct().orderBy("src").limit(N_SEEDS).collect()
     ]
-    d = multi_source_bfs(symmetric_edges(ce), seeds, MAX_HOPS, mode="sparse")
+    d = multi_source_bfs(symmetric_edges(ce), seeds, MAX_HOPS)
     return (
         d.filter(F.col("dist") > 0)
         .groupBy(F.col("node").alias("node_id"))

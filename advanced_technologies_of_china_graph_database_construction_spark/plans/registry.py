@@ -24,7 +24,46 @@ from .spec import QuerySpec
 # CORRECTNESS_r* round records it green again.  Pinned specs sort AFTER
 # genuinely never-gated ones (a spec with no green row at all is the
 # bigger unknown) but BEFORE all green ones — see effective_round().
-PLAN_CHANGED_REGATE: set[str] = set()
+PLAN_CHANGED_REGATE: set[str] = {
+    # operators.superstep migration: loop bodies changed inside
+    # checkpointed loops (final frames are checkpoint scans, so the
+    # fingerprints cannot see it) — the shared rank loop ...
+    "g21_copub_pagerank",
+    "g24_directed_pagerank",
+    "g32_weighted_copub_pagerank",
+    "g25_related_keywords_ppr",
+    "g33_weighted_copub_ppr",
+    # ... label propagation ...
+    "g23_copub_communities",
+    "g48_community_supergraph",
+    "g50_louvain_refine",
+    # ... HITS ...
+    "g26_doc_keyword_hits",
+    # ... single-source BFS ...
+    "g27_reach_distances",
+    "g34_weighted_reach_distances",
+    "g44_reach_fixpoint",
+    # ... the shared forward-σ layer loop ...
+    "g47_shortest_path_counts",
+    "g49_landmark_betweenness",
+    # ... multi-source BFS (sparse layout only) ...
+    "g35_multi_source_bfs",
+    "g36_landmark_harmonic",
+    # ... and the walk corpus with every spec that reads it.
+    "g40_walk_corpus",
+    "g42_walk_ppmi_collocations",
+    "g43_walk_embedding_ann",
+    "g46_walk_embedding_pca",
+    "g51_embedding_link_auc",
+    # Carried pins: in-loop changes with no green CORRECTNESS_r* row
+    # since (g28/g31 k-core and g39 SCC in r17; p03, e15 and g43 —
+    # pinned above — in r16).
+    "g28_kcore_orgs",
+    "g31_kcore_doc_keyword",
+    "g39_strongly_connected",
+    "p03_incremental_er_lifecycle",
+    "e15_streaming_user_sessions",
+}
 # r16: the r15 pins (g43/g45 — oracle-only contract changes the
 # fingerprint cannot see) were removed per their own removal condition:
 # CORRECTNESS_r15 records both green on the corrected oracles.

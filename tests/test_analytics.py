@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import pytest
 
+from advanced_technologies_of_china_graph_database_construction_spark.operators import analytics as an
 from advanced_technologies_of_china_graph_database_construction_spark.operators.analytics import symmetric_edges
+from advanced_technologies_of_china_graph_database_construction_spark.operators.walks import deterministic_walks
 from advanced_technologies_of_china_graph_database_construction_spark.plans.analytics_queries import (
     _copub_pairs,
     g21_copub_pagerank,
@@ -554,9 +556,20 @@ def test_multi_source_bfs_matches_per_seed_runs(spark):
     assert got == want and len(got) > len(seeds)
 
 
-def test_multi_source_bfs_dedups_and_validates_seeds(spark):
-    """Duplicate seeds collapse to one frontier; an empty seed list is
-    a contract error, not a silent empty result."""
+@pytest.fixture
+def cache_manager(spark):
+    """The session's cache manager (``isEmpty()`` ⇔ no DataFrame is
+    persisted; not ``getPersistentRDDs``, which also lists
+    localCheckpoint blocks), cleared first so that an earlier test's
+    leak cannot fail this one."""
+    spark.catalog.clearCache()
+    return spark._jsparkSession.sharedState().cacheManager()
+
+
+def test_multi_source_bfs_dedups_and_validates_seeds(spark, cache_manager):
+    """Duplicate seeds collapse to one frontier; an empty seed list or
+    a NULL seed is a contract error, not a silent empty or phantom
+    result."""
     import pytest as _pytest
 
     from advanced_technologies_of_china_graph_database_construction_spark.operators.analytics import (
@@ -570,18 +583,24 @@ def test_multi_source_bfs_dedups_and_validates_seeds(spark):
     }
     with _pytest.raises(ValueError):
         multi_source_bfs(df, [], max_hops=2)
+    # NULL seeds are caller bugs (the g33 rule): rejected before the
+    # edge cache exists, not a phantom (NULL, NULL, 0) row
+    for seeds in ([None, 1], [None]):
+        with _pytest.raises(ValueError, match="non-NULL"):
+            multi_source_bfs(df, seeds, max_hops=2)
+    assert cache_manager.isEmpty()
 
 
-def test_multi_source_bfs_sparse_mode_equals_dense_on_random_graphs(spark):
-    """The frontier-sparse layout must return exactly the dense relax's
-    REACHED rows on random graphs — including an isolated seed and a
-    max_hops horizon shorter than the graph's eccentricity (so both
-    truncation behaviours align), and it must reject unknown modes."""
+def test_multi_source_bfs_equals_per_seed_bfs_on_random_graphs(spark):
+    """The joint loop must return exactly the union of per-seed
+    ``bfs_distances`` runs — the contract its docstring names — on
+    random graphs, including an isolated seed and a max_hops horizon
+    shorter than the graph's eccentricity (so both truncation
+    behaviours align)."""
     import random
 
-    import pytest as _pytest
-
     from advanced_technologies_of_china_graph_database_construction_spark.operators.analytics import (
+        bfs_distances,
         multi_source_bfs,
     )
 
@@ -591,17 +610,85 @@ def test_multi_source_bfs_sparse_mode_equals_dense_on_random_graphs(spark):
         rows = [(a, b) for a, b in rows if a != b]
         df = spark.createDataFrame(rows, "src long, dst long")
         seeds = [0, 3, 99]  # 99 is isolated: not in the 25-node id space
-        dense = {
+        got = {
             (r["seed"], r["node"]): r["dist"]
             for r in multi_source_bfs(df, seeds, max_hops=hops).collect()
         }
-        sparse = {
-            (r["seed"], r["node"]): r["dist"]
-            for r in multi_source_bfs(df, seeds, max_hops=hops, mode="sparse").collect()
+        want = {
+            (s, r["node"]): r["dist"]
+            for s in seeds
+            for r in bfs_distances(df, s, max_hops=hops).collect()
         }
-        assert sparse == dense and (99, 99) in sparse
-    with _pytest.raises(ValueError, match="mode"):
-        multi_source_bfs(df, [0], max_hops=2, mode="frontier")
+        assert got == want and (99, 99) in got
+
+
+def test_bfs_null_source_raises_before_caching_edges(spark, cache_manager):
+    """A NULL source is rejected before the edge cache exists, so the
+    raise leaves nothing persisted in the session."""
+    from advanced_technologies_of_china_graph_database_construction_spark.operators.analytics import (
+        bfs_distances,
+    )
+
+    df = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    with pytest.raises(ValueError, match="non-NULL"):
+        bfs_distances(df, None)
+    assert cache_manager.isEmpty()
+
+
+# name → run(edges) for every operator whose loop reads a
+# ``superstep.scatter_cache``
+_SUPERSTEP_OPS = {
+    "pagerank": lambda e: an.pagerank(e, n_iter=2, dangling="redistribute"),
+    "personalized_pagerank": lambda e: an.personalized_pagerank(e, [1], n_iter=2),
+    "label_propagation": lambda e: an.label_propagation(e, 2),
+    "hits": lambda e: an.hits(e, 2),
+    "bfs_distances": lambda e: an.bfs_distances(e, 1, 2),
+    "bfs_distances_until_converged": lambda e: an.bfs_distances(e, 1, until_converged=True),
+    "shortest_path_counts": lambda e: an.shortest_path_counts(e, 1, 2),
+    "multi_source_bfs": lambda e: an.multi_source_bfs(e, [1, 3], 2),
+    "brandes_dependencies": lambda e: an.brandes_dependencies(e, [1, 3], 2),
+    "deterministic_walks": lambda e: deterministic_walks(
+        e, e.selectExpr("src AS node").distinct(), 2
+    ),
+}
+
+
+@pytest.mark.parametrize("op", list(_SUPERSTEP_OPS))
+def test_superstep_operators_release_edge_cache(spark, cache_manager, monkeypatch, op):
+    """Every superstep operator leaves the session's cache manager
+    empty after a normal return AND after a superstep failure — a
+    failure injected into ``localCheckpoint`` at the first and at the
+    last checkpoint taken while an edge cache is live (for the nested
+    operators the first hits the inner BFS, the last the outer loop)."""
+    df = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)], "src long, dst long"
+    )
+    run = _SUPERSTEP_OPS[op]
+    cls = type(df)
+    checkpoint = cls.localCheckpoint
+
+    def patched(fail_at):
+        calls = []
+
+        def local_checkpoint(self, *args, **kwargs):
+            if not cache_manager.isEmpty():
+                calls.append(1)
+                if len(calls) == fail_at:
+                    raise RuntimeError("injected superstep failure")
+            return checkpoint(self, *args, **kwargs)
+
+        monkeypatch.setattr(cls, "localCheckpoint", local_checkpoint)
+        return calls
+
+    live = patched(fail_at=0)
+    run(df).collect()
+    assert cache_manager.isEmpty()
+    assert live, "the loop never checkpointed under a live edge cache"
+    for fail_at in sorted({1, len(live)}):
+        patched(fail_at)
+        with pytest.raises(RuntimeError, match="injected"):
+            run(df).collect()
+        assert cache_manager.isEmpty(), fail_at
 
 
 def test_multi_source_bfs_isolated_seed_reports_itself(spark):

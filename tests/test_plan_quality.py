@@ -439,8 +439,9 @@ def test_pagerank_iteration_shuffles_rank_vector_not_edges(spark):
     executed plan is just a scan over the last checkpoint and can never
     contain an edge Exchange, hoisted or not (the pre-r6 version of
     this test asserted on that plan — vacuously).  Instead this builds
-    the hoisted edge frame via the shared helper and one iteration's
-    msgs→sums plan WITHOUT the trailing checkpoint, then asserts:
+    the hoisted edge frame (out-degree fold) inside the shared
+    ``superstep.scatter_cache`` and one iteration's msgs→sums plan
+    WITHOUT the trailing checkpoint, then asserts:
 
     1. the edge side of the join reads the persisted, src-partitioned
        cache (InMemoryTableScan — the hoist's delivery mechanism: under
@@ -464,8 +465,9 @@ def test_pagerank_iteration_shuffles_rank_vector_not_edges(spark):
     """
     from pyspark.sql import functions as F
 
-    from advanced_technologies_of_china_graph_database_construction_spark.operators.analytics import (
-        _hoisted_edge_frame,
+    from advanced_technologies_of_china_graph_database_construction_spark.operators.superstep import (
+        node_set,
+        scatter_cache,
     )
 
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -473,36 +475,35 @@ def test_pagerank_iteration_shuffles_rank_vector_not_edges(spark):
     try:
         edges = spark.createDataFrame(
             [(i, (i * 7 + 1) % 50) for i in range(200)], "src long, dst long"
-        ).filter("src <> dst")
-        hoisted, deg = _hoisted_edge_frame(edges.localCheckpoint(eager=True), None)
-        nodes = (
-            hoisted.select(F.col("src").alias("node"))
-            .unionByName(hoisted.select(F.col("dst").alias("node")))
-            .distinct()
+        ).filter("src <> dst").localCheckpoint(eager=True)
+        deg = (
+            edges.groupBy("src")
+            .agg(F.sum(F.lit(1.0)).alias("outdeg"))
             .localCheckpoint(eager=True)
         )
-        ranks = nodes.withColumn("rank", F.lit(1.0 / 50))
-        # one loop body, NOT checkpointed — the live superstep plan
-        sums = (
-            hoisted.join(ranks, hoisted.src == ranks.node)
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("rank") * F.col("__w") / F.col("outdeg")).alias("m"),
+        folded = edges.withColumn("__w", F.lit(1.0)).join(deg, "src")
+        # the context manager unpersists even on assert failure: the
+        # session is shared
+        with scatter_cache(folded) as hoisted:
+            nodes = node_set(hoisted).localCheckpoint(eager=True)
+            ranks = nodes.withColumn("rank", F.lit(1.0 / 50))
+            # one loop body, NOT checkpointed — the live superstep plan
+            sums = (
+                hoisted.join(ranks, hoisted.src == ranks.node)
+                .select(
+                    F.col("dst").alias("node"),
+                    (F.col("rank") * F.col("__w") / F.col("outdeg")).alias("m"),
+                )
+                .groupBy("node")
+                .agg(F.sum("m").alias("m"))
             )
-            .groupBy("node")
-            .agg(F.sum("m").alias("m"))
-        )
-        outer = _plan(sums).split("InMemoryRelation")[0]
+            outer = _plan(sums).split("InMemoryRelation")[0]
         assert "Join" in outer and "Aggregate" in outer, outer  # non-vacuity
         assert "InMemoryTableScan" in outer, outer  # edge side reads the cache
         # |E| side never re-exchanged inside the loop
         assert "Exchange hashpartitioning(src" not in outer, outer
         assert "Exchange hashpartitioning(node" in outer, outer  # the |V| shuffle
     finally:
-        try:
-            hoisted.unpersist()  # even on assert failure: session is shared
-        except NameError:
-            pass  # _hoisted_edge_frame itself raised; nothing persisted here
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
