@@ -16,8 +16,9 @@ deterministic and SQL-oracle-able.  Operator families:
 - directed structure: ``strongly_connected_components``.
 
 Connected components live in ``operators.connected_components``.  The
-scatter-key edge cache, the edge-weight guard and the node-set rule
-are shared by every loop via ``operators.superstep``.
+scatter-key edge cache, the round-plus-witness action, the two-endpoint
+restriction, the edge-weight guard and the node-set rule are shared by
+every loop via ``operators.superstep``.
 
 Superstep materialization (the GraphX Pregel pattern): each round's
 iterated frame is localCheckpointed, so round r never re-derives the
@@ -31,7 +32,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .superstep import node_set, positive_weights, scatter_cache
+from .superstep import node_set, positive_weights, restrict, scatter_cache, settle
 
 
 def symmetric_edges(pairs: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -365,57 +366,49 @@ def k_core(
     ``until_converged=True`` peels to the EXACT k-core regardless of
     graph depth (``n_rounds`` is then ignored): peeling only ever
     REMOVES edges, so the edge count is a strictly decreasing potential
-    until the fixpoint — one count() per round is an exact convergence
-    test, stronger than the probabilistic count+xxhash fingerprint
+    until the fixpoint — one count per round, read by the round's own
+    ``superstep.settle`` action, is an exact convergence test, stronger
+    than the probabilistic count+xxhash fingerprint
     connected_components needs (there the edge set is REWRITTEN, not
     shrunk, so counts alone can't witness change).  Termination is
     guaranteed in ≤ |V| rounds.  The fixed-round mode stays the default
     because it is what the unrolled SQL oracle (g28) can express.
     """
-    if n_rounds > 0 or until_converged:
-        edges = edges.localCheckpoint(eager=True)
-
     def peel(e: DataFrame) -> DataFrame:
         # Lazy-checkpoint the degree aggregate: both semi-join legs
-        # reference ``keep``, and without the checkpoint each leg's
-        # broadcast build re-ran the degree shuffle (two full degree
-        # jobs per round).  Lazy (not eager) so the first leg's
-        # broadcast-build job computes and stores it and the second leg
-        # reads the stored blocks — no extra driver action per round.
+        # reference it, and without the checkpoint each leg's broadcast
+        # build re-ran the degree shuffle (two full degree jobs per
+        # round).  Lazy, so the first leg's broadcast-build job stores
+        # it and the second leg reads the stored blocks.
         deg = (
-            e.groupBy("src")
+            e.groupBy(F.col("src").alias("node"))
             .agg(F.count(F.lit(1)).alias("deg"))
             .localCheckpoint(eager=False)
         )
-        keep = deg.filter(F.col("deg") >= k).select("src")
-        return e.join(keep, "src", "left_semi").join(
-            keep.withColumnRenamed("src", "dst"), "dst", "left_semi"
-        ).localCheckpoint(eager=True)
+        return restrict(e, deg.filter(F.col("deg") >= k).select("node"))
 
     if until_converged:
-        prev = edges.count()
+        # peeling only removes edges, so an unchanged count is the
+        # fixpoint; each round's count is its superstep.settle witness
+        edges, (prev,) = settle(edges, F.count(F.lit(1)))
         while prev:
-            edges = peel(edges)
-            cur = edges.count()
+            edges, (cur,) = settle(peel(edges), F.count(F.lit(1)))
             if cur == prev:
                 break
             prev = cur
-        return edges.groupBy(F.col("src").alias("node")).agg(
-            F.count(F.lit(1)).alias("degree")
-        )
-    # Fixed-round mode (r17): back to the r15 shrinking-edge shape —
-    # each round materializes the restricted edge frame once, so round
-    # r (and the output aggregate) scans the previous round's SHRUNKEN
-    # checkpoint, never the full base frame.  The r16 restructure that
-    # re-derived the restriction from the base frame per round (and in
-    # the output path) regressed g28 0.56× / g31 0.60× on the driver:
-    # with heavy peeling, O(rounds × |E₀|) base re-scans lose to
-    # O(Σ|E_r|) materialization, and the final frame ballooned from a
-    # checkpoint scan to a 10-Exchange re-derivation.  The one genuine
-    # r16 fix — don't run the degree shuffle twice per round — is kept
-    # via the lazy degree checkpoint inside ``peel``.
-    for _ in range(n_rounds):
-        edges = peel(edges)
+    else:
+        # Each round materializes the SHRUNKEN edge frame, so round r
+        # (and the output aggregate) scans the previous round's
+        # checkpoint, never the full base frame.  Re-deriving the
+        # restriction from the base frame per round (r16) regressed g28
+        # 0.56× / g31 0.60× on the driver: with heavy peeling,
+        # O(rounds × |E₀|) base re-scans lose to O(Σ|E_r|)
+        # materialization, and the final frame ballooned from a
+        # checkpoint scan to a 10-Exchange re-derivation.
+        if n_rounds > 0:
+            edges = edges.localCheckpoint(eager=True)
+        for _ in range(n_rounds):
+            edges = peel(edges).localCheckpoint(eager=True)
     return edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("degree")
     )
@@ -508,18 +501,17 @@ def bfs_distances(
                 .otherwise(F.col("cand") < F.col("dist"))
             )
             while True:
-                stepped = (
-                    dist.join(candidates(frontier), "node", "left")
-                    .select(
+                stepped, (n_improved,) = settle(
+                    dist.join(candidates(frontier), "node", "left").select(
                         "node",
                         F.least(F.col("dist"), F.col("cand")).alias("dist"),
                         improved.alias("__improved"),
-                    )
-                    .localCheckpoint(eager=True)
+                    ),
+                    F.count_if("__improved"),
                 )
                 frontier = stepped.filter("__improved").select("node", "dist")
                 dist = stepped.select("node", "dist")
-                if frontier.count() == 0:  # exact fixpoint witness
+                if n_improved == 0:  # exact fixpoint witness
                     break
         else:
             for _ in range(max_hops):
@@ -616,8 +608,8 @@ def multi_source_bfs(edges: DataFrame, sources: list, max_hops: int = 4) -> Data
     anti-joins the settled set, with an exact empty-frontier early
     exit.  In unweighted BFS a node first reached at hop h has exact
     distance h, so settled rows never update.  State is Σ reached, not
-    |S|·|V|, and costs one frontier-count driver action per round (the
-    bfs_distances fixpoint-witness pattern).  A dense layout — a
+    |S|·|V|, and each round's one driver action both stores the new
+    frontier and counts it (``superstep.settle``).  A dense layout — a
     fixed-hop full relax over the |S|·|V| vector — was measured slower
     and removed: on the g35 graph most nodes are reached by hop 2, so
     late frontiers are near-empty and the early exit skips whole
@@ -640,7 +632,7 @@ def multi_source_bfs(edges: DataFrame, sources: list, max_hops: int = 4) -> Data
         )
         frontier = settled
         for _ in range(max_hops):
-            new = (
+            new, (n_new,) = settle(
                 edges.join(frontier, edges.src == frontier.node)
                 .select(
                     "seed",
@@ -649,10 +641,10 @@ def multi_source_bfs(edges: DataFrame, sources: list, max_hops: int = 4) -> Data
                 )
                 .groupBy("seed", "node")
                 .agg(F.min("dist").alias("dist"))
-                .join(settled.select("seed", "node"), ["seed", "node"], "left_anti")
-                .localCheckpoint(eager=True)  # pins the per-round lineage
+                .join(settled.select("seed", "node"), ["seed", "node"], "left_anti"),
+                F.count(F.lit(1)),
             )
-            if new.count() == 0:  # exact fixpoint witness
+            if n_new == 0:  # exact fixpoint witness
                 break
             # settled grows as a union of ≤ max_hops CHECKPOINTED frames —
             # cheap metadata, no re-materialization of the whole set
@@ -934,11 +926,13 @@ def strongly_connected_components(
        (wrong) labeling.
 
     Self-loops are dropped (they never change SCC structure); the node
-    set is the edge endpoints, like every operator in this module —
-    union isolated nodes in as singletons at the call site if the
-    caller's universe is wider.  Each loop body localCheckpoints the
-    iterated frame (the k_core rationale: round r must not re-derive
-    the base graph through r join levels).
+    set is the non-NULL edge endpoints, like every operator in this
+    module — union isolated nodes in as singletons at the call site if
+    the caller's universe is wider.  Ids keep the input's type.  Each
+    loop body checkpoints the iterated frame (the k_core rationale:
+    round r must not re-derive the base graph through r join levels)
+    and reads its convergence count in the same Spark action
+    (``superstep.settle``).
 
     At 100 TB: no step shuffles the edge payload — trim shuffles ids,
     coloring shuffles the (node, color) vector, the backward walk
@@ -963,14 +957,13 @@ def strongly_connected_components(
             stats[f"{phase}_rounds"] += rounds
             stats[f"{phase}_sec"] += _time.time() - t0
 
-    e = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    edge_count = F.count(F.lit(1))
+    e, (n_e,) = settle(
+        edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct(),
+        edge_count,
     )
-    spark = e.sparkSession
-    assigned = spark.createDataFrame([], "node long, component long")
+    # empty, typed like the input ids (limit 0 plans as an empty relation)
+    assigned = e.select(F.col("src").alias("node"), F.col("src").alias("component")).limit(0)
 
     # every endpoint of the INPUT (self-loops included) must receive a
     # component.  Two paths silently orphan a node from the loop below:
@@ -980,12 +973,9 @@ def strongly_connected_components(
     # peeled.  In both cases the node was never on a cycle — a cycle's
     # edges only vanish when the cycle itself is assigned — so any node
     # missing from `assigned` at return time is provably a singleton.
-    universe = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    # NULL is no node: its edges never enter the loop (src != NULL is
+    # NULL), so it must not come back as a (NULL, NULL) component.
+    universe = node_set(edges).dropna().localCheckpoint(eager=True)
 
     def _finish(done: DataFrame) -> DataFrame:
         missing = universe.join(done.select("node"), "node", "left_anti")
@@ -997,42 +987,32 @@ def strongly_connected_components(
         if stats is not None:
             stats["outer_rounds"] += 1
         # --- 1. TRIM ------------------------------------------------
-        # one (node, has_out, has_in) aggregate per round; alive and
-        # trimmed are narrow filters over its checkpoint, so the
-        # fixpoint probe and the singleton accumulation re-read local
+        # one (node, has_out, has_in) aggregate per round, settled with
+        # its trimmed count; alive and trimmed are narrow filters over
+        # its checkpoint, so the singleton accumulation re-reads local
         # blocks instead of re-running joins.
         #
-        # r16: the per-round edge frame is NEVER materialized inside
-        # the loop.  Trimmed sets only grow, so the round-r edge set is
+        # The per-round edge frame is NEVER materialized inside the
+        # loop.  Trimmed sets only grow, so the round-r edge set is
         # exactly the base frame restricted to round r's alive nodes —
-        # e_r = e0 ⋉src alive_r ⋉dst alive_r — and the next round's
-        # degree aggregate folds that restriction into its own job
-        # (same two semi-joins the old shape ran, minus one checkpoint
-        # action and one materialized |E| frame per round; measured on
-        # the g39 face the trim loop was ~49% of wall in the r12
-        # profile and checkpoint actions dominated the r16 one).  The
-        # restricted frame is materialized ONCE, after the fixpoint,
-        # for the color/assign phases.
+        # e_r = restrict(e0, alive_r) — and the next round's degree
+        # aggregate folds that restriction into its own job (one
+        # checkpoint and one materialized |E| frame fewer per round;
+        # the trim loop was ~49% of g39's wall in the r12 profile).
+        # The restricted frame is materialized ONCE, after the
+        # fixpoint, for the color/assign phases.
         trimmed_rounds: list[DataFrame] = []
         alive = None  # None = unrestricted (first round reads e as-is)
+        both = (F.col("has_out") == 1) & (F.col("has_in") == 1)
         while True:
             _t0 = _time.time()
-            cur = e
-            if alive is not None:
-                cur = e.join(
-                    alive.withColumnRenamed("node", "src"), "src", "left_semi"
-                ).join(alive.withColumnRenamed("node", "dst"), "dst", "left_semi")
+            cur = e if alive is None else restrict(e, alive)
             # one explode instead of a two-leg union: the union shape
             # evaluated the restricted frame TWICE (and built each
             # alive broadcast twice — expression ids differ per leg, so
             # ReuseExchange can't collapse them); the explode doubles
-            # rows map-side in a single pass (r16)
-            #
-            # r17 action fold: the degree checkpoint is LAZY and the
-            # trimmed-count aggregate materializes it — one driver
-            # action per round where the r16 shape paid two (eager
-            # checkpoint + isEmpty probe).
-            deg = (
+            # rows map-side in a single pass
+            deg, (n_trimmed,) = settle(
                 cur.select(
                     F.explode(
                         F.array(
@@ -1054,39 +1034,28 @@ def strongly_connected_components(
                 .agg(
                     F.max("has_out").alias("has_out"),
                     F.max("has_in").alias("has_in"),
-                )
-                .localCheckpoint(eager=False)
+                ),
+                F.count_if(~both),
             )
-            both = (F.col("has_out") == 1) & (F.col("has_in") == 1)
-            trimmed = deg.filter(~both).select("node")
-            if trimmed.count() == 0:
-                _tick("trim", _t0)
-                break
-            trimmed_rounds.append(trimmed)
-            alive = deg.filter(both).select("node")
             _tick("trim", _t0)
+            if n_trimmed == 0:
+                break
+            trimmed_rounds.append(deg.filter(~both).select("node"))
+            alive = deg.filter(both).select("node")
         if alive is not None:
-            e = (
-                e.join(alive.withColumnRenamed("node", "src"), "src", "left_semi")
-                .join(alive.withColumnRenamed("node", "dst"), "dst", "left_semi")
-                .localCheckpoint(eager=True)
-            )
+            e, (n_e,) = settle(restrict(e, alive), edge_count)
         if trimmed_rounds:
             assigned = assigned.unionByName(
                 reduce(DataFrame.unionByName, trimmed_rounds).select(
                     "node", F.col("node").alias("component")
                 )
             ).localCheckpoint(eager=True)
-        if e.isEmpty():
+        if n_e == 0:
             return _finish(assigned)
-        e_cached = e.repartition("src").persist()
-        e_cached.count()
-        try:
+        with scatter_cache(e) as e_cached:
             # --- 2. COLOR (forward max-propagation to fixpoint) ------
             colors = (
-                e_cached.select(F.col("src").alias("node"))
-                .unionByName(e_cached.select(F.col("dst").alias("node")))
-                .distinct()
+                node_set(e_cached)
                 .select("node", F.col("node").alias("color"))
                 .localCheckpoint(eager=True)
             )
@@ -1097,49 +1066,34 @@ def strongly_connected_components(
                     .groupBy(F.col("dst").alias("node"))
                     .agg(F.max("color").alias("in_color"))
                 )
-                # the change flag rides the checkpointed frame, so the
-                # fixpoint probe is a narrow count over local blocks —
-                # not a second join of the |V| vectors per round.
-                # r17 action fold: the checkpoint is LAZY and the
-                # changed-count materializes it — one action per round
-                # instead of eager-checkpoint + count.
-                new = (
-                    colors.join(msgs, "node", "left")
-                    .select(
+                # the change flag rides the round's frame, so the
+                # fixpoint witness is a narrow count in the settle
+                # action — not a second join of the |V| vectors
+                new, (changed,) = settle(
+                    colors.join(msgs, "node", "left").select(
                         "node",
-                        F.greatest(
-                            "color", F.coalesce("in_color", "color")
-                        ).alias("color"),
-                        (F.coalesce("in_color", "color") > F.col("color")).alias(
-                            "chg"
-                        ),
-                    )
-                    .localCheckpoint(eager=False)
+                        F.greatest("color", F.coalesce("in_color", "color")).alias("color"),
+                        (F.coalesce("in_color", "color") > F.col("color")).alias("chg"),
+                    ),
+                    F.count_if("chg"),
                 )
-                changed = new.filter("chg").count()
                 colors = new.select("node", "color")
                 _tick("color", _t0)
                 if changed == 0:
                     break
             # --- 3. ASSIGN (all roots walk backward within color) ----
-            # r17 flag-carrying restructure: the old round was
-            # join→distinct→color-lookup→anti-join — three exchanges
-            # (distinct on (node,color), re-shuffle to node for the
-            # color join, re-shuffle of the growing `reached` union for
-            # the anti-join) plus two actions (eager checkpoint +
-            # isEmpty).  The reached/new flags now ride ONE
-            # node-partitioned state frame: per round the only shuffle
-            # is the frontier-expansion aggregate (map-side collect_set
-            # dedups before the wire), the state join is co-partitioned
-            # (checkpoint preserves hash(node) partitioning), and the
-            # new-count materializes the lazy checkpoint — one exchange
-            # + one action per round.
+            # The reached/new flags ride ONE node-keyed state frame, so
+            # per round the only shuffle of new data is the
+            # frontier-expansion aggregate (map-side collect_set dedups
+            # before the wire), and the round's one action stores the
+            # state and counts its newly reached rows (settle).
             state = colors.select(
                 "node",
                 "color",
                 (F.col("node") == F.col("color")).alias("reached"),
                 (F.col("node") == F.col("color")).alias("__new"),
             ).localCheckpoint(eager=True)
+            hit = F.coalesce(F.array_contains("__in", F.col("color")), F.lit(False))
             while True:
                 _t0 = _time.time()
                 frontier = state.filter("__new").select("node", "color")
@@ -1148,29 +1102,15 @@ def strongly_connected_components(
                     .groupBy(F.col("src").alias("node"))
                     .agg(F.collect_set("color").alias("__in"))
                 )
-                state = (
-                    state.join(hits, "node", "left")
-                    .select(
+                state, (n_new,) = settle(
+                    state.join(hits, "node", "left").select(
                         "node",
                         "color",
-                        (
-                            F.col("reached")
-                            | F.coalesce(
-                                F.array_contains("__in", F.col("color")),
-                                F.lit(False),
-                            )
-                        ).alias("reached"),
-                        (
-                            ~F.col("reached")
-                            & F.coalesce(
-                                F.array_contains("__in", F.col("color")),
-                                F.lit(False),
-                            )
-                        ).alias("__new"),
-                    )
-                    .localCheckpoint(eager=False)
+                        (F.col("reached") | hit).alias("reached"),
+                        (~F.col("reached") & hit).alias("__new"),
+                    ),
+                    F.count_if("__new"),
                 )
-                n_new = state.filter("__new").count()
                 _tick("assign", _t0)
                 if n_new == 0:
                     break
@@ -1180,14 +1120,8 @@ def strongly_connected_components(
                 reached.join(comp, "color").select("node", "component")
             ).localCheckpoint(eager=True)
             done = reached.select("node").localCheckpoint(eager=True)
-        finally:
-            e_cached.unpersist()
-        e = (
-            e.join(done.withColumnRenamed("node", "src"), "src", "left_anti")
-            .join(done.withColumnRenamed("node", "dst"), "dst", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if e.isEmpty():
+        e, (n_e,) = settle(restrict(e, done, "left_anti"), edge_count)
+        if n_e == 0:
             return _finish(assigned)
     raise RuntimeError(
         f"strongly_connected_components did not decompose the graph in "

@@ -10,14 +10,17 @@ Implementation: alternating **large-star / small-star** (Kiveris et al.,
 DataFrame joins/aggregations.  Converges in O(log² n) rounds regardless
 of component diameter — the property that matters at 100 TB, where plain
 min-label propagation needs O(diameter) shuffles over the full edge set.
-Each round is two shuffles on node id; intermediate edge sets are
-persisted and the lineage is cut via localCheckpoint to keep plans flat.
+Each round is two shuffles on node id; each round's edge set is
+localCheckpointed together with its convergence fingerprint
+(``superstep.settle``) to keep plans flat.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .superstep import settle
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -47,16 +50,14 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return out.filter(F.col("src") != F.col("dst")).distinct()
 
 
-def _signature(edges: DataFrame) -> tuple:
-    # Order-insensitive set fingerprint: (count, XOR of 64-bit row hash).
-    # The edge set is distinct, so XOR cancellation can't hide changes;
-    # equal fingerprints ⇒ equal edge sets w.h.p. — one cheap aggregation
-    # job instead of two exceptAll shuffles per round. XOR (unlike sum)
+def _settle(edges: DataFrame) -> tuple[DataFrame, tuple]:
+    # ``edges`` checkpointed with its order-insensitive set fingerprint
+    # (count, XOR of 64-bit row hash) read in the same action.  The edge
+    # set is distinct, so XOR cancellation can't hide changes; equal
+    # fingerprints ⇒ equal edge sets w.h.p. — one cheap aggregate
+    # instead of two exceptAll shuffles per round. XOR (unlike sum)
     # cannot overflow under ANSI mode.
-    row = edges.agg(
-        F.count(F.lit(1)).alias("cnt"), F.bit_xor(F.xxhash64("src", "dst")).alias("hx")
-    ).first()
-    return (row["cnt"], row["hx"])
+    return settle(edges, F.count(F.lit(1)), F.bit_xor(F.xxhash64("src", "dst")))
 
 
 def _driver_union_find(spark, edges_pdf) -> DataFrame:
@@ -120,18 +121,15 @@ def connected_components(
     component diameter.  Pass ``driver_threshold=0`` to force the
     distributed path (the property tests do).
     """
-    cur = (
+    cur, prev_sig = _settle(
         edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    if driver_threshold and cur.count() <= driver_threshold:
+    if driver_threshold and prev_sig[0] <= driver_threshold:  # [0]: edge count
         return _driver_union_find(edges.sparkSession, cur.toPandas())
-    prev_sig = _signature(cur)
-    converged = False
     for _ in range(max_iter):
-        ss = _small_star(_large_star(cur)).localCheckpoint(eager=True)
+        ss, sig = _settle(_small_star(_large_star(cur)))
         # Converged when a full large-star/small-star round leaves the
         # edge set unchanged (it is then a star forest rooted at minima).
         # The fingerprint is a cheap pre-check; on a match, confirm with
@@ -140,14 +138,10 @@ def connected_components(
         # return wrong components).  Both sets are distinct and the
         # fingerprint already matched counts, so one-sided containment
         # implies equality.
-        sig = _signature(ss)
         if sig == prev_sig and ss.exceptAll(cur).isEmpty():
-            cur = ss
-            converged = True
             break
-        cur = ss
-        prev_sig = sig
-    if not converged:
+        cur, prev_sig = ss, sig
+    else:
         # the star extraction below is only meaningful on a converged
         # star forest — falling through would return plausible-looking
         # WRONG labels (the SCC backstop rule: raise, never truncate)

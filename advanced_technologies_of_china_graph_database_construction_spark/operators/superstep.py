@@ -1,11 +1,18 @@
 """Superstep scaffolding shared by the iterative graph operators in
-``analytics`` and ``walks`` — each decision below is made here once
-instead of by hand in every loop:
+``analytics``, ``connected_components`` and ``walks`` — each decision
+below is made here once instead of by hand in every loop:
 
 - ``scatter_cache``: the iteration-invariant |E| frame, hash-partitioned
   on the loop's scatter key and cached for the loop's life;
+- ``settle``: a converging round's materialization and its convergence
+  witness, read in one Spark action;
+- ``restrict``: an edge frame cut to (or away from) a node set on both
+  endpoints;
 - ``positive_weights``: the edge-weight validity guard;
 - ``node_set``: the vertex set ``src ∪ dst (∪ extra ids)``.
+
+Fixed-round loops read no witness, so they cut lineage with a plain
+``localCheckpoint(eager=True)`` per round.
 
 Every loop checks its inputs BEFORE entering ``scatter_cache``: a
 validation error raised after the cache exists but outside its
@@ -18,7 +25,7 @@ from __future__ import annotations
 from contextlib import contextmanager
 from typing import Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -54,6 +61,45 @@ def scatter_cache(edges: DataFrame, key: str = "src") -> Iterator[DataFrame]:
         yield cached
     finally:
         cached.unpersist()
+
+
+def settle(frame: DataFrame, *witness: Column) -> tuple[DataFrame, tuple]:
+    """(``frame`` localCheckpointed, the values of the ``witness``
+    aggregates over it) — a converging round's state and its
+    convergence witness (a changed count, a frontier size, a
+    fingerprint) from ONE Spark action.
+
+    The witness is an observed metric of the eager checkpoint action
+    itself (``DataFrame.observe``): the round's final stage folds the
+    aggregates while it stores the checkpoint blocks, so nothing scans
+    the blocks a second time.  Spark applies a result task's
+    accumulator update once per partition, so the witness stays exact
+    under task retries.  Measured on a one-shuffle groupBy frame
+    (4 cores, Spark jobs / listed stages): eager checkpoint then
+    ``count()`` 4 / 6; a lazy checkpoint materialized by
+    ``agg(*witness).first()`` 3 / 6 (AQE runs the aggregate as a
+    map-stage job plus a result job, and the checkpoint is marked done
+    only after the second, so both list the frame's whole upstream
+    lineage); ``settle`` 2 / 3.  Fixed-round loops have no witness to
+    read and keep a plain eager checkpoint."""
+    seen = Observation()
+    names = [f"__witness{i}" for i in range(len(witness))]
+    frame = frame.observe(seen, *(w.alias(n) for w, n in zip(witness, names)))
+    frame = frame.localCheckpoint(eager=True)
+    values = seen.get
+    return frame, tuple(values[n] for n in names)
+
+
+def restrict(edges: DataFrame, nodes: DataFrame, how: str = "left_semi") -> DataFrame:
+    """``edges`` whose src AND dst are both in (``how="left_semi"``) or
+    both not in (``"left_anti"``) the ``node`` column of ``nodes`` — the
+    two-leg semi/anti-join that peels a graph to its surviving or its
+    unassigned vertices.  Columns keep ``edges``' order."""
+    return (
+        edges.join(nodes.withColumnRenamed("node", "src"), "src", how)
+        .join(nodes.withColumnRenamed("node", "dst"), "dst", how)
+        .select(*edges.columns)
+    )
 
 
 def positive_weights(edges: DataFrame, weight: str | None) -> DataFrame:

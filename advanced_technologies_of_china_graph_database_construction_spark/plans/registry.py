@@ -55,6 +55,9 @@ PLAN_CHANGED_REGATE: set[str] = {
     "g43_walk_embedding_ann",
     "g46_walk_embedding_pca",
     "g51_embedding_link_auc",
+    # superstep.settle: the distributed large-star/small-star loop now
+    # reads its fingerprint in the round's checkpoint action.
+    "g41_distributed_components",
     # Carried pins: in-loop changes with no green CORRECTNESS_r* row
     # since (g28/g31 k-core and g39 SCC in r17; p03, e15 and g43 —
     # pinned above — in r16).

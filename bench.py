@@ -78,14 +78,33 @@ def _env_fingerprint() -> dict:
     return env
 
 
+def _prewarm(sf_dir: str) -> None:
+    """Read every input file once so the OS page cache holds it (see the
+    module docstring)."""
+    for entry in os.scandir(sf_dir):
+        if entry.is_file():
+            with open(entry.path, "rb") as f:
+                while f.read(1 << 24):
+                    pass
+
+
 def _timed_runs(spark, make_df) -> list[float]:
-    """One spec-style adaptive timing loop (same discipline as the main
-    loop: state cleared between runs, keep running while still descending
-    the JIT tail, min 4 / max 8 runs)."""
+    """Noop-sink wall times of ``make_df()``: keep running while the
+    latest run still improves ≥10% on the best seen (the JIT tail), min
+    MIN_RUNS / max MAX_RUNS runs."""
     runs: list[float] = []
     while len(runs) < MAX_RUNS and (
         len(runs) < MIN_RUNS or runs[-1] < 0.9 * min(runs[:-1])
     ):
+        # Clear accumulated state BETWEEN RUNS, outside the timed
+        # window: cached relations, then released checkpoint RDD
+        # blocks (python gc drops the DataFrame refs; a JVM
+        # System.gc() lets the ContextCleaner actually free the
+        # blocks).  Between-specs-only clearing left each repeat of
+        # a superstep spec holding every prior repeat's checkpoint
+        # blocks — observed as multi-second GC-pause outliers on a
+        # spec's LAST runs (g25: [8.3, 5.4, 5.2, 17.1] at sf0.1)
+        # while its steady state is ~5 s.
         spark.catalog.clearCache()
         gc.collect()
         spark.sparkContext._jvm.System.gc()
@@ -227,11 +246,7 @@ def _merge_detail(old: dict | None, new: dict) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    for entry in os.scandir(sf_dir):  # page-cache pre-warm (see docstring)
-        if entry.is_file():
-            with open(entry.path, "rb") as f:
-                while f.read(1 << 24):
-                    pass
+    _prewarm(sf_dir)
     spark = get_spark("atcgdc-bench")
     # ORDER CONTRACT: the bench runs in fixed alphabetical spec-name
     # order, every round.  all_specs() is gate-staleness-ordered and
@@ -248,25 +263,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     all_runs: dict[str, list[float]] = {}
     for spec in specs:
-        runs: list[float] = []
-        while len(runs) < MAX_RUNS and (
-            len(runs) < MIN_RUNS or runs[-1] < 0.9 * min(runs[:-1])
-        ):
-            # Clear accumulated state BETWEEN RUNS, outside the timed
-            # window: cached relations, then released checkpoint RDD
-            # blocks (python gc drops the DataFrame refs; a JVM
-            # System.gc() lets the ContextCleaner actually free the
-            # blocks).  Between-specs-only clearing left each repeat of
-            # a superstep spec holding every prior repeat's checkpoint
-            # blocks — observed as multi-second GC-pause outliers on a
-            # spec's LAST runs (g25: [8.3, 5.4, 5.2, 17.1] at sf0.1)
-            # while its steady state is ~5 s.
-            spark.catalog.clearCache()
-            gc.collect()
-            spark.sparkContext._jvm.System.gc()
-            t0 = time.perf_counter()
-            spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(round(time.perf_counter() - t0, 4))
+        runs = _timed_runs(spark, lambda: spec.fn(spark, sf_dir))
         timings[spec.name] = min(runs)
         all_runs[spec.name] = runs
 

@@ -26,22 +26,19 @@ from pyspark.sql import functions as F  # noqa: E402
 from advanced_technologies_of_china_graph_database_construction_spark import get_spark  # noqa: E402
 from advanced_technologies_of_china_graph_database_construction_spark.operators.connected_components import (  # noqa: E402
     _large_star,
-    _signature,
+    _settle,
     _small_star,
 )
 
 
 def rounds_to_converge(edges) -> int:
-    cur = (
+    cur, prev_sig = _settle(
         edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    prev_sig = _signature(cur)
     for rounds in range(1, 100):
-        ss = _small_star(_large_star(cur)).localCheckpoint(eager=True)
-        sig = _signature(ss)
+        ss, sig = _settle(_small_star(_large_star(cur)))
         if sig == prev_sig and ss.exceptAll(cur).isEmpty():
             return rounds
         cur, prev_sig = ss, sig

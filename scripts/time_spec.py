@@ -9,40 +9,19 @@ Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
 
 from __future__ import annotations
 
-import gc
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from advanced_technologies_of_china_graph_database_construction_spark import get_spark
 from advanced_technologies_of_china_graph_database_construction_spark.plans.registry import spec_map
-
-MIN_RUNS, MAX_RUNS = 4, 8
-
-
-def timed_runs(spark, make_df) -> list[float]:
-    runs: list[float] = []
-    while len(runs) < MAX_RUNS and (
-        len(runs) < MIN_RUNS or runs[-1] < 0.9 * min(runs[:-1])
-    ):
-        spark.catalog.clearCache()
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-        t0 = time.perf_counter()
-        make_df().write.format("noop").mode("overwrite").save()
-        runs.append(round(time.perf_counter() - t0, 4))
-    return runs
+from bench import _prewarm, _timed_runs
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    for entry in os.scandir(sf_dir):
-        if entry.is_file():
-            with open(entry.path, "rb") as f:
-                while f.read(1 << 24):
-                    pass
+    _prewarm(sf_dir)
     spark = get_spark("atcgdc-time-spec")
     sm = spec_map()
     names = sys.argv[1:]
@@ -51,7 +30,7 @@ def main() -> None:
     for name in names:
         spec = sm[name]
         spark.sparkContext.setJobDescription(f"time-spec: {name}")
-        runs = timed_runs(spark, lambda: spec.fn(spark, sf_dir))
+        runs = _timed_runs(spark, lambda: spec.fn(spark, sf_dir))
         print(f"{name}: min={min(runs)} runs={runs}", flush=True)
     spark.stop()
 

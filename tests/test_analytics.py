@@ -650,6 +650,7 @@ _SUPERSTEP_OPS = {
     "deterministic_walks": lambda e: deterministic_walks(
         e, e.selectExpr("src AS node").distinct(), 2
     ),
+    "strongly_connected_components": lambda e: an.strongly_connected_components(e),
 }
 
 
@@ -659,7 +660,9 @@ def test_superstep_operators_release_edge_cache(spark, cache_manager, monkeypatc
     empty after a normal return AND after a superstep failure — a
     failure injected into ``localCheckpoint`` at the first and at the
     last checkpoint taken while an edge cache is live (for the nested
-    operators the first hits the inner BFS, the last the outer loop)."""
+    operators the first hits the inner BFS, the last the outer loop),
+    and into the first ``count()`` while a cache is live (the action
+    that materializes the cache itself)."""
     df = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)], "src long, dst long"
     )
@@ -689,6 +692,65 @@ def test_superstep_operators_release_edge_cache(spark, cache_manager, monkeypatc
         with pytest.raises(RuntimeError, match="injected"):
             run(df).collect()
         assert cache_manager.isEmpty(), fail_at
+    monkeypatch.setattr(cls, "localCheckpoint", checkpoint)
+    count = cls.count
+
+    def failing_count(self):
+        if not cache_manager.isEmpty():
+            raise RuntimeError("injected cache materialization failure")
+        return count(self)
+
+    monkeypatch.setattr(cls, "count", failing_count)
+    with pytest.raises(RuntimeError, match="injected"):
+        run(df).collect()
+    assert cache_manager.isEmpty(), "count"
+
+
+def test_settle_reads_witness_in_the_checkpoint_action(spark):
+    """``superstep.settle`` returns the round's rows and its witness
+    from ONE action: on a one-shuffle groupBy frame it schedules fewer
+    Spark jobs, and no more stages, than an eager checkpoint followed
+    by a count."""
+    from pyspark.sql import functions as F
+
+    from advanced_technologies_of_china_graph_database_construction_spark.operators.superstep import (
+        settle,
+    )
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def frame():
+        return (
+            spark.range(0, 1000, numPartitions=4)
+            .groupBy((F.col("id") % 7).alias("k"))
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+
+    def cost_of(run):
+        """(run's result, (jobs, stages) it scheduled) — the
+        statusTracker count of scripts/job_count.py, read after the
+        listener bus has drained."""
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        before = tracker.getJobIdsForGroup(None)
+        first = max(before) if before else -1
+        out = run()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = [j for j in tracker.getJobIdsForGroup(None) if j > first]
+        return out, (len(jobs), sum(len(tracker.getJobInfo(j).stageIds) for j in jobs))
+
+    def eager_then_count():
+        f = frame().localCheckpoint(eager=True)
+        return f, f.count()
+
+    (settled, (n_rows, n_big)), (settle_jobs, settle_stages) = cost_of(
+        lambda: settle(frame(), F.count(F.lit(1)), F.count_if(F.col("n") > 142))
+    )
+    (_, n_eager), (eager_jobs, eager_stages) = cost_of(eager_then_count)
+    assert (n_rows, n_big) == (n_eager, 6) == (7, 6)
+    assert sorted(settled.collect()) == sorted(frame().collect())
+    assert settle_jobs < eager_jobs, (settle_jobs, eager_jobs)
+    assert settle_stages <= eager_stages, (settle_stages, eager_stages)
 
 
 def test_multi_source_bfs_isolated_seed_reports_itself(spark):
@@ -900,6 +962,42 @@ def test_scc_matches_kosaraju_on_random_graphs(spark):
         edges = {(rnd.randrange(24), rnd.randrange(24)) for _ in range(n_edges)}
         edges = [(a, b) for a, b in edges if a != b]
         assert _scc_of(spark, edges) == _kosaraju(edges), f"seed={seed}"
+
+
+def test_scc_keeps_the_input_id_type(spark):
+    """String ids are ids: zero-padded strings order like the integers
+    they pad, so the decomposition equals the integer-id result under
+    the same relabelling (the component seed frame once forced long)."""
+    import random
+
+    from advanced_technologies_of_china_graph_database_construction_spark.operators.analytics import (
+        strongly_connected_components,
+    )
+
+    def scc_str(edge_list):
+        df = spark.createDataFrame(edge_list, "src string, dst string")
+        out = strongly_connected_components(df)
+        assert [f.dataType.simpleString() for f in out.schema.fields] == ["string"] * 2
+        return {r.node: r.component for r in out.collect()}
+
+    assert scc_str([("a", "b"), ("b", "a"), ("b", "c")]) == {"a": "a", "b": "a", "c": "c"}
+    rnd = random.Random(9)
+    edges = sorted({(rnd.randrange(30), rnd.randrange(30)) for _ in range(45)})
+    pad = "{:03d}".format
+    want = {pad(n): pad(c) for n, c in _scc_of(spark, edges).items()}
+    assert scc_str([(pad(a), pad(b)) for a, b in edges]) == want
+
+
+def test_scc_null_endpoint_is_no_node(spark):
+    """An edge with a NULL endpoint never enters the loop, and NULL
+    comes back as no (NULL, NULL) component."""
+    from advanced_technologies_of_china_graph_database_construction_spark.operators.analytics import (
+        strongly_connected_components,
+    )
+
+    df = spark.createDataFrame([(1, 2), (2, 1), (2, None), (3, 3)], "src long, dst long")
+    got = [(r.node, r.component) for r in strongly_connected_components(df).collect()]
+    assert sorted(got) == [(1, 1), (2, 1), (3, 3)]
 
 
 def test_scc_backstop_raises_not_truncates(spark):
