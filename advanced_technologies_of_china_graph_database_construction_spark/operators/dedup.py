@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .superstep import settle
+
 # --- shared shingle / hash primitives -------------------------------------
 
 MINHASH_PRIME = 1_048_573  # < 2^20; a*h+b stays well inside int64
@@ -33,6 +35,21 @@ PERMS = [(k, 2 * k + 3, 7 * k + 11) for k in range(N_PERMS)]
 
 KNUTH = 2_654_435_761  # multiplicative spreading for simhash bits
 SIMHASH_BITS = 24
+
+# Broadcast caps of the size-gated verification joins.  Each pair finder
+# reads the row count of the frame it would broadcast from that frame's
+# own checkpoint (``superstep.settle``) and hints the broadcast only
+# while the count is under its cap; past it the hint drops and Catalyst
+# plans shuffled joins.  The cap follows the width of the broadcast row:
+# - BROADCAST_MAX_DOCS: a MinHash signature row is a doc id plus 16 longs
+#   (~140 B, so 200k rows ≈ 28 MB); a shingle-set row is a doc id plus
+#   one 8 B hash per distinct 3-gram (~2.4 kB for a 300-char text, the
+#   widest row under this cap); a delta candidate row is two ids (16 B),
+#   held to the same cap.
+# - CONTAINMENT_BROADCAST_MAX_DOCS: a set-size row is a doc id plus a
+#   count (16 B), so ten times the rows (2M ≈ 32 MB) fit.
+BROADCAST_MAX_DOCS = 200_000
+CONTAINMENT_BROADCAST_MAX_DOCS = 2_000_000
 
 
 def _shingle_hash_udf(n: int):
@@ -184,79 +201,58 @@ def minhash_signature_array(shingles: DataFrame) -> DataFrame:
     )
 
 
-def minhash_near_dups(
-    df: DataFrame,
-    text_col: str = "text",
-    block_col: str = "source",
-    min_matching: int = 8,
-    broadcast_threshold_docs: int = 200_000,
-) -> DataFrame:
-    """Near-duplicate pairs: docs in the same block agreeing on ≥
-    ``min_matching`` of the 16 minhashes (integer threshold — no float
-    boundary).  Returns (src, dst, n_matching).
+def minhash_signatures(
+    df: DataFrame, text_col: str = "text", block_col: str = "source"
+) -> tuple[DataFrame, int]:
+    """((doc_id, <block_col>, sig array<long>[N_PERMS]) localCheckpointed,
+    its row count) from ONE Spark action (``superstep.settle``).  A text
+    with no n-gram gets no row.  This is also the shape of the persisted
+    signature store ``minhash_delta_near_dups(standing_sig=…)`` reads.
 
-    Exact-result LSH: by pigeonhole, a pair matching ≥ m of N perms must
-    collide on at least one of any (N − m + 1) chosen perms, so candidates
-    come from an equi-join on just those perms; the full signature arrays
-    then verify the exact match count.  Cuts candidate-join fan-out ~16/9
-    and replaces the (src,dst,k) groupBy with a distinct + array compare.
+    The band probe and both verification sides read the signatures, so
+    the checkpoint runs the kernel once and cuts lineage.  (Not
+    ``persist()``: a cached plan pinned by the returned DataFrame
+    accumulates storage-pool blocks across repeated invocations in one
+    session; checkpoint blocks are released by the ContextCleaner as
+    soon as the result goes out of scope.)"""
+    sig = df.select(
+        "doc_id", F.col(block_col), _minhash_sig_udf()(F.col(text_col)).alias("sig")
+    ).filter(F.col("sig").isNotNull())
+    sig, (n,) = settle(sig, F.count(F.lit(1)))
+    return sig, n
 
-    Shape note (measured, r4): distinct-FIRST is the optimum here.  Two
-    alternatives were benchmarked at sf0.1 (3.2M raw collision rows →
-    609k pairs) and both lost: verifying the raw collision rows map-side
-    with first-colliding-perm dedup costs 2× (zip_with/array HOFs are
-    interpreted per row) and the codegen-unrolled getItem variant 4×
-    (the joins materialize two 128-byte signature arrays per raw row —
-    5× the rows of the distinct-first path).  The candidate distinct
-    shuffles 16-byte pairs; that is the cheapest thing to move.
-    """
-    # Three downstream branches (candidate probe, src/dst verification)
-    # would each re-run the signature kernel; localCheckpoint materializes
-    # it once and cuts lineage.  (Not `persist()`: a cached plan pinned by
-    # the returned DataFrame accumulates storage-pool blocks across
-    # repeated invocations in one session; checkpoint blocks are released
-    # by the ContextCleaner as soon as the result goes out of scope.)
-    sig = (
-        df.select("doc_id", F.col(block_col), _minhash_sig_udf()(F.col(text_col)).alias("sig"))
-        .filter(F.col("sig").isNotNull())
-        .localCheckpoint(eager=True)
+
+def _band_probe(sig: DataFrame, block_col: str, min_matching: int, side: str) -> DataFrame:
+    """(side, blk_side, k_side, mh_side): one row per doc for each of its
+    first N_PERMS − min_matching + 1 minhashes.  By pigeonhole a pair
+    matching ≥ m of N perms collides on at least one of any N − m + 1
+    chosen perms, so an equi-join of two probes finds every candidate."""
+    return sig.select(
+        F.col("doc_id").alias(side),
+        F.col(block_col).alias(f"blk_{side}"),
+        F.posexplode(F.slice("sig", 1, N_PERMS - min_matching + 1)).alias(
+            f"k_{side}", f"mh_{side}"
+        ),
     )
-    n_cand_perms = N_PERMS - min_matching + 1
-    probe = sig.select(
-        "doc_id",
-        F.col(block_col).alias("blk"),
-        F.posexplode(F.slice("sig", 1, n_cand_perms)).alias("k", "mh"),
+
+
+def _collisions(src: DataFrame, dst: DataFrame, ordered: bool) -> DataFrame:
+    """(src, dst) rows of a ``_band_probe`` pair that share a minhash on
+    the same perm within one block (``src < dst`` when ``ordered``)."""
+    cond = (
+        (F.col("k_src") == F.col("k_dst"))
+        & (F.col("mh_src") == F.col("mh_dst"))
+        & (F.col("blk_src") == F.col("blk_dst"))
     )
-    a = probe.select(F.col("doc_id").alias("src"), "blk", "k", "mh")
-    b = probe.select(
-        F.col("doc_id").alias("dst"), F.col("blk").alias("blk2"),
-        F.col("k").alias("k2"), F.col("mh").alias("mh2"),
-    )
-    cands = (
-        a.join(
-            b,
-            (F.col("k") == F.col("k2"))
-            & (F.col("mh") == F.col("mh2"))
-            & (F.col("blk") == F.col("blk2"))
-            & (F.col("src") < F.col("dst")),
-        )
-        .select("src", "dst")
-        .distinct()
-    )
-    # Verification: the signature table is n_docs × 16 longs (~140 B/doc),
-    # orders of magnitude smaller than the candidate pair set — broadcast
-    # it to both sides so the exact-match count is computed map-side over
-    # the candidates with no further shuffle.  The hint is CONDITIONAL on
-    # the doc count (counted off the eager localCheckpoint, so the check
-    # is a block scan, not a source re-read): past the cap a forced
-    # broadcast of ~10⁹ × 140 B signatures would OOM every executor, so
-    # the hints are dropped and Catalyst falls back to shuffled joins
-    # (`block_col` already bounds each verification domain).  Same gate
-    # as `ngram_jaccard_pairs`.
-    sa = sig.select(F.col("doc_id").alias("src"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col("doc_id").alias("dst"), F.col("sig").alias("sig_b"))
-    if sig.count() <= broadcast_threshold_docs:
-        sa, sb = F.broadcast(sa), F.broadcast(sb)
+    if ordered:
+        cond &= F.col("src") < F.col("dst")
+    return src.join(dst, cond).select("src", "dst")
+
+
+def _verified(cands: DataFrame, sa: DataFrame, sb: DataFrame, min_matching: int) -> DataFrame:
+    """Candidate pairs joined to their signatures (``sa``: src, sig_a;
+    ``sb``: dst, sig_b), kept when ≥ ``min_matching`` perms agree:
+    (src, dst, n_matching)."""
     n_match = F.size(
         F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v)
     )
@@ -268,13 +264,57 @@ def minhash_near_dups(
     )
 
 
+def minhash_near_dups(
+    df: DataFrame,
+    text_col: str = "text",
+    block_col: str = "source",
+    min_matching: int = 8,
+) -> DataFrame:
+    """Near-duplicate pairs: docs in the same block agreeing on ≥
+    ``min_matching`` of the 16 minhashes (integer threshold — no float
+    boundary).  Returns (src, dst, n_matching).
+
+    Exact-result LSH: candidates come from an equi-join on the
+    pigeonhole band perms (``_band_probe``); the full signature arrays
+    then verify the exact match count.  Cuts candidate-join fan-out
+    ~16/9 and replaces the (src,dst,k) groupBy with a distinct + array
+    compare.
+
+    Shape note (measured, r4): distinct-FIRST is the optimum here.  Two
+    alternatives were benchmarked at sf0.1 (3.2M raw collision rows →
+    609k pairs) and both lost: verifying the raw collision rows map-side
+    with first-colliding-perm dedup costs 2× (zip_with/array HOFs are
+    interpreted per row) and the codegen-unrolled getItem variant 4×
+    (the joins materialize two 128-byte signature arrays per raw row —
+    5× the rows of the distinct-first path).  The candidate distinct
+    shuffles 16-byte pairs; that is the cheapest thing to move.
+
+    Verification broadcasts the signature table to both sides while its
+    row count (read from the signature checkpoint itself) is under
+    ``BROADCAST_MAX_DOCS``, so the match count is computed map-side over
+    the candidates with no further shuffle.  Past the cap the hints drop
+    and Catalyst falls back to shuffled joins (``block_col`` already
+    bounds each verification domain).
+    """
+    sig, n_docs = minhash_signatures(df, text_col, block_col)
+    cands = _collisions(
+        _band_probe(sig, block_col, min_matching, "src"),
+        _band_probe(sig, block_col, min_matching, "dst"),
+        ordered=True,
+    ).distinct()
+    sa = sig.select(F.col("doc_id").alias("src"), F.col("sig").alias("sig_a"))
+    sb = sig.select(F.col("doc_id").alias("dst"), F.col("sig").alias("sig_b"))
+    if n_docs <= BROADCAST_MAX_DOCS:
+        sa, sb = F.broadcast(sa), F.broadcast(sb)
+    return _verified(cands, sa, sb, min_matching)
+
+
 def minhash_delta_near_dups(
     standing: DataFrame,
     delta: DataFrame,
     text_col: str = "text",
     block_col: str = "source",
     min_matching: int = 8,
-    broadcast_threshold_docs: int = 200_000,
     standing_sig: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs TOUCHING a delta batch — the O(|delta|)
@@ -297,80 +337,43 @@ def minhash_delta_near_dups(
 
     Scale shape: the delta-derived frames (band probe, delta
     signatures) are broadcast while the delta fits
-    ``broadcast_threshold_docs`` — an ingest batch is delta-sized, not
+    ``BROADCAST_MAX_DOCS`` — an ingest batch is delta-sized, not
     corpus-sized — so the standing side is SCANNED map-side (signature
     kernel + band probe are narrow) but never shuffled.  The CANDIDATE
     set is gated on its own row count instead (delta docs × collision
     fan-out is not bounded by the delta doc count when the standing
-    corpus is boilerplate-heavy).  In production
+    corpus is boilerplate-heavy).  Both counts are read from the
+    frames' own checkpoints.  In production
     the standing signature table is the PERSISTED store this scan
     stands in for (written once per batch, bucketed by doc_id), making
     the refresh independent of corpus size end to end.  Past the cap
     the hints drop and Catalyst falls back to shuffled joins.
 
     ``standing_sig`` is that persisted store, passed directly: a
-    ``(doc_id, <block_col>, sig array<long>[N_PERMS])`` frame (exactly
-    this operator's own signature shape) that skips re-running the
+    ``(doc_id, <block_col>, sig array<long>[N_PERMS])`` frame (the
+    :func:`minhash_signatures` shape) that skips re-running the
     kernel over the standing corpus — the steady-state entry point.
     When omitted, signatures are derived from ``standing`` in place.
     """
-    kernel = _minhash_sig_udf()
-
-    def sigs(df: DataFrame) -> DataFrame:
-        return (
-            df.select("doc_id", F.col(block_col), kernel(F.col(text_col)).alias("sig"))
-            .filter(F.col("sig").isNotNull())
-            .localCheckpoint(eager=True)
-        )
-
-    sig_s = standing_sig if standing_sig is not None else sigs(standing)
-    sig_d = sigs(delta)
-    small_delta = sig_d.count() <= broadcast_threshold_docs
-    bcast = F.broadcast if small_delta else (lambda d: d)
+    if standing_sig is None:
+        standing_sig, _ = minhash_signatures(standing, text_col, block_col)
+    sig_d, n_delta = minhash_signatures(delta, text_col, block_col)
+    bcast = F.broadcast if n_delta <= BROADCAST_MAX_DOCS else (lambda d: d)
     # a re-delivered id's standing row is dead weight on every path:
     # dropping it here makes the delta version win in BOTH the cross
     # probe and the verify lookup (leaving it in the probe would emit
     # the same pair twice, once per orientation, when the re-seen doc
     # also matches a NEW delta doc)
-    sig_s = sig_s.join(bcast(sig_d.select("doc_id")), "doc_id", "left_anti")
+    sig_s = standing_sig.join(bcast(sig_d.select("doc_id")), "doc_id", "left_anti")
 
-    n_cand_perms = N_PERMS - min_matching + 1
-
-    def probe(sig: DataFrame, id_alias: str) -> DataFrame:
-        return sig.select(
-            F.col("doc_id").alias(id_alias),
-            F.col(block_col).alias(f"blk_{id_alias}"),
-            F.posexplode(F.slice("sig", 1, n_cand_perms)).alias(
-                f"k_{id_alias}", f"mh_{id_alias}"
-            ),
-        )
-
-    ps, pd_ = probe(sig_s, "src"), probe(sig_d, "dst")
+    probe_d = bcast(_band_probe(sig_d, block_col, min_matching, "dst"))
     # sig_s carries no delta ids (anti-joined above), so cross can never
     # self-pair and never mirrors a delta-internal pair
-    cross = ps.join(
-        bcast(pd_),
-        (F.col("k_src") == F.col("k_dst"))
-        & (F.col("mh_src") == F.col("mh_dst"))
-        & (F.col("blk_src") == F.col("blk_dst")),
-    ).select("src", "dst")
-    pd2 = probe(sig_d, "src")
-    dd = pd2.join(
-        bcast(pd_),
-        (F.col("k_src") == F.col("k_dst"))
-        & (F.col("mh_src") == F.col("mh_dst"))
-        & (F.col("blk_src") == F.col("blk_dst"))
-        & (F.col("src") < F.col("dst")),
-    ).select("src", "dst")
-    # the candidate set is delta-docs × collision fan-out — NOT bounded
-    # by the delta doc count when the standing corpus is boilerplate-
-    # heavy — so its broadcast is gated on ITS OWN size (the
-    # minhash_near_dups rule: the gate must test the frame actually
-    # broadcast); the checkpoint makes the count a block scan
-    cands = cross.unionByName(dd).distinct().localCheckpoint(eager=True)
-    bcast_cands = (
-        F.broadcast if cands.count() <= broadcast_threshold_docs else (lambda d: d)
-    )
+    cross = _collisions(_band_probe(sig_s, block_col, min_matching, "src"), probe_d, False)
+    dd = _collisions(_band_probe(sig_d, block_col, min_matching, "src"), probe_d, True)
+    cands, (n_cands,) = settle(cross.unionByName(dd).distinct(), F.count(F.lit(1)))
+    if n_cands <= BROADCAST_MAX_DOCS:
+        cands = F.broadcast(cands)
 
     # verify lookup: one row per id (delta version of a re-seen doc —
     # sig_s is already delta-free), so the join cannot fan out
@@ -378,15 +381,7 @@ def minhash_delta_near_dups(
         F.col("doc_id").alias("src"), F.col("sig").alias("sig_a")
     )
     sb = sig_d.select(F.col("doc_id").alias("dst"), F.col("sig").alias("sig_b"))
-    n_match = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v)
-    )
-    return (
-        sa.join(bcast_cands(cands), "src")
-        .join(bcast(sb), "dst")
-        .select("src", "dst", n_match.alias("n_matching"))
-        .filter(F.col("n_matching") >= min_matching)
-    )
+    return _verified(cands, sa, bcast(sb), min_matching)
 
 
 # --- SimHash --------------------------------------------------------------
@@ -481,7 +476,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     block_col: str = "source",
     threshold: float = 0.5,
-    broadcast_threshold_docs: int = 200_000,
 ) -> DataFrame:
     """(src, dst, jaccard) for same-block pairs with true 3-gram-set
     Jaccard ≥ threshold.
@@ -554,17 +548,18 @@ def ngram_jaccard_pairs(
     # Verification: join each candidate pair back to the two shingle-set
     # arrays and count the intersection JVM-side (`array_intersect` —
     # shingle sets are distinct per doc, so its size IS the set overlap).
-    # The per-doc array table broadcasts while it fits the executor
-    # budget (map-side join, candidates never shuffle); past the cap it
-    # degrades to shuffled joins whose volume is O(corpus) per side —
-    # never a driver-side materialization of the corpus index.
-    sets = sh.groupBy("doc_id").agg(F.collect_list("shingle_hash").alias("arr"))
+    # The per-doc array table broadcasts while its row count (read in
+    # its own checkpoint action) is under BROADCAST_MAX_DOCS (map-side
+    # join, candidates never shuffle); past the cap it degrades to
+    # shuffled joins whose volume is O(corpus) per side — the corpus
+    # index is never materialized in one process.
+    sets, (n_docs,) = settle(
+        sh.groupBy("doc_id").agg(F.collect_list("shingle_hash").alias("arr")),
+        F.count(F.lit(1)),
+    )
     sa = sets.select(F.col("doc_id").alias("src"), F.col("arr").alias("arr_a"))
     sb = sets.select(F.col("doc_id").alias("dst"), F.col("arr").alias("arr_b"))
-    # gate on the CHECKPOINTED frame (a block scan) — df.count() would
-    # re-run the full source lineage just to size the hint
-    n_docs = sh.select("doc_id").distinct().count()
-    if n_docs <= broadcast_threshold_docs:
+    if n_docs <= BROADCAST_MAX_DOCS:
         sa, sb = F.broadcast(sa), F.broadcast(sb)
     joined = cands.join(sa, "src").join(sb, "dst")
     inter = F.size(F.array_intersect("arr_a", "arr_b")).cast("double")
@@ -584,7 +579,6 @@ def containment_pairs(
     block_col: str = "source",
     threshold: float = 0.8,
     max_doc_freq: int | None = None,
-    broadcast_threshold_docs: int = 2_000_000,
 ) -> DataFrame:
     """(src, dst, containment) where containment = |S(src) ∩ S(dst)| /
     |S(dst)| ≥ threshold — the fraction of dst's 3-gram set contained in
@@ -611,7 +605,9 @@ def containment_pairs(
         .join(df.select("doc_id", block_col), "doc_id")
         .localCheckpoint(eager=True)
     )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("set_size"))
+    sizes, (n_docs,) = settle(
+        sh.groupBy("doc_id").agg(F.count("*").alias("set_size")), F.count(F.lit(1))
+    )
     joinable = sh
     if max_doc_freq is not None:
         dfreq = sh.groupBy("shingle_hash").agg(F.count("*").alias("__df"))
@@ -637,11 +633,12 @@ def containment_pairs(
         .agg(F.count("*").alias("n_inter"))
     )
     dst_size = sizes.select(F.col("doc_id").alias("dst"), F.col("set_size").alias("dst_size"))
-    # per-doc table: broadcast only under the doc-count cap (the module's
-    # standard gate — an unconditional hint would force a corpus-sized
-    # driver materialization at the 10^9-doc scale this file targets);
-    # past the cap the size join degrades to a shuffle keyed by doc id
-    if sizes.count() <= broadcast_threshold_docs:
+    # per-doc size table: broadcast only under its own cap (see
+    # CONTAINMENT_BROADCAST_MAX_DOCS — an unconditional hint would
+    # collect a corpus-sized table into one process at the 10^9-doc scale
+    # this file targets); past the cap the size join degrades to a
+    # shuffle keyed by doc id
+    if n_docs <= CONTAINMENT_BROADCAST_MAX_DOCS:
         dst_size = F.broadcast(dst_size)
     return (
         inter.join(dst_size, "dst")

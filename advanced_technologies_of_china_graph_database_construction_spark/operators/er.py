@@ -37,6 +37,13 @@ from pyspark.sql import types as T
 
 from ..functions.vectors import arrow_cosine_rounded, as_double
 from .connected_components import connected_components
+from .superstep import settle
+
+# Broadcast cap of the name lookups: the symdelete verify join and the
+# refresh's standing-name anti-join.  An (id, name) row is a long plus a
+# short surface string (~40 B), so 5M rows ≈ 200 MB.  Past the cap the
+# hint drops and Catalyst plans shuffled joins.
+BROADCAST_MAX_ROWS = 5_000_000
 
 
 def _round_half_up(x: np.ndarray, digits: int = 6) -> np.ndarray:
@@ -501,7 +508,6 @@ def symdelete_typo_pairs(
     id_col: str = "id",
     name_col: str = "name",
     max_distance: int = 1,
-    broadcast_threshold_rows: int = 5_000_000,
     n_rows: int | None = None,
 ) -> DataFrame:
     """(src, dst, distance): id pairs (src < dst) whose names are within
@@ -526,11 +532,8 @@ def symdelete_typo_pairs(
     by xxhash64(variant) (8 B shuffle key); candidates are
     variant-collisions only, never the n² name matrix; the name lookup
     for verification broadcasts ``df``'s (id, name) projection while it
-    fits (``broadcast_threshold_rows`` — the d05/d02 conditional-hint
-    gate: an entity name dim is usually small, but a forced broadcast
-    of a larger-than-budget one would OOM executors, so past the cap
-    Catalyst falls back to shuffled joins); levenshtein runs map-side
-    either way.  ``n_rows`` (parquet footer metadata / catalog stats —
+    fits ``BROADCAST_MAX_ROWS`` (a forced broadcast of a larger name dim
+    would OOM executors); levenshtein runs map-side either way.  ``n_rows`` (parquet footer metadata / catalog stats —
     the er02 pattern) sizes that hint without an extra full-table
     count action; only when absent does the operator fall back to one
     ``df.count()``.
@@ -561,7 +564,7 @@ def symdelete_typo_pairs(
     )
     na = names.select(F.col("id").alias("src"), F.col("name").alias("name_a"))
     nb = names.select(F.col("id").alias("dst"), F.col("name").alias("name_b"))
-    if (n_rows if n_rows is not None else df.count()) <= broadcast_threshold_rows:
+    if (n_rows if n_rows is not None else df.count()) <= BROADCAST_MAX_ROWS:
         na, nb = F.broadcast(na), F.broadcast(nb)
     dist = F.levenshtein("name_a", "name_b")
     return (
@@ -663,13 +666,14 @@ def build_er_state(names: DataFrame, name_col: str = "name") -> DataFrame:
     ``xxhash64(name)`` (fully distributed, no global row-number sort);
     component = min-sid of the SymSpell d=1 alias cluster; surfaces with
     no alias are their own component."""
-    surfaces = (
+    # consumed by pairs + join; its row count sizes the verify broadcast
+    surfaces, (n_surfaces,) = settle(
         names.select(F.col(name_col).alias("name"))
         .distinct()
-        .withColumn("sid", F.xxhash64("name"))
-        .localCheckpoint(eager=True)  # consumed by pairs + count + join
+        .withColumn("sid", F.xxhash64("name")),
+        F.count(F.lit(1)),
     )
-    pairs = symdelete_typo_pairs(surfaces, id_col="sid", name_col="name")
+    pairs = symdelete_typo_pairs(surfaces, id_col="sid", name_col="name", n_rows=n_surfaces)
     comp = connected_components(pairs.select("src", "dst"))
     return surfaces.join(comp, surfaces.sid == comp.id, "left").select(
         "sid", "name", F.coalesce("component", F.col("sid")).alias("component")
@@ -679,7 +683,6 @@ def build_er_state(names: DataFrame, name_col: str = "name") -> DataFrame:
 def incremental_er_refresh(
     standing: DataFrame,
     delta_names: DataFrame,
-    broadcast_threshold_rows: int = 5_000_000,
     standing_n_rows: int | None = None,
 ) -> DataFrame:
     """Fold a delta vocabulary batch into a standing ER state — the
@@ -698,7 +701,7 @@ def incremental_er_refresh(
     1. new surfaces = delta ∖ standing (anti-join; a re-seen surface is
        a no-op, its component is already settled).  The standing name
        column is broadcast only while it fits
-       (``broadcast_threshold_rows`` — the same conditional-hint gate
+       (``BROADCAST_MAX_ROWS`` — the same conditional-hint gate
        :func:`symdelete_typo_pairs` uses; a corpus-sized standing
        vocabulary falls back to a shuffled left_anti, which AQE turns
        back into a broadcast when the delta side is the small one).
@@ -716,7 +719,7 @@ def incremental_er_refresh(
     s = standing.select("sid", "name", "component")
     s_name = s.select("name")
     n = standing_n_rows if standing_n_rows is not None else s_name.count()
-    if n <= broadcast_threshold_rows:
+    if n <= BROADCAST_MAX_ROWS:
         s_name = F.broadcast(s_name)
     new_names = (
         delta_names.select("name")

@@ -5,7 +5,9 @@ below is made here once instead of by hand in every loop:
 - ``scatter_cache``: the iteration-invariant |E| frame, hash-partitioned
   on the loop's scatter key and cached for the loop's life;
 - ``settle``: a converging round's materialization and its convergence
-  witness, read in one Spark action;
+  witness, read in one Spark action.  It also serves size witnesses:
+  the ER and dedup pair finders (``er``, ``dedup``) settle the frame a
+  broadcast gate sizes and read its row count from the same action;
 - ``restrict``: an edge frame cut to (or away from) a node set on both
   endpoints;
 - ``positive_weights``: the edge-weight validity guard;

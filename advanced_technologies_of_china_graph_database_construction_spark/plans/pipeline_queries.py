@@ -42,13 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..operators.connected_components import connected_components
-from ..operators.er import (
-    apply_mapping_array,
-    build_er_state,
-    incremental_er_refresh,
-    symdelete_typo_pairs,
-)
+from ..operators.er import apply_mapping_array, build_er_state, incremental_er_refresh
 from ..sources import txt_records as txt
 from .spec import QuerySpec
 
@@ -108,10 +102,10 @@ def _render_p01_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def keyword_er_mapping(records: DataFrame, col: str = "keywords") -> DataFrame:
     """The ER stage over an array column's surface VOCABULARY:
-    distinct surfaces → SymSpell distance-1 typo pairs → connected
-    components → canonical = min surface per component.  Returns the
-    (id=surface, canonical=surface) mapping frame ``apply_mapping_array``
-    consumes — the string-side analogue of `operators.er`'s embedding
+    ``er.build_er_state`` (distinct surfaces → SymSpell distance-1 typo
+    pairs → connected components) → canonical = min surface per
+    component.  Returns the (id=surface, canonical=surface) mapping
+    frame ``apply_mapping_array`` consumes — the string-side analogue of `operators.er`'s embedding
     pipeline (`keyword_merger.py:222` min-representative, `:231-232`
     noise→identity).
 
@@ -119,19 +113,9 @@ def keyword_er_mapping(records: DataFrame, col: str = "keywords") -> DataFrame:
     distributed, no global row-number sort over the vocabulary; the
     canonical ELECTION is by surface name (min per component), so the
     hash values never leak into the result."""
-    surfaces = (
-        records.select(F.explode(col).alias("name"))
-        .distinct()
-        .withColumn("sid", F.xxhash64("name"))
-        .localCheckpoint(eager=True)  # consumed by pairs, comp join, election
-    )
-    pairs = symdelete_typo_pairs(surfaces, id_col="sid", name_col="name")
-    comp = connected_components(pairs.select("src", "dst"))
-    withcomp = surfaces.join(comp, surfaces.sid == comp.id, "left").select(
-        "name", F.coalesce("component", F.col("sid")).alias("comp")
-    )
-    canon = withcomp.groupBy("comp").agg(F.min("name").alias("canonical"))
-    return withcomp.join(canon, "comp").select(F.col("name").alias("id"), "canonical")
+    state = build_er_state(records.select(F.explode(col).alias("name")))
+    canon = state.groupBy("component").agg(F.min("name").alias("canonical"))
+    return state.join(canon, "component").select(F.col("name").alias("id"), "canonical")
 
 
 def p01_end_to_end_build_path(spark: SparkSession, sf_dir: str) -> DataFrame:

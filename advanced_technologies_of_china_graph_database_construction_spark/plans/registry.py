@@ -58,6 +58,18 @@ PLAN_CHANGED_REGATE: set[str] = {
     # superstep.settle: the distributed large-star/small-star loop now
     # reads its fingerprint in the round's checkpoint action.
     "g41_distributed_components",
+    # ER/dedup broadcast gates read their sizes from superstep.settle:
+    # the MinHash, n-gram Jaccard and containment pair finders (and the
+    # specs built on MinHash pairs) plus p01's ER stage, now
+    # er.build_er_state; the checkpoints sit below the final frames, so
+    # the fingerprints cannot see the change (p03 is pinned below).
+    "d02_minhash_near_dups",
+    "d05_ngram_jaccard_pairs",
+    "d11_dedup_keep_canonical",
+    "d24_containment_pairs",
+    "d45_minhash_delta_near_dups",
+    "d49_cluster_aware_split",
+    "p01_end_to_end_build_path",
     # Carried pins: in-loop changes with no green CORRECTNESS_r* row
     # since (g28/g31 k-core and g39 SCC in r17; p03, e15 and g43 —
     # pinned above — in r16).

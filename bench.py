@@ -186,12 +186,7 @@ def _dedup_incremental_pair(spark, sf_dir: str) -> dict[str, list[float]]:
     docs = load_table(spark, sf_dir, "documents")
     is_delta = F.col("doc_id") % 64 == 0
     standing, delta = docs.filter(~is_delta), docs.filter(is_delta)
-    kernel = dedup._minhash_sig_udf()
-    standing_sig = (
-        standing.select("doc_id", "source", kernel(F.col("text")).alias("sig"))
-        .filter(F.col("sig").isNotNull())
-        .localCheckpoint(eager=True)
-    )
+    standing_sig, _ = dedup.minhash_signatures(standing)
     return {
         "d45_delta_dedup": _timed_runs(
             spark,

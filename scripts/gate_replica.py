@@ -9,9 +9,11 @@ tuned factory) and then fails the real gate.  Round 1 lost the entire
 ingest family to exactly that.  This script runs every registered spec
 against its DuckDB oracle on a bare `SparkSession.builder.getOrCreate()`
 session, in registry order, and reports per-spec status and timing.
+Naming specs after ``sf_dir`` runs only those, in the order given — the
+fast oracle-equality check after a plan change.
 
 Usage:
-    python scripts/gate_replica.py [sf_dir]      # default /root/testdata/sf0.01
+    python scripts/gate_replica.py [sf_dir [name ...]]   # sf_dir defaults to the sf0.01 test data
 """
 
 from __future__ import annotations
@@ -27,6 +29,7 @@ from pyspark.sql import SparkSession  # noqa: E402
 
 def main() -> int:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    names = sys.argv[2:]
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # Heap size is the ONE conf we allow above defaults: local mode
     # conflates driver and executor memory, so the 1g default heap
@@ -44,13 +47,17 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from advanced_technologies_of_china_graph_database_construction_spark.plans.registry import all_specs
+    from advanced_technologies_of_china_graph_database_construction_spark.plans.registry import (
+        all_specs,
+        spec_map,
+    )
     from tests.oracle import compare, duckdb_conn
 
     con = duckdb_conn(sf)
+    specs = [spec_map()[n] for n in names] if names else all_specs()
     t_all = time.time()
     fails: list[str] = []
-    for s in all_specs():
+    for s in specs:
         t0 = time.time()
         try:
             if s.oracle:
@@ -63,7 +70,7 @@ def main() -> int:
             status = f"FAIL {type(e).__name__}: {str(e)[:100]}"
             fails.append(s.name)
         print(f"{s.name:36s} {status:12s} {time.time() - t0:6.2f}s", flush=True)
-    print(f"TOTAL {time.time() - t_all:.1f}s  specs={len(all_specs())}  fails={fails}")
+    print(f"TOTAL {time.time() - t_all:.1f}s  specs={len(specs)}  fails={fails}")
     return 1 if fails else 0
 
 

@@ -706,7 +706,7 @@ def test_superstep_operators_release_edge_cache(spark, cache_manager, monkeypatc
     assert cache_manager.isEmpty(), "count"
 
 
-def test_settle_reads_witness_in_the_checkpoint_action(spark):
+def test_settle_reads_witness_in_the_checkpoint_action(spark, cost_of):
     """``superstep.settle`` returns the round's rows and its witness
     from ONE action: on a one-shuffle groupBy frame it schedules fewer
     Spark jobs, and no more stages, than an eager checkpoint followed
@@ -717,27 +717,12 @@ def test_settle_reads_witness_in_the_checkpoint_action(spark):
         settle,
     )
 
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
     def frame():
         return (
             spark.range(0, 1000, numPartitions=4)
             .groupBy((F.col("id") % 7).alias("k"))
             .agg(F.count(F.lit(1)).alias("n"))
         )
-
-    def cost_of(run):
-        """(run's result, (jobs, stages) it scheduled) — the
-        statusTracker count of scripts/job_count.py, read after the
-        listener bus has drained."""
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        before = tracker.getJobIdsForGroup(None)
-        first = max(before) if before else -1
-        out = run()
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs = [j for j in tracker.getJobIdsForGroup(None) if j > first]
-        return out, (len(jobs), sum(len(tracker.getJobInfo(j).stageIds) for j in jobs))
 
     def eager_then_count():
         f = frame().localCheckpoint(eager=True)

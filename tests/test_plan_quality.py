@@ -88,23 +88,106 @@ def test_minhash_verify_join_broadcasts_signatures(spark):
     assert plan.count("BroadcastHashJoin") >= 2, plan
 
 
-def test_minhash_verify_broadcast_capped_above_threshold(spark):
-    """Over the doc-count cap the d02 verification joins must NOT carry a
-    forced broadcast hint: at ~10⁹ docs the signature table is tens of
-    GB and a hinted broadcast OOMs every executor.  With the cap at 0 the
-    plan must fall back to shuffled (sort-merge / shuffled-hash) joins."""
+# size-gated verification joins → the dedup module constant capping each
+_SIZE_GATES = {
+    "minhash_near_dups": "BROADCAST_MAX_DOCS",
+    "ngram_jaccard_pairs": "BROADCAST_MAX_DOCS",
+    "containment_pairs": "CONTAINMENT_BROADCAST_MAX_DOCS",
+}
+
+
+@pytest.mark.parametrize("op", sorted(_SIZE_GATES))
+def test_size_gated_broadcast_capped_above_threshold(spark, monkeypatch, op):
+    """Over the doc-count cap the verification joins of d02 (MinHash),
+    d05 (n-gram Jaccard) and d24 (containment) must NOT carry a forced
+    broadcast hint: at ~10⁹ docs the per-doc table is tens of GB and a
+    hinted broadcast OOMs every executor.  With the cap at 0 the plan
+    must fall back to shuffled (sort-merge / shuffled-hash) joins."""
     from advanced_technologies_of_china_graph_database_construction_spark.catalog import load_table
-    from advanced_technologies_of_china_graph_database_construction_spark.operators.dedup import minhash_near_dups
+    from advanced_technologies_of_china_graph_database_construction_spark.operators import dedup
 
     docs = load_table(spark, SF_CORRECT, "documents")
-    plan = _plan(minhash_near_dups(docs, broadcast_threshold_docs=0))
+    under_cap = getattr(dedup, op)(docs)._jdf.queryExecution().optimizedPlan().toString()
+    assert "strategy=broadcast" in under_cap, under_cap  # the hint the cap removes
+    monkeypatch.setattr(dedup, _SIZE_GATES[op], 0)
+    logical = getattr(dedup, op)(docs)
+    plan = _plan(logical)
     # AQE may still *choose* a broadcast at this tiny SF; what must be
-    # gone is the unconditional logical hint — visible as ResolvedHint /
-    # broadcast in the optimized logical plan.
-    logical = minhash_near_dups(docs, broadcast_threshold_docs=0)
+    # gone is the unconditional logical hint — a ResolvedHint, or the
+    # join hint the optimizer folds it into, in the optimized plan.
     optimized = logical._jdf.queryExecution().optimizedPlan().toString()
     assert "ResolvedHint" not in optimized, optimized
+    assert "strategy=broadcast" not in optimized, optimized
     assert plan  # physical plan still builds and runs
+
+
+def _settled_gate_calls(docs, names):
+    """name → a call of each pair finder whose broadcast gate reads its
+    size from ``superstep.settle``, over the given corpus / vocabulary."""
+    from advanced_technologies_of_china_graph_database_construction_spark.operators import dedup, er
+    from pyspark.sql import functions as F
+
+    def delta(corpus):
+        is_delta = F.col("doc_id") % 3 == 0
+        return dedup.minhash_delta_near_dups(corpus.filter(~is_delta), corpus.filter(is_delta))
+
+    return {
+        "minhash_near_dups": lambda: dedup.minhash_near_dups(docs),
+        "minhash_delta_near_dups": lambda: delta(docs),
+        "ngram_jaccard_pairs": lambda: dedup.ngram_jaccard_pairs(docs),
+        "containment_pairs": lambda: dedup.containment_pairs(docs),
+        "build_er_state": lambda: er.build_er_state(names),
+    }
+
+
+_DOC_SCHEMA = "doc_id long, source string, text string"
+_GATED = sorted(_settled_gate_calls(None, None))
+
+
+@pytest.mark.parametrize("op", _GATED)
+def test_settled_gates_schedule_only_their_checkpoints(spark, cost_of, monkeypatch, op):
+    """Building a pair finder's frame runs no Spark job of its own
+    beyond its checkpoints: each broadcast gate reads its row count in
+    the checkpoint action (``superstep.settle``), not in a separate
+    ``count()``.  ``toPandas`` counts with the checkpoints: it is
+    ``connected_components``' one collect of its settled edge list on
+    the union-find path ``build_er_state`` takes."""
+    text = "the quick brown fox jumps over the lazy dog "
+    docs = spark.createDataFrame(
+        [(i, "ab"[i % 2], text * 2 + str(i // 4)) for i in range(12)], _DOC_SCHEMA
+    )
+    names = spark.createDataFrame(
+        [(n,) for n in ["alpha", "alpah", "alphas", "beta"]], "name string"
+    )
+    inside: list[int] = []
+    for method in ("localCheckpoint", "toPandas"):
+        original = getattr(type(docs), method)
+
+        def recorded(self, *args, _original=original, **kwargs):
+            out, (jobs, _) = cost_of(lambda: _original(self, *args, **kwargs))
+            inside.append(jobs)
+            return out
+
+        monkeypatch.setattr(type(docs), method, recorded)
+    _, (jobs, _) = cost_of(_settled_gate_calls(docs, names)[op])
+    assert inside, "no checkpoint taken"
+    assert jobs == sum(inside), (jobs, inside)
+
+
+@pytest.mark.parametrize(
+    "op, texts",
+    [(op, []) for op in _GATED]
+    # a vocabulary has no short-text case: every surface is its own component
+    + [(op, ["", "ab", None]) for op in _GATED if op != "build_er_state"],
+    ids=lambda v: v if isinstance(v, str) else "all_short" if v else "empty",
+)
+def test_settled_gates_on_empty_and_short_input(spark, op, texts):
+    """An empty corpus, or one whose texts hold no 3-gram, settles an
+    empty frame and returns no pair; an empty vocabulary returns an
+    empty ER state."""
+    docs = spark.createDataFrame([(i, "a", t) for i, t in enumerate(texts)], _DOC_SCHEMA)
+    names = spark.createDataFrame([], "name string")
+    assert _settled_gate_calls(docs, names)[op]().count() == 0
 
 
 def test_exact_similarity_join_is_distributed_group_gemm(spark):
@@ -783,27 +866,25 @@ def test_npmi_vocab_broadcast_and_topk_no_global_sort(spark):
     assert "SortMergeJoin" not in plan, plan
 
 
-def test_minhash_delta_broadcasts_delta_never_shuffles_standing(spark):
+def test_minhash_delta_broadcasts_delta_never_shuffles_standing(spark, monkeypatch):
     """d45: while the delta fits the cap, every delta-derived frame
     (band probe, candidates, delta signatures) enters as a broadcast so
     the standing side is scanned map-side and never shuffled; past the
     cap the unconditional hints must be gone (the d02 discipline)."""
     from advanced_technologies_of_china_graph_database_construction_spark.catalog import load_table
-    from advanced_technologies_of_china_graph_database_construction_spark.operators.dedup import (
-        minhash_delta_near_dups,
-    )
+    from advanced_technologies_of_china_graph_database_construction_spark.operators import dedup
     from pyspark.sql import functions as F
 
     docs = load_table(spark, SF_CORRECT, "documents")
     is_delta = F.pmod(F.col("doc_id"), F.lit(7)).isin(0, 1)
-    small = minhash_delta_near_dups(docs.filter(~is_delta), docs.filter(is_delta))
+    small = dedup.minhash_delta_near_dups(docs.filter(~is_delta), docs.filter(is_delta))
     plan = _plan(small)
     assert plan.count("BroadcastHashJoin") >= 3, plan
-    capped = minhash_delta_near_dups(
-        docs.filter(~is_delta), docs.filter(is_delta), broadcast_threshold_docs=0
-    )
+    monkeypatch.setattr(dedup, "BROADCAST_MAX_DOCS", 0)
+    capped = dedup.minhash_delta_near_dups(docs.filter(~is_delta), docs.filter(is_delta))
     optimized = capped._jdf.queryExecution().optimizedPlan().toString()
     assert "ResolvedHint" not in optimized, optimized
+    assert "strategy=broadcast" not in optimized, optimized
 
 
 def test_a11_filter_pushed_to_candidate_scan(spark):
