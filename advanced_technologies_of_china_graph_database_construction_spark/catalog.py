@@ -27,20 +27,25 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Runtime-settable SQL confs every query plan assumes.  The correctness
-# driver supplies its OWN SparkSession (not session.get_spark), so these
-# must not live only in the session factory: a default session renders
-# timestamps in local time (breaking oracle comparison), uses 200 shuffle
-# partitions (pure overhead at test scale), and leaves AQE's skew/coalesce
-# features off.  All of these are runtime-settable SQL confs — static
-# confs like driver memory stay in session.py where they belong.
+# Runtime-settable SQL confs every query plan assumes, owned here alone:
+# session.get_spark applies them, and so does load_table, because the
+# correctness gate supplies its OWN SparkSession (not get_spark).  A
+# default session renders timestamps in local time (breaking oracle
+# comparison), uses 200 shuffle partitions (pure overhead at test
+# scale), and leaves AQE's skew/coalesce features off.  Static confs
+# like driver memory stay in session.py where they belong.
 _RUNTIME_CONFS = {
+    # Deterministic cross-engine timestamp semantics.
     "spark.sql.session.timeZone": "UTC",
+    # AQE: runtime partition coalescing, skew-join splitting, plan re-opt.
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Dimension tables (nation/region/entity dims, alias maps) broadcast.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # Arrow for pandas UDF / toPandas boundaries.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # ~cores locally; on a cluster AQE coalesces from this initial value.
     "spark.sql.shuffle.partitions": (
         os.environ.get("SPARK_GRAFT_CPUS", "32")
         if os.environ.get("SPARK_GRAFT_CPUS", "32").isdigit()

@@ -20,6 +20,15 @@ deterministic ``fake_decoder`` survives as the pluggable-stub example
 for the generic ``extract_features`` seam.  Swapping decoders changes
 one callable, not the pipeline.
 
+One decode seam: each decode operator is a per-payload function
+``decode(raw) -> dict`` handed to ``_decode_payloads``, the module's
+only ``mapInPandas``.  A NULL payload decodes as ``b""``; a field the
+dict omits is NULL.  Dead-letter rule: an undecodable row is
+``{"error": ...}`` plus the fields already known (``audio_energy``'s
+and ``quiet_segments``' count of 0).  The seam catches nothing, so a
+bug in a built-in decoder fails the job; only ``extract_features``
+wraps its pluggable ``decoder``.
+
 Scale notes: feature extraction is a narrow Arrow-batched map — no
 shuffle touches payload bytes; aggregations downstream group on the
 small feature/meta columns only (column pruning drops ``payload`` at
@@ -33,6 +42,7 @@ from __future__ import annotations
 import re
 from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -143,12 +153,32 @@ def pil_decoder(payload: bytes) -> list[float]:
         ) from exc
     import io
 
-    import numpy as np
-
     with Image.open(io.BytesIO(payload)) as im:
         arr = np.asarray(im.convert("RGB"), dtype=np.float64)
     h, w, c = arr.shape
     return [float(w), float(h), float(c), float(arr.mean())]
+
+
+def _decode_payloads(
+    media: DataFrame,
+    schema: StructType,
+    decode: Callable[[bytes], dict],
+    keep: tuple[str, ...] = ("media_id",),
+) -> DataFrame:
+    """The module's one Arrow-batched decode seam (see the module
+    docstring for the contract ``decode`` follows).  ``keep`` columns
+    pass through unchanged; every other ``schema`` field comes from the
+    dicts ``decode`` returns, NULL where a dict omits it."""
+    names = schema.fieldNames()
+
+    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [decode(bytes(p) if p is not None else b"") for p in pdf["payload"]]
+            yield pd.DataFrame(
+                {c: pdf[c] if c in keep else [r.get(c) for r in rows] for c in names}
+            )
+
+    return media.select(*keep, "payload").mapInPandas(decode_batches, schema)
 
 
 def extract_features(media: DataFrame, decoder: Decoder | None = None) -> DataFrame:
@@ -156,29 +186,13 @@ def extract_features(media: DataFrame, decoder: Decoder | None = None) -> DataFr
     (same dead-letter shape as enrichment)."""
     dec = decoder or fake_decoder
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats, errs, nbytes = [], [], []
-            for payload in pdf["payload"]:
-                raw = bytes(payload) if payload is not None else b""
-                nbytes.append(len(raw))
-                try:
-                    feats.append(dec(raw))
-                    errs.append(None)
-                except Exception as exc:  # noqa: BLE001 — dead-letter, not crash
-                    feats.append(None)
-                    errs.append(f"decode_error: {exc}")
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": nbytes,
-                    "features": feats,
-                    "error": errs,
-                }
-            )
+    def decode(raw: bytes) -> dict:
+        try:
+            return {"n_bytes": len(raw), "features": dec(raw)}
+        except Exception as exc:  # noqa: BLE001 — dead-letter, not crash
+            return {"n_bytes": len(raw), "error": f"decode_error: {exc}"}
 
-    return media.select("media_id", "kind", "payload").mapInPandas(run, FEATURE_SCHEMA)
+    return _decode_payloads(media, FEATURE_SCHEMA, decode, keep=("media_id", "kind"))
 
 
 ENERGY_SCHEMA = StructType(
@@ -206,36 +220,19 @@ def audio_energy(media: DataFrame) -> DataFrame:
     double end-to-end (the float32 feature array of ``extract_features``
     would destroy the 6-digit rounding contract).  Per-row errors ride
     the same dead-letter channel."""
-    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ns, means, rmss, errs = [], [], [], []
-            for payload in pdf["payload"]:
-                raw = bytes(payload) if payload is not None else b""
-                if not raw:
-                    ns.append(0)
-                    means.append(None)
-                    rmss.append(None)
-                    errs.append("decode_error: empty payload")
-                    continue
-                x = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-                n = len(x)
-                ns.append(n)
-                means.append(float(x.sum()) / n)
-                rmss.append(float(np.sqrt(float((x * x).sum()) / n)))
-                errs.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_samples": ns,
-                    "mean_level": means,
-                    "rms_level": rmss,
-                    "error": errs,
-                }
-            )
+    def decode(raw: bytes) -> dict:
+        if not raw:
+            return {"n_samples": 0, "error": "decode_error: empty payload"}
+        x = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        n = len(x)
+        return {
+            "n_samples": n,
+            "mean_level": float(x.sum()) / n,
+            "rms_level": float(np.sqrt(float((x * x).sum()) / n)),
+        }
 
-    return media.select("media_id", "payload").mapInPandas(run, ENERGY_SCHEMA)
+    return _decode_payloads(media, ENERGY_SCHEMA, decode)
 
 
 _PPM_HDR = re.compile(rb"^P6\s+(\d+)\s+(\d+)\s+(\d+)[ \t\r\n]")
@@ -338,43 +335,28 @@ def image_stats(media: DataFrame) -> DataFrame:
     float64 division — bit-identical to the SQL oracle's avg.
     Undecodable payloads (bad magic, truncated plane, non-255 maxval)
     ride the dead-letter channel (guards live in ``_parse_p6``)."""
-    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("w", "h", "r", "g", "b", "i", "err")}
-            for payload in pdf["payload"]:
-                raw = bytes(payload) if payload is not None else b""
-                w, h, plane, err = _parse_p6(raw)
-                r = g = b = i = None
-                if err is None:
-                    arr = (
-                        np.frombuffer(plane, dtype=np.uint8)
-                        .astype(np.int64)
-                        .reshape(h, w, 3)
-                    )
-                    n = w * h
-                    sums = arr.sum(axis=(0, 1))  # int64 per channel
-                    r = float(sums[0]) / n
-                    g = float(sums[1]) / n
-                    b = float(sums[2]) / n
-                    i = float(sums.sum()) / (3 * n)
-                for k, v in zip(("w", "h", "r", "g", "b", "i", "err"), (w, h, r, g, b, i, err)):
-                    out[k].append(v)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": out["w"],
-                    "height": out["h"],
-                    "mean_r": out["r"],
-                    "mean_g": out["g"],
-                    "mean_b": out["b"],
-                    "mean_intensity": out["i"],
-                    "error": out["err"],
-                }
-            )
+    def decode(raw: bytes) -> dict:
+        w, h, plane, err = _parse_p6(raw)
+        if err is not None:
+            return {"error": err}
+        arr = (
+            np.frombuffer(plane, dtype=np.uint8)
+            .astype(np.int64)
+            .reshape(h, w, 3)
+        )
+        n = w * h
+        sums = arr.sum(axis=(0, 1))  # int64 per channel
+        return {
+            "width": w,
+            "height": h,
+            "mean_r": float(sums[0]) / n,
+            "mean_g": float(sums[1]) / n,
+            "mean_b": float(sums[2]) / n,
+            "mean_intensity": float(sums.sum()) / (3 * n),
+        }
 
-    return media.select("media_id", "payload").mapInPandas(run, IMAGE_SCHEMA)
+    return _decode_payloads(media, IMAGE_SCHEMA, decode)
 
 
 def attach_y4m_videos(docs: DataFrame) -> DataFrame:
@@ -444,66 +426,36 @@ def video_stats(media: DataFrame) -> DataFrame:
     bit-identical to the SQL oracle's avg.  Undecodable payloads (bad
     magic, unsupported colourspace, truncated/absent frames) ride the
     dead-letter channel (header guards live in ``_parse_y4m``)."""
-    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = {k: [] for k in ("w", "h", "nf", "mean", "first", "last", "err")}
-
-            def emit(w=None, h=None, nf=None, mean=None, first=None, last=None, err=None):
-                for k, v in zip(("w", "h", "nf", "mean", "first", "last", "err"),
-                                (w, h, nf, mean, first, last, err)):
-                    cols[k].append(v)
-
-            for payload in pdf["payload"]:
-                raw = bytes(payload) if payload is not None else b""
-                w, h, body, herr = _parse_y4m(raw)
-                if herr is not None:
-                    emit(err=herr)
-                    continue
-                plane = w * h
-                pos, planes = body, []
-                bad = None
-                while pos < len(raw):
-                    if raw[pos : pos + 6] != b"FRAME\n":
-                        bad = "decode_error: bad frame marker"
-                        break
-                    pos += 6
-                    if pos + plane > len(raw):
-                        bad = "decode_error: truncated frame"
-                        break
-                    planes.append(
-                        np.frombuffer(raw[pos : pos + plane], dtype=np.uint8).astype(
-                            np.int64
-                        )
-                    )
-                    pos += plane
-                if bad or not planes:
-                    emit(err=bad or "decode_error: no frames")
-                    continue
-                sums = [int(p.sum()) for p in planes]
-                emit(
-                    w=w,
-                    h=h,
-                    nf=len(planes),
-                    mean=float(sum(sums)) / (plane * len(planes)),
-                    first=float(sums[0]) / plane,
-                    last=float(sums[-1]) / plane,
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": cols["w"],
-                    "height": cols["h"],
-                    "n_frames": cols["nf"],
-                    "mean_luma": cols["mean"],
-                    "first_frame_mean": cols["first"],
-                    "last_frame_mean": cols["last"],
-                    "error": cols["err"],
-                }
+    def decode(raw: bytes) -> dict:
+        w, h, body, herr = _parse_y4m(raw)
+        if herr is not None:
+            return {"error": herr}
+        plane = w * h
+        pos, planes = body, []
+        while pos < len(raw):
+            if raw[pos : pos + 6] != b"FRAME\n":
+                return {"error": "decode_error: bad frame marker"}
+            pos += 6
+            if pos + plane > len(raw):
+                return {"error": "decode_error: truncated frame"}
+            planes.append(
+                np.frombuffer(raw[pos : pos + plane], dtype=np.uint8).astype(np.int64)
             )
+            pos += plane
+        if not planes:
+            return {"error": "decode_error: no frames"}
+        sums = [int(p.sum()) for p in planes]
+        return {
+            "width": w,
+            "height": h,
+            "n_frames": len(planes),
+            "mean_luma": float(sum(sums)) / (plane * len(planes)),
+            "first_frame_mean": float(sums[0]) / plane,
+            "last_frame_mean": float(sums[-1]) / plane,
+        }
 
-    return media.select("media_id", "payload").mapInPandas(run, VIDEO_SCHEMA)
+    return _decode_payloads(media, VIDEO_SCHEMA, decode)
 
 
 RESIZED_SCHEMA = StructType(
@@ -539,58 +491,34 @@ def resized_image_stats(media: DataFrame, target: int = 3) -> DataFrame:
     narrow mapInPandas seam — payload bytes never shuffle, and the
     output is O(t²) per image regardless of source size, so the
     operator's output volume is decoupled from corpus byte volume."""
-    import numpy as np
-
     if target < 1:
         raise ValueError(f"target={target}; must be >= 1")
     idx = np.arange(target)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = {k: [] for k in ("w", "h", "r", "g", "b", "err")}
+    def decode(raw: bytes) -> dict:
+        w, h, plane, perr = _parse_p6(raw)
+        if perr is not None:
+            return {"error": perr}
+        arr = (
+            np.frombuffer(plane, dtype=np.uint8)
+            .reshape(h, w, 3)
+        )
+        rows = (idx * h) // target  # nearest-neighbor index map
+        colz = (idx * w) // target
+        resized = arr[np.ix_(rows, colz)].astype(np.int64)
+        n = target * target
+        sums = resized.sum(axis=(0, 1))
+        return {
+            "width": w,
+            "height": h,
+            "target_w": target,
+            "target_h": target,
+            "mean_r": float(sums[0]) / n,
+            "mean_g": float(sums[1]) / n,
+            "mean_b": float(sums[2]) / n,
+        }
 
-            def emit(w=None, h=None, r=None, g=None, b=None, err=None):
-                for k, v in zip(("w", "h", "r", "g", "b", "err"),
-                                (w, h, r, g, b, err)):
-                    cols[k].append(v)
-
-            for payload in pdf["payload"]:
-                raw = bytes(payload) if payload is not None else b""
-                w, h, plane, perr = _parse_p6(raw)
-                if perr is not None:
-                    emit(err=perr)
-                    continue
-                arr = (
-                    np.frombuffer(plane, dtype=np.uint8)
-                    .reshape(h, w, 3)
-                )
-                rows = (idx * h) // target  # nearest-neighbor index map
-                colz = (idx * w) // target
-                resized = arr[np.ix_(rows, colz)].astype(np.int64)
-                n = target * target
-                sums = resized.sum(axis=(0, 1))
-                emit(
-                    w=w,
-                    h=h,
-                    r=float(sums[0]) / n,
-                    g=float(sums[1]) / n,
-                    b=float(sums[2]) / n,
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": cols["w"],
-                    "height": cols["h"],
-                    "target_w": [target if e is None else None for e in cols["err"]],
-                    "target_h": [target if e is None else None for e in cols["err"]],
-                    "mean_r": cols["r"],
-                    "mean_g": cols["g"],
-                    "mean_b": cols["b"],
-                    "error": cols["err"],
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(run, RESIZED_SCHEMA)
+    return _decode_payloads(media, RESIZED_SCHEMA, decode)
 
 
 SAMPLED_SCHEMA = StructType(
@@ -628,75 +556,45 @@ def sampled_frame_stats(media: DataFrame, step: int = 2) -> DataFrame:
     corruption in sampled regions is still caught; corruption in
     skipped frames is by design invisible — the cost of not reading
     them)."""
-    import numpy as np
-
     if step < 1:
         raise ValueError(f"step={step}; must be >= 1")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = {k: [] for k in ("w", "h", "nf", "ns", "mean", "err")}
-
-            def emit(w=None, h=None, nf=None, ns=None, mean=None, err=None):
-                for k, v in zip(("w", "h", "nf", "ns", "mean", "err"),
-                                (w, h, nf, ns, mean, err)):
-                    cols[k].append(v)
-
-            for payload in pdf["payload"]:
-                raw = bytes(payload) if payload is not None else b""
-                w, h, hdr_end, herr = _parse_y4m(raw)
-                if herr is not None:
-                    emit(err=herr)
-                    continue
-                plane = w * h
-                body = len(raw) - hdr_end
-                block = 6 + plane  # FRAME\n marker + luma plane
-                nf, rem = divmod(body, block)
-                if rem or nf == 0:
-                    emit(err="decode_error: body is not whole frames")
-                    continue
-                total = 0
-                n_sampled = 0
-                bad = None
-                for f in range(0, nf, step):  # the SEEK: skipped frames untouched
-                    pos = hdr_end + f * block
-                    if raw[pos : pos + 6] != b"FRAME\n":
-                        bad = "decode_error: bad frame marker"
-                        break
-                    luma = np.frombuffer(
-                        raw[pos + 6 : pos + 6 + plane], dtype=np.uint8
-                    )
-                    total += int(luma.astype(np.int64).sum())
-                    n_sampled += 1
-                if bad:
-                    emit(err=bad)
-                    continue
-                emit(
-                    w=w,
-                    h=h,
-                    nf=nf,
-                    ns=n_sampled,
-                    mean=float(total) / (plane * n_sampled),
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": cols["w"],
-                    "height": cols["h"],
-                    "n_frames": cols["nf"],
-                    "n_sampled": cols["ns"],
-                    "mean_sampled_luma": cols["mean"],
-                    "error": cols["err"],
-                }
+    def decode(raw: bytes) -> dict:
+        w, h, hdr_end, herr = _parse_y4m(raw)
+        if herr is not None:
+            return {"error": herr}
+        plane = w * h
+        body = len(raw) - hdr_end
+        block = 6 + plane  # FRAME\n marker + luma plane
+        nf, rem = divmod(body, block)
+        if rem or nf == 0:
+            return {"error": "decode_error: body is not whole frames"}
+        total = 0
+        n_sampled = 0
+        for f in range(0, nf, step):  # the SEEK: skipped frames untouched
+            pos = hdr_end + f * block
+            if raw[pos : pos + 6] != b"FRAME\n":
+                return {"error": "decode_error: bad frame marker"}
+            luma = np.frombuffer(
+                raw[pos + 6 : pos + 6 + plane], dtype=np.uint8
             )
+            total += int(luma.astype(np.int64).sum())
+            n_sampled += 1
+        return {
+            "width": w,
+            "height": h,
+            "n_frames": nf,
+            "n_sampled": n_sampled,
+            "mean_sampled_luma": float(total) / (plane * n_sampled),
+        }
 
-    return media.select("media_id", "payload").mapInPandas(run, SAMPLED_SCHEMA)
+    return _decode_payloads(media, SAMPLED_SCHEMA, decode)
 
 
 def resize_plan(media: DataFrame, max_side: int = 256) -> DataFrame:
     """Resize planning is pure metadata arithmetic — JVM-side, no decode:
     compute target dims preserving aspect ratio; the actual pixel
-    resample would ride the same mapInPandas seam as extract_features."""
+    resample rides the decode seam in ``resized_image_stats``."""
     scale = F.least(
         F.lit(1.0),
         F.lit(max_side) / F.greatest("width", "height"),
@@ -764,47 +662,28 @@ def quiet_segments(media: DataFrame, window: int = 16) -> DataFrame:
         # resized_image_stats): reject at the driver, not an opaque
         # numpy error per task after a full scan
         raise ValueError("quiet_segments needs window >= 1")
-    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            nw, nq, ns, lq, errs = [], [], [], [], []
-            for payload in pdf["payload"]:
-                raw = bytes(payload) if payload is not None else b""
-                if not raw:
-                    nw.append(0)
-                    nq.append(None)
-                    ns.append(None)
-                    lq.append(None)
-                    errs.append("decode_error: empty payload")
-                    continue
-                x = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-                n = len(x)
-                starts = np.arange(0, n, window, dtype=np.int64)
-                sums = np.add.reduceat(x, starts)
-                counts = np.minimum(starts + window, n) - starts
-                wmeans = sums.astype(np.float64) / counts
-                cmean = float(x.sum()) / n
-                quiet = wmeans < cmean
-                # islands vectorized (the file's numpy discipline — a
-                # per-frame Python loop would dominate long clips):
-                # pad with False, diff marks run starts (+1) / ends (-1)
-                d = np.diff(np.concatenate(([0], quiet.astype(np.int8), [0])))
-                runs = np.flatnonzero(d == -1) - np.flatnonzero(d == 1)
-                nw.append(len(starts))
-                nq.append(int(quiet.sum()))
-                ns.append(len(runs))
-                lq.append(int(runs.max()) if len(runs) else 0)
-                errs.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_windows": nw,
-                    "n_quiet": nq,
-                    "n_segments": ns,
-                    "longest_quiet": lq,
-                    "error": errs,
-                }
-            )
+    def decode(raw: bytes) -> dict:
+        if not raw:
+            return {"n_windows": 0, "error": "decode_error: empty payload"}
+        x = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        n = len(x)
+        starts = np.arange(0, n, window, dtype=np.int64)
+        sums = np.add.reduceat(x, starts)
+        counts = np.minimum(starts + window, n) - starts
+        wmeans = sums.astype(np.float64) / counts
+        cmean = float(x.sum()) / n
+        quiet = wmeans < cmean
+        # islands vectorized (the file's numpy discipline — a
+        # per-frame Python loop would dominate long clips):
+        # pad with False, diff marks run starts (+1) / ends (-1)
+        d = np.diff(np.concatenate(([0], quiet.astype(np.int8), [0])))
+        runs = np.flatnonzero(d == -1) - np.flatnonzero(d == 1)
+        return {
+            "n_windows": len(starts),
+            "n_quiet": int(quiet.sum()),
+            "n_segments": len(runs),
+            "longest_quiet": int(runs.max()) if len(runs) else 0,
+        }
 
-    return media.select("media_id", "payload").mapInPandas(run, QUIET_SCHEMA)
+    return _decode_payloads(media, QUIET_SCHEMA, decode)

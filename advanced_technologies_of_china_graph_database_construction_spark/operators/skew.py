@@ -1,7 +1,7 @@
 """Skew mitigation: salted aggregation and salted broadcast-skew joins.
 
-AQE's skew-join splitting (on in session.py) handles most runtime skew;
-these operators are the explicit fallback for the two cases AQE does not
+AQE's skew-join splitting (on via ``catalog._RUNTIME_CONFS``) handles most
+runtime skew; these operators are the explicit fallback for the two cases AQE does not
 cover well at 100 TB:
 
 1. a *single hot key* in a groupBy (one reducer gets the whole key's

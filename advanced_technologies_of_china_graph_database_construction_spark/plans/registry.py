@@ -70,6 +70,18 @@ PLAN_CHANGED_REGATE: set[str] = {
     "d45_minhash_delta_near_dups",
     "d49_cluster_aware_split",
     "p01_end_to_end_build_path",
+    # multimodal.media: the seven decoders moved onto the one
+    # _decode_payloads seam; their bodies run inside mapInPandas, so
+    # the analyzed-plan fingerprints cannot see the change (m09 decodes
+    # its binaryFile payloads through image_stats).
+    "m02_decode_features",
+    "m04_audio_energy",
+    "m05_image_stats",
+    "m06_video_stats",
+    "m07_sampled_frame_stats",
+    "m08_resized_image_stats",
+    "m09_binary_file_ingest",
+    "m10_quiet_segments",
     # Carried pins: in-loop changes with no green CORRECTNESS_r* row
     # since (g28/g31 k-core and g39 SCC in r17; p03, e15 and g43 —
     # pinned above — in r16).
@@ -79,33 +91,6 @@ PLAN_CHANGED_REGATE: set[str] = {
     "p03_incremental_er_lifecycle",
     "e15_streaming_user_sessions",
 }
-# r16: the r15 pins (g43/g45 — oracle-only contract changes the
-# fingerprint cannot see) were removed per their own removal condition:
-# CORRECTNESS_r15 records both green on the corrected oracles.
-
-# r15 gate-budget note (written BEFORE the gate, per the sequencing
-# rule established in r13).  Front of the r15 order: the SIX new
-# specs (g49 betweenness centrality — Brandes backward pass over
-# g47's layered σ table; g50 one-level Louvain refine on the g48
-# supergraph; g51 embedding link-prediction AUC — the evaluation face
-# closing the walks→embeddings chain; d49 cluster-aware leakage-free
-# split — d12's hash assignment on the d11 near-dup cluster id; d50
-# token-budget prefix selection — bucketed prefix-sum layout, budget
-# computed in-plan; a13 IVF recall@k vs brute force — integer rank
-# statistics, the ANN quality contract), then the g43/g45
-# oracle-change pins above (-0.5), then any drift pins
-# scripts/plan_fingerprints.py records on the final tree (expected:
-# new specs only), then the 23-spec r10 band (e18–e23, e25, i05,
-# m07–m09, s08–s12, g37, p03, q18–q22 — all replica-proved at three
-# SFs in r14, record-stale not evidence-stale), then the 47-spec r11
-# band's front in declaration order: er08 + er01–er07 (the
-# reference's distinctive ER core, per the r14 verdict's priority),
-# d29/d30/d28/d18, m10, n06, g38, g24, s03–s05.  6 new + 2 pins
-# + 23 + 19 = 50 slots; the r11 tail (including s06, p02,
-# q01–q17 and g01–g09) rolls to r16.  Done-bar from the r14 verdict:
-# nothing staler than r11 in CORRECTNESS_r15's union except the r11
-# band's own tail, the new specs green, g43/g45 re-green on the
-# corrected oracles.
 
 
 def effective_round(
@@ -174,34 +159,45 @@ def all_specs() -> list[QuerySpec]:
     stable tiebreak.  A spec added this round therefore always reaches
     the gate before any already-green spec is re-proved.
     """
-    from . import graph_queries, relational
+    from . import (
+        analytics_queries,
+        docs_queries,
+        enrich_queries,
+        er_queries,
+        events_queries,
+        graph_queries,
+        ingest_queries,
+        media_queries,
+        nl_queries,
+        pipeline_queries,
+        relational,
+        sink_queries,
+        skew_queries,
+        spatial_queries,
+    )
 
-    modules = []
     # Module order is the tiebreak among EQUALLY-stale specs (the sort
     # below is stable).  Families whose shared kernels changed most
     # recently (er/docs share the cosine+GEMM kernels touched in r3-r4;
     # events gained the streaming face) lead, so when the driver's
     # 50-spec budget can't cover every stale spec, the hard gate signal
     # lands on the code with the newest changes first.
-    for optional in (
-        "er_queries",
-        "docs_queries",
-        "events_queries",
-        "ingest_queries",
-        "enrich_queries",
-        "media_queries",
-        "nl_queries",
-        "skew_queries",
-        "analytics_queries",
-        "sink_queries",
-        "pipeline_queries",
-        "spatial_queries",
-    ):
-        try:
-            modules.append(__import__(f"{__package__}.{optional}", fromlist=["SPECS"]))
-        except ImportError:
-            pass
-    modules += [relational, graph_queries]
+    modules = [
+        er_queries,
+        docs_queries,
+        events_queries,
+        ingest_queries,
+        enrich_queries,
+        media_queries,
+        nl_queries,
+        skew_queries,
+        analytics_queries,
+        sink_queries,
+        pipeline_queries,
+        spatial_queries,
+        relational,
+        graph_queries,
+    ]
     specs: list[QuerySpec] = []
     seen: set[str] = set()
     for m in modules:

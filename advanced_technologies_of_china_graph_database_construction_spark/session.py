@@ -1,10 +1,10 @@
 """SparkSession factory tuned for the engine.
 
-Local testing runs on ``local[N]`` but every knob here is chosen for the
-1000-executor / 100 TB target: AQE on (runtime coalescing + skew-join
-splitting), broadcast threshold sized for dimension tables, Arrow enabled
-for the pandas-UDF seams, UTC session timezone so results are comparable
-with external engines (the DuckDB oracle included).
+Local testing runs on ``local[N]`` but every knob is chosen for the
+1000-executor / 100 TB target.  This module owns the static confs
+(master, driver memory, UI, cleaner interval); the runtime SQL confs —
+AQE, the broadcast threshold, Arrow, the UTC timezone, shuffle
+partitions — are ``catalog._RUNTIME_CONFS``, applied once per session.
 """
 
 from __future__ import annotations
@@ -13,40 +13,23 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .catalog import ensure_runtime_confs
 
-def get_spark(app_name: str = "atcgdc-spark", shuffle_partitions: int | None = None) -> SparkSession:
+
+def get_spark(app_name: str = "atcgdc-spark") -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default ``*``).
     On a real cluster the ``master`` is supplied by spark-submit and the
-    ``local[...]`` setting is ignored.
+    ``local[...]`` setting is ignored.  Only static confs are set here;
+    the runtime SQL confs every plan assumes have one owner,
+    ``catalog.ensure_runtime_confs``, which a session built elsewhere
+    (the correctness gate's) reaches through ``load_table``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if shuffle_partitions is None:
-        try:
-            shuffle_partitions = max(int(cpus), 8)
-        except ValueError:
-            shuffle_partitions = 32
-
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        # AQE: runtime partition coalescing, skew-join splitting, plan re-opt.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # ~cores locally; on a cluster AQE coalesces from this initial value.
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Dimension tables (nation/region/entity dims, alias maps) broadcast.
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Arrow for pandas UDF / toPandas boundaries.
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Deterministic cross-engine timestamp semantics.
-        .config("spark.sql.session.timeZone", "UTC")
-        # TXT-record parsing: duplicated {Field} keeps the last value,
-        # matching the reference's dict-assignment semantics
-        # (cleaner.py:7-26; sources/txt_records.py).
-        .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         .config("spark.ui.enabled", "false")
         # local[N] puts all executor threads in the driver JVM, so the
         # heap must hold every live broadcast + block-manager state for
@@ -60,4 +43,5 @@ def get_spark(app_name: str = "atcgdc-spark", shuffle_partitions: int | None = N
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    ensure_runtime_confs(spark)
     return spark

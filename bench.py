@@ -114,6 +114,22 @@ def _timed_runs(spark, make_df) -> list[float]:
     return runs
 
 
+def _job_cost(spark, run):
+    """(``run()``'s result, (jobs, stages) it scheduled): the
+    statusTracker count, read after the listener bus has drained (a job
+    whose start event is still queued is otherwise missed).  On a
+    jittery box wall-clock lies; job/stage counts don't."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    before = tracker.getJobIdsForGroup(None)
+    first = max(before) if before else -1
+    out = run()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = [j for j in tracker.getJobIdsForGroup(None) if j > first]
+    return out, (len(jobs), sum(len(tracker.getJobInfo(j).stageIds) for j in jobs))
+
+
 def _er_incremental_pair(spark, sf_dir: str) -> dict[str, list[float]]:
     """The O(|delta|)-vs-O(corpus) pair: fold a ~1.6% vocabulary delta
     into a PRE-BUILT standing ER state (`er.incremental_er_refresh` —

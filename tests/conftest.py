@@ -23,18 +23,8 @@ def spark():
 @pytest.fixture
 def cost_of(spark):
     """``cost_of(run)`` → (run's result, (jobs, stages) it scheduled):
-    the statusTracker count of scripts/job_count.py, read after the
-    listener bus has drained."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
+    ``bench._job_cost``, the count scripts/time_spec.py reports per
+    spec."""
+    from bench import _job_cost
 
-    def cost(run):
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        before = tracker.getJobIdsForGroup(None)
-        first = max(before) if before else -1
-        out = run()
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs = [j for j in tracker.getJobIdsForGroup(None) if j > first]
-        return out, (len(jobs), sum(len(tracker.getJobInfo(j).stageIds) for j in jobs))
-
-    return cost
+    return lambda run: _job_cost(spark, run)

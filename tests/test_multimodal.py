@@ -355,3 +355,75 @@ def test_quiet_segments_tail_window_own_denominator(spark):
 def test_quiet_segments_empty_payload_dead_letters(spark):
     out = mm.quiet_segments(_quiet_df(spark, [b""]), window=4).collect()[0]
     assert out["error"] is not None and out["n_windows"] == 0
+
+
+# ------------------------------------------- the one decode seam --------
+
+_Y4M_HDR = b"YUV4MPEG2 W2 H1 F25:1 Ip A1:1 Cmono\n"
+_PPM_2X1 = b"P6\n2 1\n255\n" + bytes([10, 20, 30, 40, 50, 60])
+_Y4M_2F = _Y4M_HDR + b"FRAME\n\x0a\x14" + b"FRAME\n\x1e\x28"
+
+# operator → (valid payload, NULL row's error, fields the dead-letter
+# row still carries, the valid row's stats)
+SEAM_CASES = {
+    "extract_features": (
+        mm.extract_features, b"abc", "decode_error: empty payload",
+        {"n_bytes": 0}, {"n_bytes": 3, "features": [3.0, 97.0, 99.0]},
+    ),
+    "audio_energy": (
+        mm.audio_energy, bytes([10, 20, 30, 40]), "decode_error: empty payload",
+        {"n_samples": 0},
+        {"n_samples": 4, "mean_level": 25.0, "rms_level": 750.0 ** 0.5},
+    ),
+    "image_stats": (
+        mm.image_stats, _PPM_2X1, "decode_error: not a P6 ppm", {},
+        {"width": 2, "height": 1, "mean_r": 25.0, "mean_g": 35.0,
+         "mean_b": 45.0, "mean_intensity": 35.0},
+    ),
+    "video_stats": (
+        mm.video_stats, _Y4M_2F, "decode_error: not a YUV4MPEG2 stream", {},
+        {"width": 2, "height": 1, "n_frames": 2, "mean_luma": 25.0,
+         "first_frame_mean": 15.0, "last_frame_mean": 35.0},
+    ),
+    "sampled_frame_stats": (
+        mm.sampled_frame_stats, _Y4M_2F, "decode_error: not a YUV4MPEG2 stream", {},
+        {"width": 2, "height": 1, "n_frames": 2, "n_sampled": 1,
+         "mean_sampled_luma": 15.0},
+    ),
+    # 2x1 → 3x3 nearest neighbor reads source cols [0, 0, 1]
+    "resized_image_stats": (
+        mm.resized_image_stats, _PPM_2X1, "decode_error: not a P6 ppm", {},
+        {"width": 2, "height": 1, "target_w": 3, "target_h": 3,
+         "mean_r": 20.0, "mean_g": 30.0, "mean_b": 40.0},
+    ),
+    # window 2 over [10 10 | 200 200 | 10 10]: quiet, loud, quiet
+    "quiet_segments": (
+        lambda media: mm.quiet_segments(media, window=2),
+        bytes([10, 10, 200, 200, 10, 10]), "decode_error: empty payload",
+        {"n_windows": 0},
+        {"n_windows": 3, "n_quiet": 2, "n_segments": 2, "longest_quiet": 1},
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(SEAM_CASES))
+def test_decode_seam_null_payload_dead_letters(spark, name):
+    """A NULL payload decodes as b"": the row dead-letters with the
+    operator's own error, keeps only the fields the decoder knows
+    (every other field NULL), and the valid row in the same batch
+    carries its stats; extract_features passes ``kind`` through."""
+    op, payload, err, known, stats = SEAM_CASES[name]
+    df = spark.createDataFrame(
+        [(1, "audio", None), (2, "image", bytearray(payload))],
+        "media_id long, kind string, payload binary",
+    )
+    out = op(df)
+    got = {r["media_id"]: r.asDict() for r in out.collect()}
+    dead = {c: None for c in out.columns} | {"media_id": 1, "error": err} | known
+    ok = got[2]
+    if "kind" in out.columns:
+        dead["kind"] = "audio"
+        assert ok["kind"] == "image"
+    assert got[1] == dead
+    assert ok["error"] is None
+    assert {k: ok[k] for k in stats} == stats

@@ -53,6 +53,15 @@ def test_gate_order_is_stalest_green_first():
     assert rounds == sorted(rounds)
 
 
+def test_every_pin_reaches_the_gate():
+    """The correctness gate runs the first 50 specs of ``all_specs()``;
+    a pin beyond that budget would never be re-proved."""
+    if not gate_history():
+        return
+    first = {s.name for s in all_specs()[:50]}
+    assert PLAN_CHANGED_REGATE <= first, sorted(PLAN_CHANGED_REGATE - first)
+
+
 def test_pins_name_registered_specs():
     names = {s.name for s in all_specs()}
     assert PLAN_CHANGED_REGATE <= names
