@@ -109,8 +109,8 @@ def parquet_row_count(sf_dir: str, name: str) -> int | None:
     per-row-group counts recorded in each file footer, so the cost is
     O(#files) driver-side footer reads (milliseconds), not O(rows).
 
-    Used by the similarity-join `auto` dispatcher so strategy selection
-    doesn't pay a full extra pass over the embeddings (the er02 +18%
+    Used by er02/er06 to size the exact similarity join's block grid
+    without a full extra pass over the embeddings (the er02 +18%
     regression in round 3).  At cluster scale the same number comes from
     catalog statistics; this is the path-based-table fallback.  Returns
     None when the footeronly count isn't available (callers then fall

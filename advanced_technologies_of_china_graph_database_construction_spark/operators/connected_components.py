@@ -119,7 +119,18 @@ def connected_components(
     iterative shuffles.  Larger graphs use alternating large-star/
     small-star contraction, whose round count is O(log² n) regardless of
     component diameter.  Pass ``driver_threshold=0`` to force the
-    distributed path (the property tests do).
+    distributed path (g41 and the property tests do).
+
+    Measured crossover on g41's chain-block graph (4-core VM, jobs and
+    stages from ``bench._job_cost``, min of 3 runs): at sf0.01 (442
+    edges) the driver path takes 3 jobs / 4 stages and 0.53 s against
+    the distributed path's 60 / 112–116 and 7.31 s; at sf0.1 (4,919
+    edges) 3 / 4 and 0.53 s against 62 / 128–130 and 7.63 s.  The driver
+    path wins at every size the fixtures reach; the distributed path is
+    kept for edge sets past what one driver can hold.
+
+    :func:`incremental_components` is this same kernel run on the
+    contracted delta graph, so full and delta closure share one path.
     """
     cur, prev_sig = _settle(
         edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))

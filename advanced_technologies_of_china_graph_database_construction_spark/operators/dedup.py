@@ -578,7 +578,6 @@ def containment_pairs(
     text_col: str = "text",
     block_col: str = "source",
     threshold: float = 0.8,
-    max_doc_freq: int | None = None,
 ) -> DataFrame:
     """(src, dst, containment) where containment = |S(src) ∩ S(dst)| /
     |S(dst)| ≥ threshold — the fraction of dst's 3-gram set contained in
@@ -590,15 +589,10 @@ def containment_pairs(
     same block).
 
     Scale shape: candidates come from the exploded-shingle equi-join
-    within a block; ``max_doc_freq`` drops shingles appearing in more
-    than that many documents BEFORE the join (the d21 df-cap trick), so
-    stop-shingles ("the ", " of ") never pair the whole block and
-    shuffle volume tracks rare-shingle collisions.  Dropping a shingle
-    from the join can only LOWER a pair's counted intersection, so with
-    the cap the result is a conservative (no-false-positive) subset —
-    exact when ``max_doc_freq`` is None, which is what the tests and the
-    SQL oracle check.  Verification joins per-doc set sizes (tiny table)
-    and computes the ratio JVM-side.
+    within a block, so the result is exact (the tests and the SQL oracle
+    check it); a shingle in k docs of a block adds k² join rows (d21
+    df-caps its own gram join for that reason).  Verification joins
+    per-doc set sizes (tiny table) and computes the ratio JVM-side.
     """
     sh = (
         char_shingles(df, text_col)
@@ -608,16 +602,10 @@ def containment_pairs(
     sizes, (n_docs,) = settle(
         sh.groupBy("doc_id").agg(F.count("*").alias("set_size")), F.count(F.lit(1))
     )
-    joinable = sh
-    if max_doc_freq is not None:
-        dfreq = sh.groupBy("shingle_hash").agg(F.count("*").alias("__df"))
-        joinable = sh.join(
-            dfreq.filter(F.col("__df") <= max_doc_freq), "shingle_hash"
-        ).select(sh.columns)
-    a = joinable.select(
+    a = sh.select(
         F.col("doc_id").alias("src"), "shingle_hash", F.col(block_col).alias("blk")
     )
-    b = joinable.select(
+    b = sh.select(
         F.col("doc_id").alias("dst"),
         F.col("shingle_hash").alias("h2"),
         F.col(block_col).alias("blk2"),

@@ -148,9 +148,9 @@ def encode_texts(
     batch is fed to the model in ``batch_size`` slices so activation
     memory stays bounded whatever the Arrow batch size conf says.  NULL
     texts yield NULL embeddings (no fake vector enters the similarity
-    join).  The output feeds ``er.similarity_pairs`` /
-    ``canonical_mapping`` directly (``id_col`` matching their
-    ``vec_id``)."""
+    join).  The output feeds ``er.exact_similarity_pairs`` or
+    ``er.lsh_similarity_pairs`` directly (``id_col`` matching their
+    ``vec_id``), whose pairs go to ``er.canonical_mapping``."""
     factory = encoder if encoder is not None else SentenceTransformerEncoder()
     id_field = df.schema[id_col]
     schema = StructType(

@@ -13,18 +13,17 @@ Spark-first decomposition:
   graph (operators/connected_components.py);
 - mapping application is a **broadcast left join + coalesce** (J1).
 
-Two similarity-join strategies plus a measured dispatcher:
+Two similarity joins, each called directly by the specs that use it
+and feeding ``canonical_mapping`` the same (src, dst, sim) frame:
 - ``exact_similarity_pairs``: blocked GEMM join (optionally confined to
   a partition column), fine to a few 10⁵ vectors per attribute (the
   reference's real scale is 88k keywords) — and the correctness oracle
   for the approximate path.
 - ``lsh_similarity_pairs``: random-hyperplane (sign) LSH — signatures
   via an Arrow-batched pandas UDF, candidates from banded signature
-  equality, then Arrow-batched exact cosine on candidates only.
-- ``similarity_pairs(strategy="auto")``: picks between them on vector
-  count AND threshold — sign-LSH banding only prunes in the near-dup
-  regime; see the measured dispatch bounds at ``AUTO_EXACT_MAX`` /
-  ``LSH_MIN_THRESHOLD``.
+  equality, then Arrow-batched exact cosine on candidates only.  Its
+  docstring records the measured crossover: banding only prunes in the
+  near-dup regime.
 """
 
 from __future__ import annotations
@@ -36,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.vectors import arrow_cosine_rounded, as_double
-from .connected_components import connected_components
+from .connected_components import connected_components, incremental_components
 from .superstep import settle
 
 # Broadcast cap of the name lookups: the symdelete verify join and the
@@ -151,9 +150,10 @@ def exact_similarity_pairs(
     same replication instead of landing on one task.
 
     This is the exact path; its cost is inherently quadratic in the
-    (partition) row count. For vocabularies beyond a few 10⁵ vectors
-    per partition use `lsh_similarity_pairs`, whose candidate
-    generation is collision-proportional.
+    (partition) row count. For near-dup thresholds over vocabularies
+    beyond a few 10⁵ vectors per partition use `lsh_similarity_pairs`,
+    whose candidate generation is collision-proportional (see its
+    measured crossover note).
 
     The comparison uses cosine rounded HALF_UP to 6 digits so the
     decision at the threshold boundary is reproducible across engines.
@@ -208,11 +208,6 @@ def exact_similarity_pairs(
     )
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> np.ndarray:
-    rng = np.random.RandomState(seed)
-    return rng.randn(n_planes, dim).astype(np.float64)
-
-
 def lsh_similarity_pairs(
     emb: DataFrame,
     threshold: float,
@@ -220,16 +215,24 @@ def lsh_similarity_pairs(
     vec_col: str = "embedding",
     n_planes: int = 32,
     bands: int = 8,
-    seed: int = 7,
-    dim: int | None = None,
 ) -> DataFrame:
     """Approximate ε-ball cosine self-join via sign-LSH banding.
 
     Recall is tunable with (n_planes, bands); precision is exact because
-    candidates are re-scored with the true cosine. Deterministic given
-    the seed.  Pass ``dim`` (the embedding width) to skip the one-row
-    probe job that otherwise runs at plan-build time to size the
-    hyperplanes.
+    candidates are re-scored with the true cosine. Deterministic: the
+    hyperplane seed is fixed.  A one-row probe job at plan-build time
+    reads the embedding width that sizes the hyperplanes.
+
+    Exact-vs-LSH crossover, measured on the sf0.1 embeddings: banding
+    prunes only in the near-dup regime.  At threshold 0.44 the per-plane
+    agreement p = 1 − arccos(0.44)/π ≈ 0.645 is too close to the bulk's
+    0.5: (planes=32, b=16) passes 98.7 % of all pairs as candidates for
+    100 % recall, (128, 32) 85.6 % for 99.5 %, and (128, 16) prunes to
+    7 % only by dropping recall to 46 %.  That ~n² candidate shuffle
+    loses to the GEMM's n·B vector replication at any scale, so the ER
+    specs at 0.44 call `exact_similarity_pairs` (er07 keeps this join
+    gated end to end).  At 0.9 (p ≈ 0.856), r=12/b=45 keeps recall
+    ≥ 99.9 % while passing ~1 % of random pairs.
     """
     if bands < 1 or n_planes % bands != 0:
         # the reshape in band_keys would otherwise raise an opaque
@@ -240,26 +243,24 @@ def lsh_similarity_pairs(
         )
     rows_per_band = n_planes // bands
     spark = emb.sparkSession
-    if dim is None:
-        probe = emb.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
-        if probe is None:
-            # empty (or all-NULL-vector) input: no pairs, same typed
-            # frame the non-empty path returns — src/dst keep the ACTUAL
-            # id column type (string ids previously got `long` here and
-            # a different schema than the non-empty path; r12 ADVICE)
-            id_type = emb.schema[id_col].dataType
-            return spark.createDataFrame(
-                [],
-                T.StructType(
-                    [
-                        T.StructField("src", id_type),
-                        T.StructField("dst", id_type),
-                        T.StructField("sim", T.DoubleType()),
-                    ]
-                ),
-            )
-        dim = len(probe[0])
-    planes = _hyperplanes(dim, n_planes, seed)
+    probe = emb.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
+    if probe is None:
+        # empty (or all-NULL-vector) input: no pairs, same typed
+        # frame the non-empty path returns — src/dst keep the ACTUAL
+        # id column type (string ids previously got `long` here and
+        # a different schema than the non-empty path; r12 ADVICE)
+        id_type = emb.schema[id_col].dataType
+        return spark.createDataFrame(
+            [],
+            T.StructType(
+                [
+                    T.StructField("src", id_type),
+                    T.StructField("dst", id_type),
+                    T.StructField("sim", T.DoubleType()),
+                ]
+            ),
+        )
+    planes = np.random.RandomState(7).randn(n_planes, len(probe[0]))
     bc = spark.sparkContext.broadcast(planes)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
@@ -306,113 +307,14 @@ def lsh_similarity_pairs(
     )
 
 
-# `strategy="auto"` dispatch bounds, both MEASURED on the shipped
-# fixtures rather than assumed:
-#
-# - AUTO_EXACT_MAX: below this vector count the blocked GEMM's n²·d
-#   FLOPs are BLAS work a single stage finishes in seconds — candidate
-#   generation machinery can't beat it.
-# - LSH_MIN_THRESHOLD: sign-LSH banding only *prunes* when the target
-#   angle is well separated from the corpus's typical pair angle.  At
-#   threshold 0.44 (per-plane agreement p = 1 − arccos(0.44)/π ≈ 0.645
-#   vs 0.5 for the orthogonal-ish bulk) every usable (r, b) either
-#   passes nearly everything or destroys recall: measured on the sf0.1
-#   embeddings, (planes=32, b=16) emits 98.7 % of all pairs as
-#   candidates for 100 % recall, (128, 32) emits 85.6 % for 99.5 %,
-#   and (128, 16) prunes to 7 % only by dropping recall to 46 %.  A
-#   banded join that passes ~n² candidates through a shuffle is
-#   strictly worse than the GEMM's n·B vector replication at ANY scale,
-#   so auto only picks LSH where banding genuinely separates — high
-#   thresholds (near-dup regime: at 0.9, p ≈ 0.856, r=12/b=45 keeps
-#   recall ≥ 99.9 % while passing ~1 % of random pairs).
-AUTO_EXACT_MAX = 100_000
-LSH_MIN_THRESHOLD = 0.7
-_EXACT_KWARGS = {"block_rows", "n_rows", "partition_by"}
-_LSH_KWARGS = {"n_planes", "bands", "seed", "dim"}
-
-
-def similarity_pairs(
-    emb: DataFrame,
-    threshold: float,
-    strategy: str = "auto",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    **kwargs,
-) -> DataFrame:
-    """Strategy dispatcher for the ε-ball cosine self-join.
-
-    ``exact`` — block-pair GEMM, cost O(n²) arithmetic (distributed, no
-    driver materialization); ``lsh`` — sign-LSH banded candidates +
-    Arrow-batched exact re-score, cost proportional to collisions;
-    ``auto`` (default) — exact while the corpus is small
-    (``AUTO_EXACT_MAX``) or the threshold sits where banding can't
-    prune (below ``LSH_MIN_THRESHOLD`` — see the measured dispatch
-    bounds above), LSH for large corpora in the near-dup regime.
-
-    Both emit (src, dst, sim) with identical float64 arithmetic and
-    HALF_UP rounding, so downstream stages (`canonical_mapping`) are
-    strategy-agnostic.  With ``auto``, kwargs for both paths may be
-    passed together; each path receives only the ones it understands.
-
-    Two dispatch details that are semantics, not tuning:
-
-    - ``partition_by`` (the SemDeDup shape — pairs confined to a
-      partition value) FORCES the exact path under ``auto``: the LSH
-      path has no partition confinement, so dispatching to it would
-      silently widen the result to cross-partition pairs.  Forcing
-      exact is also the right scale call — partition confinement exists
-      precisely to keep the quadratic work per-cluster-bounded, which is
-      what the partitioned GEMM does.
-    - ``n_rows`` (when the caller knows the corpus size — e.g. from
-      parquet footer metadata via `catalog.parquet_row_count`) is used
-      for dispatch INSTEAD of running an extra full `count()` pass on
-      every invocation, and is forwarded to the exact path as its block
-      count, so the whole pipeline runs with zero extra input scans.
-    """
-    if strategy == "auto":
-        if kwargs.get("n_rows") is None:  # tolerate an explicit None
-            kwargs.pop("n_rows", None)
-        if kwargs.get("partition_by") is not None:
-            # partition_by forces exact regardless of n — don't pay a
-            # count() whose result the partitioned branch (per-partition
-            # size aggregate) never reads.
-            use_lsh = False
-        else:
-            n = kwargs.get("n_rows") if "n_rows" in kwargs else emb.count()
-            use_lsh = threshold >= LSH_MIN_THRESHOLD and n > AUTO_EXACT_MAX
-            if not use_lsh:
-                kwargs.setdefault("n_rows", n)  # dispatch count doubles as block count
-        strategy = "lsh" if use_lsh else "exact"
-        allowed = _LSH_KWARGS if use_lsh else _EXACT_KWARGS
-        kwargs = {k: v for k, v in kwargs.items() if k in allowed}
-    if strategy == "exact":
-        return exact_similarity_pairs(emb, threshold, id_col, vec_col, **kwargs)
-    if strategy == "lsh":
-        return lsh_similarity_pairs(emb, threshold, id_col, vec_col, **kwargs)
-    raise ValueError(
-        f"unknown similarity strategy {strategy!r}; use 'exact', 'lsh' or 'auto'"
-    )
-
-
-def canonical_mapping(
-    emb: DataFrame,
-    pairs: DataFrame | None = None,
-    id_col: str = "vec_id",
-    threshold: float | None = None,
-    strategy: str = "auto",
-    **kwargs,
-) -> DataFrame:
+def canonical_mapping(emb: DataFrame, pairs: DataFrame, id_col: str = "vec_id") -> DataFrame:
     """(id, canonical): min-id of the similarity component; noise → self.
 
     Matches `keyword_merger.py:222` (min representative) + `:231-232`
-    (noise identity).  Pass precomputed ``pairs``, or a ``threshold`` (+
-    optional ``strategy``) to build them here — `strategy="lsh"` runs the
-    whole ER pipeline without any quadratic stage.
+    (noise identity).  ``pairs`` is the (src, dst) output of either
+    similarity join — `lsh_similarity_pairs` runs the whole ER pipeline
+    without any quadratic stage.
     """
-    if pairs is None:
-        if threshold is None:
-            raise ValueError("canonical_mapping needs either pairs or a threshold")
-        pairs = similarity_pairs(emb, threshold, strategy, id_col=id_col, **kwargs)
     comp = connected_components(pairs.select("src", "dst"))
     ids = emb.select(F.col(id_col).alias("id")).distinct()
     return ids.join(comp, "id", "left").select(
@@ -507,7 +409,6 @@ def symdelete_typo_pairs(
     df: DataFrame,
     id_col: str = "id",
     name_col: str = "name",
-    max_distance: int = 1,
     n_rows: int | None = None,
 ) -> DataFrame:
     """(src, dst, distance): id pairs (src < dst) whose names are within
@@ -524,7 +425,7 @@ def symdelete_typo_pairs(
     candidate equi-join on the variant key is exact — no missed pairs,
     and the verify step (JVM `levenshtein`, codegen) removes the
     false positives the blocking admits (e.g. two distinct deletions
-    landing on one variant).  Only ``max_distance=1`` is implemented —
+    landing on one variant).  Only distance 1 is implemented —
     deeper neighborhoods grow as |s|^d and a 100 TB name table wants
     d=1 blocking with a wider verify radius instead.
 
@@ -538,8 +439,6 @@ def symdelete_typo_pairs(
     count action; only when absent does the operator fall back to one
     ``df.count()``.
     """
-    if max_distance != 1:
-        raise ValueError("symdelete_typo_pairs implements max_distance=1 only")
     names = df.select(F.col(id_col).alias("id"), F.col(name_col).alias("name"))
     variants = _deletion_variants(names)
     a = variants.select(F.col("id").alias("src"), F.xxhash64("variant").alias("vh"))
@@ -571,7 +470,7 @@ def symdelete_typo_pairs(
         cands.join(na, "src")
         .join(nb, "dst")
         .select("src", "dst", dist.alias("distance"))
-        .filter(F.col("distance") <= max_distance)
+        .filter(F.col("distance") <= 1)
     )
 
 
@@ -665,10 +564,12 @@ def build_er_state(names: DataFrame, name_col: str = "name") -> DataFrame:
     the rebuild its equality property is stated against.  sid =
     ``xxhash64(name)`` (fully distributed, no global row-number sort);
     component = min-sid of the SymSpell d=1 alias cluster; surfaces with
-    no alias are their own component."""
+    no alias are their own component.  NULL names are dropped: a NULL is
+    not a surface."""
     # consumed by pairs + join; its row count sizes the verify broadcast
     surfaces, (n_surfaces,) = settle(
         names.select(F.col(name_col).alias("name"))
+        .filter(F.col("name").isNotNull())
         .distinct()
         .withColumn("sid", F.xxhash64("name")),
         F.count(F.lit(1)),
@@ -714,8 +615,6 @@ def incremental_er_refresh(
        ≤2·|pairs| contracted graph, |V| mapping broadcast-probed,
     4. isolated new surfaces (no pair) enter as their own component.
     """
-    from .connected_components import incremental_components
-
     s = standing.select("sid", "name", "component")
     s_name = s.select("name")
     n = standing_n_rows if standing_n_rows is not None else s_name.count()
@@ -723,6 +622,9 @@ def incremental_er_refresh(
         s_name = F.broadcast(s_name)
     new_names = (
         delta_names.select("name")
+        # a NULL is not a surface — and the anti-join below never matches
+        # it, so every refresh would append another NULL row
+        .filter(F.col("name").isNotNull())
         .distinct()
         .join(s_name, "name", "left_anti")
         .withColumn("sid", F.xxhash64("name"))

@@ -64,25 +64,20 @@ ER01_SQL = f"WITH {_PAIRS_CTE} SELECT src, dst, sim FROM pairs"
 
 
 def er02_canonical_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Builds pairs through the `auto` dispatcher, which at this
-    # threshold resolves to the blocked GEMM — a MEASURED choice, not a
-    # default: at 0.44 the corpus pair-sim mass sits near 0 and the
-    # per-plane agreement gap (0.645 vs 0.5) is too small for sign-LSH
-    # banding to separate, so the banded join emits 98.7 % of all pairs
-    # as candidates for 100 % recall (sf0.1, planes=32/b=16) — a ~n²
-    # shuffle that benches 5× slower than the GEMM's n·B vector
-    # replication and loses at any scale.  LSH genuinely wins only in
-    # the near-dup regime (threshold ≳ 0.7), which is exactly what
-    # `auto` encodes; er05/er07 keep the LSH path itself gated.
-    # n_rows comes from the parquet footers (metadata-only, no job), so
-    # the auto dispatcher doesn't pay a full extra scan per invocation.
+    # Pairs from the blocked GEMM — a MEASURED choice, not a default: at
+    # 0.44 sign-LSH banding cannot separate the bulk of the corpus, so
+    # the banded join emits 98.7 % of all pairs as candidates for 100 %
+    # recall (sf0.1, planes=32/b=16) — a ~n² shuffle that benches 5×
+    # slower than the GEMM's n·B vector replication and loses at any
+    # scale (the crossover note in `lsh_similarity_pairs`); er05/er07
+    # keep the LSH path itself gated.  n_rows comes from the parquet
+    # footers (metadata-only, no job), so sizing the block grid doesn't
+    # pay a full extra scan per invocation.
     emb = load_table(spark, sf_dir, "embeddings")
-    return canonical_mapping(
-        emb,
-        threshold=ER_THRESHOLD,
-        strategy="auto",
-        n_rows=parquet_row_count(sf_dir, "embeddings"),
-    ).select(F.col("id").alias("vec_id"), "canonical")
+    pairs = exact_similarity_pairs(
+        emb, ER_THRESHOLD, n_rows=parquet_row_count(sf_dir, "embeddings")
+    )
+    return canonical_mapping(emb, pairs).select(F.col("id").alias("vec_id"), "canonical")
 
 
 ER02_SQL = _COMPONENTS_CTE + "SELECT vec_id, canonical FROM components"
@@ -142,12 +137,10 @@ def er06_mapped_record_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the driver's cell hashing stays scalar.
     li = load_table(spark, sf_dir, "lineitem")
     emb = load_table(spark, sf_dir, "embeddings")
-    mapping = canonical_mapping(
-        emb,
-        threshold=ER_THRESHOLD,
-        strategy="auto",
-        n_rows=parquet_row_count(sf_dir, "embeddings"),
+    pairs = exact_similarity_pairs(
+        emb, ER_THRESHOLD, n_rows=parquet_row_count(sf_dir, "embeddings")
     )
+    mapping = canonical_mapping(emb, pairs)
     arrays = (
         li.groupBy(F.col("l_orderkey").alias("doc_id"))
         .agg(
@@ -191,9 +184,8 @@ def er07_canonical_mapping_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialization, gated against the same exact-components oracle
     # (valid because LSH recall is complete on the fixtures; see er05).
     emb = load_table(spark, sf_dir, "embeddings")
-    m = canonical_mapping(
-        emb, threshold=ER_THRESHOLD, strategy="lsh", n_planes=32, bands=16
-    )
+    pairs = lsh_similarity_pairs(emb, ER_THRESHOLD, n_planes=32, bands=16)
+    m = canonical_mapping(emb, pairs)
     return m.select(F.col("id").alias("vec_id"), "canonical")
 
 

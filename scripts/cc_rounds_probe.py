@@ -5,10 +5,12 @@ component diameter — the scale argument behind g41 / the distributed
 A single chain of length L is the worst case for label propagation
 (O(L) supersteps) and the motivating case for the alternating-star
 algorithm (O(log² L) rounds, Kiveris et al. SoCC'14).  This probe runs
-the SAME per-round building blocks the operator uses (its private
-helpers — no copy) on chains of growing length and prints rounds + wall
-time, so the "rounds grow logarithmically while the graph grows
-exponentially" claim is a recorded measurement.
+the operator itself — ``connected_components(edges, driver_threshold=0)``,
+no copy of its loop — on chains of growing length and prints rounds +
+wall time, so the "rounds grow logarithmically while the graph grows
+exponentially" claim is a recorded measurement.  Rounds are counted by
+wrapping the module's ``_settle`` for the call: the operator settles its
+input once and then each round once, so rounds = settle calls − 1.
 
 Usage: python scripts/cc_rounds_probe.py [max_exp]
   chains of length 2^k for k in 6, 10, 14, 17, ..up to max_exp (default 20).
@@ -24,25 +26,26 @@ sys.path.insert(0, ".")
 from pyspark.sql import functions as F  # noqa: E402
 
 from advanced_technologies_of_china_graph_database_construction_spark import get_spark  # noqa: E402
-from advanced_technologies_of_china_graph_database_construction_spark.operators.connected_components import (  # noqa: E402
-    _large_star,
-    _settle,
-    _small_star,
+from advanced_technologies_of_china_graph_database_construction_spark.operators import (  # noqa: E402
+    connected_components as cc,
 )
 
 
 def rounds_to_converge(edges) -> int:
-    cur, prev_sig = _settle(
-        edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    for rounds in range(1, 100):
-        ss, sig = _settle(_small_star(_large_star(cur)))
-        if sig == prev_sig and ss.exceptAll(cur).isEmpty():
-            return rounds
-        cur, prev_sig = ss, sig
-    raise RuntimeError("did not converge in 100 rounds")
+    calls = 0
+    settle = cc._settle
+
+    def counting_settle(frame):
+        nonlocal calls
+        calls += 1
+        return settle(frame)
+
+    cc._settle = counting_settle
+    try:
+        cc.connected_components(edges, max_iter=100, driver_threshold=0)
+    finally:
+        cc._settle = settle
+    return calls - 1
 
 
 def main() -> None:

@@ -70,6 +70,7 @@ def test_encode_feeds_er_pipeline_end_to_end(spark):
     with the min doc_id as canonical."""
     from advanced_technologies_of_china_graph_database_construction_spark.operators.er import (
         canonical_mapping,
+        exact_similarity_pairs,
     )
 
     docs = spark.createDataFrame(
@@ -89,7 +90,7 @@ def test_encode_feeds_er_pipeline_end_to_end(spark):
     mapping = {
         r.id: r.canonical
         for r in canonical_mapping(
-            emb, threshold=0.8, strategy="exact", id_col="doc_id"
+            emb, exact_similarity_pairs(emb, 0.8, id_col="doc_id"), id_col="doc_id"
         ).collect()
     }
     assert mapping[10] == 10 and mapping[11] == 10 and mapping[12] == 10

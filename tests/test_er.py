@@ -18,7 +18,6 @@ from advanced_technologies_of_china_graph_database_construction_spark.operators.
     canonical_mapping,
     exact_similarity_pairs,
     lsh_similarity_pairs,
-    similarity_pairs,
 )
 
 
@@ -110,29 +109,6 @@ def test_round_half_up_matches_sql_round():
     assert got[2] == pytest.approx(-0.123457)
     assert got[3] == pytest.approx(2.0)
     assert got[4] == pytest.approx(0.44)
-
-
-def test_similarity_pairs_strategy_dispatch(clustered_emb):
-    ex = {(r.src, r.dst) for r in similarity_pairs(clustered_emb, 0.95, "exact").collect()}
-    ls = {
-        (r.src, r.dst)
-        for r in similarity_pairs(
-            clustered_emb, 0.95, "lsh", n_planes=64, bands=16
-        ).collect()
-    }
-    assert ls <= ex
-    with pytest.raises(ValueError):
-        similarity_pairs(clustered_emb, 0.95, "nope")
-
-
-def test_canonical_mapping_via_threshold_strategy(clustered_emb):
-    via_pairs = canonical_mapping(clustered_emb, exact_similarity_pairs(clustered_emb, 0.95))
-    via_threshold = canonical_mapping(clustered_emb, threshold=0.95, strategy="exact")
-    a = {(r.id, r.canonical) for r in via_pairs.collect()}
-    b = {(r.id, r.canonical) for r in via_threshold.collect()}
-    assert a == b
-    with pytest.raises(ValueError):
-        canonical_mapping(clustered_emb)  # neither pairs nor threshold
 
 
 def test_apply_mapping_array_semantics(spark):
@@ -248,72 +224,18 @@ def test_arrow_cosine_degenerate_inputs_match_jvm(spark):
     assert got[2] is None and got[3] is None and got[1] == 1.0
 
 
-def test_auto_dispatch_passes_partition_by(spark, clustered_emb):
-    """strategy='auto' must forward partition_by to the exact path —
-    silently stripping it would quietly widen the pair set to
-    cross-partition pairs."""
-    from pyspark.sql import functions as F
-
-    parted = clustered_emb.withColumn("grp", (F.col("vec_id") % 2).cast("int"))
-    auto = {
-        (r.src, r.dst)
-        for r in similarity_pairs(parted, 0.95, "auto", partition_by="grp").collect()
-    }
-    manual = {
-        (r.src, r.dst)
-        for r in exact_similarity_pairs(parted, 0.95, partition_by="grp").collect()
-    }
-    assert auto == manual and len(auto) > 0
-
-
-def test_auto_dispatch_forces_exact_when_partitioned_at_scale(spark, clustered_emb):
-    """Above AUTO_EXACT_MAX in the near-dup regime auto normally picks
-    LSH — but LSH has no partition confinement, so with partition_by the
-    dispatcher must stay on the exact path (cluster-confined pairs), not
-    silently widen the result.  n_rows fakes the large-corpus branch."""
-    from pyspark.sql import functions as F
-
-    parted = clustered_emb.withColumn("grp", (F.col("vec_id") % 2).cast("int"))
-    auto = similarity_pairs(
-        parted, 0.95, "auto", partition_by="grp", n_rows=1_000_000, block_rows=16
-    )
-    # exact path is a grouped-GEMM plan; the LSH path has no applyInPandas
-    assert "FlatMapGroupsInPandas" in auto._jdf.queryExecution().executedPlan().toString()
-    got = {(r.src, r.dst) for r in auto.collect()}
-    want = {
-        (r.src, r.dst)
-        for r in exact_similarity_pairs(parted, 0.95, partition_by="grp").collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_auto_dispatch_reuses_caller_row_count(spark, clustered_emb):
-    """A caller-supplied n_rows (e.g. parquet footer metadata) must drive
-    the dispatch without an extra count scan: faking a large corpus flips
-    auto to LSH at near-dup thresholds."""
-    lsh = similarity_pairs(clustered_emb, 0.95, "auto", n_rows=1_000_000)
-    assert "FlatMapGroupsInPandas" not in lsh._jdf.queryExecution().executedPlan().toString()
-    exact = {(r.src, r.dst) for r in exact_similarity_pairs(clustered_emb, 0.95).collect()}
-    got = {(r.src, r.dst) for r in lsh.collect()}
-    assert got <= exact  # re-scored candidates: exact precision
-    # and an explicit None must behave like "unknown" (fall back to count)
-    small = similarity_pairs(clustered_emb, 0.95, "auto", n_rows=None)
-    assert "FlatMapGroupsInPandas" in small._jdf.queryExecution().executedPlan().toString()
-
-
 def test_auto_dispatch_partitioned_skips_count_scan(monkeypatch, spark, clustered_emb):
-    """With partition_by set, auto forces exact regardless of n — so no
-    count() scan may run during dispatch (the partitioned branch derives
-    block counts from its own size aggregate)."""
+    """The partitioned GEMM derives its block counts from its own size
+    aggregate — so no count() scan may run while the plan is built."""
     from pyspark.sql import DataFrame, functions as F
 
     parted = clustered_emb.withColumn("grp", (F.col("vec_id") % 2).cast("int"))
 
     def boom(self):
-        raise AssertionError("count() must not run for partitioned auto dispatch")
+        raise AssertionError("count() must not run for the partitioned GEMM")
 
     monkeypatch.setattr(DataFrame, "count", boom)
-    df = similarity_pairs(parted, 0.95, "auto", partition_by="grp")
+    df = exact_similarity_pairs(parted, 0.95, partition_by="grp")
     monkeypatch.undo()
     assert len(df.collect()) > 0
 
@@ -386,16 +308,6 @@ def test_symdelete_matches_bruteforce(spark):
     assert got == want
 
 
-def test_symdelete_rejects_deeper_radius(spark):
-    import pytest
-
-    from advanced_technologies_of_china_graph_database_construction_spark.operators.er import symdelete_typo_pairs
-
-    df = spark.createDataFrame([(1, "a")], "id long, name string")
-    with pytest.raises(ValueError, match="max_distance=1"):
-        symdelete_typo_pairs(df, max_distance=2)
-
-
 # --------------------------------------- incremental ER refresh (p03) -----
 
 def _random_vocab(rng, n: int) -> list[str]:
@@ -412,10 +324,14 @@ def _random_vocab(rng, n: int) -> list[str]:
 @pytest.mark.parametrize("seed", [0, 1, 2])
 def test_incremental_er_refresh_equals_rebuild(spark, seed):
     """incremental_er_refresh(build_er_state(standing), delta) must equal
-    build_er_state(standing ∪ delta) exactly — random vocabulary splits,
-    with the delta re-containing a sample of standing surfaces (the
-    re-seen/no-op path) on top of its genuinely new ones."""
+    build_er_state(standing ∪ delta) exactly, row for row — random
+    vocabulary splits, with the delta re-containing a sample of standing
+    surfaces (the re-seen/no-op path) on top of its genuinely new ones.
+    A NULL name on both sides is not a surface: neither path may keep it
+    (the refresh's anti-join never matches NULL, so a kept NULL would be
+    appended again on every refresh)."""
     import random
+    from collections import Counter
 
     from advanced_technologies_of_china_graph_database_construction_spark.operators.er import (
         build_er_state,
@@ -430,16 +346,19 @@ def test_incremental_er_refresh_equals_rebuild(spark, seed):
     reseen = rng.sample(standing_names, 10)
     delta = new_names + reseen
 
-    standing_df = spark.createDataFrame([(n,) for n in standing_names], "name string")
-    delta_df = spark.createDataFrame([(n,) for n in delta], "name string")
-    union_df = spark.createDataFrame([(n,) for n in vocab], "name string")
+    standing_df = spark.createDataFrame(
+        [(n,) for n in standing_names + [None]], "name string"
+    )
+    delta_df = spark.createDataFrame([(n,) for n in delta + [None]], "name string")
+    union_df = spark.createDataFrame([(n,) for n in vocab + [None]], "name string")
 
-    got = {
+    got = Counter(
         (r.sid, r.name, r.component)
         for r in incremental_er_refresh(build_er_state(standing_df), delta_df).collect()
-    }
-    want = {(r.sid, r.name, r.component) for r in build_er_state(union_df).collect()}
+    )
+    want = Counter((r.sid, r.name, r.component) for r in build_er_state(union_df).collect())
     assert got == want
+    assert sum(want.values()) == len(vocab)  # one row per surface, none for NULL
 
 
 def test_symdelete_delta_pairs_tolerates_id_overlap(spark):

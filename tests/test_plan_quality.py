@@ -204,31 +204,6 @@ def test_exact_similarity_join_is_distributed_group_gemm(spark):
     assert "CollectLimit" not in plan, plan
 
 
-def test_auto_similarity_dispatch_is_threshold_and_count_aware(spark):
-    """The `auto` strategy picks the blocked GEMM below the count bound
-    or the LSH-prunable threshold, and the banded LSH join only for
-    large corpora in the near-dup regime — the measured dispatch rule
-    (sign-LSH at threshold 0.44 passes 98.7 % of all pairs as
-    candidates on the sf0.1 fixture, so the banded join loses to the
-    GEMM at any scale there)."""
-    from advanced_technologies_of_china_graph_database_construction_spark.catalog import load_table
-    from advanced_technologies_of_china_graph_database_construction_spark.operators import er
-
-    emb = load_table(spark, SF_CORRECT, "embeddings")
-    # small corpus → GEMM regardless of threshold
-    assert "FlatMapGroupsInPandas" in _plan(er.similarity_pairs(emb, 0.9, "auto"))
-    old = er.AUTO_EXACT_MAX
-    er.AUTO_EXACT_MAX = 0  # force the "large corpus" branch
-    try:
-        # large corpus + near-dup threshold → banded LSH, no GEMM stage
-        lsh_plan = _plan(er.similarity_pairs(emb, 0.9, "auto"))
-        assert "FlatMapGroupsInPandas" not in lsh_plan, lsh_plan
-        # large corpus + low threshold: banding can't prune → still GEMM
-        assert "FlatMapGroupsInPandas" in _plan(er.similarity_pairs(emb, 0.44, "auto"))
-    finally:
-        er.AUTO_EXACT_MAX = old
-
-
 def test_er02_has_no_driver_collect_and_no_row_python(spark):
     """The gated ER composition stays fully distributed: grouped Arrow
     GEMM tasks (no driver-side vector materialization at plan-build

@@ -310,7 +310,7 @@ def _brute_containment(docs, threshold=0.8, n=3):
 
 
 def test_containment_pairs_match_bruteforce(spark):
-    """Exact mode (no df cap) must equal the brute-force double loop —
+    """Containment pairs must equal the brute-force double loop —
     including the asymmetry: the quoted snippet scores ~1.0 as dst of
     the long doc but the long doc does NOT score as contained."""
     long_doc = "the quick brown fox jumps over the lazy dog near the river bank"
@@ -337,26 +337,6 @@ def test_containment_pairs_match_bruteforce(spark):
     assert not any(s == 2 and d == 1 for s, d, _ in got)
     # and blocks separate: 4 never pairs with 1/2
     assert not any(4 in (s, d) for s, d, _ in got)
-
-
-def test_containment_df_cap_is_conservative_subset(spark):
-    """With a doc-frequency cap the result must be a subset of the
-    exact pairs (dropping join shingles can only lower intersections) —
-    never a false positive."""
-    base = "alpha beta gamma delta epsilon zeta eta theta"
-    docs = [(i, base + f" unique{i}", "a") for i in range(8)]
-    docs.append((100, base, "a"))  # contained in every padded doc
-    df = spark.createDataFrame(docs, "doc_id long, text string, source string")
-    exact = {
-        (r.src, r.dst)
-        for r in D.containment_pairs(df, threshold=0.9).collect()
-    }
-    capped = {
-        (r.src, r.dst)
-        for r in D.containment_pairs(df, threshold=0.9, max_doc_freq=4).collect()
-    }
-    assert capped <= exact
-    assert len(exact) > 0
 
 
 @given(
