@@ -152,8 +152,8 @@ def pagerank(
     if dangling not in ("drop", "redistribute"):
         raise ValueError(f"dangling={dangling!r}; use 'drop' or 'redistribute'")
     edges = positive_weights(edges, weight).localCheckpoint(eager=True)
-    nodes = node_set(edges).localCheckpoint(eager=True)
-    n = nodes.count()  # driver scalar: one tiny job, used as a literal
+    # n is a driver scalar used as a literal, read in the checkpoint's action
+    nodes, (n,) = settle(node_set(edges), F.count(F.lit(1)))
     if n == 0:
         # empty graph: empty ranks, not a 1/n division crash
         return nodes.select("node", F.lit(0.0).alias("pagerank"))

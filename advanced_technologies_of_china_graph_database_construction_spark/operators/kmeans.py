@@ -1,7 +1,7 @@
 """Distributed Lloyd's k-means over embedding columns — the trainer for
-the IVF coarse quantizer (``operators/similarity.ivf_assign`` and
-``sources/ivf_store.py`` take its centroids in place of their first-C
-seed vectors).
+the IVF coarse quantizer, and the home of the one centroid seed
+(``seed_centroids``) and the one nearest-centroid assigner
+(``assign_to_centroids``) that every IVF face shares.
 
 Reference parity: the reference's only clustering is sklearn DBSCAN over
 an in-memory embedding matrix (`keyword_merger.py:186-201`) — a
@@ -42,7 +42,8 @@ def assign_to_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, centroid_id, sim): nearest centroid by rounded cosine.
+    """(id, centroid_id, sim): nearest centroid by rounded cosine — the
+    assigner of k-means' Lloyd steps and of every IVF face.
 
     ``centroids`` is (centroid_id, cv) and is broadcast — the vector
     table stays where it is; argmax is a map-side-combinable ``min_by``

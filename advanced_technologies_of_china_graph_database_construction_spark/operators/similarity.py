@@ -9,10 +9,11 @@ then probes only the nprobe closest buckets per query — the classic
 inverted-file trade: recall vs. the fraction of buckets scanned.  Both
 are deterministic (ties broken by id) and oracle-checkable.
 
-At 100 TB the IVF list table is the partitioning: cluster the vectors
-by centroid id on write (`partitionBy("centroid_id")`), so a probe
-reads only nprobe partitions — partition pruning does the bucket
-selection.
+At 100 TB the IVF list table is the partitioning: `sources/ivf_store`
+clusters the vectors by centroid id on write, so a probe reads only
+nprobe partitions.  Both faces share one assigner
+(`kmeans.assign_to_centroids`), one probe step (`ivf_probes`) and one
+rank step (`ivf_rank`).
 """
 
 from __future__ import annotations
@@ -25,6 +26,7 @@ from pyspark.sql import types as T
 
 from ..functions.vectors import arrow_cosine_rounded, as_double, cosine_rounded
 from .er import _round_half_up, replicate_block_pairs
+from .kmeans import assign_to_centroids
 
 def _rank_topk(scored: DataFrame, k: int, score_col: str = "sim") -> DataFrame:
     """The ONE ranking contract every ANN face shares (r12 reuse fix —
@@ -39,6 +41,13 @@ def _rank_topk(scored: DataFrame, k: int, score_col: str = "sim") -> DataFrame:
     )
 
 
+def _queries(emb: DataFrame, ids: list[int], id_col: str, vec_col: str) -> DataFrame:
+    """(query_id, qv): the query rows of ``emb``, looked up by id."""
+    return emb.filter(F.col(id_col).isin(ids)).select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+    )
+
+
 def brute_force_topk(
     emb: DataFrame,
     query_ids: list[int],
@@ -48,9 +57,7 @@ def brute_force_topk(
 ) -> DataFrame:
     """(query_id, neighbor_id, sim, rank): exact top-k cosine neighbors
     for each query id; ties broken by neighbor id."""
-    q = emb.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
+    q = _queries(emb, query_ids, id_col, vec_col)
     cand = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"))
     scored = (
         F.broadcast(q)
@@ -89,9 +96,7 @@ def filtered_topk(
     map-side (never shuffled), and the per-query window sees only
     filtered-candidate rows.  Composes with the quantized/IVF stages
     the same way (filter the compressed copy, then rerank)."""
-    q = emb.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
+    q = _queries(emb, query_ids, id_col, vec_col)
     cand = emb.filter(predicate).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv")
     )
@@ -107,91 +112,60 @@ def filtered_topk(
     return _rank_topk(scored, k)
 
 
-def ivf_assign(
-    emb: DataFrame,
-    n_centroids: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
-) -> DataFrame:
-    """(vec_id, centroid_id): nearest coarse centroid.
+def ivf_probes(queries: DataFrame, centroids: DataFrame, nprobe: int) -> DataFrame:
+    """(query_id, qv, centroid_id): each query's ``nprobe`` nearest
+    centroids by rounded cosine, ties to the smallest centroid id —
+    probe routing against the broadcast centroid table (tiny by
+    construction), one per-query window, no driver round-trip."""
+    wp = Window.partitionBy("query_id").orderBy(
+        F.desc(cosine_rounded(F.col("qv"), F.col("cv"))), F.asc("centroid_id")
+    )
+    return (
+        queries.crossJoin(F.broadcast(centroids))
+        .withColumn("rn", F.row_number().over(wp))
+        .filter(F.col("rn") <= nprobe)
+        .select("query_id", "qv", "centroid_id")
+    )
 
-    ``centroids`` (centroid_id, cv) plugs in a trained quantizer —
-    ``operators/kmeans.kmeans_centroids`` produces exactly this shape;
-    the default is the training-free first-``n_centroids`` seed.
 
-    Degenerate-vector contract: a vector whose similarity to EVERY
-    centroid is NULL (zero-norm, NULL, or length-mismatched — cosine
-    returns NULL in-contract) produces **no output row**: NULL sims
-    are filtered before the argmax.  Callers needing every vec_id in
-    the output must LEFT-join back to the id set; the drop is visible
-    (fewer rows), never a fabricated assignment."""
-    cent = centroids if centroids is not None else emb.filter(
-        F.col(id_col) < n_centroids
-    ).select(F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cv"))
-    scored = (
-        emb.select(F.col(id_col), F.col(vec_col).alias("v"))
-        .crossJoin(F.broadcast(cent))
+def ivf_rank(probes: DataFrame, vectors: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, sim, rank): the members of each query's
+    probed buckets — ``vectors`` is (neighbor_id, nv, centroid_id),
+    computed or stored — scored by the Arrow cosine and cut by
+    :func:`_rank_topk`; a query never ranks itself."""
+    cands = (
+        probes.join(vectors, "centroid_id")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
         .select(
-            F.col(id_col),
-            "centroid_id",
-            arrow_cosine_rounded(F.col("v"), F.col("cv")).alias("sim"),
+            "query_id",
+            "neighbor_id",
+            arrow_cosine_rounded(F.col("qv"), F.col("nv")).alias("sim"),
         )
     )
-    # argmax as an aggregation (min_by over (-sim, centroid_id): best
-    # sim, ties to the smallest centroid) — partial aggregation runs
-    # map-side over the crossJoin output, so the n×C row set never
-    # shuffles the way the old row_number window forced it to.
-    # NULL sims (degenerate centroid: zero-norm/NULL/ragged vector —
-    # cosine returns NULL in-contract) are FILTERED, not ranked: a NULL
-    # first struct field sorts FIRST ascending, so an unfiltered NULL-sim
-    # centroid would win the argmax for every vector (r12 ADVICE).
-    return scored.filter(F.col("sim").isNotNull()).groupBy(id_col).agg(
-        F.expr("min_by(centroid_id, struct(-sim, centroid_id))").alias("centroid_id")
-    )
+    return _rank_topk(cands, k)
 
 
 def ivf_topk(
     emb: DataFrame,
     query_ids: list[int],
+    centroids: DataFrame,
     k: int = 5,
-    n_centroids: int = 8,
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
     """(query_id, neighbor_id, sim, rank): IVF search probing the
     ``nprobe`` nearest centroid buckets per query.  ``centroids``
-    swaps in a trained quantizer (see ``ivf_assign``)."""
-    cent = centroids if centroids is not None else emb.filter(
-        F.col(id_col) < n_centroids
-    ).select(F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cv"))
-    assign = ivf_assign(emb, n_centroids, id_col, vec_col, centroids=cent)
-    q = emb.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+    (centroid_id, cv) is the coarse quantizer: ``kmeans.seed_centroids``
+    or a trained ``kmeans.kmeans_centroids``."""
+    assign = assign_to_centroids(emb, centroids, id_col, vec_col).select(
+        id_col, "centroid_id"
     )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.desc(cosine_rounded(F.col("qv"), F.col("cv"))), F.asc("centroid_id")
+    vectors = emb.join(assign, id_col).select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"), "centroid_id"
     )
-    probes = (
-        F.broadcast(q)
-        .crossJoin(F.broadcast(cent))
-        .withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "qv", "centroid_id")
-    )
-    cands = (
-        probes.join(assign, "centroid_id")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .join(emb.select(F.col(id_col), F.col(vec_col).alias("nv")), id_col)
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            arrow_cosine_rounded(F.col("qv"), F.col("nv")).alias("sim"),
-        )
-    )
-    return _rank_topk(cands, k)
+    probes = ivf_probes(_queries(emb, query_ids, id_col, vec_col), centroids, nprobe)
+    return ivf_rank(probes, vectors, k)
 
 
 def knn_graph(
@@ -361,9 +335,7 @@ def quantized_topk(
         if quantized is not None
         else scalar_quantize(emb, id_col, vec_col, levels).localCheckpoint(eager=True)
     )
-    q = qt.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col("qvec").alias("qv")
-    )
+    q = _queries(qt, query_ids, id_col, "qvec")
     cand = qt.select(F.col(id_col).alias("neighbor_id"), F.col("qvec").alias("nv"))
     score = F.aggregate(
         F.zip_with("qv", "nv", lambda a, b: (a * b).cast("long")),
@@ -419,9 +391,7 @@ def two_stage_topk(
         levels=levels,
         quantized=quantized,
     ).select("query_id", "neighbor_id")
-    q = emb.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
+    q = _queries(emb, query_ids, id_col, vec_col)
     n = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"))
     rescored = (
         n.join(F.broadcast(cands.join(q, "query_id")), "neighbor_id")

@@ -23,7 +23,7 @@ from ..catalog import load_table, parquet_row_count
 from ..operators import dedup, ranking, textops
 from ..operators.connected_components import connected_components
 from ..operators.er import exact_similarity_pairs, lsh_similarity_pairs
-from ..operators.kmeans import kmeans_assignments, kmeans_centroids
+from ..operators.kmeans import kmeans_assignments, kmeans_centroids, seed_centroids
 from ..operators.similarity import brute_force_topk, ivf_topk, knn_graph, quantized_topk
 from .spec import QuerySpec
 
@@ -737,7 +737,7 @@ SELECT query_id, neighbor_id, sim, rank FROM (
 
 def a02_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_topk(emb, ANN_QUERY_IDS, k=5, n_centroids=8, nprobe=2)
+    return ivf_topk(emb, ANN_QUERY_IDS, seed_centroids(emb, 8), k=5, nprobe=2)
 
 
 A02_SQL = f"""
@@ -794,9 +794,9 @@ def a13_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute = brute_force_topk(emb, ANN_QUERY_IDS, k=RECALL_K).select(
         "query_id", "neighbor_id"
     )
-    ivf = ivf_topk(emb, ANN_QUERY_IDS, k=RECALL_K, n_centroids=8, nprobe=2).select(
-        "query_id", "neighbor_id"
-    )
+    ivf = ivf_topk(
+        emb, ANN_QUERY_IDS, seed_centroids(emb, 8), k=RECALL_K, nprobe=2
+    ).select("query_id", "neighbor_id")
     hits = (
         brute.join(ivf, ["query_id", "neighbor_id"])
         .groupBy("query_id")
@@ -1096,8 +1096,8 @@ def a07_ann_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set-oriented ANN from the partitioned IVF store: a DataFrame of
     queries routed to buckets by a broadcast join (dynamic partition
     pruning on the store — NO driver collect/isin), the offline
-    corpus-retrieval face `ivf_topk_from_store`'s point-lookup API
-    cannot serve.  The store is written to a temp dir; the final
+    corpus-retrieval face; it shares the probe and rank steps of
+    a02's in-memory search.  The store is written to a temp dir; the final
     result (bounded |Q|·k rows) is materialized so the dir can be
     removed before returning — the plan-shape pins live in
     tests/test_ivf_store.py over a persistent fixture store."""
@@ -1109,7 +1109,7 @@ def a07_ann_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     root = tempfile.mkdtemp(prefix="a07_ivf_")
     try:
-        write_ivf_store(emb, root, n_centroids=8)
+        write_ivf_store(emb, root, seed_centroids(emb, 8))
         queries = emb.filter(F.col("vec_id") % 40 == 0).select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
         )
@@ -1119,8 +1119,9 @@ def a07_ann_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
-# Same IVF semantics as A02 (first-8 seed centroids, nprobe=2, k=5) with
-# the query set defined by a predicate instead of a point-lookup list.
+# Same IVF semantics as A02 (the 8 smallest-id seed centroids — `vec_id <
+# 8` on the contiguous fixture ids — nprobe=2, k=5) with the query set
+# defined by a predicate instead of a point-lookup list.
 A07_SQL = f"""
 WITH cent AS (SELECT vec_id AS centroid_id, embedding FROM embeddings WHERE vec_id < 8),
 assign AS (
@@ -1158,8 +1159,8 @@ def a12_ivf_store_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched partitions rewritten), and the a07 batch query runs against
     the maintained store.  The oracle is IVF search over the FULL
     corpus — so the gate proves store+append ≡ building from everything
-    at once (the delta never contains ids < 8, so the centroid seed is
-    identical on both paths)."""
+    at once (the delta never contains the 8 smallest ids, so the base's
+    centroid seed is the full corpus's)."""
     import shutil
     import tempfile
 
@@ -1174,7 +1175,7 @@ def a12_ivf_store_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = emb.filter(F.pmod(F.col("vec_id"), F.lit(10)) == 9)
     root = tempfile.mkdtemp(prefix="a12_ivf_")
     try:
-        write_ivf_store(base, root, n_centroids=8)
+        write_ivf_store(base, root, seed_centroids(base, 8))
         append_ivf_store(delta, root)
         queries = emb.filter(F.col("vec_id") % 40 == 20).select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")

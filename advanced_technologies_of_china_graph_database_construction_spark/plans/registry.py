@@ -82,6 +82,12 @@ PLAN_CHANGED_REGATE: set[str] = {
     "m08_resized_image_stats",
     "m09_binary_file_ingest",
     "m10_quiet_segments",
+    # One IVF search path: the store write now assigns through
+    # kmeans.assign_to_centroids from seed_centroids, and the batch
+    # search ranks with the Arrow cosine; both specs return collected
+    # rows, so the fingerprints cannot see it.
+    "a07_ann_ivf_batch",
+    "a12_ivf_store_append",
     # Carried pins: in-loop changes with no green CORRECTNESS_r* row
     # since (g28/g31 k-core and g39 SCC in r17; p03, e15 and g43 —
     # pinned above — in r16).

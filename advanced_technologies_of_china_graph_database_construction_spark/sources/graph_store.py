@@ -16,10 +16,12 @@ Layout:
 
 Scale notes (100 TB): rel-type filters prune edge partitions at read
 time (the load-bearing layout property, `.explain`-verified in tests);
-edge files are clustered by `src` WITHIN a partition, which helps
-row-group locality but is NOT a join co-partitioning — plain parquet
-carries no bucketing metadata, so joins re-shuffle the edge side
-(co-location at rest is the s09 `bucketBy` table face).  Node dims
+edges are hash-repartitioned on (rel_type, src) before the write and
+NOT sorted: all edges of one (type, source) land in one file, but in
+no order within it, so row-group statistics on `src` prune nothing.
+Nor is it a join co-partitioning — plain parquet carries no bucketing
+metadata, so joins re-shuffle the edge side (co-location at rest is
+the s09 `bucketBy` table face).  Node dims
 stay broadcast-size per label.
 Writes are idempotent overwrites (the reference's MERGE-for-idempotency
 and error-log retry loop, S8/S9, are subsumed by deterministic output +

@@ -4,9 +4,13 @@
 the fly; at 100 TB the assignment IS the storage layout — vectors are
 written `partitionBy("centroid_id")`, so probing nprobe buckets reads
 nprobe partition directories and Spark's partition pruning does the
-bucket selection (verify with `.explain`: `PartitionFilters:
-[centroid_id IN (...)]`).  Centroid vectors are persisted alongside so
-search never re-derives the quantizer from data.
+bucket selection (verify with `.explain`: `dynamicpruning` in the
+vectors scan's PartitionFilters).  Centroid vectors are persisted
+alongside so search never re-derives the quantizer from data.
+
+Search shares its probe and rank steps with the in-memory path
+(`similarity.ivf_probes`, `similarity.ivf_rank`); only the stored
+assignment stands in for the computed one.
 
 Same store discipline as the graph store (`sources.graph_store`):
 idempotent overwrite writes, search reads only the store.
@@ -14,92 +18,37 @@ idempotent overwrite writes, search reads only the store.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine_rounded
-from ..operators.similarity import ivf_assign
+from ..operators.kmeans import assign_to_centroids
+from ..operators.similarity import ivf_probes, ivf_rank
 
 
 def write_ivf_store(
     emb: DataFrame,
     root: str,
-    n_centroids: int = 8,
+    centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
 ) -> None:
     """Assign every vector to its nearest centroid and cluster the
     dataset by that assignment on disk.  ``centroids`` (centroid_id,
-    cv) plugs in a trained quantizer — ``operators/kmeans.
-    kmeans_centroids`` produces exactly this shape (the a04
-    composition, persisted); the default is the training-free
-    first-``n_centroids`` seed."""
-    cent = centroids if centroids is not None else emb.filter(
-        F.col(id_col) < n_centroids
-    ).select(F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cv"))
-    cent.write.mode("overwrite").parquet(f"{root}/centroids")
+    cv) is the quantizer — ``operators/kmeans.seed_centroids`` or a
+    trained ``kmeans_centroids`` (the a04 composition, persisted)."""
+    centroids.write.mode("overwrite").parquet(f"{root}/centroids")
     # assign from the PERSISTED centroids: a trained quantizer (Lloyd
     # iterations) must run once, not once more per downstream reference
-    cent_stored = emb.sparkSession.read.parquet(f"{root}/centroids")
-    assign = ivf_assign(emb, n_centroids, id_col, vec_col, centroids=cent_stored)
+    cent = emb.sparkSession.read.parquet(f"{root}/centroids")
+    assign = assign_to_centroids(emb, cent, id_col, vec_col).select(
+        id_col, "centroid_id"
+    )
     (
         emb.join(assign, id_col)
         .write.mode("overwrite")
         .partitionBy("centroid_id")
         .parquet(f"{root}/vectors")
     )
-
-
-def ivf_topk_from_store(
-    spark: SparkSession,
-    root: str,
-    query_ids: list[int],
-    k: int = 5,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(query_id, neighbor_id, sim, rank) — same contract as
-    `similarity.ivf_topk`, but candidates come from the stored buckets:
-    the nprobe bucket ids per query are resolved driver-side (centroid
-    table is tiny) and pushed into the scan as a partition-pruning
-    `isin` filter."""
-    cent = spark.read.parquet(f"{root}/centroids")
-    vectors = spark.read.parquet(f"{root}/vectors")
-    q = vectors.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.desc(cosine_rounded(F.col("qv"), F.col("cv"))), F.asc("centroid_id")
-    )
-    probes = (
-        F.broadcast(q)
-        .crossJoin(F.broadcast(cent))
-        .withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "qv", "centroid_id")
-    )
-    # Driver-side bucket resolution: |queries| × nprobe ids — the isin
-    # literal reaches the vectors scan as a partition filter.
-    probe_rows = probes.select("query_id", "centroid_id").collect()
-    bucket_ids = sorted({r["centroid_id"] for r in probe_rows})
-    cands = (
-        probes.join(
-            vectors.filter(F.col("centroid_id").isin(bucket_ids)).select(
-                F.col(id_col), F.col(vec_col).alias("nv"), "centroid_id"
-            ),
-            "centroid_id",
-        )
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            cosine_rounded(F.col("qv"), F.col("nv")).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return cands.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def ivf_topk_batch(
@@ -111,55 +60,34 @@ def ivf_topk_batch(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(query_id, neighbor_id, sim, rank): the SET-ORIENTED face of the
-    IVF store — ``queries`` is a DataFrame (query_id, qv), so a 10⁶-row
-    offline batch (corpus-vs-corpus retrieval) runs as one distributed
-    plan with NO driver round-trip, unlike ``ivf_topk_from_store``'s
-    point-lookup ``collect``+``isin`` routing.
+    """(query_id, neighbor_id, sim, rank) — same contract as
+    `similarity.ivf_topk`, with candidates read from the stored
+    buckets.  ``queries`` is a DataFrame (query_id, qv), so a 10⁶-row
+    offline batch runs as one distributed plan with NO driver
+    round-trip.
 
-    Plan shape:
-    - probe routing = broadcast join against the centroid table
-      (centroids are tiny by construction) + per-query top-``nprobe``
-      window — all distributed;
-    - bucket pruning = a broadcast LEFT SEMI join of the vectors scan
-      against the DISTINCT probed bucket ids — a set bounded by the
-      CENTROID count (≤C rows however many queries there are), which
-      dynamic partition pruning turns into a partition filter on the
-      ``partitionBy("centroid_id")`` store (verify: `dynamicpruning`
-      inside the scan's PartitionFilters);
-    - candidate access = join on ``centroid_id`` — Catalyst/AQE picks
-      broadcast vs shuffle by the probe side's size, and at 100 TB the
-      shuffle join on the store's own partitioning key is the right
-      co-located shape.
+    Its one step of its own is bucket pruning: a broadcast LEFT SEMI
+    join of the vectors scan against the DISTINCT probed bucket ids — a
+    set bounded by the CENTROID count (≤C rows however many queries
+    there are), which dynamic partition pruning turns into a partition
+    filter on the ``partitionBy("centroid_id")`` store (verify:
+    `dynamicpruning` inside the scan's PartitionFilters).  ``ivf_rank``'s
+    join on ``centroid_id`` then lets Catalyst/AQE pick broadcast vs
+    shuffle by the probe side's size; at 100 TB the shuffle join on the
+    store's own partitioning key is the right co-located shape.
     """
     cent = spark.read.parquet(f"{root}/centroids")
     vectors = spark.read.parquet(f"{root}/vectors")
-    q = queries.select(F.col("query_id"), F.col("qv"))
-    wp = Window.partitionBy("query_id").orderBy(
-        F.desc(cosine_rounded(F.col("qv"), F.col("cv"))), F.asc("centroid_id")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "qv", "centroid_id")
-    )
+    probes = ivf_probes(queries.select("query_id", "qv"), cent, nprobe)
     buckets = probes.select("centroid_id").distinct()
     pruned = vectors.join(F.broadcast(buckets), "centroid_id", "left_semi")
-    cands = (
-        probes.join(
-            pruned.select(F.col(id_col), F.col(vec_col).alias("nv"), "centroid_id"),
-            "centroid_id",
-        )
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            cosine_rounded(F.col("qv"), F.col("nv")).alias("sim"),
-        )
+    return ivf_rank(
+        probes,
+        pruned.select(
+            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"), "centroid_id"
+        ),
+        k,
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return cands.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def append_ivf_store(
@@ -183,19 +111,19 @@ def append_ivf_store(
     upserts (delta wins via anti-join) instead of duplicating.
     Untouched partitions' files stay byte-identical on disk.
 
-    Scale shape: assignment is |delta| × n_centroids (centroids
+    Scale shape: assignment is |delta| × |centroids| (centroids
     broadcast); the only store reads are the touched partitions
     (partition-pruned scan); nothing standing re-clusters, re-shuffles,
     or re-writes."""
     spark = delta.sparkSession
     cent = spark.read.parquet(f"{root}/centroids")
-    assign = ivf_assign(
-        delta, cent.count(), id_col, vec_col, centroids=cent
+    assign = assign_to_centroids(delta, cent, id_col, vec_col).select(
+        id_col, "centroid_id"
     )
     ddf = delta.join(assign, id_col).localCheckpoint(eager=True)
     touched = sorted(
         r["centroid_id"] for r in ddf.select("centroid_id").distinct().collect()
-    )  # bounded by n_centroids — driver-side routing like the point lookup
+    )  # bounded by the centroid count — a literal partition filter below
     existing = (
         spark.read.parquet(f"{root}/vectors")
         .filter(F.col("centroid_id").isin(touched))

@@ -47,13 +47,13 @@ STREAM_STATE_PARTITIONS = int(
 
 
 @contextmanager
-def state_partitions(spark: SparkSession, n: int | None = None):
+def state_partitions(spark: SparkSession):
     """Pin ``spark.sql.shuffle.partitions`` (= streaming state
-    partitions) around a stateful streaming query's start/stop; the
-    session's batch default is restored afterwards."""
-    n = STREAM_STATE_PARTITIONS if n is None else n
+    partitions) to ``STREAM_STATE_PARTITIONS`` around a stateful
+    streaming query's start/stop; the session's batch default is
+    restored afterwards."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
     try:
         yield
     finally:

@@ -1,16 +1,16 @@
 """Partitioned IVF store: search-from-store must agree with the
 in-memory IVF operator, and bucket probing must appear in the plan as
-partition pruning."""
+dynamic partition pruning."""
 
 from __future__ import annotations
 
 import pytest
 
 from advanced_technologies_of_china_graph_database_construction_spark.catalog import load_table
+from advanced_technologies_of_china_graph_database_construction_spark.operators.kmeans import seed_centroids
 from advanced_technologies_of_china_graph_database_construction_spark.operators.similarity import ivf_topk
 from advanced_technologies_of_china_graph_database_construction_spark.sources.ivf_store import (
     ivf_topk_batch,
-    ivf_topk_from_store,
     write_ivf_store,
 )
 
@@ -23,7 +23,7 @@ QUERY_IDS = [100, 101, 102]
 def store(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("ivf_store"))
     emb = load_table(spark, SF_CORRECT, "embeddings")
-    write_ivf_store(emb, root, n_centroids=8)
+    write_ivf_store(emb, root, seed_centroids(emb, 8))
     return root
 
 
@@ -33,27 +33,10 @@ def _rows(df):
     )
 
 
-def test_store_search_matches_inmemory_ivf(spark, store):
-    emb = load_table(spark, SF_CORRECT, "embeddings")
-    want = _rows(ivf_topk(emb, QUERY_IDS, k=5, n_centroids=8, nprobe=2))
-    got = _rows(ivf_topk_from_store(spark, store, QUERY_IDS, k=5, nprobe=2))
-    assert got == want
-
-
-def test_bucket_probe_is_partition_pruned(spark, store):
-    df = ivf_topk_from_store(spark, store, QUERY_IDS, k=5, nprobe=2)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    pruned = [
-        l for l in plan.splitlines()
-        if "PartitionFilters" in l and "centroid_id" in l and "vectors" in l
-    ]
-    assert any("IN (" in l or "In(" in l or "isin" in l.lower() for l in pruned), plan
-
-
-def _queries(spark, ids):
+def _queries(spark, ids, emb=None):
     from pyspark.sql import functions as F
 
-    emb = load_table(spark, SF_CORRECT, "embeddings")
+    emb = load_table(spark, SF_CORRECT, "embeddings") if emb is None else emb
     return emb.filter(F.col("vec_id").isin(ids)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
@@ -61,7 +44,7 @@ def _queries(spark, ids):
 
 def test_batch_search_matches_inmemory_ivf(spark, store):
     emb = load_table(spark, SF_CORRECT, "embeddings")
-    want = _rows(ivf_topk(emb, QUERY_IDS, k=5, n_centroids=8, nprobe=2))
+    want = _rows(ivf_topk(emb, QUERY_IDS, seed_centroids(emb, 8), k=5, nprobe=2))
     got = _rows(ivf_topk_batch(spark, store, _queries(spark, QUERY_IDS), k=5, nprobe=2))
     assert got == want
 
@@ -76,7 +59,7 @@ def test_trained_quantizer_store_matches_inmemory(spark, tmp_path):
     cent = kmeans_centroids(emb, k=4, iters=2)
     root = str(tmp_path / "trained_store")
     write_ivf_store(emb, root, centroids=cent)
-    want = _rows(ivf_topk(emb, QUERY_IDS, k=5, nprobe=2, centroids=cent))
+    want = _rows(ivf_topk(emb, QUERY_IDS, cent, k=5, nprobe=2))
     got = _rows(ivf_topk_batch(spark, root, _queries(spark, QUERY_IDS), k=5, nprobe=2))
     assert got == want
 
@@ -84,8 +67,7 @@ def test_trained_quantizer_store_matches_inmemory(spark, tmp_path):
 def test_batch_plan_no_collect_and_dynamic_pruning(spark, store):
     """The batch face's contract: zero driver round-trips (no
     CollectLimit anywhere) and bucket selection reaching the
-    partitioned vectors scan as a DYNAMIC partition-pruning filter —
-    the distributed replacement for the point API's collect+isin."""
+    partitioned vectors scan as a DYNAMIC partition-pruning filter."""
     df = ivf_topk_batch(spark, store, _queries(spark, QUERY_IDS), k=5, nprobe=2)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CollectLimit" not in plan
@@ -114,17 +96,19 @@ def _file_state(root):
 def test_append_equals_full_build(spark, tmp_path):
     """store(base) + append(delta) must answer queries exactly like a
     store built from the full corpus at once (same frozen centroid
-    seed — the delta excludes ids < 8)."""
+    seed — the delta excludes the 8 smallest ids)."""
     from pyspark.sql import functions as F
     from advanced_technologies_of_china_graph_database_construction_spark.sources.ivf_store import append_ivf_store
 
     emb = load_table(spark, SF_CORRECT, "embeddings")
     full_root, inc_root = str(tmp_path / "full"), str(tmp_path / "inc")
-    write_ivf_store(emb, full_root, n_centroids=8)
-    write_ivf_store(emb.filter(F.col("vec_id") % 10 != 9), inc_root, n_centroids=8)
+    base = emb.filter(F.col("vec_id") % 10 != 9)
+    write_ivf_store(emb, full_root, seed_centroids(emb, 8))
+    write_ivf_store(base, inc_root, seed_centroids(base, 8))
     append_ivf_store(emb.filter(F.col("vec_id") % 10 == 9), inc_root)
-    want = _rows(ivf_topk_from_store(spark, full_root, QUERY_IDS, k=5, nprobe=2))
-    got = _rows(ivf_topk_from_store(spark, inc_root, QUERY_IDS, k=5, nprobe=2))
+    queries = _queries(spark, QUERY_IDS)
+    want = _rows(ivf_topk_batch(spark, full_root, queries, k=5, nprobe=2))
+    got = _rows(ivf_topk_batch(spark, inc_root, queries, k=5, nprobe=2))
     assert got == want
 
 
@@ -137,7 +121,7 @@ def test_append_redelivered_id_upserts_and_untouched_partitions_intact(spark, tm
 
     emb = load_table(spark, SF_CORRECT, "embeddings")
     root = str(tmp_path / "store")
-    write_ivf_store(emb, root, n_centroids=8)
+    write_ivf_store(emb, root, seed_centroids(emb, 8))
     before = _file_state(root)
     # re-deliver one existing vector with a RECOGNIZABLE new payload:
     # its own embedding again (assignment unchanged → same partition)
@@ -161,3 +145,27 @@ def test_append_redelivered_id_upserts_and_untouched_partitions_intact(spark, tm
         part = int(rel.split("centroid_id=")[1].split("/")[0])
         if part not in touched_parts:
             assert after.get(rel) == st, rel
+
+
+def test_shifted_ids_seed_a_full_quantizer(spark, tmp_path):
+    """IVF must not assume vector ids 0..C-1: over ids shifted by +1000
+    the seed is still the 8 smallest ids, and both the in-memory search
+    and the store return k neighbours per query (a seed of `id < 8`
+    finds no centroid there, and IVF silently returns nothing)."""
+    from pyspark.sql import functions as F
+
+    emb = load_table(spark, SF_CORRECT, "embeddings").withColumn(
+        "vec_id", F.col("vec_id") + 1000
+    )
+    ids = [q + 1000 for q in QUERY_IDS]
+    cent = seed_centroids(emb, 8)
+    root = str(tmp_path / "shifted")
+    write_ivf_store(emb, root, cent)
+    for df in (
+        ivf_topk(emb, ids, cent, k=5, nprobe=2),
+        ivf_topk_batch(spark, root, _queries(spark, ids, emb), k=5, nprobe=2),
+    ):
+        per_query = {}
+        for r in df.collect():
+            per_query[r["query_id"]] = per_query.get(r["query_id"], 0) + 1
+        assert per_query == {q: 5 for q in ids}

@@ -97,23 +97,25 @@ def test_kmeans_matches_numpy_reference(spark):
 
 
 def test_trained_centroids_plug_into_ivf(spark):
-    """kmeans_centroids output feeds ivf_assign/ivf_topk unchanged, and
-    every vector lands in exactly one surviving cluster."""
+    """kmeans_centroids output feeds ivf_topk unchanged, and every
+    vector lands in exactly one surviving cluster."""
     from advanced_technologies_of_china_graph_database_construction_spark.catalog import load_table
-    from advanced_technologies_of_china_graph_database_construction_spark.operators.kmeans import kmeans_centroids
+    from advanced_technologies_of_china_graph_database_construction_spark.operators.kmeans import (
+        assign_to_centroids,
+        kmeans_centroids,
+    )
     from advanced_technologies_of_china_graph_database_construction_spark.operators.similarity import (
-        ivf_assign,
         ivf_topk,
     )
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     cent = kmeans_centroids(emb, k=4, iters=1)
-    assign = ivf_assign(emb, centroids=cent)
+    assign = assign_to_centroids(emb, cent)
     n = emb.count()
     assert assign.count() == n
     assert assign.select("vec_id").distinct().count() == n
 
-    topk = ivf_topk(emb, [0, 1], k=3, nprobe=2, centroids=cent).collect()
+    topk = ivf_topk(emb, [0, 1], cent, k=3, nprobe=2).collect()
     by_q = {}
     for r in topk:
         by_q.setdefault(r["query_id"], []).append(r)
@@ -159,9 +161,6 @@ def test_degenerate_centroid_filtered_not_ranked(spark):
     from advanced_technologies_of_china_graph_database_construction_spark.operators.kmeans import (
         assign_to_centroids,
     )
-    from advanced_technologies_of_china_graph_database_construction_spark.operators.similarity import (
-        ivf_assign,
-    )
 
     emb = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "vec_id long, embedding array<double>"
@@ -176,13 +175,9 @@ def test_degenerate_centroid_filtered_not_ranked(spark):
     }
     assert got == {1: (0, 1.0), 2: (1, 1.0)}
 
-    ivf = {r["vec_id"]: r["centroid_id"] for r in ivf_assign(emb, centroids=cent).collect()}
-    assert ivf == {1: 0, 2: 1}
-
     # an all-degenerate VECTOR (NULL sim vs every centroid) yields no
     # row — filtered, not ranked, same convention
     emb2 = emb.union(
         spark.createDataFrame([(3, [0.0, 0.0])], "vec_id long, embedding array<double>")
     )
     assert 3 not in {r["vec_id"] for r in assign_to_centroids(emb2, cent).collect()}
-    assert 3 not in {r["vec_id"] for r in ivf_assign(emb2, centroids=cent).collect()}

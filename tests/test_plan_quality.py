@@ -290,21 +290,6 @@ def test_encode_texts_is_narrow_map(spark):
     assert "text" in read_schema and "source" not in read_schema, read_schema
 
 
-def test_ivf_assign_partial_aggregates_mapside(spark):
-    """Centroid assignment is an aggregation with map-side partials over
-    the broadcast crossJoin — not a row_number window shuffle."""
-    from advanced_technologies_of_china_graph_database_construction_spark.catalog import load_table
-    from advanced_technologies_of_china_graph_database_construction_spark.operators.similarity import ivf_assign
-
-    emb = load_table(spark, SF_CORRECT, "embeddings")
-    plan = _plan(ivf_assign(emb))
-    # e139e78 switched the argmax to min_by(centroid_id, struct(-sim, id))
-    # — the pinned PROPERTY (map-side partial aggregation, no Window)
-    # is unchanged, only the aggregate's name moved
-    assert "partial_min_by" in plan or "partial_minby" in plan.lower(), plan
-    assert "Window" not in plan, plan
-
-
 def test_bm25_is_one_jvm_scan_with_broadcast_stats(spark):
     """BM25 scoring must stay JVM-side (array-filter tf, no Python
     evaluation), fold the corpus stats into a broadcast of a 1-row

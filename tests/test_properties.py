@@ -993,6 +993,9 @@ def test_ivf_recall_matches_numpy_replay(spark):
     5=5=5 and measures nothing."""
     import numpy as np
 
+    from advanced_technologies_of_china_graph_database_construction_spark.operators.kmeans import (
+        seed_centroids,
+    )
     from advanced_technologies_of_china_graph_database_construction_spark.operators.similarity import (
         brute_force_topk,
         ivf_topk,
@@ -1016,7 +1019,7 @@ def test_ivf_recall_matches_numpy_replay(spark):
         return [c for _, c in ranked[:k]]
 
     # every vector (centroid rows included) assigns by cosine to the
-    # centroid ROWS, self-comparison included — the operator's ivf_assign
+    # centroid ROWS, self-comparison included — kmeans.assign_to_centroids
     assign = {
         v: min(range(ncent), key=lambda c: (-float(sims[v, c]), c)) for v in range(n)
     }
@@ -1036,7 +1039,7 @@ def test_ivf_recall_matches_numpy_replay(spark):
         "vec_id long, embedding array<double>",
     )
     brute = brute_force_topk(df, query_ids, k=k).select("query_id", "neighbor_id")
-    ivf = ivf_topk(df, query_ids, k=k, n_centroids=ncent, nprobe=nprobe).select(
+    ivf = ivf_topk(df, query_ids, seed_centroids(df, ncent), k=k, nprobe=nprobe).select(
         "query_id", "neighbor_id"
     )
     b_rows, i_rows = brute.collect(), ivf.collect()

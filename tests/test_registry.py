@@ -34,15 +34,16 @@ def test_never_gated_specs_run_first():
 
 
 def test_plan_changed_pins_precede_every_green_spec():
+    """Pins — hand pins and fingerprint drifts alike — sort before every
+    spec whose green gate row still stands."""
     history = gate_history()
     if not history:
         return
     names = [s.name for s in all_specs()]
     idx = {n: i for i, n in enumerate(names)}
-    pinned = [n for n in names if n in PLAN_CHANGED_REGATE and n in history]
-    green = [
-        n for n in names if n in history and n not in PLAN_CHANGED_REGATE
-    ]
+    rounds = {n: effective_round(n, history) for n in names}
+    pinned = [n for n in names if rounds[n] == -0.5]
+    green = [n for n in names if rounds[n] >= 0]
     if pinned and green:
         assert max(idx[n] for n in pinned) < min(idx[n] for n in green)
 
@@ -55,11 +56,16 @@ def test_gate_order_is_stalest_green_first():
 
 def test_every_pin_reaches_the_gate():
     """The correctness gate runs the first 50 specs of ``all_specs()``;
-    a pin beyond that budget would never be re-proved."""
-    if not gate_history():
+    a pin beyond that budget would never be re-proved.  A pin is any
+    spec the gate order sorts at -0.5: a hand pin or a recorded
+    fingerprint drift."""
+    history = gate_history()
+    if not history:
         return
-    first = {s.name for s in all_specs()[:50]}
-    assert PLAN_CHANGED_REGATE <= first, sorted(PLAN_CHANGED_REGATE - first)
+    specs = all_specs()
+    first = {s.name for s in specs[:50]}
+    pinned = {s.name for s in specs if effective_round(s.name, history) == -0.5}
+    assert pinned <= first, sorted(pinned - first)
 
 
 def test_pins_name_registered_specs():
