@@ -13,7 +13,10 @@ multi-turn glue on both branches (a follow-up naming no quoted entity
 inherits the conversation's most recent quoted terms — see
 ``planner.plan``); ``neo4j_enabled`` maps to "run the graph templates
 vs fulltext-only", mirroring the reference's toggle
-(`api_server.py:78-88`).
+(`api_server.py:78-88`).  Both run the engine's lazy cascade:
+``neo4j_enabled=false`` is a one-stage cascade, the AND full-text scan,
+reported as stage ``fulltext_only`` / template ``fulltext`` even when it
+finds nothing.
 """
 
 from __future__ import annotations
@@ -23,7 +26,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
 
-from .engine import answer, fulltext_search
+from .engine import answer, fulltext_search, run_cascade
 from .planner import plan
 
 
@@ -47,16 +50,8 @@ def handle_request(spark: SparkSession, sf_dir: str, payload: dict) -> dict:
     else:
         p = plan(query, history=user_turns or None)
         tokens = [w for t in p.terms for w in t.split()]
-        rows = fulltext_search(spark, sf_dir, tokens, require_all=True).collect()
-        from .engine import default_synthesizer
-        from .formatter import format_rows
-
-        res = {
-            "answer": default_synthesizer(query, format_rows(rows)),
-            "stage": "fulltext_only",
-            "template": "fulltext",
-            "n_rows": len(rows),
-        }
+        stages = [("fulltext_only", lambda: fulltext_search(spark, sf_dir, tokens, True))]
+        res = run_cascade(query, "fulltext", stages, empty_stage="fulltext_only")
     return {
         "answer": res["answer"],
         "stage": res["stage"],

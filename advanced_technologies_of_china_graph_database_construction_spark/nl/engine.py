@@ -7,11 +7,19 @@ result, fallback full-text search (AND-of-terms then OR-of-terms, LIMIT
 100, `neo4j_query_executor.py:389-459`) → format rows (F14) → synthesize
 an answer (pluggable; deterministic default so tests never call an LLM,
 `neo4j_query_executor.py:346-384`).
+
+The cascade is lazy: each stage's plan is built only when the stage
+before it came back empty, so a template hit schedules no job for the
+fallbacks it never runs.  The full-text stages read one ``documents``
+frame per (application, dataset), with the same key and lifetime as the
+graph cache (``operators.graph._GRAPH_CACHE``).
 """
 
 from __future__ import annotations
 
+import os
 import re
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -313,15 +321,31 @@ def execute_plan(spark: SparkSession, sf_dir: str, p: QueryPlan) -> DataFrame:
     return TEMPLATES[p.template](g, **p.params).limit(RESULT_LIMIT)
 
 
+# (applicationId, abspath(sf_dir)) -> the `documents` frame.  Kept here
+# and not in catalog.load_table: specs that load one table twice would
+# otherwise self-join a single relation on identical expression ids.
+# The lock makes concurrent server threads share one load.
+_DOCS_CACHE: dict[tuple[str, str], DataFrame] = {}
+_DOCS_LOCK = threading.Lock()
+
+
+def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
+    with _DOCS_LOCK:
+        if key not in _DOCS_CACHE:
+            _DOCS_CACHE[key] = load_table(spark, sf_dir, "documents")
+        return _DOCS_CACHE[key]
+
+
 def fulltext_search(
     spark: SparkSession, sf_dir: str, terms: list[str], require_all: bool
 ) -> DataFrame:
     """Q3 fallback scan over documents: AND (P8) or case-insensitive OR
-    (P9) of terms, LIMIT 100."""
-    docs = load_table(spark, sf_dir, "documents")
+    (P9) of terms, LIMIT 100; ``(doc_id, snippet)`` rows, none when
+    there are no terms."""
     if not terms:
-        return docs.select("doc_id", "text").limit(0)
-    if require_all:
+        cond = F.lit(False)
+    elif require_all:
         cond = F.lit(True)
         for t in terms:
             cond = cond & F.lower(F.col("text")).contains(t.lower())
@@ -330,7 +354,8 @@ def fulltext_search(
         for t in terms:
             cond = cond | F.lower(F.col("text")).contains(t.lower())
     return (
-        docs.filter(cond)
+        _documents(spark, sf_dir)
+        .filter(cond)
         .select("doc_id", F.substring("text", 1, 120).alias("snippet"))
         .orderBy("doc_id")
         .limit(FALLBACK_LIMIT)
@@ -367,6 +392,36 @@ def default_compiler(question: str, catalog_prompt: str) -> QueryPlan:
     return plan(question)
 
 
+# One cascade stage: (stage name, thunk building its plan).
+Stage = tuple[str, Callable[[], DataFrame]]
+
+
+def run_cascade(
+    question: str,
+    template: str,
+    stages: list[Stage],
+    synthesizer: Synthesizer | None = None,
+    empty_stage: str = "empty",
+) -> dict:
+    """Build and collect each stage in turn, stopping at the first that
+    returns rows; a stage's plan is built only when the stage before it
+    came back empty.  Returns the answer text and its provenance, with
+    ``empty_stage`` as the stage when none returned rows."""
+    synth = synthesizer or default_synthesizer
+    for stage, make_plan in stages:
+        rows = make_plan().collect()
+        if rows:
+            break
+    else:
+        stage, rows = empty_stage, []
+    return {
+        "answer": synth(question, format_rows(rows)),
+        "stage": stage,
+        "template": template,
+        "n_rows": len(rows),
+    }
+
+
 def answer(
     spark: SparkSession,
     sf_dir: str,
@@ -377,11 +432,13 @@ def answer(
 ) -> dict:
     """Full serving cascade: compile → execute → (empty? AND-fallback →
     OR-fallback) → format → synthesize.  Returns a dict with the answer
-    text and provenance of which stage produced it.  ``history`` (prior
-    user turns) feeds the Q5 multi-turn glue: a follow-up naming no
-    quoted entity inherits the conversation's most recent quoted terms
-    (see ``planner.plan``)."""
-    synth = synthesizer or default_synthesizer
+    text and provenance of which stage produced it.  Stages are built
+    only when reached (see :func:`run_cascade`), so a template hit pays
+    nothing for the fallbacks, and the fallbacks share the per-
+    application ``documents`` frame.  ``history`` (prior user turns)
+    feeds the Q5 multi-turn glue: a follow-up naming no quoted entity
+    inherits the conversation's most recent quoted terms (see
+    ``planner.plan``)."""
     if compiler is None:
         p = plan(question, history=history)
     else:
@@ -397,7 +454,7 @@ def answer(
         # degrade to the fallback search over its terms, the same
         # error→fallback shape as the reference (`:329-344`).
         p = QueryPlan(template=FALLBACK_TEMPLATE, params={}, terms=p.terms)
-    stages = [("template", execute_plan(spark, sf_dir, p))]
+    stages: list[Stage] = [("template", lambda: execute_plan(spark, sf_dir, p))]
     # fallback scans tokenize multi-word quoted terms so a partially
     # wrong entity name can still hit (mirrors the reference's per-term
     # regex conjunction/disjunction, `neo4j_query_executor.py:414-441`)
@@ -407,20 +464,10 @@ def answer(
         # exactly these tokens (single-word terms), fallback_and would
         # re-run a byte-identical full scan — skip straight to OR
         if not (p.template == FALLBACK_TEMPLATE and tokens == p.terms):
-            stages.append(("fallback_and", fulltext_search(spark, sf_dir, tokens, True)))
-        stages.append(("fallback_or", fulltext_search(spark, sf_dir, tokens, False)))
-    for stage, df in stages:
-        rows = df.collect()
-        if rows:
-            return {
-                "answer": synth(question, format_rows(rows)),
-                "stage": stage,
-                "template": p.template,
-                "n_rows": len(rows),
-            }
-    return {
-        "answer": synth(question, ""),
-        "stage": "empty",
-        "template": p.template,
-        "n_rows": 0,
-    }
+            stages.append(
+                ("fallback_and", lambda: fulltext_search(spark, sf_dir, tokens, True))
+            )
+        stages.append(
+            ("fallback_or", lambda: fulltext_search(spark, sf_dir, tokens, False))
+        )
+    return run_cascade(question, p.template, stages, synthesizer)

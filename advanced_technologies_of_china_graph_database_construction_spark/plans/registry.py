@@ -88,6 +88,10 @@ PLAN_CHANGED_REGATE: set[str] = {
     # rows, so the fingerprints cannot see it.
     "a07_ann_ivf_batch",
     "a12_ivf_store_append",
+    # Lazy answer cascade: both run nl.engine.answer end to end and gate
+    # its collected answer row, which the fingerprints cannot see.
+    "n06_formatted_answer",
+    "n09_http_answer_roundtrip",
     # Carried pins: in-loop changes with no green CORRECTNESS_r* row
     # since (g28/g31 k-core and g39 SCC in r17; p03, e15 and g43 —
     # pinned above — in r16).

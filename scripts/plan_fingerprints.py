@@ -20,6 +20,12 @@ analyzed-plan string, and merges with the committed file:
     (otherwise it would re-pin every round forever).  A spec already
     marked unstable stays unstable without --selfcheck.
 
+The session always runs at parallelism 32 (``local[32]``, and
+``SPARK_GRAFT_CPUS=32`` for the package's shuffle-partition conf),
+whatever the caller's ``SPARK_GRAFT_CPUS``: the stored file was made at
+32, and a plan whose shape follows the core count (d42's seeded epoch
+shuffle) would otherwise drift on a smaller box with no code change.
+
 Run once per round after the last plan-touching commit, then commit the
 JSON.  Streaming specs EXECUTE during the build (their fn runs the
 micro-batch loop before returning the result frame), so expect a few
@@ -38,6 +44,8 @@ import time
 from pathlib import Path
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# before any package import: the package reads it for its shuffle width
+os.environ["SPARK_GRAFT_CPUS"] = "32"
 
 from pyspark.sql import SparkSession  # noqa: E402
 
@@ -56,9 +64,8 @@ def main() -> int:
     args = [a for a in sys.argv[1:] if a != "--selfcheck"]
     selfcheck = "--selfcheck" in sys.argv[1:]
     sf = args[0] if args else "/root/testdata/sf0.001"
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        SparkSession.builder.master("local[32]")
         .appName("plan-fingerprints")
         .getOrCreate()
     )

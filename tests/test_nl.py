@@ -110,6 +110,61 @@ def test_empty_cascade(spark):
     assert out["answer"] == "No results found."
 
 
+def test_fulltext_search_without_terms_keeps_its_columns(spark):
+    # no terms: no rows, but the same (doc_id, snippet) frame as a search
+    empty = engine.fulltext_search(spark, SF, [], True)
+    assert empty.columns == engine.fulltext_search(spark, SF, ["merge"], True).columns
+    assert empty.collect() == []
+
+
+# ------------------------------------------------------- cascade cost -----
+
+Q_HIT = 'List papers written by "Customer#000000001"'
+
+
+def test_template_hit_never_builds_a_fallback(spark, monkeypatch):
+    def no_fallback(*args, **kwargs):
+        raise AssertionError("fallback plan built for a template hit")
+
+    monkeypatch.setattr(engine, "fulltext_search", no_fallback)
+    assert engine.answer(spark, SF, Q_HIT)["stage"] == "template"
+
+
+def test_template_hit_costs_only_its_stage(spark, cost_of):
+    engine.answer(spark, SF, Q_HIT)  # warm: graph store and session confs
+    p = planner.plan(Q_HIT)
+    _, (stage_jobs, _) = cost_of(lambda: engine.execute_plan(spark, SF, p).collect())
+    out, (answer_jobs, _) = cost_of(lambda: engine.answer(spark, SF, Q_HIT))
+    assert out["stage"] == "template"
+    assert answer_jobs == stage_jobs
+
+
+def test_fulltext_only_request_costs_one_job(spark, cost_of):
+    from advanced_technologies_of_china_graph_database_construction_spark.nl import api
+
+    payload = {"query": 'docs mentioning "merge batch"', "neo4j_enabled": False}
+    api.handle_request(spark, SF, payload)  # warm: the documents frame
+    out, (jobs, _) = cost_of(lambda: api.handle_request(spark, SF, payload))
+    assert (out["stage"], out["template"]) == ("fulltext_only", "fulltext")
+    assert out["n_rows"] > 0
+    assert jobs == 1
+
+
+def test_fulltext_only_request_keeps_its_stage_when_empty(spark):
+    from advanced_technologies_of_china_graph_database_construction_spark.nl import api
+
+    out = api.handle_request(
+        spark, SF, {"query": 'find "zzqx_none_anywhere"', "neo4j_enabled": False}
+    )
+    assert out == {
+        "answer": "No results found.",
+        "stage": "fulltext_only",
+        "template": "fulltext",
+        "n_rows": 0,
+        "session_id": None,
+    }
+
+
 def test_alias_aware_keyword_lookup(spark):
     # docs_by_keyword resolves through canonical ids (J9): must return at
     # least as many docs as a literal name match would
