@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import threading
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,6 +54,10 @@ REL_PUBLISHED_BY = "PUBLISHED_BY"
 REL_AUTHOR_ADDRESS = "AUTHOR_ADDRESS"
 REL_HAS_TOPIC = "HAS_TOPIC"
 REL_ALIAS_OF = "ALIAS_OF"
+REL_TYPES = (
+    REL_AUTHORED, REL_HAS_KEYWORD, REL_PUBLISHED_BY, REL_AUTHOR_ADDRESS,
+    REL_HAS_TOPIC, REL_ALIAS_OF,
+)
 
 
 @dataclass
@@ -82,15 +87,20 @@ class GraphModel:
 
 
 # Build-once, query-many: the reference builds its graph once (batch
-# load into Neo4j) and serves every query from the built store.  The
-# Spark analogue is the partitioned Parquet store (sources/graph_store):
-# on first use per sf_dir the derived graph (two `distinct()` shuffles
-# over lineitem, window over part) is materialized to
-# `spark-warehouse/_graph_cache/<sf>` and every subsequent query reads
-# the compact store — rel-type predicates become partition pruning
-# instead of union-branch recomputation.  At 100 TB this is exactly the
-# production path: ETL writes the store, the query layer only scans it.
+# load into Neo4j) and serves every query from the resident store.  The
+# Spark analogue is the partitioned Parquet store (sources/graph_store)
+# plus the block manager: on first use per (application, sf_dir) the
+# derived graph (two `distinct()` shuffles over lineitem, window over
+# part) is materialized to `spark-warehouse/_graph_cache/<sf>`, read
+# back, and its frames are persisted, so every later query reads them
+# from memory instead of opening, decoding and filtering Parquet files.
+# At 100 TB this is the production path: ETL writes the store, the query
+# layer scans it once and serves from the cache.
 _GRAPH_CACHE: dict[tuple[str, str], "GraphModel"] = {}
+# One lock over lookup, build and persist: concurrent first requests of
+# the threaded server would otherwise both miss the memo and both
+# overwrite the same store root.
+_GRAPH_LOCK = threading.Lock()
 _STORE_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), "spark-warehouse", "_graph_cache")
 _STORE_MARKER = "_GRAPH_STORE_COMPLETE"
 
@@ -104,16 +114,29 @@ def build_graph(spark: SparkSession, sf_dir: str, *, use_cache: bool = True) -> 
     (src, dst, rel_type) (`csv_extractor.py:168,196-207`).
 
     With ``use_cache`` (default) the derived graph is materialized once
-    per ``sf_dir`` into the Parquet graph store and re-served from it
-    (see ``sources.graph_store``); ``use_cache=False`` returns the raw
-    derivation plan (used by store/ETL tests).
+    per ``sf_dir`` into the Parquet graph store, and the model read back
+    from it is kept in memory for the application's life: the node
+    frames, ``kw_alias`` and one ``edges_of(rel)`` frame per rel type
+    are persisted (filled lazily by the first query that reads each).
+    The edges are cached per rel type, not as the whole ``edges`` frame,
+    so each cached plan is filled by a scan pruned to one ``rel_type``
+    partition and a query still shows that ``PartitionFilters`` line.
+    ``use_cache=False`` returns the raw derivation plan (used by
+    store/ETL tests).
     """
     if not use_cache:
         return _build_graph_uncached(spark, sf_dir)
     key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cached = _GRAPH_CACHE.get(key)
-    if cached is not None:
-        return cached
+    with _GRAPH_LOCK:
+        g = _GRAPH_CACHE.get(key)
+        if g is None:
+            g = _GRAPH_CACHE[key] = _serve_graph(spark, sf_dir)
+        return g
+
+
+def _serve_graph(spark: SparkSession, sf_dir: str) -> GraphModel:
+    """The store-backed model of ``sf_dir`` with its frames persisted;
+    (re)writes the store first when its marker is absent or stale."""
     from ..sources.graph_store import read_graph, write_graph
 
     # the store directory keys on basename PLUS an abspath digest: two
@@ -141,7 +164,11 @@ def build_graph(spark: SparkSession, sf_dir: str, *, use_cache: bool = True) -> 
             fh.write(fingerprint + "\n")
         os.replace(tmp, marker)
     g = read_graph(spark, root)
-    _GRAPH_CACHE[key] = g
+    for name, frame in vars(g).items():
+        if name != "edges":  # cached per rel type: see build_graph
+            frame.persist()
+    for rel in REL_TYPES:
+        g.edges_of(rel).persist()
     return g
 
 

@@ -16,13 +16,15 @@ Layout:
 
 Scale notes (100 TB): rel-type filters prune edge partitions at read
 time (the load-bearing layout property, `.explain`-verified in tests);
-edges are hash-repartitioned on (rel_type, src) before the write and
-NOT sorted: all edges of one (type, source) land in one file, but in
-no order within it, so row-group statistics on `src` prune nothing.
-Nor is it a join co-partitioning — plain parquet carries no bucketing
+edges are range-partitioned on (rel_type, src) before the write and
+sorted on (rel_type, src) within each partition: each file holds one
+contiguous `src` range of one or two types, in `src` order, so
+row-group statistics on `src` can prune a literal-`src` filter, and a
+type's edges land in a few files instead of one per writer task.  It
+is not a join co-partitioning — plain parquet carries no bucketing
 metadata, so joins re-shuffle the edge side (co-location at rest is
-the s09 `bucketBy` table face).  Node dims
-stay broadcast-size per label.
+the s09 `bucketBy` table face).  Node dims stay broadcast-size per
+label.
 Writes are idempotent overwrites (the reference's MERGE-for-idempotency
 and error-log retry loop, S8/S9, are subsumed by deterministic output +
 task retries).
@@ -42,19 +44,20 @@ def write_graph(g: GraphModel, root: str, edge_partitions: int = 24) -> None:
     """Persist the graph model: node datasets (docs partitioned by label)
     plus one edges dataset partitioned by ``rel_type``.
 
-    ``edge_partitions`` is TOTAL writer parallelism across all rel
-    types (r12 review: the old name ``edge_files_per_type`` claimed a
-    per-type count the repartition never delivered — a hash over
-    (rel_type, src) into N partitions is N tasks total).  The read
-    layout contract is partition PRUNING on rel_type only; a plain
-    parquet round-trip carries no bucketing metadata, so downstream
-    joins re-shuffle the edge side regardless — co-location at rest
-    needs the s09 ``bucketBy`` table face, not this store."""
+    ``edge_partitions`` is the TOTAL number of range partitions over
+    (rel_type, src) across all rel types, so the edges dataset holds
+    about ``edge_partitions`` files (one more per range that straddles
+    two types), each sorted on ``src``.  The read layout contract is
+    partition PRUNING on rel_type; a plain parquet round-trip carries
+    no bucketing metadata, so downstream joins re-shuffle the edge side
+    regardless — co-location at rest needs the s09 ``bucketBy`` table
+    face, not this store."""
     g.docs.write.mode("overwrite").partitionBy("label").parquet(f"{root}/nodes/docs")
     for fam in _NODE_FAMILIES[1:]:
         getattr(g, fam).write.mode("overwrite").parquet(f"{root}/nodes/{fam}")
     (
-        g.edges.repartition(edge_partitions, "rel_type", "src")
+        g.edges.repartitionByRange(edge_partitions, "rel_type", "src")
+        .sortWithinPartitions("rel_type", "src")
         .write.mode("overwrite")
         .partitionBy("rel_type")
         .parquet(f"{root}/edges")

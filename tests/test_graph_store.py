@@ -67,3 +67,56 @@ def test_rel_type_partition_pruning(spark, tmp_path):
     assert any(
         "PartitionFilters" in line and "rel_type" in line for line in plan.splitlines()
     ), plan
+
+
+def test_edge_store_is_range_partitioned_and_sorted_on_src(spark, tmp_path):
+    """One contiguous (rel_type, src) range per writer task: about
+    ``edge_partitions`` files in all (one more per range straddling two
+    types), each in ``src`` order so row-group statistics can prune."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "graph")
+    write_graph(build_graph(spark, SF), root, edge_partitions=24)
+    files = glob.glob(f"{root}/edges/rel_type=*/*.parquet")
+    assert 0 < len(files) <= 24 + 5, len(files)
+    for f in files:
+        src = pq.read_table(f, columns=["src"]).column("src").to_pylist()
+        assert src == sorted(src), f
+
+
+def test_concurrent_first_builds_write_the_store_once(spark, tmp_path, monkeypatch):
+    """Two server threads asking for one dataset's graph at once share
+    one store write and one model: the memo lock covers the build."""
+    import shutil
+    import threading
+    import time
+
+    from advanced_technologies_of_china_graph_database_construction_spark.operators import graph
+    from advanced_technologies_of_china_graph_database_construction_spark.sources import graph_store
+
+    data = str(tmp_path / "sf0.001")
+    shutil.copytree(SF, data)
+    monkeypatch.setattr(graph, "_STORE_ROOT", str(tmp_path / "stores"))
+    monkeypatch.setattr(graph, "_GRAPH_CACHE", {})
+    writes = []
+
+    def slow_write(g, root):
+        writes.append(root)
+        time.sleep(1)  # holds the first build open while the second asks
+        write_graph(g, root)
+
+    monkeypatch.setattr(graph_store, "write_graph", slow_write)
+    models = [None, None]
+
+    def build(i):
+        models[i] = graph.build_graph(spark, data)
+
+    threads = [threading.Thread(target=build, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert len(writes) == 1, writes
+    assert models[0] is not None and models[0] is models[1]

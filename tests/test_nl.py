@@ -165,6 +165,101 @@ def test_fulltext_only_request_keeps_its_stage_when_empty(spark):
     }
 
 
+# --------------------------------------------- in-memory serving graph -----
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _scans_outside_cache(plan: str) -> list[str]:
+    """The ``FileScan`` lines of ``plan`` that are not inside an
+    ``InMemoryRelation`` subtree (nesting read from the indentation)."""
+    out, cache_depth = [], None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :+-"))
+        if cache_depth is not None and depth > cache_depth:
+            continue
+        cache_depth = depth if "InMemoryRelation" in line else None
+        if "FileScan" in line:
+            out.append(line)
+    return out
+
+
+def _filled(spark, df) -> bool:
+    """``df``'s plan is cached and its cache holds data."""
+    cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+    return cached.isDefined() and (
+        cached.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
+    )
+
+
+@pytest.fixture
+def fresh_graph_memo(monkeypatch):
+    """An empty graph memo for one test, so it sees what a first request
+    does even after an earlier test's clearCache()."""
+    from advanced_technologies_of_china_graph_database_construction_spark.operators import graph
+
+    monkeypatch.setattr(graph, "_GRAPH_CACHE", {})
+
+
+@pytest.mark.parametrize(
+    "question,frames,rel",
+    [
+        (Q_HIT, ("authors", "docs"), "AUTHORED"),
+        ('关于"cold widget"的论文', ("keywords", "kw_alias", "docs"), "HAS_KEYWORD"),
+    ],
+)
+def test_template_answer_reads_the_graph_from_memory(
+    spark, fresh_graph_memo, question, frames, rel
+):
+    """After one warm answer every graph frame a template reads comes
+    from the block manager: no Parquet scan outside an InMemoryRelation,
+    while the cached edge frame was still filled by a scan pruned to its
+    rel_type partition."""
+    from advanced_technologies_of_china_graph_database_construction_spark.operators.graph import (
+        build_graph,
+    )
+
+    assert engine.answer(spark, SF, question)["stage"] == "template"  # warm
+    g = build_graph(spark, SF)
+    for f in frames:
+        assert _filled(spark, getattr(g, f)), f
+    assert _filled(spark, g.edges_of(rel))
+    df = engine.execute_plan(spark, SF, planner.plan(question))
+    df.collect()
+    plan = _plan(df)
+    assert "InMemoryTableScan" in plan, plan
+    assert _scans_outside_cache(plan) == [], plan
+    assert any(
+        "PartitionFilters" in l and "rel_type" in l and rel in l for l in plan.splitlines()
+    ), plan
+
+
+def test_answers_survive_a_cleared_cache(spark, fresh_graph_memo):
+    """A cleared cache costs the serving graph its memory, not its
+    answers: counts equal DuckDB's before and after clearCache()."""
+    from advanced_technologies_of_china_graph_database_construction_spark.operators.graph import (
+        GRAPH_ORACLE_CTES,
+        build_graph,
+    )
+    from tests.oracle import duckdb_conn
+
+    (want,) = duckdb_conn(SF).execute(
+        GRAPH_ORACLE_CTES + "SELECT count(*) FROM authors a"
+        " JOIN e_authored e ON a.author_id = e.src JOIN docs d ON e.dst = d.doc_id"
+        " WHERE a.name = 'Customer#000000001'"
+    ).fetchone()
+    assert want > 0
+
+    def count():
+        return engine.t_docs_by_author(build_graph(spark, SF), "Customer#000000001").count()
+
+    assert count() == want
+    spark.catalog.clearCache()
+    assert count() == want
+    assert engine.answer(spark, SF, Q_HIT)["n_rows"] == min(want, engine.RESULT_LIMIT)
+
+
 def test_alias_aware_keyword_lookup(spark):
     # docs_by_keyword resolves through canonical ids (J9): must return at
     # least as many docs as a literal name match would
