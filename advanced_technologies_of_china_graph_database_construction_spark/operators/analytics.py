@@ -882,7 +882,7 @@ def k_truss(pairs: DataFrame, k: int = 4, n_rounds: int = 2) -> DataFrame:
 
 
 def strongly_connected_components(
-    edges: DataFrame, max_outer: int = 32, stats: dict | None = None
+    edges: DataFrame, max_outer: int = 32
 ) -> DataFrame:
     """(node, component): strongly connected components of the DIRECTED
     graph ``edges(src, dst)``, component = min member id — the directed
@@ -939,24 +939,7 @@ def strongly_connected_components(
     shuffles the live frontier only; the quadratic worst case (long
     chain of SCCs) is bounded by trim eating all acyclic structure
     first, which is the bulk of real web/citation graphs.
-
-    ``stats``, if supplied, is filled with per-phase superstep counts
-    and wall seconds (outer/trim/color/assign) — the observability face
-    the g39 bench trend reads; it never changes the result.
     """
-    import time as _time
-
-    if stats is not None:
-        stats.update(
-            outer_rounds=0, trim_rounds=0, color_rounds=0, assign_rounds=0,
-            trim_sec=0.0, color_sec=0.0, assign_sec=0.0,
-        )
-
-    def _tick(phase: str, t0: float, rounds: int = 1) -> None:
-        if stats is not None:
-            stats[f"{phase}_rounds"] += rounds
-            stats[f"{phase}_sec"] += _time.time() - t0
-
     edge_count = F.count(F.lit(1))
     e, (n_e,) = settle(
         edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct(),
@@ -984,8 +967,6 @@ def strongly_connected_components(
         )
 
     for _ in range(max_outer):
-        if stats is not None:
-            stats["outer_rounds"] += 1
         # --- 1. TRIM ------------------------------------------------
         # one (node, has_out, has_in) aggregate per round, settled with
         # its trimmed count; alive and trimmed are narrow filters over
@@ -1005,7 +986,6 @@ def strongly_connected_components(
         alive = None  # None = unrestricted (first round reads e as-is)
         both = (F.col("has_out") == 1) & (F.col("has_in") == 1)
         while True:
-            _t0 = _time.time()
             cur = e if alive is None else restrict(e, alive)
             # one explode instead of a two-leg union: the union shape
             # evaluated the restricted frame TWICE (and built each
@@ -1037,7 +1017,6 @@ def strongly_connected_components(
                 ),
                 F.count_if(~both),
             )
-            _tick("trim", _t0)
             if n_trimmed == 0:
                 break
             trimmed_rounds.append(deg.filter(~both).select("node"))
@@ -1060,7 +1039,6 @@ def strongly_connected_components(
                 .localCheckpoint(eager=True)
             )
             while True:
-                _t0 = _time.time()
                 msgs = (
                     e_cached.join(colors, e_cached.src == colors.node)
                     .groupBy(F.col("dst").alias("node"))
@@ -1078,7 +1056,6 @@ def strongly_connected_components(
                     F.count_if("chg"),
                 )
                 colors = new.select("node", "color")
-                _tick("color", _t0)
                 if changed == 0:
                     break
             # --- 3. ASSIGN (all roots walk backward within color) ----
@@ -1095,7 +1072,6 @@ def strongly_connected_components(
             ).localCheckpoint(eager=True)
             hit = F.coalesce(F.array_contains("__in", F.col("color")), F.lit(False))
             while True:
-                _t0 = _time.time()
                 frontier = state.filter("__new").select("node", "color")
                 hits = (
                     e_cached.join(frontier, e_cached.dst == frontier.node)
@@ -1111,7 +1087,6 @@ def strongly_connected_components(
                     ),
                     F.count_if("__new"),
                 )
-                _tick("assign", _t0)
                 if n_new == 0:
                     break
             reached = state.filter("reached").select("node", "color")

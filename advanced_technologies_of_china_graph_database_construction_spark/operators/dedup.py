@@ -1,4 +1,5 @@
-"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard.
+"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard,
+containment.
 
 Scale design (the 100 TB story):
 - exact dedup is a hash-groupBy on a digest column — one shuffle on the
@@ -7,8 +8,10 @@ Scale design (the 100 TB story):
   within a blocking key, so shuffle volume tracks collisions, not n²;
 - SimHash pairs equi-join on the signature band, then verify Hamming
   distance JVM-side (xor + bit_count);
-- n-gram Jaccard joins on exploded shingles within a block and never
-  materializes the full pair matrix.
+- n-gram Jaccard and containment share one shingle-set overlap join
+  (``_overlap_pairs``): PPJoin prefix-filtered candidates within a block,
+  verified with the exact ``array_intersect`` overlap, so neither the
+  pair matrix nor an all-shingle self-join is ever built.
 
 All hash arithmetic is integer-only and defined character-wise (ascii
 polynomials + Knuth multiplicative spreading), so an external ANSI-SQL
@@ -41,15 +44,12 @@ SIMHASH_BITS = 24
 # own checkpoint (``superstep.settle``) and hints the broadcast only
 # while the count is under its cap; past it the hint drops and Catalyst
 # plans shuffled joins.  The cap follows the width of the broadcast row:
-# - BROADCAST_MAX_DOCS: a MinHash signature row is a doc id plus 16 longs
-#   (~140 B, so 200k rows ≈ 28 MB); a shingle-set row is a doc id plus
-#   one 8 B hash per distinct 3-gram (~2.4 kB for a 300-char text, the
-#   widest row under this cap); a delta candidate row is two ids (16 B),
-#   held to the same cap.
-# - CONTAINMENT_BROADCAST_MAX_DOCS: a set-size row is a doc id plus a
-#   count (16 B), so ten times the rows (2M ≈ 32 MB) fit.
+# a MinHash signature row is a doc id plus 16 longs (~140 B, so 200k
+# rows ≈ 28 MB); a shingle-set row (n-gram Jaccard, containment) is a
+# doc id plus one 8 B hash per distinct 3-gram (~2.4 kB for a 300-char
+# text, the widest row under this cap); a delta candidate row is two
+# ids (16 B), held to the same cap.
 BROADCAST_MAX_DOCS = 200_000
-CONTAINMENT_BROADCAST_MAX_DOCS = 2_000_000
 
 
 def _shingle_hash_udf(n: int):
@@ -469,38 +469,56 @@ def simhash_near_dups(
     )
 
 
-# --- n-gram Jaccard -------------------------------------------------------
+# --- shingle-set overlap: n-gram Jaccard and containment -----------------
 
-def ngram_jaccard_pairs(
+def _prefix_len(t: float) -> F.Column:
+    """How many of a doc's ``sz`` shingles, in probe order, it must probe
+    with so that any set B with |A∩B| ≥ t·sz shares one of them: the
+    other ⌈t·sz⌉ − 1 cannot hold the whole overlap."""
+    return F.col("sz") - F.ceil(F.lit(t) * F.col("sz")) + 1
+
+
+def _overlap_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    block_col: str = "source",
-    threshold: float = 0.5,
+    text_col: str,
+    block_col: str,
+    prefix_src: F.Column,
+    prefix_dst: F.Column,
+    min_overlap: F.Column,
+    pair: F.Column,
 ) -> DataFrame:
-    """(src, dst, jaccard) for same-block pairs with true 3-gram-set
-    Jaccard ≥ threshold.
+    """(src, dst, n_inter, sz_a, sz_b): same-block doc pairs with
+    ``pair`` true (over ``src``, ``dst``) whose 3-gram sets may overlap
+    in ≥ ``min_overlap`` shingles (over ``sz_a``, ``sz_b``, the two set
+    sizes); ``n_inter`` is the exact |S(src) ∩ S(dst)|.  The result may
+    hold extra pairs below the bound, never miss one above it; callers
+    compute their ratio from it and filter.
 
     PPJoin-style prefix filtering: every doc's shingle set is ordered by
-    ascending global frequency; a pair with J ≥ t MUST share a shingle
-    within each side's first |x| − ⌈t·|x|⌉ + 1 shingles of that order,
-    so candidates come from an equi-join on rare prefix shingles only —
-    stop-shingle join groups ("the", " a ") never pair the whole block.
-    Candidates are then verified with the exact intersection size
-    (sorted-array intersect), so the result is identical to the naive
-    all-shingle join while shuffle volume tracks rare-token collisions.
+    ascending global frequency, then hash; a doc probes with the first
+    ``prefix_src`` (as src) or ``prefix_dst`` (as dst) shingles of that
+    order (over ``sz``; the caller sizes them so every wanted pair
+    shares a shingle within both), so candidates come from an equi-join
+    of the two prefixes on (shingle, block) — stop-shingle join groups
+    ("the", " a ") never pair the whole block.  Positional filter: at a
+    pair's first shared shingle the overlap cannot exceed 1 +
+    min(shingles left after it on either side); a pair always survives
+    via that row, so per-row pruning never drops it.  The bound also
+    enforces the length filter (overlap ≤ min(|A|, |B|)).
+
+    Verification joins each distinct candidate to the two per-doc
+    shingle-set arrays and counts the intersection JVM-side
+    (``array_intersect`` — the arrays are sets, so its size IS the
+    overlap).  The array table broadcasts while its row count (read in
+    its own checkpoint action) is under BROADCAST_MAX_DOCS (map-side
+    join, candidates never shuffle); past the cap it degrades to
+    shuffled joins whose volume is O(corpus) per side — the corpus
+    index is never materialized in one process.
     """
     from pyspark.sql import Window
 
-    # Verification accepts on the ROUNDED jaccard (HALF_UP, 6 digits —
-    # the SQL-oracle contract below), so a pair with true J in
-    # [t − 5e-7, t) still belongs in the output.  Every pruning bound
-    # therefore uses t_prune = t − 1e-6: pruning may only ever keep
-    # EXTRA candidates (verification decides), never drop a pair the
-    # rounded filter would accept.
-    t_prune = threshold - 1e-6
-
     # Materialize the shingle set once: three downstream branches (global
-    # frequencies, prefix ranking, verification index) would otherwise
+    # frequencies, prefix ranking, verification arrays) would otherwise
     # re-run the explode+distinct subtree per branch.
     sh = (
         char_shingles(df, text_col)
@@ -508,51 +526,27 @@ def ngram_jaccard_pairs(
         .localCheckpoint(eager=True)
     )
     freq = sh.groupBy("shingle_hash").agg(F.count("*").alias("gdf"))
-    ranked = sh.join(freq, "shingle_hash")
     wdoc = Window.partitionBy("doc_id")
-    worder = wdoc.orderBy("gdf", "shingle_hash")
-    prefix = (
-        ranked.withColumn("pos", F.row_number().over(worder))
-        .withColumn("sz", F.count("*").over(wdoc))
-        .filter(F.col("pos") <= F.col("sz") - F.ceil(F.lit(t_prune) * F.col("sz")) + 1)
+    ranked = sh.join(freq, "shingle_hash").select(
+        "doc_id", "shingle_hash", F.col(block_col).alias("blk"),
+        F.row_number().over(wdoc.orderBy("gdf", "shingle_hash")).alias("pos"),
+        F.count("*").over(wdoc).alias("sz"),
     )
-    a = prefix.select(
-        F.col("doc_id").alias("src"), "shingle_hash", F.col(block_col).alias("blk"),
-        F.col("pos").alias("pos_a"), F.col("sz").alias("sz_a"),
-    )
-    b = prefix.select(
-        F.col("doc_id").alias("dst"), F.col("shingle_hash").alias("h2"),
-        F.col(block_col).alias("blk2"),
-        F.col("pos").alias("pos_b"), F.col("sz").alias("sz_b"),
-    )
-    # Length filter: J ≥ t ⇒ min(|A|,|B|) ≥ t·max(|A|,|B|).
-    length_ok = F.least("sz_a", "sz_b") >= F.lit(t_prune) * F.greatest("sz_a", "sz_b")
-    # Positional filter: at the first shared prefix shingle, the overlap
-    # can't exceed 1 + min(remaining_a, remaining_b); J ≥ t needs overlap
-    # ≥ ⌈t/(1+t)·(|A|+|B|)⌉. A true match always survives via its
-    # earliest collision row, so per-row pruning never drops a match.
-    alpha = F.ceil(F.lit(t_prune / (1.0 + t_prune)) * (F.col("sz_a") + F.col("sz_b")))
-    ubound = 1 + F.least(F.col("sz_a") - F.col("pos_a"), F.col("sz_b") - F.col("pos_b"))
-    cands = (
-        a.join(
-            b,
-            (F.col("shingle_hash") == F.col("h2"))
-            & (F.col("blk") == F.col("blk2"))
-            & (F.col("src") < F.col("dst"))
-            & length_ok
-            & (ubound >= alpha),
+
+    def probe(prefix: F.Column, id_col: str, end: str) -> DataFrame:
+        return ranked.filter(F.col("pos") <= prefix).select(
+            F.col("doc_id").alias(id_col), "shingle_hash", "blk",
+            F.col("pos").alias(f"pos_{end}"), F.col("sz").alias(f"sz_{end}"),
         )
+
+    most = 1 + F.least(F.col("sz_a") - F.col("pos_a"), F.col("sz_b") - F.col("pos_b"))
+    cands = (
+        probe(prefix_src, "src", "a")
+        .join(probe(prefix_dst, "dst", "b"), ["shingle_hash", "blk"])
+        .filter(pair & (most >= min_overlap))
         .select("src", "dst")
         .distinct()
     )
-    # Verification: join each candidate pair back to the two shingle-set
-    # arrays and count the intersection JVM-side (`array_intersect` —
-    # shingle sets are distinct per doc, so its size IS the set overlap).
-    # The per-doc array table broadcasts while its row count (read in
-    # its own checkpoint action) is under BROADCAST_MAX_DOCS (map-side
-    # join, candidates never shuffle); past the cap it degrades to
-    # shuffled joins whose volume is O(corpus) per side — the corpus
-    # index is never materialized in one process.
     sets, (n_docs,) = settle(
         sh.groupBy("doc_id").agg(F.collect_list("shingle_hash").alias("arr")),
         F.count(F.lit(1)),
@@ -561,17 +555,48 @@ def ngram_jaccard_pairs(
     sb = sets.select(F.col("doc_id").alias("dst"), F.col("arr").alias("arr_b"))
     if n_docs <= BROADCAST_MAX_DOCS:
         sa, sb = F.broadcast(sa), F.broadcast(sb)
-    joined = cands.join(sa, "src").join(sb, "dst")
-    inter = F.size(F.array_intersect("arr_a", "arr_b")).cast("double")
-    union = (F.size("arr_a") + F.size("arr_b")).cast("double") - inter
-    # rounding stays JVM-side (HALF_UP) to match the SQL oracle exactly
-    jac = F.round(inter / union, 6)
-    return joined.select("src", "dst", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= threshold
+    return cands.join(sa, "src").join(sb, "dst").select(
+        "src",
+        "dst",
+        F.size(F.array_intersect("arr_a", "arr_b")).alias("n_inter"),
+        F.size("arr_a").alias("sz_a"),
+        F.size("arr_b").alias("sz_b"),
     )
 
 
-# --- containment (asymmetric near-dup: quote / subset detection) ----------
+# Both callers accept on the ROUNDED ratio (HALF_UP, 6 digits — the SQL
+# oracle's contract), so a pair whose true ratio is in [t − 5e-7, t)
+# still belongs in the output.  Their pruning bounds therefore use
+# t − _ROUNDING_SLACK: pruning may only ever keep EXTRA candidates
+# (verification decides), never drop a pair the rounded filter accepts.
+_ROUNDING_SLACK = 1e-6
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    block_col: str = "source",
+    threshold: float = 0.5,
+) -> DataFrame:
+    """(src, dst, jaccard) for same-block pairs (src < dst) with true
+    3-gram-set Jaccard ≥ threshold, from :func:`_overlap_pairs`: J ≥ t
+    needs |A∩B| ≥ t/(1+t)·(|A|+|B|) and, by the prefix argument, a shared
+    shingle within each side's first |x| − ⌈t·|x|⌉ + 1."""
+    t = threshold - _ROUNDING_SLACK
+    pairs = _overlap_pairs(
+        df, text_col, block_col,
+        prefix_src=_prefix_len(t),
+        prefix_dst=_prefix_len(t),
+        min_overlap=F.lit(t / (1.0 + t)) * (F.col("sz_a") + F.col("sz_b")),
+        pair=F.col("src") < F.col("dst"),
+    )
+    inter = F.col("n_inter").cast("double")
+    # rounding stays JVM-side (HALF_UP) to match the SQL oracle exactly
+    jac = F.round(inter / (F.col("sz_a") + F.col("sz_b") - inter), 6)
+    return pairs.select("src", "dst", jac.alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
+    )
+
 
 def containment_pairs(
     df: DataFrame,
@@ -588,55 +613,22 @@ def containment_pairs(
     Better" measure both).  Both orientations are emitted (src≠dst,
     same block).
 
-    Scale shape: candidates come from the exploded-shingle equi-join
-    within a block, so the result is exact (the tests and the SQL oracle
-    check it); a shingle in k docs of a block adds k² join rows (d21
-    df-caps its own gram join for that reason).  Verification joins
-    per-doc set sizes (tiny table) and computes the ratio JVM-side.
+    Same join as `ngram_jaccard_pairs` (:func:`_overlap_pairs`), with
+    containment's bounds: C ≥ t needs |A∩B| ≥ t·|B|, so dst probes with
+    its first |B| − ⌈t·|B|⌉ + 1 shingles and src with its whole set (a
+    shared shingle in dst's prefix may sit anywhere in src).
     """
-    sh = (
-        char_shingles(df, text_col)
-        .join(df.select("doc_id", block_col), "doc_id")
-        .localCheckpoint(eager=True)
+    t = threshold - _ROUNDING_SLACK
+    pairs = _overlap_pairs(
+        df, text_col, block_col,
+        prefix_src=F.col("sz"),
+        prefix_dst=_prefix_len(t),
+        min_overlap=F.lit(t) * F.col("sz_b"),
+        pair=F.col("src") != F.col("dst"),
     )
-    sizes, (n_docs,) = settle(
-        sh.groupBy("doc_id").agg(F.count("*").alias("set_size")), F.count(F.lit(1))
-    )
-    a = sh.select(
-        F.col("doc_id").alias("src"), "shingle_hash", F.col(block_col).alias("blk")
-    )
-    b = sh.select(
-        F.col("doc_id").alias("dst"),
-        F.col("shingle_hash").alias("h2"),
-        F.col(block_col).alias("blk2"),
-    )
-    inter = (
-        a.join(
-            b,
-            (F.col("shingle_hash") == F.col("h2"))
-            & (F.col("blk") == F.col("blk2"))
-            & (F.col("src") != F.col("dst")),
-        )
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    dst_size = sizes.select(F.col("doc_id").alias("dst"), F.col("set_size").alias("dst_size"))
-    # per-doc size table: broadcast only under its own cap (see
-    # CONTAINMENT_BROADCAST_MAX_DOCS — an unconditional hint would
-    # collect a corpus-sized table into one process at the 10^9-doc scale
-    # this file targets); past the cap the size join degrades to a
-    # shuffle keyed by doc id
-    if n_docs <= CONTAINMENT_BROADCAST_MAX_DOCS:
-        dst_size = F.broadcast(dst_size)
-    return (
-        inter.join(dst_size, "dst")
-        .select(
-            "src",
-            "dst",
-            F.round(F.col("n_inter") / F.col("dst_size"), 6).alias("containment"),
-        )
-        .filter(F.col("containment") >= threshold)
-    )
+    return pairs.select(
+        "src", "dst", F.round(F.col("n_inter") / F.col("sz_b"), 6).alias("containment")
+    ).filter(F.col("containment") >= threshold)
 
 
 # --- exact-substring dedup audit (duplicated n-gram spans) ----------------

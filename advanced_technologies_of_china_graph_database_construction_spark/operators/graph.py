@@ -30,6 +30,7 @@ import os
 import threading
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -121,6 +122,8 @@ def build_graph(spark: SparkSession, sf_dir: str, *, use_cache: bool = True) -> 
     The edges are cached per rel type, not as the whole ``edges`` frame,
     so each cached plan is filled by a scan pruned to one ``rel_type``
     partition and a query still shows that ``PartitionFilters`` line.
+    A memo hit whose frames were dropped by
+    ``spark.catalog.clearCache()`` persists them again.
     ``use_cache=False`` returns the raw derivation plan (used by
     store/ETL tests).
     """
@@ -131,6 +134,8 @@ def build_graph(spark: SparkSession, sf_dir: str, *, use_cache: bool = True) -> 
         g = _GRAPH_CACHE.get(key)
         if g is None:
             g = _GRAPH_CACHE[key] = _serve_graph(spark, sf_dir)
+        elif g.docs.storageLevel == StorageLevel.NONE:  # cache was cleared
+            _persist(g)
         return g
 
 
@@ -164,12 +169,18 @@ def _serve_graph(spark: SparkSession, sf_dir: str) -> GraphModel:
             fh.write(fingerprint + "\n")
         os.replace(tmp, marker)
     g = read_graph(spark, root)
+    _persist(g)
+    return g
+
+
+def _persist(g: GraphModel) -> None:
+    """Persist every frame of ``g`` a query reads: the node frames,
+    ``kw_alias`` and one ``edges_of(rel)`` frame per rel type."""
     for name, frame in vars(g).items():
         if name != "edges":  # cached per rel type: see build_graph
             frame.persist()
     for rel in REL_TYPES:
         g.edges_of(rel).persist()
-    return g
 
 
 def _source_fingerprint(sf_dir: str) -> str:

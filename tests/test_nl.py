@@ -260,6 +260,26 @@ def test_answers_survive_a_cleared_cache(spark, fresh_graph_memo):
     assert engine.answer(spark, SF, Q_HIT)["n_rows"] == min(want, engine.RESULT_LIMIT)
 
 
+def test_cleared_cache_is_refilled_by_the_next_answer(spark, fresh_graph_memo):
+    """clearCache() does not leave the memoized graph serving from
+    Parquet: the next answer persists its frames again, so they are
+    filled and a later plan scans no file outside an InMemoryRelation."""
+    from advanced_technologies_of_china_graph_database_construction_spark.operators.graph import (
+        build_graph,
+    )
+
+    assert engine.answer(spark, SF, Q_HIT)["stage"] == "template"  # warm
+    spark.catalog.clearCache()
+    assert engine.answer(spark, SF, Q_HIT)["stage"] == "template"
+    g = build_graph(spark, SF)
+    for frame in (g.authors, g.docs, g.edges_of("AUTHORED")):
+        assert _filled(spark, frame)
+    df = engine.execute_plan(spark, SF, planner.plan(Q_HIT))
+    df.collect()
+    plan = _plan(df)
+    assert _scans_outside_cache(plan) == [], plan
+
+
 def test_alias_aware_keyword_lookup(spark):
     # docs_by_keyword resolves through canonical ids (J9): must return at
     # least as many docs as a literal name match would

@@ -92,7 +92,7 @@ def test_minhash_verify_join_broadcasts_signatures(spark):
 _SIZE_GATES = {
     "minhash_near_dups": "BROADCAST_MAX_DOCS",
     "ngram_jaccard_pairs": "BROADCAST_MAX_DOCS",
-    "containment_pairs": "CONTAINMENT_BROADCAST_MAX_DOCS",
+    "containment_pairs": "BROADCAST_MAX_DOCS",
 }
 
 
@@ -215,15 +215,16 @@ def test_er02_has_no_driver_collect_and_no_row_python(spark):
     assert "BatchEvalPython" not in plan, plan
 
 
-def test_jaccard_verification_is_jvm_array_intersect(spark):
-    """d05's verification counts overlaps with JVM array_intersect over
-    joined shingle arrays — no Python evaluation after the shingle
-    kernel, no driver-side index."""
+@pytest.mark.parametrize("op", ["ngram_jaccard_pairs", "containment_pairs"])
+def test_jaccard_verification_is_jvm_array_intersect(spark, op):
+    """d05's and d24's verification counts overlaps with JVM
+    array_intersect over joined shingle arrays — no Python evaluation
+    after the shingle kernel, no driver-side index."""
     from advanced_technologies_of_china_graph_database_construction_spark.catalog import load_table
-    from advanced_technologies_of_china_graph_database_construction_spark.operators.dedup import ngram_jaccard_pairs
+    from advanced_technologies_of_china_graph_database_construction_spark.operators import dedup
 
     docs = load_table(spark, SF_CORRECT, "documents")
-    plan = _plan(ngram_jaccard_pairs(docs))
+    plan = _plan(getattr(dedup, op)(docs))
     assert "array_intersect" in plan, plan
     # the only Python stage is the shingle hasher (ArrowEval), never a
     # row-at-a-time UDF

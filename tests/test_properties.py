@@ -8,9 +8,10 @@ spark.sql.shuffle.partitions).
 from __future__ import annotations
 
 import random
+from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -287,32 +288,83 @@ def test_semdedup_matches_bruteforce(spark, seed):
     assert got == want
 
 
-# ----------------------------------------------------------- containment ---
+# ------------------------------------------- n-gram Jaccard, containment ---
 
-def _brute_containment(docs, threshold=0.8, n=3):
-    """Driver-side reference: per-doc 3-gram codepoint sets, containment
-    = |A∩B|/|B| within the same block, both orientations."""
-    sets = {}
-    blocks = {}
-    for doc_id, text, block in docs:
-        if text is not None and len(text) >= n:
-            sets[doc_id] = {text[i : i + n] for i in range(len(text) - n + 1)}
-            blocks[doc_id] = block
+def _half_up(x: float) -> float:
+    """Spark's ``F.round(x, 6)`` on a double: HALF_UP on the shortest
+    decimal form of ``x`` (Python's ``round`` is half-even on the
+    binary value)."""
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+def _brute_overlap(docs, ratio, threshold, keep, n=3):
+    """Driver-side reference for the shingle-set pair finders: per-doc
+    3-gram codepoint sets, every same-block (a, b) with ``keep(a, b)``
+    whose rounded ``ratio(S(a), S(b))`` is ≥ threshold."""
+    sets = {
+        i: ({t[k : k + n] for k in range(len(t) - n + 1)}, block)
+        for i, t, block in docs
+        if t is not None and len(t) >= n
+    }
     out = set()
-    for a in sets:
-        for b in sets:
-            if a == b or blocks[a] != blocks[b]:
-                continue
-            c = round(len(sets[a] & sets[b]) / len(sets[b]), 6)
-            if c >= threshold:
-                out.add((a, b, c))
+    for a, (sa, ba) in sets.items():
+        for b, (sb, bb) in sets.items():
+            if keep(a, b) and ba == bb:
+                r = _half_up(ratio(sa, sb))
+                if r >= threshold:
+                    out.add((a, b, r))
     return out
+
+
+def _brute_jaccard(docs, threshold):
+    return _brute_overlap(
+        docs, lambda a, b: len(a & b) / len(a | b), threshold, lambda a, b: a < b
+    )
+
+
+def _brute_containment(docs, threshold=0.8):
+    return _brute_overlap(
+        docs, lambda a, b: len(a & b) / len(b), threshold, lambda a, b: a != b
+    )
+
+
+_DOC_SCHEMA = "doc_id long, text string, source string"
+# 0.6666667: a 2-of-3 overlap is 0.666667 after HALF_UP rounding, so it
+# passes although its true ratio is below the threshold — the case the
+# operators' pruning slack exists for
+_THRESHOLDS = [0.5, 0.6666667, 0.8]
+
+
+@given(
+    st.lists(
+        st.tuples(st.none() | st.text("ab ", max_size=9), st.sampled_from("xy")),
+        min_size=1,
+        max_size=12,
+    ),
+    st.sampled_from(_THRESHOLDS),
+)
+@example([("aaab", "x"), ("aaaba", "x"), ("aaab", "x"), ("ab", "y"), (None, "x")], 0.6666667)
+@SETTINGS
+def test_ngram_jaccard_pairs_match_bruteforce(spark, texts, threshold):
+    """n-gram Jaccard pairs (prefix-filtered candidates, exact verify)
+    equal the brute-force double loop over arbitrary small corpora: an
+    "ab " alphabet makes shared and duplicate shingle sets common, with
+    NULL, too-short and duplicate texts in two blocks."""
+    docs = [(i, t, block) for i, (t, block) in enumerate(texts)]
+    df = spark.createDataFrame(docs, _DOC_SCHEMA)
+    got = {
+        (r.src, r.dst, r.jaccard)
+        for r in D.ngram_jaccard_pairs(df, threshold=threshold).collect()
+    }
+    assert got == _brute_jaccard(docs, threshold)
 
 
 def test_containment_pairs_match_bruteforce(spark):
     """Containment pairs must equal the brute-force double loop —
     including the asymmetry: the quoted snippet scores ~1.0 as dst of
-    the long doc but the long doc does NOT score as contained."""
+    the long doc but the long doc does NOT score as contained — on a
+    hand corpus and on a random one ("ab " alphabet, two blocks, NULL,
+    too-short and duplicate texts) at every test threshold."""
     long_doc = "the quick brown fox jumps over the lazy dog near the river bank"
     snippet = "quick brown fox jumps over"
     docs = [
@@ -324,7 +376,7 @@ def test_containment_pairs_match_bruteforce(spark):
         (6, None, "a"),
         (7, "ab", "a"),                         # too short for a 3-gram
     ]
-    df = spark.createDataFrame(docs, "doc_id long, text string, source string")
+    df = spark.createDataFrame(docs, _DOC_SCHEMA)
     got = {
         (r.src, r.dst, r.containment)
         for r in D.containment_pairs(df, threshold=0.8).collect()
@@ -337,6 +389,22 @@ def test_containment_pairs_match_bruteforce(spark):
     assert not any(s == 2 and d == 1 for s, d, _ in got)
     # and blocks separate: 4 never pairs with 1/2
     assert not any(4 in (s, d) for s, d, _ in got)
+
+    rng = random.Random(12)
+    docs = [
+        (i, "".join(rng.choice("ab ") for _ in range(rng.randint(0, 10))), rng.choice("xy"))
+        for i in range(24)
+    ]
+    # a NULL, two re-delivered texts, and aaaba whose set is 2/3 inside aaab's
+    docs += [(24, None, "x"), (25, *docs[0][1:]), (26, *docs[1][1:])]
+    docs += [(27, "aaab", "x"), (28, "aaaba", "x")]
+    df = spark.createDataFrame(docs, _DOC_SCHEMA)
+    for threshold in _THRESHOLDS:
+        got = {
+            (r.src, r.dst, r.containment)
+            for r in D.containment_pairs(df, threshold=threshold).collect()
+        }
+        assert got == _brute_containment(docs, threshold), threshold
 
 
 @given(
