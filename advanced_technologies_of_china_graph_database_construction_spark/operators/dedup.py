@@ -6,6 +6,9 @@ Scale design (the 100 TB story):
   digest, map-side partial aggregation;
 - MinHash candidates come from an equi-join on (permutation, minhash)
   within a blocking key, so shuffle volume tracks collisions, not n²;
+  one pair kernel (``_minhash_pairs``) over rows flagged new or old
+  serves the full build (every row new) and the delta (standing rows
+  old), with one candidate join and one verify;
 - SimHash pairs equi-join on the signature band, then verify Hamming
   distance JVM-side (xor + bit_count);
 - n-gram Jaccard and containment share one shingle-set overlap join
@@ -27,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .er import _flagged
 from .superstep import settle
 
 # --- shared shingle / hash primitives -------------------------------------
@@ -39,16 +43,16 @@ PERMS = [(k, 2 * k + 3, 7 * k + 11) for k in range(N_PERMS)]
 KNUTH = 2_654_435_761  # multiplicative spreading for simhash bits
 SIMHASH_BITS = 24
 
-# Broadcast caps of the size-gated verification joins.  Each pair finder
-# reads the row count of the frame it would broadcast from that frame's
-# own checkpoint (``superstep.settle``) and hints the broadcast only
-# while the count is under its cap; past it the hint drops and Catalyst
-# plans shuffled joins.  The cap follows the width of the broadcast row:
-# a MinHash signature row is a doc id plus 16 longs (~140 B, so 200k
-# rows ≈ 28 MB); a shingle-set row (n-gram Jaccard, containment) is a
-# doc id plus one 8 B hash per distinct 3-gram (~2.4 kB for a 300-char
-# text, the widest row under this cap); a delta candidate row is two
-# ids (16 B), held to the same cap.
+# Broadcast caps of the size-gated joins.  Each pair finder reads the
+# doc count of the frame it would broadcast from its signature or
+# shingle-set checkpoint (``superstep.settle``) and hints the broadcast
+# only while the count is under its cap; past it the hint drops and
+# Catalyst plans shuffled joins.  The cap follows the width of the
+# broadcast row: a MinHash signature row is a doc id plus 16 longs
+# (~140 B, so 200k rows ≈ 28 MB); a shingle-set row (n-gram Jaccard,
+# containment) is a doc id plus one 8 B hash per distinct 3-gram
+# (~2.4 kB for a 300-char text, the widest row under this cap); a
+# MinHash candidate row is two ids (16 B), gated on the new doc count.
 BROADCAST_MAX_DOCS = 200_000
 
 
@@ -223,12 +227,14 @@ def minhash_signatures(
 
 
 def _band_probe(sig: DataFrame, block_col: str, min_matching: int, side: str) -> DataFrame:
-    """(side, blk_side, k_side, mh_side): one row per doc for each of its
-    first N_PERMS − min_matching + 1 minhashes.  By pigeonhole a pair
-    matching ≥ m of N perms collides on at least one of any N − m + 1
-    chosen perms, so an equi-join of two probes finds every candidate."""
+    """(side, new_side, blk_side, k_side, mh_side): one row per doc for
+    each of its first N_PERMS − min_matching + 1 minhashes.  By
+    pigeonhole a pair matching ≥ m of N perms collides on at least one
+    of any N − m + 1 chosen perms, so an equi-join of two probes finds
+    every candidate."""
     return sig.select(
         F.col("doc_id").alias(side),
+        F.col("new").alias(f"new_{side}"),
         F.col(block_col).alias(f"blk_{side}"),
         F.posexplode(F.slice("sig", 1, N_PERMS - min_matching + 1)).alias(
             f"k_{side}", f"mh_{side}"
@@ -236,29 +242,86 @@ def _band_probe(sig: DataFrame, block_col: str, min_matching: int, side: str) ->
     )
 
 
-def _collisions(src: DataFrame, dst: DataFrame, ordered: bool) -> DataFrame:
+def _collisions(src: DataFrame, dst: DataFrame) -> DataFrame:
     """(src, dst) rows of a ``_band_probe`` pair that share a minhash on
-    the same perm within one block (``src < dst`` when ``ordered``)."""
+    the same perm within one block, under the pair rule of
+    :func:`_minhash_pairs`."""
     cond = (
         (F.col("k_src") == F.col("k_dst"))
         & (F.col("mh_src") == F.col("mh_dst"))
         & (F.col("blk_src") == F.col("blk_dst"))
+        & (F.col("src") != F.col("dst"))
+        & ((F.col("src") < F.col("dst")) | ~F.col("new_src"))
     )
-    if ordered:
-        cond &= F.col("src") < F.col("dst")
     return src.join(dst, cond).select("src", "dst")
 
 
-def _verified(cands: DataFrame, sa: DataFrame, sb: DataFrame, min_matching: int) -> DataFrame:
-    """Candidate pairs joined to their signatures (``sa``: src, sig_a;
-    ``sb``: dst, sig_b), kept when ≥ ``min_matching`` perms agree:
-    (src, dst, n_matching)."""
+def _minhash_pairs(
+    sig: DataFrame, n_new: int, n_rows: int | None, block_col: str, min_matching: int
+) -> DataFrame:
+    """(src, dst, n_matching): every verified near-dup pair with at least
+    one NEW endpoint — the one MinHash pair kernel under both
+    :func:`minhash_near_dups` (every row new) and
+    :func:`minhash_delta_near_dups` (standing rows old, delta rows new).
+    ``sig`` is a :func:`minhash_signatures` frame plus a boolean ``new``
+    column, one row per doc id; ``n_new`` counts its new rows and
+    ``n_rows`` all of them (None when unknown).
+
+    Candidates: the band probe of every row (src) equi-joined with the
+    band probe of the new rows (dst) on (perm, minhash, block), kept
+    under ``src != dst AND (src < dst OR NOT src_new)``.  With every row
+    new that is ``src < dst``; with old rows it is each (old src, new
+    dst) cross pair once plus the new-internal pairs with ``src < dst``
+    — so the result equals the full pair set of all rows minus its
+    old-internal pairs, with cross pairs oriented (old, new).  Then one
+    distinct and the exact 16-perm match count: (src, sig_a) ⋈ (dst,
+    sig_b), kept when ≥ ``min_matching`` perms agree.  The band probe
+    cuts candidate-join fan-out ~16/9 and replaces a (src, dst, k)
+    groupBy with a distinct + array compare.
+
+    Shape note (measured, r4): distinct-FIRST is the optimum here.  Two
+    alternatives were benchmarked at sf0.1 (3.2M raw collision rows →
+    609k pairs) and both lost: verifying the raw collision rows map-side
+    with first-colliding-perm dedup costs 2× (zip_with/array HOFs are
+    interpreted per row) and the codegen-unrolled getItem variant 4×
+    (the joins materialize two 128-byte signature arrays per raw row —
+    5× the rows of the distinct-first path).  The candidate distinct
+    shuffles 16-byte pairs; that is the cheapest thing to move.
+
+    Scale shape: the new-side frames (dst band probe, dst signatures)
+    are broadcast while ``n_new`` is under ``BROADCAST_MAX_DOCS``, so the
+    all-row band probe is scanned map-side and never shuffled, however
+    large the old side is.  The all-row signature lookup is broadcast
+    while ``n_rows`` is known and under the same cap; otherwise the
+    candidates are broadcast and the lookup is scanned against them.
+    The candidate gate reads the new-side count, not the candidates'
+    own: new docs × collision fan-out can outgrow it on a
+    boilerplate-heavy corpus, but counting the candidates would cost
+    the full build a checkpoint job.  In production the old signature
+    table is the persisted store this scan stands in for (written once
+    per batch, bucketed by doc_id).  Past a cap its hint drops and
+    Catalyst plans shuffled joins (``block_col`` bounds each candidate
+    domain).
+    """
+    small = n_new <= BROADCAST_MAX_DOCS
+    new_side = F.broadcast if small else (lambda d: d)
+    fresh = sig.filter(F.col("new"))
+    cands = _collisions(
+        _band_probe(sig, block_col, min_matching, "src"),
+        new_side(_band_probe(fresh, block_col, min_matching, "dst")),
+    ).distinct()
+    sa = sig.select(F.col("doc_id").alias("src"), F.col("sig").alias("sig_a"))
+    sb = fresh.select(F.col("doc_id").alias("dst"), F.col("sig").alias("sig_b"))
+    if n_rows is not None and n_rows <= BROADCAST_MAX_DOCS:
+        sa = F.broadcast(sa)
+    elif small:
+        cands = F.broadcast(cands)
     n_match = F.size(
         F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v)
     )
     return (
         cands.join(sa, "src")
-        .join(sb, "dst")
+        .join(new_side(sb), "dst")
         .select("src", "dst", n_match.alias("n_matching"))
         .filter(F.col("n_matching") >= min_matching)
     )
@@ -272,41 +335,16 @@ def minhash_near_dups(
 ) -> DataFrame:
     """Near-duplicate pairs: docs in the same block agreeing on ≥
     ``min_matching`` of the 16 minhashes (integer threshold — no float
-    boundary).  Returns (src, dst, n_matching).
+    boundary).  Returns (src, dst, n_matching) with src < dst.
 
-    Exact-result LSH: candidates come from an equi-join on the
-    pigeonhole band perms (``_band_probe``); the full signature arrays
-    then verify the exact match count.  Cuts candidate-join fan-out
-    ~16/9 and replaces the (src,dst,k) groupBy with a distinct + array
-    compare.
-
-    Shape note (measured, r4): distinct-FIRST is the optimum here.  Two
-    alternatives were benchmarked at sf0.1 (3.2M raw collision rows →
-    609k pairs) and both lost: verifying the raw collision rows map-side
-    with first-colliding-perm dedup costs 2× (zip_with/array HOFs are
-    interpreted per row) and the codegen-unrolled getItem variant 4×
-    (the joins materialize two 128-byte signature arrays per raw row —
-    5× the rows of the distinct-first path).  The candidate distinct
-    shuffles 16-byte pairs; that is the cheapest thing to move.
-
-    Verification broadcasts the signature table to both sides while its
-    row count (read from the signature checkpoint itself) is under
-    ``BROADCAST_MAX_DOCS``, so the match count is computed map-side over
-    the candidates with no further shuffle.  Past the cap the hints drop
-    and Catalyst falls back to shuffled joins (``block_col`` already
-    bounds each verification domain).
+    Exact-result LSH: :func:`_minhash_pairs` with every document new —
+    candidates from an equi-join on the pigeonhole band perms
+    (``_band_probe``), verified on the full signature arrays.
     """
     sig, n_docs = minhash_signatures(df, text_col, block_col)
-    cands = _collisions(
-        _band_probe(sig, block_col, min_matching, "src"),
-        _band_probe(sig, block_col, min_matching, "dst"),
-        ordered=True,
-    ).distinct()
-    sa = sig.select(F.col("doc_id").alias("src"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col("doc_id").alias("dst"), F.col("sig").alias("sig_b"))
-    if n_docs <= BROADCAST_MAX_DOCS:
-        sa, sb = F.broadcast(sa), F.broadcast(sb)
-    return _verified(cands, sa, sb, min_matching)
+    return _minhash_pairs(
+        sig.withColumn("new", F.lit(True)), n_docs, n_docs, block_col, min_matching
+    )
 
 
 def minhash_delta_near_dups(
@@ -318,70 +356,36 @@ def minhash_delta_near_dups(
     standing_sig: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs TOUCHING a delta batch — the O(|delta|)
-    refresh face of :func:`minhash_near_dups` (the symdelete_delta_pairs
-    contract applied to content dedup): ``(src, dst, n_matching)`` where
-    ``dst`` is always a delta document and ``src`` is a standing
-    document or an earlier delta document (``src < dst``).
-    Standing↔standing pairs are excluded by construction — they were
-    found when THEIR batches arrived; re-deriving them per ingest is the
-    full-corpus rescan this operator exists to avoid.  Result equals
+    refresh face of :func:`minhash_near_dups`: ``(src, dst,
+    n_matching)`` where ``dst`` is always a delta document and ``src``
+    is a standing document or an earlier delta document (``src <
+    dst``).  Standing↔standing pairs are excluded by construction — they
+    were found when THEIR batches arrived; re-deriving them per ingest
+    is the full-corpus rescan this operator exists to avoid.  The pairs
+    come from the same kernel as the full build (:func:`_minhash_pairs`,
+    standing rows old, delta rows new), so the result equals
     "``minhash_near_dups(standing ∪ delta)`` minus its standing-internal
-    pairs" exactly (same pigeonhole candidates, same 16-perm verify).
+    pairs" exactly.
 
     A document re-delivered on both sides is tolerated: its STANDING
-    row is anti-joined away before the cross probe (the delta version
-    wins everywhere — same rule as the verify lookup), so a re-seen id
-    can neither self-pair, appear in both orientations (once via the
-    cross branch, once via the delta-internal branch), nor fan out the
-    verify join.
+    row is anti-joined away first (``er._flagged``: the delta version
+    wins), so a re-seen id can neither self-pair, appear in both
+    orientations, nor fan out the verify join.
 
-    Scale shape: the delta-derived frames (band probe, delta
-    signatures) are broadcast while the delta fits
-    ``BROADCAST_MAX_DOCS`` — an ingest batch is delta-sized, not
-    corpus-sized — so the standing side is SCANNED map-side (signature
-    kernel + band probe are narrow) but never shuffled.  The CANDIDATE
-    set is gated on its own row count instead (delta docs × collision
-    fan-out is not bounded by the delta doc count when the standing
-    corpus is boilerplate-heavy).  Both counts are read from the
-    frames' own checkpoints.  In production
-    the standing signature table is the PERSISTED store this scan
-    stands in for (written once per batch, bucketed by doc_id), making
-    the refresh independent of corpus size end to end.  Past the cap
-    the hints drop and Catalyst falls back to shuffled joins.
-
-    ``standing_sig`` is that persisted store, passed directly: a
-    ``(doc_id, <block_col>, sig array<long>[N_PERMS])`` frame (the
-    :func:`minhash_signatures` shape) that skips re-running the
-    kernel over the standing corpus — the steady-state entry point.
+    ``standing_sig`` is the persisted standing signature store, passed
+    directly: a ``(doc_id, <block_col>, sig array<long>[N_PERMS])``
+    frame (the :func:`minhash_signatures` shape) that skips re-running
+    the kernel over the standing corpus — the steady-state entry point.
     When omitted, signatures are derived from ``standing`` in place.
     """
+    n_standing = None
     if standing_sig is None:
-        standing_sig, _ = minhash_signatures(standing, text_col, block_col)
+        standing_sig, n_standing = minhash_signatures(standing, text_col, block_col)
     sig_d, n_delta = minhash_signatures(delta, text_col, block_col)
-    bcast = F.broadcast if n_delta <= BROADCAST_MAX_DOCS else (lambda d: d)
-    # a re-delivered id's standing row is dead weight on every path:
-    # dropping it here makes the delta version win in BOTH the cross
-    # probe and the verify lookup (leaving it in the probe would emit
-    # the same pair twice, once per orientation, when the re-seen doc
-    # also matches a NEW delta doc)
-    sig_s = standing_sig.join(bcast(sig_d.select("doc_id")), "doc_id", "left_anti")
-
-    probe_d = bcast(_band_probe(sig_d, block_col, min_matching, "dst"))
-    # sig_s carries no delta ids (anti-joined above), so cross can never
-    # self-pair and never mirrors a delta-internal pair
-    cross = _collisions(_band_probe(sig_s, block_col, min_matching, "src"), probe_d, False)
-    dd = _collisions(_band_probe(sig_d, block_col, min_matching, "src"), probe_d, True)
-    cands, (n_cands,) = settle(cross.unionByName(dd).distinct(), F.count(F.lit(1)))
-    if n_cands <= BROADCAST_MAX_DOCS:
-        cands = F.broadcast(cands)
-
-    # verify lookup: one row per id (delta version of a re-seen doc —
-    # sig_s is already delta-free), so the join cannot fan out
-    sa = sig_s.unionByName(sig_d).select(
-        F.col("doc_id").alias("src"), F.col("sig").alias("sig_a")
-    )
-    sb = sig_d.select(F.col("doc_id").alias("dst"), F.col("sig").alias("sig_b"))
-    return _verified(cands, sa, bcast(sb), min_matching)
+    sig = _flagged(standing_sig, sig_d, "doc_id", n_delta <= BROADCAST_MAX_DOCS)
+    # n_standing still counts re-delivered ids: an upper bound on the rows
+    n_rows = None if n_standing is None else n_standing + n_delta
+    return _minhash_pairs(sig, n_delta, n_rows, block_col, min_matching)
 
 
 # --- SimHash --------------------------------------------------------------

@@ -13,6 +13,13 @@ Spark-first decomposition:
   graph (operators/connected_components.py);
 - mapping application is a **broadcast left join + coalesce** (J1).
 
+String-side aliases come from SymSpell deletion-neighborhood blocking:
+one pair kernel (``_symdelete_pairs``) over rows flagged new or old
+returns the verified pairs touching a new row, so the full build
+(``symdelete_typo_pairs``, every row new) is the delta
+(``incremental_er_refresh``, standing rows old) over an all-new side,
+with one candidate join and one verify.
+
 Two similarity joins, each called directly by the specs that use it
 and feeding ``canonical_mapping`` the same (src, dst, sim) frame:
 - ``exact_similarity_pairs``: blocked GEMM join (optionally confined to
@@ -43,6 +50,12 @@ from .superstep import settle
 # short surface string (~40 B), so 5M rows ≈ 200 MB.  Past the cap the
 # hint drops and Catalyst plans shuffled joins.
 BROADCAST_MAX_ROWS = 5_000_000
+
+# New-side cap of the SymSpell variant join: while a pair call brings at
+# most this many new names, their deletion variants are broadcast; past
+# it the join is shuffled-hash.  Set from the crossover recorded in
+# ``_symdelete_pairs``.
+SYMDELETE_MAX_NEW = 10_000
 
 
 def _round_half_up(x: np.ndarray, digits: int = 6) -> np.ndarray:
@@ -384,13 +397,13 @@ def apply_mapping_array(
 # --- typo-alias detection (SymSpell deletion-neighborhood blocking) -------
 
 def _deletion_variants(names: DataFrame) -> DataFrame:
-    """(id, variant): each name emits itself plus every single-character
-    deletion — the SymSpell d=1 blocking neighborhood shared by the full
-    (:func:`symdelete_typo_pairs`) and delta (:func:`symdelete_delta_pairs`)
-    paths.  Narrow (one explode, no shuffle); variant i=0 is the string
-    itself, i=1..len deletes char i."""
+    """(id, new, variant): each name emits itself plus every
+    single-character deletion — the SymSpell d=1 blocking neighborhood
+    of :func:`_symdelete_pairs`.  Narrow (one explode, no shuffle);
+    variant i=0 is the string itself, i=1..len deletes char i."""
     return names.select(
         "id",
+        "new",
         F.explode(
             F.transform(
                 F.sequence(F.lit(0), F.length("name")),
@@ -402,6 +415,79 @@ def _deletion_variants(names: DataFrame) -> DataFrame:
                 ),
             )
         ).alias("variant"),
+    )
+
+
+def _symdelete_pairs(rows: DataFrame, n_new: int, n_rows: int) -> DataFrame:
+    """(src, dst, distance): every id pair within Levenshtein distance 1
+    with at least one NEW endpoint — the one SymSpell pair kernel under
+    both :func:`symdelete_typo_pairs` (every row new) and
+    :func:`incremental_er_refresh` (standing rows old, delta rows new).
+    ``rows`` is (id, name, new), one row per id; ``n_new`` counts its new
+    rows and ``n_rows`` all of them.
+
+    Candidates: the deletion variants of every row (src; |name|+1 rows
+    per name) equi-joined with those of the new rows (dst) on
+    ``xxhash64(variant)`` (an 8 B key) — variant collisions only, never
+    the n² name matrix — kept under ``src != dst AND (src < dst OR NOT src_new)``.
+    With every row new that is ``src < dst``; with old rows it is each
+    (old src, new dst) cross pair once plus the new-internal pairs with
+    ``src < dst`` — so the result equals the full pair set of all rows
+    minus its old-internal pairs, with cross pairs oriented (old, new).
+    Then one distinct and the JVM ``levenshtein`` verify, which removes
+    the false positives the blocking admits.
+
+    Scale shape: the new side of the variant join is broadcast while
+    ``n_new`` is under ``SYMDELETE_MAX_NEW`` and shuffled-hash past it.
+    Crossover, measured on bench.py's p03 vocabulary with every name new
+    (4 cores, broadcast vs shuffled-hash interleaved, min of 6 runs):
+    2.5k names 0.58 / 0.55 s, 5k 0.70 / 0.70 s, 10k 1.04 / 1.05 s, 20k
+    2.19 / 1.62 s, 50k 5.89 / 2.83 s — so the cap sits at 10k.  Catalyst
+    must not choose here: the (id, vh) row is 16 B, so its size
+    estimate lands under the broadcast threshold at bench scale, and
+    r16 measured that broadcast at 2.75M variants per side at 35–56 s
+    against 7.5–17.5 s shuffled-hash.  At real scale broadcast is
+    impossible and sort-merge would pay two corpus-scale sorts; the
+    shuffled-hash build side is one AQE-sized partition of 16 B rows.
+    While the new side fits, the
+    all-row variants are scanned map-side and never shuffled, however
+    large the old side is.  The verify's name lookups broadcast while
+    their row counts fit ``BROADCAST_MAX_ROWS`` (a forced broadcast of a
+    larger name dim would OOM executors); past it the all-row lookup is
+    scanned against the broadcast candidates instead, sized by the
+    variant-join cap.  ``levenshtein`` runs map-side either way.
+    """
+    variants = _deletion_variants(rows)
+    src = variants.select(
+        F.col("id").alias("src"), F.col("new").alias("src_new"), F.xxhash64("variant").alias("vh")
+    )
+    dst = variants.filter(F.col("new")).select(
+        F.col("id").alias("dst"), F.xxhash64("variant").alias("vh2")
+    )
+    small = n_new <= SYMDELETE_MAX_NEW
+    cands = (
+        src.join(
+            F.broadcast(dst) if small else dst.hint("shuffle_hash"),
+            (F.col("vh") == F.col("vh2"))
+            & (F.col("src") != F.col("dst"))
+            & ((F.col("src") < F.col("dst")) | ~F.col("src_new")),
+        )
+        .select("src", "dst")
+        .distinct()
+    )
+    na = rows.select(F.col("id").alias("src"), F.col("name").alias("name_a"))
+    nb = rows.filter(F.col("new")).select(F.col("id").alias("dst"), F.col("name").alias("name_b"))
+    if n_rows <= BROADCAST_MAX_ROWS:
+        na = F.broadcast(na)
+    elif small:
+        cands = F.broadcast(cands)
+    if n_new <= BROADCAST_MAX_ROWS:
+        nb = F.broadcast(nb)
+    return (
+        cands.join(na, "src")
+        .join(nb, "dst")
+        .select("src", "dst", F.levenshtein("name_a", "name_b").alias("distance"))
+        .filter(F.col("distance") <= 1)
     )
 
 
@@ -429,133 +515,30 @@ def symdelete_typo_pairs(
     deeper neighborhoods grow as |s|^d and a 100 TB name table wants
     d=1 blocking with a wider verify radius instead.
 
-    Scale shape: the variant explode is |name|+1 rows per entity keyed
-    by xxhash64(variant) (8 B shuffle key); candidates are
-    variant-collisions only, never the n² name matrix; the name lookup
-    for verification broadcasts ``df``'s (id, name) projection while it
-    fits ``BROADCAST_MAX_ROWS`` (a forced broadcast of a larger name dim
-    would OOM executors); levenshtein runs map-side either way.  ``n_rows`` (parquet footer metadata / catalog stats —
-    the er02 pattern) sizes that hint without an extra full-table
+    The pairs are :func:`_symdelete_pairs` with every row new.
+    ``n_rows`` (parquet footer metadata / catalog stats — the er02
+    pattern) sizes its broadcast gates without an extra full-table
     count action; only when absent does the operator fall back to one
     ``df.count()``.
     """
-    names = df.select(F.col(id_col).alias("id"), F.col(name_col).alias("name"))
-    variants = _deletion_variants(names)
-    a = variants.select(F.col("id").alias("src"), F.xxhash64("variant").alias("vh"))
-    b = variants.select(F.col("id").alias("dst"), F.xxhash64("variant").alias("vh2"))
-    # SHUFFLE_HASH on the self-join (r16): both sides are the SAME
-    # corpus-scale variant projection, so there is no small side —
-    # but its (id, vh) row is 16 B and Catalyst's size estimate lands
-    # under the broadcast threshold at bench scale, picking a broadcast
-    # that collects millions of variant rows to the driver and builds
-    # the whole hash relation on every executor per invocation
-    # (measured interleaved at sf0.1, 2.75M variants/side: broadcast
-    # 35–56 s vs shuffled-hash 7.5–17.5 s).  At real scale broadcast is
-    # impossible and sort-merge would pay two corpus-scale sorts; the
-    # shuffled-hash build side is one AQE-sized partition of 16 B rows.
-    cands = (
-        a.join(
-            b.hint("shuffle_hash"),
-            (F.col("vh") == F.col("vh2")) & (F.col("src") < F.col("dst")),
-        )
-        .select("src", "dst")
-        .distinct()
+    names = df.select(
+        F.col(id_col).alias("id"), F.col(name_col).alias("name"), F.lit(True).alias("new")
     )
-    na = names.select(F.col("id").alias("src"), F.col("name").alias("name_a"))
-    nb = names.select(F.col("id").alias("dst"), F.col("name").alias("name_b"))
-    if (n_rows if n_rows is not None else df.count()) <= BROADCAST_MAX_ROWS:
-        na, nb = F.broadcast(na), F.broadcast(nb)
-    dist = F.levenshtein("name_a", "name_b")
-    return (
-        cands.join(na, "src")
-        .join(nb, "dst")
-        .select("src", "dst", dist.alias("distance"))
-        .filter(F.col("distance") <= 1)
-    )
+    n = n_rows if n_rows is not None else df.count()
+    return _symdelete_pairs(names, n, n)
 
 
-def symdelete_delta_pairs(
-    standing: DataFrame,
-    delta: DataFrame,
-    id_col: str = "id",
-    name_col: str = "name",
-) -> DataFrame:
-    """(src, dst, distance): alias pairs TOUCHING at least one surface of
-    a delta batch — the O(|delta|)-shuffle refresh face of
-    :func:`symdelete_typo_pairs`.  Standing↔standing pairs are excluded
-    by construction: they are already folded into the standing component
-    mapping, so re-deriving them would be the full rebuild this operator
-    exists to avoid (the reference re-crawls and re-clusters the whole
-    vocabulary per ingest, `Hype.py:64-86`).
-
-    Candidates = delta-variants ⋈ standing-variants (cross) plus the
-    delta's internal d=1 pairs; verification is the same JVM
-    ``levenshtein`` the full path uses, so the pair set equals
-    "symdelete_typo_pairs(standing ∪ delta) minus its standing-internal
-    pairs" exactly (property-tested on random vocabulary splits in
-    ``test_er.py::test_incremental_er_refresh_equals_rebuild``).
-
-    Id overlap between the two sides is tolerated: an id present on both
-    (the same surface re-delivered) is dropped from the cross candidates
-    (``src != dst``) rather than emitted as a distance-0 self-pair, and
-    the unioned name lookup is de-duplicated so it cannot fan out the
-    verify join.  Callers that ANTI-JOIN re-seen surfaces away first
-    (:func:`incremental_er_refresh`) never hit either path.
-
-    Scale shape: the delta side (variants, then the verified pair ids)
-    is broadcast — a vocabulary delta batch is ingest-sized, not
-    corpus-sized; the standing side is SCANNED narrowly (variant explode
-    is map-side) but never shuffled.  In production the standing variant
-    index is the persisted table this scan stands in for (bucketed by
-    ``xxhash64(variant)``, so the probe prunes to matching buckets); the
-    join work is delta-sized either way.
-    """
-    s_names = standing.select(F.col(id_col).alias("id"), F.col(name_col).alias("name"))
-    d_names = delta.select(F.col(id_col).alias("id"), F.col(name_col).alias("name"))
-    s_var = _deletion_variants(s_names).select(
-        F.col("id").alias("src"), F.xxhash64("variant").alias("vh")
-    )
-    d_var = _deletion_variants(d_names).select(
-        F.col("id").alias("dst"), F.xxhash64("variant").alias("vh")
-    )
-    cross = (
-        s_var.join(F.broadcast(d_var), "vh")
-        .filter(F.col("src") != F.col("dst"))  # re-seen id: not a self-pair
-        .select("src", "dst")
-    )
-    dd = (
-        d_var.join(
-            F.broadcast(d_var.select(F.col("dst").alias("dst2"), "vh")),
-            "vh",
-        )
-        .filter(F.col("dst") < F.col("dst2"))
-        .select(F.col("dst").alias("src"), F.col("dst2").alias("dst"))
-    )
-    # ONE distinct after the union (both branches are broadcast joins, so
-    # this is the single shuffle of the candidate step); it also collapses
-    # a cross/dd overlap when an id was re-delivered on both sides
-    cands = cross.unionByName(dd).distinct()
-    # Name lookup for the src side: the union covers standing ∪ delta
-    # ids WITHOUT a distinct — deduping the union would shuffle the
-    # corpus-sized standing vocabulary every refresh, exactly the
-    # O(|standing|) work this operator exists to avoid.  Instead the
-    # delta-sized verified-candidate frame is BROADCAST (the docstring
-    # contract), the corpus side is scanned map-side, and the only
-    # duplicates a re-delivered id can produce (same sid ⇒ same name on
-    # the er08/p03 path; exact duplicate rows in general) are collapsed
-    # by a distinct at CANDS scale after the join.
-    na = s_names.select(F.col("id").alias("src"), F.col("name").alias("name_a")).unionByName(
-        d_names.select(F.col("id").alias("src"), F.col("name").alias("name_a"))
-    )
-    nb = d_names.select(F.col("id").alias("dst"), F.col("name").alias("name_b"))
-    return (
-        F.broadcast(cands)
-        .join(na, "src")
-        .distinct()
-        .join(F.broadcast(nb), "dst")
-        .select("src", "dst", F.levenshtein("name_a", "name_b").alias("distance"))
-        .filter(F.col("distance") <= 1)
-    )
+def _flagged(old: DataFrame, new: DataFrame, id_col: str, small: bool) -> DataFrame:
+    """``old`` ∪ ``new`` (same columns) with a boolean ``new`` column: the
+    rows of a pair kernel (:func:`_symdelete_pairs`,
+    ``dedup._minhash_pairs``).  An ``id_col`` value on both sides keeps
+    only its new row (the delta version wins), so it can neither
+    self-pair nor pair with a new partner in both orientations.  The
+    old side is probed by the new ids, broadcast while ``small``, and is
+    never shuffled."""
+    ids = new.select(id_col)
+    kept = old.join(F.broadcast(ids) if small else ids, id_col, "left_anti")
+    return kept.withColumn("new", F.lit(False)).unionByName(new.withColumn("new", F.lit(True)))
 
 
 def build_er_state(names: DataFrame, name_col: str = "name") -> DataFrame:
@@ -599,47 +582,43 @@ def incremental_er_refresh(
     ``test_er.py::test_incremental_er_refresh_equals_rebuild``; gated
     end-to-end as the p03 spec), at O(|delta|) shuffle cost:
 
-    1. new surfaces = delta ∖ standing (anti-join; a re-seen surface is
-       a no-op, its component is already settled).  The standing name
-       column is broadcast only while it fits
-       (``BROADCAST_MAX_ROWS`` — the same conditional-hint gate
-       :func:`symdelete_typo_pairs` uses; a corpus-sized standing
-       vocabulary falls back to a shuffled left_anti, which AQE turns
-       back into a broadcast when the delta side is the small one).
-       ``standing_n_rows`` (catalog stats / parquet footer metadata)
-       sizes the gate without an extra count action; only when absent
-       does the operator fall back to one ``standing.count()``.
-    2. :func:`symdelete_delta_pairs` — only pairs touching a new
-       surface,
+    1. the delta surfaces, distinct, each with sid = ``xxhash64(name)``;
+       a re-seen surface's standing row is dropped by :func:`_flagged`
+       (the delta version wins, the same rule as
+       ``dedup.minhash_delta_near_dups``), so every sid enters the pair
+       kernel once.
+    2. :func:`_symdelete_pairs` with standing rows old and delta rows
+       new — only pairs touching a delta surface.  ``standing_n_rows``
+       (catalog stats / parquet footer metadata) sizes its broadcast
+       gates without an extra count action; only when absent does the
+       operator fall back to one ``standing.count()``.
     3. :func:`connected_components.incremental_components` — CC on the
        ≤2·|pairs| contracted graph, |V| mapping broadcast-probed,
     4. isolated new surfaces (no pair) enter as their own component.
     """
     s = standing.select("sid", "name", "component")
-    s_name = s.select("name")
-    n = standing_n_rows if standing_n_rows is not None else s_name.count()
-    if n <= BROADCAST_MAX_ROWS:
-        s_name = F.broadcast(s_name)
-    new_names = (
+    n = standing_n_rows if standing_n_rows is not None else s.count()
+    # consumed by the flagging, pairs and union; its row count sizes the
+    # kernel's new side
+    new_names, (n_new,) = settle(
         delta_names.select("name")
-        # a NULL is not a surface — and the anti-join below never matches
-        # it, so every refresh would append another NULL row
-        .filter(F.col("name").isNotNull())
+        .filter(F.col("name").isNotNull())  # a NULL is not a surface
         .distinct()
-        .join(s_name, "name", "left_anti")
-        .withColumn("sid", F.xxhash64("name"))
-        .localCheckpoint(eager=True)  # consumed by pairs + union + join
+        .withColumn("sid", F.xxhash64("name")),
+        F.count(F.lit(1)),
     )
-    pairs = symdelete_delta_pairs(
+    rows = _flagged(
         s.select(F.col("sid").alias("id"), "name"),
         new_names.select(F.col("sid").alias("id"), "name"),
+        "id",
+        n_new <= SYMDELETE_MAX_NEW,
     )
+    pairs = _symdelete_pairs(rows, n_new, n + n_new)
     merged = incremental_components(
         s.select(F.col("sid").alias("id"), "component"), pairs.select("src", "dst")
     )
-    all_names = s.select("sid", "name").unionByName(new_names.select("sid", "name"))
     # isolated new surfaces never reach incremental_components (no edge,
     # not in the old mapping) — identity component via the left join
-    return all_names.join(
+    return rows.select(F.col("id").alias("sid"), "name").join(
         merged.withColumnRenamed("id", "sid"), "sid", "left"
     ).select("sid", "name", F.coalesce("component", F.col("sid")).alias("component"))

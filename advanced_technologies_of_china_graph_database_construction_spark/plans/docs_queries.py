@@ -3234,7 +3234,7 @@ def d45_minhash_delta_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The O(|delta|) refresh face of d02: near-dup pairs touching a
     delta batch only — dedupe the new crawl against the standing corpus
     without re-deriving standing-internal pairs (the content-dedup
-    sibling of p03's symdelete_delta_pairs).  Delta = corpus docs with
+    sibling of p03's SymSpell delta pairs).  Delta = corpus docs with
     ``doc_id % 7 ∈ {0, 1}``; the d02 injected near/exact duplicates
     straddle the split, so the cross, delta-internal and
     excluded-standing branches all carry rows at every sf."""

@@ -317,7 +317,7 @@ def _p03_surfaces(docs: DataFrame, parity: int) -> DataFrame:
 def p03_incremental_er_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Standing ER state built from the first vocabulary slice
     (`er.build_er_state`), delta batch folded in incrementally
-    (`er.incremental_er_refresh` → `symdelete_delta_pairs` +
+    (`er.incremental_er_refresh` → `_symdelete_pairs` +
     `incremental_components`), canonical elected per refreshed component
     by min surface name (hash-free output): (name, canonical) over the
     full standing ∪ delta vocabulary."""

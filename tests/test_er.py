@@ -362,23 +362,27 @@ def test_incremental_er_refresh_equals_rebuild(spark, seed):
 
 
 def test_symdelete_delta_pairs_tolerates_id_overlap(spark):
-    """An id present on BOTH sides (same surface re-delivered) must not
-    emit a distance-0 self-pair nor duplicate rows through the unioned
-    name lookup; pairs against the overlapping surface still verify."""
-    from advanced_technologies_of_china_graph_database_construction_spark.operators.er import symdelete_delta_pairs
+    """An id present on BOTH sides (same surface re-delivered) keeps only
+    its delta row in the pair kernel's input, so it never emits a
+    distance-0 self-pair, never fans out the name lookup, and pairs with
+    a new partner once — not once per orientation through the cross
+    and delta-internal candidates."""
+    from advanced_technologies_of_china_graph_database_construction_spark.operators.er import (
+        _flagged,
+        _symdelete_pairs,
+    )
 
-    standing = spark.createDataFrame(
-        [(1, "alpha"), (2, "beta")], "id long, name string"
-    )
-    delta = spark.createDataFrame(
-        [(1, "alpha"), (3, "alphb")], "id long, name string"
-    )
-    got = sorted(
-        (r.src, r.dst, r.distance) for r in symdelete_delta_pairs(standing, delta).collect()
-    )
-    # alphb pairs with alpha exactly once (the cross and delta-internal
-    # candidate collapse in the post-union distinct); no (1,1,0) self-pair
-    assert got == [(1, 3, 1)]
+    def pairs(standing, delta):
+        old = spark.createDataFrame(standing, "id long, name string")
+        new = spark.createDataFrame(delta, "id long, name string")
+        rows = _flagged(old, new, "id", True)
+        got = _symdelete_pairs(rows, len(delta), len(standing) + len(delta))
+        return sorted((r.src, r.dst, r.distance) for r in got.collect())
+
+    # alphb pairs with alpha exactly once; no (1, 1, 0) self-pair
+    assert pairs([(1, "alpha"), (2, "beta")], [(1, "alpha"), (3, "alphb")]) == [(1, 3, 1)]
+    # the re-seen id sorts after its new partner: delta-internal, src < dst
+    assert pairs([(5, "alpha"), (2, "beta")], [(5, "alpha"), (3, "alphb")]) == [(3, 5, 1)]
 
 
 def test_lsh_empty_input_keeps_id_type(spark):

@@ -12,6 +12,8 @@ Each test pins one plan property the engine relies on:
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from tests.conftest import SF_CORRECT
@@ -137,6 +139,14 @@ def _settled_gate_calls(docs, names):
         "ngram_jaccard_pairs": lambda: dedup.ngram_jaccard_pairs(docs),
         "containment_pairs": lambda: dedup.containment_pairs(docs),
         "build_er_state": lambda: er.build_er_state(names),
+        "incremental_er_refresh": lambda: er.incremental_er_refresh(
+            er.build_er_state(names).localCheckpoint(eager=True),
+            names.filter(names.name.startswith("a")),
+            standing_n_rows=4,
+        ),
+        "symdelete_typo_pairs": lambda: er.symdelete_typo_pairs(
+            names.withColumn("id", F.xxhash64("name")), n_rows=4
+        ),
     }
 
 
@@ -151,7 +161,9 @@ def test_settled_gates_schedule_only_their_checkpoints(spark, cost_of, monkeypat
     the checkpoint action (``superstep.settle``), not in a separate
     ``count()``.  ``toPandas`` counts with the checkpoints: it is
     ``connected_components``' one collect of its settled edge list on
-    the union-find path ``build_er_state`` takes."""
+    the union-find path ``build_er_state`` takes.  ``symdelete_typo_pairs``
+    reads every size from its ``n_rows`` argument, so it takes no
+    checkpoint and schedules no job at all."""
     text = "the quick brown fox jumps over the lazy dog "
     docs = spark.createDataFrame(
         [(i, "ab"[i % 2], text * 2 + str(i // 4)) for i in range(12)], _DOC_SCHEMA
@@ -170,7 +182,7 @@ def test_settled_gates_schedule_only_their_checkpoints(spark, cost_of, monkeypat
 
         monkeypatch.setattr(type(docs), method, recorded)
     _, (jobs, _) = cost_of(_settled_gate_calls(docs, names)[op])
-    assert inside, "no checkpoint taken"
+    assert inside or op == "symdelete_typo_pairs", "no checkpoint taken"
     assert jobs == sum(inside), (jobs, inside)
 
 
@@ -828,10 +840,11 @@ def test_npmi_vocab_broadcast_and_topk_no_global_sort(spark):
 
 
 def test_minhash_delta_broadcasts_delta_never_shuffles_standing(spark, monkeypatch):
-    """d45: while the delta fits the cap, every delta-derived frame
-    (band probe, candidates, delta signatures) enters as a broadcast so
-    the standing side is scanned map-side and never shuffled; past the
-    cap the unconditional hints must be gone (the d02 discipline)."""
+    """d45: while the delta fits the cap, the new-side frames (band
+    probe, delta signatures) and one side of the all-row signature
+    lookup enter as broadcasts, so the standing side is never shuffled;
+    past the cap the unconditional hints must be gone (the d02
+    discipline)."""
     from advanced_technologies_of_china_graph_database_construction_spark.catalog import load_table
     from advanced_technologies_of_china_graph_database_construction_spark.operators import dedup
     from pyspark.sql import functions as F
@@ -846,6 +859,54 @@ def test_minhash_delta_broadcasts_delta_never_shuffles_standing(spark, monkeypat
     optimized = capped._jdf.queryExecution().optimizedPlan().toString()
     assert "ResolvedHint" not in optimized, optimized
     assert "strategy=broadcast" not in optimized, optimized
+
+
+def _left_subtree(plan: str, node: str) -> str:
+    """The tree-string lines of the left (streamed) child of the first
+    ``node`` line in ``plan``."""
+    lines = plan.splitlines()
+    i = next(k for k, line in enumerate(lines) if node in line)
+    col = len(lines[i]) - len(lines[i].lstrip(" :+-"))
+    out = []
+    for line in lines[i + 1:]:
+        if len(line) <= col or line[col] != ":":
+            break
+        out.append(line)
+    return "\n".join(out)
+
+
+def test_er_delta_broadcasts_new_side_never_shuffles_standing(spark, monkeypatch):
+    """The SymSpell pair kernel under a refresh: while the new names fit
+    ``SYMDELETE_MAX_NEW``, the new-side variants enter the candidate
+    join as a broadcast, so the standing variants reach it with no
+    Exchange above them; with the cap at 0 no broadcast hint is left in
+    the optimized plan (a large delta takes the shuffled-hash shape)."""
+    from advanced_technologies_of_china_graph_database_construction_spark.catalog import load_table
+    from advanced_technologies_of_china_graph_database_construction_spark.operators import er
+    from pyspark.sql import functions as F
+
+    sup = load_table(spark, SF_CORRECT, "supplier").select(
+        F.col("s_suppkey").alias("id"), F.col("s_name").alias("name")
+    )
+    is_delta = F.col("id") % 7 == 0
+    standing, delta = sup.filter(~is_delta), sup.filter(is_delta)
+
+    def pairs():
+        small = 20 <= er.SYMDELETE_MAX_NEW
+        return er._symdelete_pairs(er._flagged(standing, delta, "id", small), 20, 100)
+
+    join = "BroadcastHashJoin [vh"
+    plan = _plan(pairs())
+    scan = _left_subtree(plan, join)
+    assert "Generate explode" in scan and "supplier" in scan, plan
+    # a broadcast of the delta ids may sit beside the standing scan (the
+    # re-delivered-id anti-join); no shuffle may sit above it
+    assert not re.search(r"\bExchange\b", scan), scan
+    monkeypatch.setattr(er, "SYMDELETE_MAX_NEW", 0)
+    monkeypatch.setattr(er, "BROADCAST_MAX_ROWS", 0)
+    optimized = pairs()._jdf.queryExecution().optimizedPlan().toString()
+    assert "strategy=broadcast" not in optimized, optimized
+    assert "strategy=shuffle_hash" in optimized, optimized
 
 
 def test_a11_filter_pushed_to_candidate_scan(spark):

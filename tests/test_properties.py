@@ -548,6 +548,50 @@ def test_symdelete_property_matches_bruteforce(spark, names):
     assert got == want, names
 
 
+@given(st.integers(0, 2**31 - 1))
+@SETTINGS
+def test_symdelete_delta_pairs_equal_full_minus_standing_internal(spark, seed):
+    """The incremental ER contract, the SymSpell twin of
+    ``test_minhash_delta_pairs_equal_full_minus_standing_internal``: the
+    pair kernel over standing rows (old) and delta rows (new) equals
+    ``symdelete_typo_pairs(standing ∪ delta)`` minus its
+    standing-internal pairs, with cross pairs oriented (standing,
+    delta).  Random vocabulary splits; some ids are re-delivered on
+    both sides, and the delta version wins."""
+    from advanced_technologies_of_china_graph_database_construction_spark.operators.er import (
+        _flagged,
+        _symdelete_pairs,
+        symdelete_typo_pairs,
+    )
+
+    rng = random.Random(seed)
+    names = sorted({
+        "".join(rng.choice("abc") for _ in range(rng.randint(2, 5))) for _ in range(30)
+    })
+    ids = list(range(len(names)))
+    delta_ids = {i for i in ids if rng.random() < 0.4}
+    redelivered = {i for i in ids if i not in delta_ids and rng.random() < 0.2}
+    standing = [(i, names[i]) for i in ids if i not in delta_ids]
+    delta = [(i, names[i]) for i in sorted(delta_ids | redelivered)]
+    new_ids = delta_ids | redelivered
+    schema = "id long, name string"
+    full = symdelete_typo_pairs(spark.createDataFrame(list(enumerate(names)), schema))
+    expected = set()
+    for a, b, d in ((r.src, r.dst, r.distance) for r in full.collect()):
+        if a in new_ids and b in new_ids:
+            expected.add((a, b, d))
+        elif b in new_ids:
+            expected.add((a, b, d))
+        elif a in new_ids:
+            expected.add((b, a, d))  # cross pairs orient (standing, delta)
+    rows = _flagged(
+        spark.createDataFrame(standing, schema), spark.createDataFrame(delta, schema), "id", True
+    )
+    got = _symdelete_pairs(rows, len(delta), len(standing) + len(delta)).collect()
+    assert len(got) == len(expected)  # no pair twice
+    assert {(r.src, r.dst, r.distance) for r in got} == expected
+
+
 # ---------------------------------------------- duplicated spans ----------
 
 @given(
@@ -739,7 +783,7 @@ def test_minhash_delta_pairs_equal_full_minus_standing_internal(spark, seed):
     """The incremental dedup contract: minhash_delta_near_dups(standing,
     delta) over a random split equals minhash_near_dups(standing ∪
     delta) minus its standing-internal pairs, with cross pairs oriented
-    (standing src, delta dst) — the symdelete_delta_pairs equality
+    (standing src, delta dst) — the SymSpell delta pairs equality
     applied to content dedup."""
     rng = random.Random(seed)
     vocab = ["alpha", "beta", "gamma", "delta", "epsilon"]
