@@ -49,8 +49,7 @@ def handle_request(spark: SparkSession, sf_dir: str, payload: dict) -> dict:
         res = answer(spark, sf_dir, query, history=user_turns or None)
     else:
         p = plan(query, history=user_turns or None)
-        tokens = [w for t in p.terms for w in t.split()]
-        stages = [("fulltext_only", lambda: fulltext_search(spark, sf_dir, tokens, True))]
+        stages = [("fulltext_only", lambda: fulltext_search(spark, sf_dir, p.tokens, True))]
         res = run_cascade(query, "fulltext", stages, empty_stage="fulltext_only")
     return {
         "answer": res["answer"],

@@ -4,10 +4,12 @@ query compiler.
 The reference embeds a hand-written catalog of node labels, properties
 and relationship types in its Cypher-generation prompt
 (`neo4j_query_executor.py:207-237`) plus five prompt rules and few-shot
-examples (`:250-297`).  Here the catalog is *derived from the live
-DataFrames* — schema drift can't desynchronize the prompt from the data
-— and the compilation target is Spark SQL over the registered ``g_*``
-views (`operators.graph.register_graph_views`).  The deterministic
+examples (`:250-297`).  Here the catalog is *derived*: column types
+from the live DataFrames, node families and relationship directions
+from the graph schema (`operators.graph.NODE_SCHEMA` / `EDGE_SCHEMA`)
+— schema drift can't desynchronize the prompt from the data — and the
+compilation target is Spark SQL over the registered ``g_*`` views
+(`operators.graph.register_graph_views`).  The deterministic
 template planner (`nl.planner`) remains the tested core; this module is
 the seam a real LLM front-end plugs into.
 """
@@ -16,29 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..operators.graph import (
-    REL_ALIAS_OF,
-    REL_AUTHORED,
-    REL_AUTHOR_ADDRESS,
-    REL_HAS_KEYWORD,
-    REL_HAS_TOPIC,
-    REL_PUBLISHED_BY,
-    GraphModel,
-)
-
-# (rel_type, src node family, dst node family) — direction matters, as in
-# NODE_LINK_CONFIG (`Hype.py:16-61`); AUTHOR_ADDRESS normalized per
-# SURVEY.md §7 hard-part (f).
-RELATIONSHIPS = (
-    (REL_AUTHORED, "authors", "docs"),
-    (REL_HAS_KEYWORD, "docs", "keywords"),
-    (REL_PUBLISHED_BY, "docs", "orgs"),
-    (REL_AUTHOR_ADDRESS, "docs", "addresses"),
-    (REL_HAS_TOPIC, "docs", "topics"),
-    (REL_ALIAS_OF, "keywords", "keywords"),
-)
-
-_NODE_FAMILIES = ("docs", "authors", "keywords", "orgs", "addresses", "topics")
+from ..operators.graph import EDGE_SCHEMA, NODE_SCHEMA, GraphModel
 
 
 def _cols(df: DataFrame) -> str:
@@ -46,14 +26,15 @@ def _cols(df: DataFrame) -> str:
 
 
 def schema_catalog(g: GraphModel) -> str:
-    """Prompt-ready catalog of the graph views, derived from live
-    schemas (the reference's hand-maintained equivalent:
+    """Prompt-ready catalog of the graph views: columns from the live
+    schemas, families and directions from the graph schema (the
+    reference's hand-maintained equivalent:
     `neo4j_query_executor.py:207-237`)."""
     lines = ["Node tables (SQL views g_<name>):"]
-    for fam in _NODE_FAMILIES:
+    for fam in NODE_SCHEMA:
         lines.append(f"  g_{fam}({_cols(getattr(g, fam))})")
     lines.append("Edge table g_edges(src:bigint, dst:bigint, rel_type:string); directions:")
-    for rel, src, dst in RELATIONSHIPS:
+    for rel, (src, dst) in EDGE_SCHEMA.items():
         lines.append(f"  (g_{src}) -[{rel}]-> (g_{dst})")
     lines.append(
         "Alias resolution: g_kw_alias(keyword_id, canonical_id) maps every "

@@ -455,10 +455,7 @@ def answer(
         # error→fallback shape as the reference (`:329-344`).
         p = QueryPlan(template=FALLBACK_TEMPLATE, params={}, terms=p.terms)
     stages: list[Stage] = [("template", lambda: execute_plan(spark, sf_dir, p))]
-    # fallback scans tokenize multi-word quoted terms so a partially
-    # wrong entity name can still hit (mirrors the reference's per-term
-    # regex conjunction/disjunction, `neo4j_query_executor.py:414-441`)
-    tokens = [w for t in p.terms for w in t.split()]
+    tokens = p.tokens
     if tokens:
         # when the template stage already WAS the AND-fulltext over
         # exactly these tokens (single-word terms), fallback_and would

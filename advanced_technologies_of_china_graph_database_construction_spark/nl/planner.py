@@ -36,6 +36,14 @@ class QueryPlan:
     params: dict[str, str] = field(default_factory=dict)
     terms: list[str] = field(default_factory=list)
 
+    @property
+    def tokens(self) -> list[str]:
+        """The full-text fallback's search words: every quoted term split
+        on whitespace, so a partially wrong entity name can still hit
+        (the reference's per-term regex conjunction/disjunction,
+        `neo4j_query_executor.py:414-441`)."""
+        return [w for t in self.terms for w in t.split()]
+
 
 # Intent rules over the Q.txt classes, checked in order (first match
 # wins).  Each rule: (compiled pattern over the lowercased question,

@@ -8,6 +8,12 @@ family of node DataFrames plus a single ``edges(src, dst, rel_type)``
 DataFrame (SURVEY.md §1.2) — Parquet-backed in production, partitioned by
 ``rel_type`` so rel-type filters become partition pruning.
 
+The graph's shape is declared once, in `NODE_SCHEMA` and `EDGE_SCHEMA`
+below — the analogue of the reference's ``NODE_LINK_CONFIG``
+(``Hype.py:16-61``: node label, id property, rel type and direction per
+rule).  The motif compiler, the NL schema catalog, the Parquet graph
+store and the CSV export all read these two tables.
+
 Because the driver's test data is a TPC-H-ish star schema, the graph is
 *derived* from it with a fixed deterministic projection (orders→documents,
 customer→Author, part→Keyword, supplier→Organization, nation→
@@ -55,10 +61,33 @@ REL_PUBLISHED_BY = "PUBLISHED_BY"
 REL_AUTHOR_ADDRESS = "AUTHOR_ADDRESS"
 REL_HAS_TOPIC = "HAS_TOPIC"
 REL_ALIAS_OF = "ALIAS_OF"
-REL_TYPES = (
-    REL_AUTHORED, REL_HAS_KEYWORD, REL_PUBLISHED_BY, REL_AUTHOR_ADDRESS,
-    REL_HAS_TOPIC, REL_ALIAS_OF,
-)
+
+# node family (a GraphModel field, in field order) → (id column, neo4j label)
+NODE_SCHEMA = {
+    "docs": ("doc_id", "Document"),
+    "authors": ("author_id", "Author"),
+    "keywords": ("keyword_id", "Keyword"),
+    "orgs": ("org_id", "Organization"),
+    "addresses": ("address_id", "Author_Address"),
+    "topics": ("topic_id", "Topic"),
+}
+# rel type → (src node family, dst node family); direction matters, as in
+# NODE_LINK_CONFIG.  Order is the edge union's order.
+EDGE_SCHEMA = {
+    REL_AUTHORED: ("authors", "docs"),
+    REL_HAS_KEYWORD: ("docs", "keywords"),
+    REL_PUBLISHED_BY: ("docs", "orgs"),
+    REL_AUTHOR_ADDRESS: ("docs", "addresses"),
+    REL_HAS_TOPIC: ("docs", "topics"),
+    REL_ALIAS_OF: ("keywords", "keywords"),
+}
+
+
+def check_rel_type(rel_type: str) -> None:
+    """Raise ``ValueError`` for a rel type the schema lacks: a typo would
+    otherwise filter the edges to nothing, silently."""
+    if rel_type not in EDGE_SCHEMA:
+        raise ValueError(f"unknown rel type {rel_type!r}; known: {sorted(EDGE_SCHEMA)}")
 
 
 @dataclass
@@ -66,9 +95,9 @@ class GraphModel:
     """Node DataFrames + one unified typed edge DataFrame.
 
     ``edges`` carries (src, dst, rel_type); ids live in per-entity key
-    spaces (rel_type determines which node table src/dst refer to), the
-    same way the reference's per-label CSV exports scope ``:ID`` columns
-    (`csv_extractor.py:105-111`).
+    spaces (`EDGE_SCHEMA` says which node table a rel type's src and dst
+    refer to), the same way the reference's per-label CSV exports scope
+    ``:ID`` columns (`csv_extractor.py:105-111`).
     """
 
     docs: DataFrame
@@ -84,6 +113,7 @@ class GraphModel:
         # Literal filter over the union: Catalyst constant-folds the
         # rel_type predicate per union branch and prunes dead branches,
         # so only the relevant extraction subtree is executed.
+        check_rel_type(rel_type)
         return self.edges.filter(F.col("rel_type") == rel_type).select("src", "dst")
 
 
@@ -179,7 +209,7 @@ def _persist(g: GraphModel) -> None:
     for name, frame in vars(g).items():
         if name != "edges":  # cached per rel type: see build_graph
             frame.persist()
-    for rel in REL_TYPES:
+    for rel in EDGE_SCHEMA:
         g.edges_of(rel).persist()
 
 
@@ -303,9 +333,8 @@ def register_graph_views(g: GraphModel, spark: SparkSession) -> None:
     reference compiles NL to a query string against a schema catalog,
     `neo4j_query_executor.py:207-237`; here the catalog is DESCRIBE over
     these views)."""
-    for name in ("docs", "authors", "keywords", "orgs", "addresses", "topics",
-                 "edges", "kw_alias"):
-        getattr(g, name).createOrReplaceTempView(f"g_{name}")
+    for name, frame in vars(g).items():
+        frame.createOrReplaceTempView(f"g_{name}")
 
 
 # ANSI-SQL mirror of build_graph for the DuckDB oracle. Prepend to any

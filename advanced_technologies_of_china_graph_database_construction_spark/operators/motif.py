@@ -14,12 +14,13 @@ Grammar (a GraphFrames-compatible subset):
     term     := "(" var ")" "-[" [":" REL_TYPE] "]->" "(" var ")"
 Variables repeat to express joins; every edge term needs a rel type
 (the union edge table is typed, so an untyped hop would be a union of
-all five semantics — explicit is better).
+every rel type's semantics — explicit is better).
 
 Each variable contributes ``<var>_id`` plus its node family's attribute
 columns prefixed with ``<var>_``.  Node families are inferred from the
-rel types (AUTHORED: author→doc, HAS_KEYWORD: doc→keyword, …), and
-conflicting inferences raise.
+rel types' endpoints in the graph schema (`graph.EDGE_SCHEMA`: AUTHORED
+author→doc, HAS_KEYWORD doc→keyword, …), and conflicting inferences
+raise.
 
 Scale: one shuffle per hop on the shared variable's id (the same plan
 Catalyst builds for the hand-written traversals g01–g17); attribute
@@ -34,34 +35,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .graph import (
-    REL_ALIAS_OF,
-    REL_AUTHOR_ADDRESS,
-    REL_AUTHORED,
-    REL_HAS_KEYWORD,
-    REL_HAS_TOPIC,
-    REL_PUBLISHED_BY,
-    GraphModel,
-)
-
-# rel_type → (src node family, dst node family)
-_REL_ENDPOINTS = {
-    REL_AUTHORED: ("authors", "docs"),
-    REL_HAS_KEYWORD: ("docs", "keywords"),
-    REL_PUBLISHED_BY: ("docs", "orgs"),
-    REL_AUTHOR_ADDRESS: ("docs", "addresses"),
-    REL_HAS_TOPIC: ("docs", "topics"),
-    REL_ALIAS_OF: ("keywords", "keywords"),
-}
-
-_FAMILY_ID = {
-    "docs": "doc_id",
-    "authors": "author_id",
-    "keywords": "keyword_id",
-    "orgs": "org_id",
-    "addresses": "address_id",
-    "topics": "topic_id",
-}
+from .graph import EDGE_SCHEMA, NODE_SCHEMA, GraphModel, check_rel_type
 
 _TERM_RE = re.compile(
     r"^\(\s*(?P<src>\w+)\s*\)\s*-\s*\[\s*:\s*(?P<rel>\w+)\s*\]\s*->\s*\(\s*(?P<dst>\w+)\s*\)$"
@@ -85,8 +59,7 @@ def _parse(pattern: str) -> list[_Term]:
         if not m:
             raise ValueError(f"unparseable motif term: {raw!r}")
         rel = m.group("rel")
-        if rel not in _REL_ENDPOINTS:
-            raise ValueError(f"unknown rel type {rel!r}; known: {sorted(_REL_ENDPOINTS)}")
+        check_rel_type(rel)
         terms.append(_Term(m.group("src"), rel, m.group("dst")))
     if not terms:
         raise ValueError("empty motif pattern")
@@ -96,7 +69,7 @@ def _parse(pattern: str) -> list[_Term]:
 def _infer_families(terms: list[_Term]) -> dict[str, str]:
     fam: dict[str, str] = {}
     for t in terms:
-        for var, family in zip((t.src, t.dst), _REL_ENDPOINTS[t.rel]):
+        for var, family in zip((t.src, t.dst), EDGE_SCHEMA[t.rel]):
             if fam.setdefault(var, family) != family:
                 raise ValueError(
                     f"variable {var!r} bound to both {fam[var]} and {family}"
@@ -151,7 +124,7 @@ def find(g: GraphModel, pattern: str, attrs: bool = True) -> DataFrame:
     if attrs:
         for var, family in families.items():
             nodes = getattr(g, family)
-            id_col = _FAMILY_ID[family]
+            id_col, _ = NODE_SCHEMA[family]
             renamed = nodes.select(
                 *[
                     F.col(c).alias(f"{var}_id" if c == id_col else f"{var}_{c}")

@@ -47,8 +47,7 @@ def _run(question: str):
 def n05_fallback_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = plan(Q_FALLBACK)
     assert p.template == "fulltext", p
-    tokens = [w for t in p.terms for w in t.split()]
-    return fulltext_search(spark, sf_dir, tokens, require_all=True)
+    return fulltext_search(spark, sf_dir, p.tokens, require_all=True)
 
 
 def n06_formatted_answer(spark: SparkSession, sf_dir: str) -> DataFrame:

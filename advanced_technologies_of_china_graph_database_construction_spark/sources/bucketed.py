@@ -20,7 +20,7 @@ from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.graph import GraphModel
+from ..operators.graph import GraphModel, check_rel_type
 
 
 def _clear_stale_location(spark: SparkSession, tbl: str) -> None:
@@ -81,7 +81,9 @@ def write_bucketed_graph(
 def bucketed_traversal(spark: SparkSession, docs_tbl: str, edges_tbl: str,
                        rel_type: str) -> DataFrame:
     """docs ⋈ edges on the bucketed key: with matching bucket specs this
-    plans as a SortMergeJoin with NO Exchange on either side."""
+    plans as a SortMergeJoin with NO Exchange on either side.  An unknown
+    ``rel_type`` raises ``ValueError`` before it reaches the SQL filter."""
+    check_rel_type(rel_type)
     docs = spark.table(docs_tbl)
     edges = spark.table(edges_tbl).filter(f"rel_type = '{rel_type}'")
     return edges.join(docs, edges.src == docs.doc_id)

@@ -9,6 +9,10 @@ surface ≠ canonical (`csv_extractor.py:246-295`), and topic rels as
 properties render as ``[a,b]`` with ``"`` doubling for LOAD CSV
 (`utils.py:90-97`, F10).
 
+Node ids, labels and relationship endpoints come from the graph schema
+(`operators.graph.NODE_SCHEMA` / `EDGE_SCHEMA`), so the scoped headers
+follow the graph `build_graph` derives.
+
 Spark-first: each sink is a projection + ``distinct()`` + a distributed
 ``write.csv`` — idempotent overwrite replaces the reference's
 per-statement MERGE and its retry log (S8/S9 are moot under task
@@ -26,7 +30,7 @@ import re
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.graph import GraphModel
+from ..operators.graph import EDGE_SCHEMA, NODE_SCHEMA, GraphModel
 
 
 def render_list_literal(col: Column) -> Column:
@@ -50,8 +54,10 @@ def _write(df: DataFrame, path: str) -> None:
 
 
 def write_node_csvs(g: GraphModel, out_dir: str) -> dict[str, str]:
-    """S5: one CSV dataset per node family, ``:ID``/``:LABEL`` headers;
-    unique node per id (A5 first-wins collapse via dropDuplicates)."""
+    """S5: one CSV dataset per node family, ``:ID``/``:LABEL`` headers
+    (docs carry their own label column, every other family its schema
+    label); unique node per id (A5 first-wins collapse via
+    dropDuplicates)."""
     out: dict[str, str] = {}
     docs = g.docs.dropDuplicates(["doc_id"]).select(
         F.col("doc_id").alias(":ID"),
@@ -63,14 +69,10 @@ def write_node_csvs(g: GraphModel, out_dir: str) -> dict[str, str]:
     )
     out["documents"] = f"{out_dir}/document_nodes"
     _write(docs, out["documents"])
-    for name, df, id_col, label in (
-        ("authors", g.authors, "author_id", "Author"),
-        ("keywords", g.keywords, "keyword_id", "Keyword"),
-        ("organizations", g.orgs, "org_id", "Organization"),
-        ("addresses", g.addresses, "address_id", "Author_Address"),
-        ("topics", g.topics, "topic_id", "Topic"),
-    ):
-        nodes = df.dropDuplicates([id_col]).select(
+    for fam, (id_col, label) in list(NODE_SCHEMA.items())[1:]:
+        # the export's file names spell out the orgs family
+        name = "organizations" if fam == "orgs" else fam
+        nodes = getattr(g, fam).dropDuplicates([id_col]).select(
             F.col(id_col).alias(":ID"), F.lit(label).alias(":LABEL"), "name"
         )
         out[name] = f"{out_dir}/{name}_nodes"
@@ -78,21 +80,12 @@ def write_node_csvs(g: GraphModel, out_dir: str) -> dict[str, str]:
     return out
 
 
-# rel_type → (start node label, end node label) for scoped ID headers.
-REL_ENDPOINTS = {
-    "AUTHORED": ("Author", "Document"),
-    "HAS_KEYWORD": ("Document", "Keyword"),
-    "PUBLISHED_BY": ("Document", "Organization"),
-    "AUTHOR_ADDRESS": ("Document", "Author_Address"),
-    "HAS_TOPIC": ("Document", "Topic"),
-    "ALIAS_OF": ("Keyword", "Keyword"),
-}
-
-
 def write_relationship_csvs(g: GraphModel, out_dir: str) -> dict[str, str]:
-    """S6: deduped (start,end,type) tuples, one dataset per rel type."""
+    """S6: deduped (start,end,type) tuples, one dataset per rel type,
+    ID headers scoped by the endpoint families' labels."""
     out: dict[str, str] = {}
-    for rel, (s_label, e_label) in REL_ENDPOINTS.items():
+    for rel, (src, dst) in EDGE_SCHEMA.items():
+        s_label, e_label = NODE_SCHEMA[src][1], NODE_SCHEMA[dst][1]
         rels = (
             g.edges.filter(F.col("rel_type") == rel)
             .select(

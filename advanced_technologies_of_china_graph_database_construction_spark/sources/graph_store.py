@@ -5,9 +5,10 @@ storage replaces Neo4j's native store").
 Layout:
 
 ```
-<root>/nodes/docs/            one dataset per node family, docs
-<root>/nodes/authors/           partitioned by `label` so label-union
-<root>/nodes/...                predicates (P10) become partition pruning
+<root>/nodes/docs/            one dataset per node family of the graph
+<root>/nodes/authors/           schema (`graph.NODE_SCHEMA`), docs
+<root>/nodes/...                partitioned by `label` so label-union
+                                predicates (P10) become partition pruning
 <root>/edges/                 single dataset partitioned by `rel_type`:
                                 `edges_of(rel)` reads exactly one
                                 partition directory — the Spark analogue
@@ -35,9 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.graph import GraphModel
-
-_NODE_FAMILIES = ("docs", "authors", "keywords", "orgs", "addresses", "topics")
+from ..operators.graph import NODE_SCHEMA, GraphModel
 
 
 def write_graph(g: GraphModel, root: str, edge_partitions: int = 24) -> None:
@@ -53,7 +52,7 @@ def write_graph(g: GraphModel, root: str, edge_partitions: int = 24) -> None:
     regardless — co-location at rest needs the s09 ``bucketBy`` table
     face, not this store."""
     g.docs.write.mode("overwrite").partitionBy("label").parquet(f"{root}/nodes/docs")
-    for fam in _NODE_FAMILIES[1:]:
+    for fam in list(NODE_SCHEMA)[1:]:
         getattr(g, fam).write.mode("overwrite").parquet(f"{root}/nodes/{fam}")
     (
         g.edges.repartitionByRange(edge_partitions, "rel_type", "src")
@@ -68,7 +67,7 @@ def write_graph(g: GraphModel, root: str, edge_partitions: int = 24) -> None:
 def read_graph(spark: SparkSession, root: str) -> GraphModel:
     """Reload a persisted graph; rel-type filters prune edge partitions
     (verify with `.explain`: `PartitionFilters: [isnotnull(rel_type), ...]`)."""
-    nodes = {fam: spark.read.parquet(f"{root}/nodes/{fam}") for fam in _NODE_FAMILIES}
+    nodes = {fam: spark.read.parquet(f"{root}/nodes/{fam}") for fam in NODE_SCHEMA}
     edges = spark.read.parquet(f"{root}/edges").select(
         "src", "dst", F.col("rel_type").cast("string").alias("rel_type")
     )

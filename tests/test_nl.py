@@ -52,6 +52,9 @@ def test_planner_fallback_unparseable():
     # 'about' rule needs a quoted keyword; with none it must degrade
     assert p.template == planner.FALLBACK_TEMPLATE
     assert "spark" in p.terms and "joins" in p.terms
+    # the fallback scans search every word of every quoted term
+    p = planner.plan('Find documents mentioning "merge batch" and \'cold\'')
+    assert (p.terms, p.tokens) == (["merge batch", "cold"], ["merge", "batch", "cold"])
 
 
 def test_extract_terms_quote_styles():
@@ -346,14 +349,20 @@ def test_formatter_values():
 
 def test_schema_catalog_reflects_live_schemas(spark):
     from advanced_technologies_of_china_graph_database_construction_spark.nl import catalog as nlcat
-    from advanced_technologies_of_china_graph_database_construction_spark.operators.graph import build_graph
+    from advanced_technologies_of_china_graph_database_construction_spark.operators.graph import (
+        EDGE_SCHEMA,
+        build_graph,
+    )
 
     g = build_graph(spark, SF)
     cat = nlcat.schema_catalog(g)
     for fam in ("g_docs", "g_authors", "g_keywords", "g_orgs", "g_addresses", "g_topics"):
         assert fam in cat
-    for rel in ("AUTHORED", "HAS_KEYWORD", "PUBLISHED_BY", "AUTHOR_ADDRESS", "HAS_TOPIC", "ALIAS_OF"):
-        assert rel in cat
+    # each relationship with its direction, so a flipped edge fails
+    lines = cat.splitlines()
+    assert "  (g_authors) -[AUTHORED]-> (g_docs)" in lines
+    for rel, (src, dst) in EDGE_SCHEMA.items():
+        assert f"  (g_{src}) -[{rel}]-> (g_{dst})" in lines, rel
     # live-derived: doc properties come from the actual schema
     assert "title:string" in cat and "year:int" in cat
 

@@ -1,15 +1,29 @@
 """The full graph workload must be reachable from spark.sql over the
-registered views — pure-SQL traversals agree with the DataFrame plans."""
+registered views — pure-SQL traversals agree with the DataFrame plans —
+and the declared graph schema must be the graph build_graph derives."""
 
 from __future__ import annotations
 
+import dataclasses
+from functools import reduce
+
+import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
 from advanced_technologies_of_china_graph_database_construction_spark.operators.graph import (
+    EDGE_SCHEMA,
+    NODE_SCHEMA,
+    GraphModel,
     build_graph,
     register_graph_views,
 )
 from advanced_technologies_of_china_graph_database_construction_spark.plans.graph_queries import (
     KEYWORD,
     g10_docs_per_year_for_keyword,
+)
+from advanced_technologies_of_china_graph_database_construction_spark.sources.bucketed import (
+    bucketed_traversal,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -47,3 +61,44 @@ def test_sql_catalog_describes_views(spark):
         for r in spark.sql("SELECT DISTINCT rel_type FROM g_edges").collect()
     }
     assert {"AUTHORED", "HAS_KEYWORD", "PUBLISHED_BY", "AUTHOR_ADDRESS", "HAS_TOPIC"} <= rels
+
+
+def test_schema_matches_derived_graph(spark):
+    """The declared schema is the graph build_graph derives: the same rel
+    types, every edge endpoint present in its family's id column, and
+    one GraphModel field per node family plus the two edge frames."""
+    g = build_graph(spark, SF)
+    assert [f.name for f in dataclasses.fields(GraphModel)] == [
+        *NODE_SCHEMA, "edges", "kw_alias"
+    ]
+    for fam, (id_col, _) in NODE_SCHEMA.items():
+        assert id_col in getattr(g, fam).columns, fam
+    rels = {r["rel_type"] for r in g.edges.select("rel_type").distinct().collect()}
+    assert rels == set(EDGE_SCHEMA)
+
+    def orphans(rel: str, end: str, fam: str) -> DataFrame:
+        id_col, _ = NODE_SCHEMA[fam]
+        nodes = getattr(g, fam).select(F.col(id_col).alias(end))
+        return (
+            g.edges_of(rel).join(nodes, end, "left_anti")
+            .select(F.lit(f"{rel}.{end}").alias("endpoint"))
+        )
+
+    checks = [
+        orphans(rel, end, fam)
+        for rel, fams in EDGE_SCHEMA.items()
+        for end, fam in zip(("src", "dst"), fams)
+    ]
+    bad = reduce(DataFrame.unionByName, checks).groupBy("endpoint").count().collect()
+    assert bad == [], bad
+
+
+def test_unknown_rel_type_fails_loudly(spark):
+    """A typo'd rel type raises instead of filtering the edges to nothing
+    (which would send an answer quietly on to the full-text fallback)."""
+    g = build_graph(spark, SF)
+    typo = r"unknown rel type 'HAS_KEYWORDS'; known: \['ALIAS_OF', "
+    with pytest.raises(ValueError, match=typo):
+        g.edges_of("HAS_KEYWORDS")
+    with pytest.raises(ValueError, match=typo):
+        bucketed_traversal(spark, "bkt_docs", "bkt_edges", "HAS_KEYWORDS")
