@@ -171,7 +171,10 @@ def build_graph(spark: SparkSession, sf_dir: str, *, use_cache: bool = True) -> 
 
 def _serve_graph(spark: SparkSession, sf_dir: str) -> GraphModel:
     """The store-backed model of ``sf_dir`` with its frames persisted;
-    (re)writes the store first when its marker is absent or stale."""
+    (re)writes the store first when its marker is absent or stale.  The
+    marker names the source files and the code that derives and writes
+    the store, so an edit to either invalidates it."""
+    from ..plans.fingerprint import code_digest
     from ..sources.graph_store import read_graph, write_graph
 
     # the store directory keys on basename PLUS an abspath digest: two
@@ -186,7 +189,7 @@ def _serve_graph(spark: SparkSession, sf_dir: str) -> GraphModel:
     digest = hashlib.md5(ap.encode()).hexdigest()[:10]
     root = os.path.join(_STORE_ROOT, f"{os.path.basename(ap)}-{digest}")
     marker = os.path.join(root, _STORE_MARKER)
-    fingerprint = _source_fingerprint(sf_dir)
+    fingerprint = f"{_source_fingerprint(sf_dir)}|code:{code_digest(_build_graph_uncached, write_graph)}"
     if not (os.path.exists(marker) and open(marker).read().strip() == fingerprint):
         write_graph(_build_graph_uncached(spark, sf_dir), root)
         # Atomic marker write (temp + rename): a concurrent reader either

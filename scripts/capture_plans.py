@@ -1,13 +1,13 @@
 #!/usr/bin/env python
 """Capture .explain('formatted') for every bench-flagged spec into
-plans/<round>/<name>_<tag>.txt — the optimization round's before/after
-plan evidence (guide §1: measure first; §7.2: read the plan).
+plans/r<N>/<name>_<tag>.txt — the optimization round's before/after
+plan evidence (guide §1: measure first; §7.2: read the plan).  N is the
+round the driver's next gate records (``registry.next_gate_round``).
 
 Usage: python scripts/capture_plans.py <tag> [name ...]
   tag    'before' / 'after' (file suffix)
   names  optional subset of spec names; default = all bench specs
          plus the bench.py incremental-pair frames.
-Env:   SPARK_GRAFT_PLAN_ROUND (default 'r17') picks the plans/ subdir.
 """
 
 from __future__ import annotations
@@ -18,7 +18,10 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from advanced_technologies_of_china_graph_database_construction_spark import get_spark
-from advanced_technologies_of_china_graph_database_construction_spark.plans.registry import all_specs
+from advanced_technologies_of_china_graph_database_construction_spark.plans.registry import (
+    all_specs,
+    next_gate_round,
+)
 
 
 def main() -> None:
@@ -28,7 +31,7 @@ def main() -> None:
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        os.environ.get("SPARK_GRAFT_PLAN_ROUND", "r17"),
+        f"r{next_gate_round()}",
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("atcgdc-plan-capture")

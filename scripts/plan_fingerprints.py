@@ -1,35 +1,30 @@
 #!/usr/bin/env python
-"""Refresh PLAN_FINGERPRINTS.json — the derived plan-change signal the
-registry's gate order auto-pins on (see ``plans/fingerprint.py``).
+"""Refresh PLAN_FINGERPRINTS.json, ``{spec: {"fp": hex16, "round": N}}``
+— the regate signal the registry's gate order pins on.
 
-Builds every registered spec's DataFrame at sf0.001 on a bare default-
-config session (the driver's session shape), hashes the normalized
-analyzed-plan string, and merges with the committed file:
+Builds every registered spec at sf0.001 on a bare default-config session
+(the driver's session shape) and fingerprints it (``plans/fingerprint.py``:
+the normalized analyzed plan, the oracle text and the package code the
+build ran; code reached only from a branch the build never takes, or run
+only in Python workers, escapes).  Merge rule against the committed file:
 
-  - fingerprint unchanged  → keep the stored round (no pin);
-  - fingerprint CHANGED → record round = next gate round (max
-    CORRECTNESS_r* + 1), which pins the spec until that round's gate
-    proves it green;
-  - spec NEW TO THE FILE → seed round = its latest green gate round
-    (the plan being fingerprinted is the one that gate proved), so
-    first-time seeding pins nothing; never-gated specs use the next
-    round (irrelevant — they sort first as never-gated anyway);
-  - ``--selfcheck``: build each plan a second time in a fresh
-    ``spark.newSession()``; a spec whose two normalized plans differ is
-    recorded as ``"fp": "unstable"`` and exempted from auto-pinning
-    (otherwise it would re-pin every round forever).  A spec already
-    marked unstable stays unstable without --selfcheck.
+  - fingerprint unchanged → keep the stored round (no pin);
+  - fingerprint CHANGED → round = the next gate round (one past the
+    newest CORRECTNESS_r*), pinning the spec until that gate proves it;
+  - spec NEW TO THE FILE → round = its latest green gate round (the code
+    that gate proved), so seeding pins nothing;
+  - ``--selfcheck``: build each spec again in ``spark.newSession()``; a
+    spec whose two fingerprints differ is recorded ``"unstable"`` and
+    never pinned (it would re-pin every round); it stays unstable on
+    runs without --selfcheck.
 
-The session always runs at parallelism 32 (``local[32]``, and
-``SPARK_GRAFT_CPUS=32`` for the package's shuffle-partition conf),
-whatever the caller's ``SPARK_GRAFT_CPUS``: the stored file was made at
-32, and a plan whose shape follows the core count (d42's seeded epoch
-shuffle) would otherwise drift on a smaller box with no code change.
-
-Run once per round after the last plan-touching commit, then commit the
-JSON.  Streaming specs EXECUTE during the build (their fn runs the
-micro-batch loop before returning the result frame), so expect a few
-minutes — comparable to scripts/gate_replica.py.
+The session runs at parallelism 32 (``local[32]``, and
+``SPARK_GRAFT_CPUS=32`` for the shuffle-partition conf) whatever the
+caller's ``SPARK_GRAFT_CPUS``: a plan whose shape follows the core count
+(d42's seeded epoch shuffle) would otherwise drift with no code change.
+Streaming specs execute during the build, so a run takes minutes.  Run
+it after the last commit that touches code a spec reaches; commit the
+JSON.
 
 Usage:
     python scripts/plan_fingerprints.py [sf_dir] [--selfcheck]
@@ -38,10 +33,8 @@ Usage:
 from __future__ import annotations
 
 import os
-import re
 import sys
 import time
-from pathlib import Path
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # before any package import: the package reads it for its shuffle width
@@ -50,36 +43,23 @@ os.environ["SPARK_GRAFT_CPUS"] = "32"
 from pyspark.sql import SparkSession  # noqa: E402
 
 
-def next_gate_round() -> int:
-    root = Path(__file__).resolve().parents[1]
-    rounds = [
-        int(m.group(1))
-        for p in root.glob("CORRECTNESS_r*.json")
-        if (m := re.search(r"r(\d+)", p.stem))
-    ]
-    return max(rounds, default=0) + 1
-
-
 def main() -> int:
     args = [a for a in sys.argv[1:] if a != "--selfcheck"]
     selfcheck = "--selfcheck" in sys.argv[1:]
     sf = args[0] if args else "/root/testdata/sf0.001"
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("plan-fingerprints")
-        .getOrCreate()
-    )
+    spark = SparkSession.builder.master("local[32]").appName("plan-fingerprints").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     from advanced_technologies_of_china_graph_database_construction_spark.plans.fingerprint import (
         UNSTABLE,
         load_fingerprints,
-        plan_fingerprint,
         save_fingerprints,
+        spec_fingerprint,
     )
     from advanced_technologies_of_china_graph_database_construction_spark.plans.registry import (
         all_specs,
         gate_history,
+        next_gate_round,
     )
 
     stored = load_fingerprints()
@@ -97,8 +77,8 @@ def main() -> int:
             print(f"{s.name:36s} unstable(kept)  {0.0:6.2f}s", flush=True)
             continue
         try:
-            fp = plan_fingerprint(s.fn(spark, sf))
-            if selfcheck and plan_fingerprint(s.fn(second, sf)) != fp:
+            fp = spec_fingerprint(lambda: s.fn(spark, sf), s.oracle)
+            if selfcheck and spec_fingerprint(lambda: s.fn(second, sf), s.oracle) != fp:
                 out[s.name] = {"fp": UNSTABLE, "round": rnd}
                 unstable.append(s.name)
                 status = "UNSTABLE"
@@ -106,7 +86,7 @@ def main() -> int:
                 out[s.name] = prev
                 status = "ok"
             elif prev is None:
-                # seed: this plan is the one the spec's latest green
+                # seed: this code is the one the spec's latest green
                 # gate row proved — adopting that round pins nothing
                 out[s.name] = {"fp": fp, "round": history.get(s.name, rnd)}
                 status = "seeded"

@@ -120,3 +120,18 @@ def test_concurrent_first_builds_write_the_store_once(spark, tmp_path, monkeypat
         t.join()
     assert len(writes) == 1, writes
     assert models[0] is not None and models[0] is models[1]
+
+
+def test_store_is_rebuilt_after_its_derivation_changes(spark, tmp_path, monkeypatch, edit_source):
+    """The store marker covers the code that derives and writes the
+    store: after an edit to the derivation, a new process (an empty
+    memo) serves the new rows, not the old store's."""
+    from advanced_technologies_of_china_graph_database_construction_spark.operators import graph
+
+    monkeypatch.setattr(graph, "_STORE_ROOT", str(tmp_path / "stores"))
+    monkeypatch.setattr(graph, "_GRAPH_CACHE", {})
+    title = lambda g: g.docs.orderBy("doc_id").first()["title"]  # noqa: E731
+    assert title(graph.build_graph(spark, SF)).startswith("DOC-")
+    edit_source(graph, "_build_graph_uncached", 'F.lit("DOC-")', 'F.lit("DOX-")')
+    monkeypatch.setattr(graph, "_GRAPH_CACHE", {})
+    assert title(graph.build_graph(spark, SF)).startswith("DOX-")

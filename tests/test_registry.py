@@ -2,8 +2,9 @@
 budget-bounded (50 specs/round), so never-gated specs must sort before
 already-green ones, and staler green rows before fresher ones.  The
 assertions use the registry's own ``effective_round`` key (which treats
-``PLAN_CHANGED_REGATE`` members as staler than every green spec), so a
-legitimate plan-change pin can never contradict these invariants.
+a spec whose fingerprint changed after its last green row as staler
+than every green spec), so a legitimate pin can never contradict these
+invariants.
 """
 
 from __future__ import annotations
@@ -14,10 +15,10 @@ from advanced_technologies_of_china_graph_database_construction_spark.plans.fing
     normalize_plan,
 )
 from advanced_technologies_of_china_graph_database_construction_spark.plans.registry import (
-    PLAN_CHANGED_REGATE,
     all_specs,
     effective_round,
     gate_history,
+    next_gate_round,
 )
 
 
@@ -34,8 +35,8 @@ def test_never_gated_specs_run_first():
 
 
 def test_plan_changed_pins_precede_every_green_spec():
-    """Pins — hand pins and fingerprint drifts alike — sort before every
-    spec whose green gate row still stands."""
+    """Pins — fingerprints first seen after the spec's last green row —
+    sort before every spec whose green gate row still stands."""
     history = gate_history()
     if not history:
         return
@@ -57,8 +58,8 @@ def test_gate_order_is_stalest_green_first():
 def test_every_pin_reaches_the_gate():
     """The correctness gate runs the first 50 specs of ``all_specs()``;
     a pin beyond that budget would never be re-proved.  A pin is any
-    spec the gate order sorts at -0.5: a hand pin or a recorded
-    fingerprint drift."""
+    spec the gate order sorts at -0.5: a recorded fingerprint round
+    newer than its last green row."""
     history = gate_history()
     if not history:
         return
@@ -66,11 +67,6 @@ def test_every_pin_reaches_the_gate():
     first = {s.name for s in specs[:50]}
     pinned = {s.name for s in specs if effective_round(s.name, history) == -0.5}
     assert pinned <= first, sorted(pinned - first)
-
-
-def test_pins_name_registered_specs():
-    names = {s.name for s in all_specs()}
-    assert PLAN_CHANGED_REGATE <= names
 
 
 def test_no_duplicate_names():
@@ -89,6 +85,22 @@ def test_fingerprint_drift_auto_pins():
     assert effective_round("x", history, {}) == 7.0
     # never-gated beats any fingerprint state
     assert effective_round("y", history, {"y": {"fp": "ab", "round": 9}}) == -1.0
+
+
+def test_gate_rounds_come_from_one_reader(tmp_path, monkeypatch):
+    """gate_history and next_gate_round read the same CORRECTNESS_r*
+    files: a changed fingerprint is recorded for the round after the
+    newest file, so it pins until that round proves the spec."""
+    import json
+
+    from advanced_technologies_of_china_graph_database_construction_spark.plans import registry
+
+    green = {"rows_match": True, "schema_match": True, "hash_match": True}
+    (tmp_path / "CORRECTNESS_r3.json").write_text(json.dumps({"a": green, "b": green}))
+    (tmp_path / "CORRECTNESS_r5.json").write_text(json.dumps({"a": green, "b": {**green, "hash_match": False}}))
+    monkeypatch.setattr(registry, "_ROOT", tmp_path)
+    assert gate_history() == {"a": 5, "b": 3}
+    assert next_gate_round() == 6
 
 
 def test_fingerprint_file_names_registered_specs():
