@@ -3,22 +3,26 @@
 The reference hands these algorithms to Neo4j; here each is a
 DataFrame message-passing loop — scatter is an edges⋈vector join,
 combine a groupBy, apply a join back onto the vertex state — with a
-fixed round count (or an exact convergence witness) so every result is
-deterministic and SQL-oracle-able.  Operator families:
+fixed round count or an exact convergence witness, so every result is
+deterministic and SQL-oracle-able.  Where a loop has a witness, a
+round count is a BOUND on that one loop, not a second algorithm:
+``None`` runs it to the fixpoint (``bfs_distances(max_hops=None)``,
+``k_core(n_rounds=None)``), and a finite bound still stops early once
+a round changes nothing.  Operator families:
 
 - rank vectors: ``pagerank``, ``personalized_pagerank`` (one shared
   power-iteration loop) and ``hits``;
 - communities: ``label_propagation``, ``louvain_refine_pass``;
-- cohesion: ``triangle_count``, ``k_core``, ``k_truss``;
-- distances and paths: ``bfs_distances``, ``multi_source_bfs``,
-  ``shortest_path_counts`` and ``brandes_dependencies`` (one shared
-  forward-σ layer loop);
+- cohesion: ``triangle_count``, ``k_core`` (one peel loop), ``k_truss``;
+- distances and paths: ``bfs_distances`` and ``multi_source_bfs`` (one
+  shared frontier-relaxation loop, ``_reach``), ``shortest_path_counts``
+  and ``brandes_dependencies`` (one shared forward-σ layer loop);
 - directed structure: ``strongly_connected_components``.
 
 Connected components live in ``operators.connected_components``.  The
 scatter-key edge cache, the round-plus-witness action, the two-endpoint
-restriction, the edge-weight guard and the node-set rule are shared by
-every loop via ``operators.superstep``.
+restriction, the edge guard (no NULL endpoint, no invalid weight) and
+the node-set rule are shared by every loop via ``operators.superstep``.
 
 Superstep materialization (the GraphX Pregel pattern): each round's
 iterated frame is localCheckpointed, so round r never re-derives the
@@ -28,11 +32,12 @@ base graph through r levels of joins.
 from __future__ import annotations
 
 from functools import reduce
+from itertools import count
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .superstep import node_set, positive_weights, restrict, scatter_cache, settle
+from .superstep import node_set, restrict, scatter_cache, settle, valid_edges
 
 
 def symmetric_edges(pairs: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -131,7 +136,7 @@ def pagerank(
     count as tie strength), same plan shape (the weighted out-degree
     folds into the hoisted edge frame exactly like the count).
     NULL, NaN and non-positive weights are DROPPED before anything else
-    (``superstep.positive_weights``).  The node set is derived from the
+    (``superstep.valid_edges``).  The node set is derived from the
     POST-filter edges, so a node whose every incident edge is dropped
     leaves the graph entirely (no rank row) — a zero-strength node is
     no node, consistent with the edges themselves; a node that keeps
@@ -151,7 +156,7 @@ def pagerank(
     """
     if dangling not in ("drop", "redistribute"):
         raise ValueError(f"dangling={dangling!r}; use 'drop' or 'redistribute'")
-    edges = positive_weights(edges, weight).localCheckpoint(eager=True)
+    edges = valid_edges(edges, weight).localCheckpoint(eager=True)
     # n is a driver scalar used as a literal, read in the checkpoint's action
     nodes, (n,) = settle(node_set(edges), F.count(F.lit(1)))
     if n == 0:
@@ -198,7 +203,7 @@ def personalized_pagerank(
         # EMPTY graph — the r12 sf0.1 g33 incident): it would fabricate
         # a phantom NULL node carrying the whole teleport mass
         raise ValueError("personalized_pagerank seeds must be non-NULL")
-    edges = positive_weights(edges, weight)
+    edges = valid_edges(edges, weight)
     node_type = edges.schema["src"].dataType
     sdf = edges.sparkSession.createDataFrame(
         [(s,) for s in seed_list],
@@ -237,7 +242,7 @@ def label_propagation(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     """
     # Scatter-key cache (see superstep.scatter_cache): the loop joins on
     # edges.src every round, so only the |V| label vector shuffles.
-    with scatter_cache(edges) as edges:
+    with scatter_cache(valid_edges(edges)) as edges:
         nodes = node_set(edges).localCheckpoint(eager=True)
         labels = nodes.withColumn("label", F.col("node"))
         for _ in range(n_iter):
@@ -299,7 +304,7 @@ def hits(edges: DataFrame, n_iter: int = 3) -> DataFrame:
         # zero iterations would L1-normalize an all-zero authority
         # vector (0/0 → NULL everywhere) — reject rather than emit nulls
         raise ValueError("hits needs n_iter >= 1")
-    edges = edges.localCheckpoint(eager=True)  # superstep pattern, see module
+    edges = valid_edges(edges).localCheckpoint(eager=True)  # superstep pattern, see module
     nodes = node_set(edges).localCheckpoint(eager=True)
     hub = nodes.withColumn("hub", F.lit(1.0))
     with scatter_cache(edges, "src") as e_src, scatter_cache(edges, "dst") as e_dst:
@@ -334,9 +339,7 @@ def hits(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     )
 
 
-def k_core(
-    edges: DataFrame, k: int, n_rounds: int = 3, until_converged: bool = False
-) -> DataFrame:
+def k_core(edges: DataFrame, k: int, n_rounds: int | None = 3) -> DataFrame:
     """(node, degree): the subgraph surviving ``n_rounds`` of synchronous
     k-core peeling over symmetric ``edges(src, dst)``, with each node's
     degree inside it — the standard cohesion/filtering primitive
@@ -346,33 +349,36 @@ def k_core(
     order-free — unlike sequential peeling, so rounds are deterministic
     and SQL-oracle-able as unrolled iterations).  A round is one
     degree aggregation + two semi-joins (src side, dst side) — two
-    shuffles, the same superstep budget as ``pagerank``.  When a round
-    removes nothing the remaining rounds are no-ops, so with enough
-    rounds the result IS the exact k-core; a fixed ``n_rounds`` yields
-    the deterministic n-round approximation both engines compute
-    identically.  Nodes whose every edge is peeled away drop out of the
-    output (a k-core member by definition keeps degree ≥ k).
+    shuffles, the same superstep budget as ``pagerank``.  Nodes whose
+    every edge is peeled away drop out of the output (a k-core member
+    by definition keeps degree ≥ k).
 
-    Unlike the node-vector iterations (pagerank/LPA), the EDGE SET
-    itself is what iterates here, so each round materializes via
-    localCheckpoint: without it round r re-derives the base graph
-    through r levels of joins — measured on the g28 spec at sf0.01:
-    6.8 s → 1.4 s end-to-end (0.5 s for the peeling rounds alone once
-    the input edges are materialized), and at 100 TB the
-    unmaterialized form recomputes the full co-occurrence join
-    O(rounds²) times.  Checkpoint blocks are released by the
-    ContextCleaner when the result goes out of scope.
+    ``n_rounds`` is a BOUND on one peel loop, not a mode: peeling only
+    ever REMOVES edges, so the edge count is a strictly decreasing
+    potential until the fixpoint, and each round's count — read by the
+    round's own ``superstep.settle`` action — is an exact convergence
+    test (stronger than the count+xxhash fingerprint
+    connected_components needs: there the edge set is REWRITTEN, not
+    shrunk).  The loop stops at ``n_rounds`` rounds or at the first
+    round that removes nothing, whichever comes first; the rounds a
+    fixed bound would have spent after that are no-ops, so they are
+    skipped.  ``n_rounds=None`` peels to the EXACT k-core, in ≤ |V|
+    rounds; a finite bound yields the deterministic n-round
+    approximation the unrolled SQL oracles (g28, g31) replay.  Edges
+    with a NULL endpoint are dropped up front (``superstep.valid_edges``).
 
-    ``until_converged=True`` peels to the EXACT k-core regardless of
-    graph depth (``n_rounds`` is then ignored): peeling only ever
-    REMOVES edges, so the edge count is a strictly decreasing potential
-    until the fixpoint — one count per round, read by the round's own
-    ``superstep.settle`` action, is an exact convergence test, stronger
-    than the probabilistic count+xxhash fingerprint
-    connected_components needs (there the edge set is REWRITTEN, not
-    shrunk, so counts alone can't witness change).  Termination is
-    guaranteed in ≤ |V| rounds.  The fixed-round mode stays the default
-    because it is what the unrolled SQL oracle (g28) can express.
+    The EDGE SET itself iterates, so each round materializes the
+    shrunken frame: without it round r re-derives the base graph
+    through r levels of joins (measured on g28 at sf0.01: 6.8 s →
+    1.4 s end-to-end).  Re-deriving the restriction from the base frame
+    per round (r16) regressed g28 0.56× / g31 0.60× on the driver: with
+    heavy peeling, O(rounds × |E₀|) base re-scans lose to O(Σ|E_r|)
+    materialization.  One loop for both bounds replaced a fixed-round
+    checkpoint loop and a separate converged ``settle`` loop; Spark
+    jobs at sf0.01 (min of 3, 4 cores): g31 14 → 11 (its 3-round bound
+    outlasts the fixpoint), g28 22 → 22; sf0.1 min-of-runs (two
+    alternating passes per tree) g31 3.18 / 3.21 s → 2.95 / 2.87 s,
+    g28 2.56 / 2.99 s → 2.55 / 2.80 s.
     """
     def peel(e: DataFrame) -> DataFrame:
         # Lazy-checkpoint the degree aggregate: both semi-join legs
@@ -387,140 +393,129 @@ def k_core(
         )
         return restrict(e, deg.filter(F.col("deg") >= k).select("node"))
 
-    if until_converged:
-        # peeling only removes edges, so an unchanged count is the
-        # fixpoint; each round's count is its superstep.settle witness
-        edges, (prev,) = settle(edges, F.count(F.lit(1)))
-        while prev:
-            edges, (cur,) = settle(peel(edges), F.count(F.lit(1)))
-            if cur == prev:
-                break
-            prev = cur
-    else:
-        # Each round materializes the SHRUNKEN edge frame, so round r
-        # (and the output aggregate) scans the previous round's
-        # checkpoint, never the full base frame.  Re-deriving the
-        # restriction from the base frame per round (r16) regressed g28
-        # 0.56× / g31 0.60× on the driver: with heavy peeling,
-        # O(rounds × |E₀|) base re-scans lose to O(Σ|E_r|)
-        # materialization, and the final frame ballooned from a
-        # checkpoint scan to a 10-Exchange re-derivation.
-        if n_rounds > 0:
-            edges = edges.localCheckpoint(eager=True)
-        for _ in range(n_rounds):
-            edges = peel(edges).localCheckpoint(eager=True)
+    n_edges = F.count(F.lit(1))
+    edges, (prev,) = settle(valid_edges(edges), n_edges)
+    for _ in _rounds(n_rounds):
+        edges, (cur,) = settle(peel(edges), n_edges)
+        if cur == prev:  # nothing peeled: the fixpoint
+            break
+        prev = cur
     return edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("degree")
     )
 
 
+def _rounds(bound: int | None):
+    """The round indices of a loop bounded by ``bound`` rounds, or
+    unbounded for ``None`` — the loop's own fixpoint test ends it."""
+    return count() if bound is None else range(bound)
+
+
+def _reach(
+    edges: DataFrame, start: DataFrame, keys: list[str], max_rounds: int | None
+) -> DataFrame:
+    """(*keys, node, dist) rows of min-plus frontier relaxation from the
+    ``start`` rows ``(*keys, node, dist)`` over ``edges(src, dst,
+    __step)`` (the caller's src-partitioned ``scatter_cache``) — the one
+    superstep loop behind ``bfs_distances`` (``keys=[]``) and
+    ``multi_source_bfs`` (``keys=["seed"]``: each seed's frontier rides
+    the same rounds as a payload column).
+
+    Each round (the Pregelix superstep: only the vertices that changed
+    last round send messages):
+
+    1. join the edges against the FRONTIER — the rows that improved in
+       the round before — and take the (*keys, dst) min of
+       dist + __step;
+    2. keep only the offers no reached row already beats: a left-anti
+       join on (*keys, node) and ``reached.dist <= offer.dist``;
+    3. ``settle`` those improvements as the next frontier, counting it
+       in the same action.
+
+    The loop stops after ``max_rounds`` rounds (``None``: no bound) or
+    at an empty frontier, the exact fixpoint witness.  After r rounds
+    every (*keys, node)'s least dist is its cheapest path of ≤ r edges:
+    a row that did not improve last round already made its offers the
+    round it did.  The result is the union of the start rows and every
+    settled frontier — checkpoint scans only, so it never reads the
+    edge cache.  Unweighted, a node first reached at hop h has exact
+    distance h, so each (*keys, node) appears once; weighted, a node
+    can improve more than once and the caller takes the per-node min.
+    """
+    reached = frontier = start
+    for _ in _rounds(max_rounds):
+        offers = (
+            edges.join(frontier, edges.src == frontier.node)
+            .groupBy(*keys, F.col("dst").alias("node"))
+            .agg(F.min(F.col("dist") + F.col("__step")).alias("dist"))
+            .alias("o")
+        )
+        same = [F.col(f"o.{c}") == F.col(f"r.{c}") for c in (*keys, "node")]
+        improved = offers.join(
+            reached.alias("r"), [*same, F.col("r.dist") <= F.col("o.dist")], "left_anti"
+        )
+        frontier, (n_new,) = settle(improved, F.count(F.lit(1)))
+        if n_new == 0:  # exact fixpoint witness
+            break
+        reached = reached.unionByName(frontier)
+    return reached
+
+
 def bfs_distances(
     edges: DataFrame,
     source,
-    max_hops: int = 4,
-    until_converged: bool = False,
+    max_hops: int | None = 4,
     weight: str | None = None,
 ) -> DataFrame:
     """(node, dist): shortest directed path from ``source`` to every
     node reachable within ``max_hops`` relaxation rounds — the Pregel
     BFS / k-hop-neighborhood primitive behind reach queries
-    ("everything within 3 hops of this entity").
+    ("everything within 3 hops of this entity").  ``max_hops=None``
+    relaxes to the EXACT whole-graph distances (the empty-frontier
+    fixpoint: ≤ diameter+1 rounds unweighted, ≤ |V|−1 with positive
+    weights); a finite bound is what the unrolled SQL oracles replay
+    (g27 unweighted, g34 weighted), and the loop still stops early at
+    an empty frontier.  The source always owns its (source, 0) row,
+    also without an edge — the per-seed semantics ``multi_source_bfs``
+    shares.
 
     ``weight`` names an edge-weight column and switches the relaxation
     to MIN-PLUS (Bellman-Ford supersteps): cand = dist(src) + w instead
     of dist + 1, so ``dist`` becomes the cheapest total weight over
     paths of ≤ ``max_hops`` edges (double; hop counts stay int when
-    unweighted).  NULL, NaN and non-positive weights are DROPPED up
-    front — the same ``superstep.positive_weights`` guard as
-    ``pagerank``: a NULL weight would propagate NULL distances through
-    least(), and a non-positive weight breaks both termination
-    (negative cycles) and the monotone convergence argument, neither of
-    which a distributed fixed-point should accept silently.  A node
-    whose every edge drops leaves the graph, exactly like pagerank's
-    contract.
+    unweighted).  Edges with a NULL endpoint, and NULL, NaN and
+    non-positive weights, are DROPPED up front — the
+    ``superstep.valid_edges`` guard ``pagerank`` shares: a NULL weight
+    would propagate NULL distances, and a non-positive weight breaks
+    both termination (negative cycles) and the monotone convergence
+    argument.  A node whose every edge drops leaves the graph, exactly
+    like pagerank's contract.
 
-    Fixed-hop mode relaxes from the FULL reached set each round — one
-    edges⋈dist join + one groupBy min + one |V| least-fold, exactly
-    what the unrolled SQL oracles replay (g27 unweighted, g34
-    weighted).  A frontier-only (SPFA) fixed-hop variant was measured
-    and REVERTED in r6: on the expander-shaped bench graphs the
-    wavefront covers most nodes by round 3, so the message savings
-    never materialize while the improved-flag bookkeeping and the
-    extra per-round reads of the checkpointed state cost real time
-    (g35 face at sf0.1: 5.1 s full relax vs 7.1 s frontier in the
-    bench harness).
-
-    ``until_converged=True`` relaxes to EXACT whole-graph distances
-    (``max_hops`` is then ignored) and DOES use frontier relaxation —
-    there the improved-set is load-bearing twice over: (a) it IS the
-    convergence witness ("frontier empty ⇔ fixpoint", an exact
-    per-row cand < dist comparison — integer-exact even with float
-    distances, replacing the pre-r6 mode-split witnesses: a (reached,
-    Σdist) pair whose float sum was only sound unweighted, and a |V|
-    self-join changed-count for weighted); and (b) convergence runs
-    diameter-many rounds, the regime where the settled interior NOT
-    re-scattering actually pays.  Exact for min-plus: any offer a
-    settled node could make was already made the round it last
-    improved.  Terminates in ≤ diameter+1 rounds unweighted, ≤ |V|−1
-    with positive weights.
+    The rounds are ``_reach``'s frontier relaxation for every bound.
+    It replaced two loops: a fixed-hop dense relax of the whole |V|
+    distance vector every round, and an improved-flag frontier over the
+    same dense vector for the converged mode.  A/B at the switch
+    (shared 4-core VM, min-of-runs, four alternating passes per tree):
+    Spark jobs at sf0.01 fell (g27 36 → 34, g34 34 → 33, g44 47 → 45),
+    but g44 at sf0.1 took 12.9–14.5 s on ``_reach`` vs 9.6–11.9 s on the
+    dense-flag loop.  Each ``_reach`` round shuffles the whole reached
+    union into its anti-join, and the weighted face needs that join's
+    ``dist`` condition; unweighted, a key-only anti-join is exact (no
+    later offer beats a reached row) and read 10.7 / 12.9 s in two
+    passes.  Measure that before bringing a dense relax back.
     """
     if source is None:
         # the g33 incident shape (min(src) over an empty graph): a NULL
         # source is always a caller bug and would silently yield empty
         raise ValueError("bfs_distances source must be non-NULL")
     step = F.col(weight).cast("double") if weight else F.lit(1)
-    zero = F.lit(0.0) if weight else F.lit(0)
-    steps = positive_weights(edges, weight).select("src", "dst", step.alias("__step"))
-    with scatter_cache(steps) as edges:
-        # an edge-less source still owns its (source, 0) row — the
-        # per-seed semantics multi_source_bfs documents as shared
-        src_row = edges.sparkSession.createDataFrame([(source,)], ["node"])
-        dist = (
-            node_set(edges, src_row)
-            .select("node", F.when(F.col("node") == F.lit(source), zero).alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-
-        def candidates(fr: DataFrame) -> DataFrame:
-            return (
-                edges.join(fr, edges.src == fr.node)
-                .filter(F.col("dist").isNotNull())
-                .select(
-                    F.col("dst").alias("node"),
-                    (F.col("dist") + F.col("__step")).alias("cand"),
-                )
-                .groupBy("node")
-                .agg(F.min("cand").alias("cand"))
-            )
-
-        if until_converged:
-            frontier = dist.filter(F.col("dist").isNotNull())
-            improved = (
-                F.when(F.col("cand").isNull(), F.lit(False))
-                .when(F.col("dist").isNull(), F.lit(True))
-                .otherwise(F.col("cand") < F.col("dist"))
-            )
-            while True:
-                stepped, (n_improved,) = settle(
-                    dist.join(candidates(frontier), "node", "left").select(
-                        "node",
-                        F.least(F.col("dist"), F.col("cand")).alias("dist"),
-                        improved.alias("__improved"),
-                    ),
-                    F.count_if("__improved"),
-                )
-                frontier = stepped.filter("__improved").select("node", "dist")
-                dist = stepped.select("node", "dist")
-                if n_improved == 0:  # exact fixpoint witness
-                    break
-        else:
-            for _ in range(max_hops):
-                dist = (
-                    dist.join(candidates(dist), "node", "left")
-                    .select("node", F.least(F.col("dist"), F.col("cand")).alias("dist"))
-                    .localCheckpoint(eager=True)
-                )
-    return dist.filter(F.col("dist").isNotNull())
+    start = edges.sparkSession.createDataFrame([(source,)], ["node"]).select(
+        "node", (F.lit(0.0) if weight else F.lit(0)).alias("dist")
+    )
+    steps = valid_edges(edges, weight).select("src", "dst", step.alias("__step"))
+    with scatter_cache(steps) as cached:
+        reached = _reach(cached, start, [], max_hops)
+    return reached.groupBy("node").agg(F.min("dist").alias("dist")) if weight else reached
 
 
 def _sigma_layers(
@@ -536,7 +531,7 @@ def _sigma_layers(
     Per layer ONE frontier⋈edges join + map-side-combinable sum: the
     frontier is layer-sized, ``edges`` is the caller's src-partitioned
     ``scatter_cache``, and the layer-membership probe joins the
-    checkpointed ``dist`` table on dst."""
+    ``dist`` table — a union of checkpointed frames — on dst."""
     layers = [
         dist.filter(F.col("dist") == 0)
         .select(*keys, "node", F.lit(1).cast("long").alias("sigma"))
@@ -572,11 +567,12 @@ def shortest_path_counts(
     distinct convention, where the min-fold faces are naturally
     dup-immune but a SUM is not).
 
-    Scale shape: one fixed-hop BFS (two shuffles per round), then one
-    join + sum per layer.  Nothing quadratic: σ is a per-node int64,
-    never a path enumeration.
+    Scale shape: one hop-bounded BFS, then one join + sum per layer.
+    The BFS result is already a union of checkpointed frontiers, so it
+    is read as is (a re-checkpoint was one more eager job).  Nothing
+    quadratic: σ is a per-node int64, never a path enumeration.
     """
-    dist = bfs_distances(edges, source, max_hops).localCheckpoint(eager=True)
+    dist = bfs_distances(edges, source, max_hops)
     with scatter_cache(edges.select("src", "dst").distinct()) as e:
         layers = _sigma_layers(e, dist, max_hops, [])
     return reduce(
@@ -597,60 +593,32 @@ def multi_source_bfs(edges: DataFrame, sources: list, max_hops: int = 4) -> Data
     The naive form — one ``bfs_distances`` call per seed — re-scans
     and re-shuffles the edge set k times and serializes k fixpoint
     loops on the driver.  Here the seed id rides the state as a
-    payload column, so ALL seeds' frontiers advance in the SAME round,
-    touching the |E| side once per round instead of once per round per
-    seed.  The edge frame is the src-partitioned ``scatter_cache``, so
-    only the frontier moves per round.
-
-    State is only REACHED rows — settled (seed, node, dist) plus the
-    frontier of rows first reached last round; each round joins edges
-    against the frontier only, takes a (seed, dst) min-fold and
-    anti-joins the settled set, with an exact empty-frontier early
-    exit.  In unweighted BFS a node first reached at hop h has exact
-    distance h, so settled rows never update.  State is Σ reached, not
-    |S|·|V|, and each round's one driver action both stores the new
-    frontier and counts it (``superstep.settle``).  A dense layout — a
-    fixed-hop full relax over the |S|·|V| vector — was measured slower
-    and removed: on the g35 graph most nodes are reached by hop 2, so
-    late frontiers are near-empty and the early exit skips whole
-    rounds (warm min-of-4 at sf0.1 on local[32]: sparse 4.97 s vs
-    dense 7.79 s).
+    payload column of ``_reach``'s rows (``keys=["seed"]``), so ALL
+    seeds' frontiers advance in the SAME round, touching the |E| side
+    once per round instead of once per round per seed.  State is only
+    REACHED rows, Σ reached rather than |S|·|V|, and the empty-frontier
+    exit skips the rounds after every seed's reach is exhausted.  A
+    dense |S|·|V| layout was measured slower and removed earlier.
+    Moving this loop onto ``_reach`` (seeds deduplicated on the driver,
+    start rows not checkpointed) took Spark jobs at sf0.01 (min of 3,
+    4 cores) g35 31 → 29 and g36 32 → 30, but not wall time: g35 at
+    sf0.1 (min-of-runs, four alternating passes per tree on a shared
+    VM) read 5.6–7.4 s vs 5.0–6.0 s on the old loop, whose anti-join
+    matched on (seed, node) alone; see ``bfs_distances``.
     """
-    seeds = list(sources)
+    seeds = list(dict.fromkeys(sources))
     if not seeds:
         raise ValueError("multi_source_bfs needs at least one source")
     if any(s is None for s in seeds):
         # the g33 rule (see personalized_pagerank): a NULL seed is a
         # caller bug and would report a phantom (NULL, NULL, 0) row
         raise ValueError("multi_source_bfs sources must be non-NULL")
-    with scatter_cache(edges.select("src", "dst")) as edges:
-        settled = (
-            edges.sparkSession.createDataFrame([(s,) for s in seeds], ["seed"])
-            .distinct()
-            .select("seed", F.col("seed").alias("node"), F.lit(0).alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        frontier = settled
-        for _ in range(max_hops):
-            new, (n_new,) = settle(
-                edges.join(frontier, edges.src == frontier.node)
-                .select(
-                    "seed",
-                    F.col("dst").alias("node"),
-                    (F.col("dist") + 1).alias("dist"),
-                )
-                .groupBy("seed", "node")
-                .agg(F.min("dist").alias("dist"))
-                .join(settled.select("seed", "node"), ["seed", "node"], "left_anti"),
-                F.count(F.lit(1)),
-            )
-            if n_new == 0:  # exact fixpoint witness
-                break
-            # settled grows as a union of ≤ max_hops CHECKPOINTED frames —
-            # cheap metadata, no re-materialization of the whole set
-            settled = settled.unionByName(new)
-            frontier = new
-    return settled
+    start = edges.sparkSession.createDataFrame([(s,) for s in seeds], ["seed"]).select(
+        "seed", F.col("seed").alias("node"), F.lit(0).alias("dist")
+    )
+    steps = valid_edges(edges).select("src", "dst", F.lit(1).alias("__step"))
+    with scatter_cache(steps) as cached:
+        return _reach(cached, start, ["seed"], max_hops)
 
 
 def brandes_dependencies(
@@ -670,7 +638,8 @@ def brandes_dependencies(
     per-seed dependency from a seed sample.
 
     Forward: ``multi_source_bfs`` (one |E| touch per round for ALL
-    seeds), then ``_sigma_layers`` keyed by (seed, dst).
+    seeds; its result is a union of checkpointed frontiers, read as
+    is), then ``_sigma_layers`` keyed by (seed, dst).
     Backward: per layer k (deepest first) ONE edges⋈(σ,δ) join —
     δ(v) = Σ_{w: dist(w)=k+1, v→w} σ(v)/σ(w)·(1+δ(w)) — layer-sized
     frontiers, map-side-combinable sums, float δ over exact int64 σ.
@@ -680,7 +649,7 @@ def brandes_dependencies(
     The |E| frame is one ``scatter_cache`` reused by every forward and
     backward round.
     """
-    dist = multi_source_bfs(edges, sources, max_hops).localCheckpoint(eager=True)
+    dist = multi_source_bfs(edges, sources, max_hops)
     with scatter_cache(edges.select("src", "dst").distinct()) as e:
         layers = _sigma_layers(e, dist, max_hops, ["seed"])
         # backward: δ at the deepest layer is 0 by definition (no
@@ -926,10 +895,11 @@ def strongly_connected_components(
        (wrong) labeling.
 
     Self-loops are dropped (they never change SCC structure); the node
-    set is the non-NULL edge endpoints, like every operator in this
-    module — union isolated nodes in as singletons at the call site if
-    the caller's universe is wider.  Ids keep the input's type.  Each
-    loop body checkpoints the iterated frame (the k_core rationale:
+    set is the endpoints of the edges left after
+    ``superstep.valid_edges`` drops every edge with a NULL endpoint,
+    like every operator in this module — union isolated nodes in as
+    singletons at the call site if the caller's universe is wider.  Ids
+    keep the input's type.  Each loop body checkpoints the iterated frame (the k_core rationale:
     round r must not re-derive the base graph through r join levels)
     and reads its convergence count in the same Spark action
     (``superstep.settle``).
@@ -940,6 +910,7 @@ def strongly_connected_components(
     chain of SCCs) is bounded by trim eating all acyclic structure
     first, which is the bulk of real web/citation graphs.
     """
+    edges = valid_edges(edges)
     edge_count = F.count(F.lit(1))
     e, (n_e,) = settle(
         edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct(),
@@ -956,9 +927,7 @@ def strongly_connected_components(
     # peeled.  In both cases the node was never on a cycle — a cycle's
     # edges only vanish when the cycle itself is assigned — so any node
     # missing from `assigned` at return time is provably a singleton.
-    # NULL is no node: its edges never enter the loop (src != NULL is
-    # NULL), so it must not come back as a (NULL, NULL) component.
-    universe = node_set(edges).dropna().localCheckpoint(eager=True)
+    universe = node_set(edges).localCheckpoint(eager=True)
 
     def _finish(done: DataFrame) -> DataFrame:
         missing = universe.join(done.select("node"), "node", "left_anti")

@@ -10,8 +10,9 @@ below is made here once instead of by hand in every loop:
   broadcast gate sizes and read its row count from the same action;
 - ``restrict``: an edge frame cut to (or away from) a node set on both
   endpoints;
-- ``positive_weights``: the edge-weight validity guard;
-- ``node_set``: the vertex set ``src ∪ dst (∪ extra ids)``.
+- ``valid_edges``: the edge guard every operator applies up front —
+  no NULL endpoint, and no NULL, NaN or non-positive weight;
+- ``node_set``: the vertex set ``src ∪ dst (∪ extra ids)``, never NULL.
 
 Fixed-round loops read no witness, so they cut lineage with a plain
 ``localCheckpoint(eager=True)`` per round.
@@ -104,32 +105,35 @@ def restrict(edges: DataFrame, nodes: DataFrame, how: str = "left_semi") -> Data
     )
 
 
-def positive_weights(edges: DataFrame, weight: str | None) -> DataFrame:
-    """``edges`` without the rows whose ``weight`` is NULL, NaN or ≤ 0
-    (unchanged when ``weight`` is None).  A zero-weight tie is no tie; a
-    zero weighted out-degree yields 0/0 = NaN rank messages, a NULL
-    weight leaks its node's rank mass or propagates NULL distances, and
-    a non-positive weight breaks min-plus termination.  A node whose
-    every edge drops leaves the graph."""
-    if not weight:
-        return edges
-    return edges.filter(
-        F.col(weight).isNotNull()
-        & ~F.isnan(F.col(weight).cast("double"))
-        # NaN compares GREATER than every double in Spark SQL, so a
-        # literal NaN weight passes `> 0` and poisons every
-        # downstream rank/distance (r12 review)
-        & (F.col(weight) > 0)
-    )
+def valid_edges(edges: DataFrame, weight: str | None = None) -> DataFrame:
+    """``edges`` without the rows that are no edge: a NULL ``src`` or
+    ``dst`` (NULL is no node, so an edge that touches it would count
+    toward a real node's degree and send it messages), and, when
+    ``weight`` names a column, a weight that is NULL, NaN or ≤ 0.  A
+    zero-weight tie is no tie; a zero weighted out-degree yields
+    0/0 = NaN rank messages, a NULL weight leaks its node's rank mass or
+    propagates NULL distances, and a non-positive weight breaks min-plus
+    termination.  A node whose every edge drops leaves the graph."""
+    keep = F.col("src").isNotNull() & F.col("dst").isNotNull()
+    if weight:
+        keep &= (
+            F.col(weight).isNotNull()
+            & ~F.isnan(F.col(weight).cast("double"))
+            # NaN compares GREATER than every double in Spark SQL, so a
+            # literal NaN weight passes `> 0` and poisons every
+            # downstream rank/distance (r12 review)
+            & (F.col(weight) > 0)
+        )
+    return edges.filter(keep)
 
 
 def node_set(edges: DataFrame, *extra: DataFrame) -> DataFrame:
-    """Distinct (node) over the edge endpoints ``src ∪ dst``, plus the
-    ``node`` column of each ``extra`` frame (ids that own a row even
-    without an edge, e.g. an isolated seed)."""
+    """Distinct non-NULL (node) over the edge endpoints ``src ∪ dst``,
+    plus the ``node`` column of each ``extra`` frame (ids that own a row
+    even without an edge, e.g. an isolated seed)."""
     nodes = edges.select(F.col("src").alias("node")).unionByName(
         edges.select(F.col("dst").alias("node"))
     )
     for ids in extra:
         nodes = nodes.unionByName(ids)
-    return nodes.distinct()
+    return nodes.filter(F.col("node").isNotNull()).distinct()

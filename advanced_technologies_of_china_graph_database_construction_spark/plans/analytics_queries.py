@@ -1319,10 +1319,10 @@ def g44_reach_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded-reach analogue (`neo4j_query_executor.py:287-292`'s hop
     patterns generalized past a fixed k): exact whole-graph shortest
     paths from the smallest document over the symmetric doc↔keyword
-    graph, via `bfs_distances(until_converged=True)` — frontier
-    relaxation with the empty-frontier fixpoint witness, the face g27/
-    g35 (fixed-hop) deliberately do not cover.  The oracle unrolls the
-    relaxation past the graph's eccentricity (see G44_ORACLE_DEPTH —
+    graph, via `bfs_distances(max_hops=None)` — frontier relaxation
+    with no round bound, ended by the empty-frontier fixpoint witness,
+    the face g27/g35 (hop-bounded) deliberately do not cover.  The
+    oracle unrolls the relaxation past the graph's eccentricity (see G44_ORACLE_DEPTH —
     over-unrolling a converged min-fold is a no-op, so oracle depth is
     NOT a semantics knob the way it is for fixed-round faces)."""
     from ..operators.analytics import bfs_distances
@@ -1333,7 +1333,7 @@ def g44_reach_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         # base-table contract says non-empty, but the g33 lesson stands:
         # any driver-side seed lookup short-circuits to a typed empty
         return spark.createDataFrame([], "node_id long, dist int")
-    d = bfs_distances(symmetric_edges(edges), source, until_converged=True)
+    d = bfs_distances(symmetric_edges(edges), source, max_hops=None)
     return d.select(F.col("node").alias("node_id"), "dist")
 
 
@@ -2163,7 +2163,7 @@ SPECS = [
         oracle=G44_SQL,
         category="analytics",
         description="variable-length traversal to CONVERGENCE (Cypher "
-        "*1.. analogue): bfs_distances(until_converged=True) with the "
+        "*1.. analogue): bfs_distances(max_hops=None), ended by the "
         "empty-frontier fixpoint witness; oracle unrolls the relaxation "
         "past the graph's eccentricity (over-unroll is a no-op)",
     ),

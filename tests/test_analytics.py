@@ -320,35 +320,37 @@ def test_kcore_converges_on_fixture(spark):
 
 def test_kcore_until_converged_deep_peel(spark):
     """A path graph peels one endpoint pair per round — far deeper than
-    any fixed default — and its exact 2-core is empty; the converged
-    mode must reach it, and must equal a generously-unrolled
-    fixed-round run on a seeded random graph (the count potential is an
-    exact witness because peeling only removes edges)."""
+    any fixed default — and its exact 2-core is empty; the unbounded
+    loop (``n_rounds=None``) must reach it, and must equal a
+    generously-bounded run on a seeded random graph (the count
+    potential is an exact witness because peeling only removes
+    edges)."""
     import random
 
     from advanced_technologies_of_china_graph_database_construction_spark.operators.analytics import k_core, symmetric_edges
 
     path = spark.createDataFrame([(i, i + 1) for i in range(12)], "src long, dst long")
-    assert k_core(symmetric_edges(path), 2, until_converged=True).count() == 0
+    assert k_core(symmetric_edges(path), 2, n_rounds=None).count() == 0
 
     rnd = random.Random(7)
     pairs = sorted({tuple(sorted((rnd.randrange(30), rnd.randrange(30)))) for _ in range(80)})
     pairs = [(a, b) for a, b in pairs if a != b]
     sym = symmetric_edges(spark.createDataFrame(pairs, "src long, dst long"))
-    conv = sorted(map(tuple, k_core(sym, 4, until_converged=True).collect()))
+    conv = sorted(map(tuple, k_core(sym, 4, n_rounds=None).collect()))
     deep = sorted(map(tuple, k_core(sym, 4, n_rounds=40).collect()))
     assert conv == deep
 
 
 def test_bfs_until_converged_matches_deep_unroll(spark):
-    """Diameter 14 ≫ the default hop bound: converged distances must be
-    the exact whole-path distances and equal a deep fixed unroll; a
-    disconnected pair stays unreached (absent), not infinite-looped."""
+    """Diameter 14 ≫ the default hop bound: unbounded distances
+    (``max_hops=None``) must be the exact whole-path distances and equal
+    a deep bounded run; a disconnected pair stays unreached (absent),
+    not infinite-looped."""
     from advanced_technologies_of_china_graph_database_construction_spark.operators.analytics import bfs_distances, symmetric_edges
 
     edge_list = [(i, i + 1) for i in range(14)] + [(100, 101)]
     sym = symmetric_edges(spark.createDataFrame(edge_list, "src long, dst long"))
-    conv = {r["node"]: r["dist"] for r in bfs_distances(sym, 0, until_converged=True).collect()}
+    conv = {r["node"]: r["dist"] for r in bfs_distances(sym, 0, max_hops=None).collect()}
     assert conv == {i: i for i in range(15)}
     deep = {r["node"]: r["dist"] for r in bfs_distances(sym, 0, max_hops=30).collect()}
     assert conv == deep
@@ -460,8 +462,9 @@ def test_weighted_ppr_uniform_weights_match_unweighted(spark):
 
 
 def _bellman_ford_ref(edges, source, rounds=None):
-    """Python min-plus reference: rounds=None relaxes to fixpoint."""
-    nodes = {u for u, _, _ in edges} | {v for _, v, _ in edges}
+    """Python min-plus reference: rounds=None relaxes to fixpoint.  The
+    source owns its (source, 0) row even without an edge."""
+    nodes = {u for u, _, _ in edges} | {v for _, v, _ in edges} | {source}
     dist = {n: (0.0 if n == source else None) for n in nodes}
     k = 0
     while rounds is None or k < rounds:
@@ -495,10 +498,33 @@ def test_weighted_sssp_matches_reference(spark):
         assert got == _bellman_ford_ref(rows, 1, rounds=hops), hops
     exact = {
         r["node"]: r["dist"]
-        for r in bfs_distances(df, 1, until_converged=True, weight="w").collect()
+        for r in bfs_distances(df, 1, max_hops=None, weight="w").collect()
     }
     assert exact == _bellman_ford_ref(rows, 1)
     assert exact[4] == 3.0 and exact[5] == 5.0  # cheap 3-hop beats direct edge
+
+
+def test_weighted_bfs_matches_bellman_ford_on_random_graphs(spark):
+    """Weighted ``bfs_distances`` against the Python Bellman-Ford
+    reference — which shares no code with the frontier loop — on a
+    random digraph with random positive weights, for every hop bound
+    0–5 and for ``max_hops=None``, and from a source with no edge.
+    Weights are dyadic, so every path sum is exact in any order."""
+    import random
+
+    from advanced_technologies_of_china_graph_database_construction_spark.operators.analytics import bfs_distances
+
+    rng = random.Random(5)
+    pairs = {(rng.randrange(20), rng.randrange(20)) for _ in range(50)}
+    rows = [(a, b, rng.choice((0.5, 1.0, 1.5, 2.0, 3.25))) for a, b in sorted(pairs) if a != b]
+    df = spark.createDataFrame(rows, "src long, dst long, w double")
+    for source, hops in [(0, h) for h in (0, 1, 2, 3, 4, 5, None)] + [(99, None)]:
+        got = {
+            r["node"]: r["dist"]
+            for r in bfs_distances(df, source, max_hops=hops, weight="w").collect()
+        }
+        assert got == _bellman_ford_ref(rows, source, rounds=hops), (source, hops)
+    assert len(_bellman_ford_ref(rows, 0)) > len(_bellman_ford_ref(rows, 0, rounds=2)) > 1
 
 
 def test_weighted_sssp_drops_nonpositive_and_null_weights(spark):
@@ -511,7 +537,7 @@ def test_weighted_sssp_drops_nonpositive_and_null_weights(spark):
     df = spark.createDataFrame(rows, "src long, dst long, w double")
     got = {
         r["node"]: r["dist"]
-        for r in bfs_distances(df, 1, until_converged=True, weight="w").collect()
+        for r in bfs_distances(df, 1, max_hops=None, weight="w").collect()
     }
     # 3 and 4 are unreachable once their only in-edges drop; 4 even
     # leaves the node set (its only incident edge was dropped)
@@ -527,33 +553,6 @@ def test_unweighted_bfs_unchanged_by_weight_generalization(spark):
     got = {r["node"]: r["dist"] for r in bfs_distances(df, 1, max_hops=4).collect()}
     assert got == {1: 0, 2: 1, 3: 2, 4: 1}
     assert all(isinstance(v, int) for v in got.values())
-
-
-def test_multi_source_bfs_matches_per_seed_runs(spark):
-    """One joint superstep loop must equal k independent single-source
-    BFS runs on a random graph — the correctness contract for carrying
-    the seed as a payload column."""
-    import random
-
-    from advanced_technologies_of_china_graph_database_construction_spark.operators.analytics import (
-        bfs_distances,
-        multi_source_bfs,
-    )
-
-    rng = random.Random(7)
-    rows = list({(rng.randrange(30), rng.randrange(30)) for _ in range(80)})
-    rows = [(a, b) for a, b in rows if a != b]
-    df = spark.createDataFrame(rows, "src long, dst long")
-    seeds = [0, 1, 2]
-    got = {
-        (r["seed"], r["node"]): r["dist"]
-        for r in multi_source_bfs(df, seeds, max_hops=3).collect()
-    }
-    want = {}
-    for s in seeds:
-        for r in bfs_distances(df, s, max_hops=3).collect():
-            want[(s, r["node"])] = r["dist"]
-    assert got == want and len(got) > len(seeds)
 
 
 @pytest.fixture
@@ -591,12 +590,26 @@ def test_multi_source_bfs_dedups_and_validates_seeds(spark, cache_manager):
     assert cache_manager.isEmpty()
 
 
+def _bfs_ref(rows, source, hops):
+    """Python layer-by-layer BFS: {node: hops from ``source``} within
+    ``hops`` hops; the source owns (source, 0) even without an edge."""
+    adj = {}
+    for a, b in rows:
+        adj.setdefault(a, []).append(b)
+    dist, layer = {source: 0}, [source]
+    for h in range(1, hops + 1):
+        layer = [v for u in layer for v in adj.get(u, ()) if v not in dist]
+        dist.update((v, h) for v in layer)
+    return dist
+
+
 def test_multi_source_bfs_equals_per_seed_bfs_on_random_graphs(spark):
     """The joint loop must return exactly the union of per-seed
-    ``bfs_distances`` runs — the contract its docstring names — on
-    random graphs, including an isolated seed and a max_hops horizon
-    shorter than the graph's eccentricity (so both truncation
-    behaviours align)."""
+    ``bfs_distances`` runs — the contract its docstring names — and of
+    per-seed Python BFS runs, which share no code with the frontier
+    loop both operators run, on random graphs, including an isolated
+    seed and a max_hops horizon shorter than the graph's eccentricity
+    (so both truncation behaviours align)."""
     import random
 
     from advanced_technologies_of_china_graph_database_construction_spark.operators.analytics import (
@@ -604,12 +617,18 @@ def test_multi_source_bfs_equals_per_seed_bfs_on_random_graphs(spark):
         multi_source_bfs,
     )
 
-    for seed_val, hops in ((11, 3), (23, 2), (37, 5)):
+    # (rng seed, id space, edge draws, seeds, hops); 99 is isolated
+    cases = [
+        (11, 25, 60, [0, 3, 99], 3),
+        (23, 25, 60, [0, 3, 99], 2),
+        (37, 25, 60, [0, 3, 99], 5),
+        (7, 30, 80, [0, 1, 2], 3),
+    ]
+    for seed_val, n_ids, n_draws, seeds, hops in cases:
         rng = random.Random(seed_val)
-        rows = list({(rng.randrange(25), rng.randrange(25)) for _ in range(60)})
+        rows = list({(rng.randrange(n_ids), rng.randrange(n_ids)) for _ in range(n_draws)})
         rows = [(a, b) for a, b in rows if a != b]
         df = spark.createDataFrame(rows, "src long, dst long")
-        seeds = [0, 3, 99]  # 99 is isolated: not in the 25-node id space
         got = {
             (r["seed"], r["node"]): r["dist"]
             for r in multi_source_bfs(df, seeds, max_hops=hops).collect()
@@ -619,7 +638,9 @@ def test_multi_source_bfs_equals_per_seed_bfs_on_random_graphs(spark):
             for s in seeds
             for r in bfs_distances(df, s, max_hops=hops).collect()
         }
-        assert got == want and (99, 99) in got
+        ref = {(s, n): d for s in seeds for n, d in _bfs_ref(rows, s, hops).items()}
+        assert got == want == ref, seed_val
+        assert len(got) > len(seeds) and all((s, s) in got for s in seeds)
 
 
 def test_bfs_null_source_raises_before_caching_edges(spark, cache_manager):
@@ -643,7 +664,7 @@ _SUPERSTEP_OPS = {
     "label_propagation": lambda e: an.label_propagation(e, 2),
     "hits": lambda e: an.hits(e, 2),
     "bfs_distances": lambda e: an.bfs_distances(e, 1, 2),
-    "bfs_distances_until_converged": lambda e: an.bfs_distances(e, 1, until_converged=True),
+    "bfs_distances_until_converged": lambda e: an.bfs_distances(e, 1, max_hops=None),
     "shortest_path_counts": lambda e: an.shortest_path_counts(e, 1, 2),
     "multi_source_bfs": lambda e: an.multi_source_bfs(e, [1, 3], 2),
     "brandes_dependencies": lambda e: an.brandes_dependencies(e, [1, 3], 2),
@@ -983,6 +1004,32 @@ def test_scc_null_endpoint_is_no_node(spark):
     df = spark.createDataFrame([(1, 2), (2, 1), (2, None), (3, 3)], "src long, dst long")
     got = [(r.node, r.component) for r in strongly_connected_components(df).collect()]
     assert sorted(got) == [(1, 1), (2, 1), (3, 3)]
+
+
+def test_null_endpoint_edges_change_no_result(spark):
+    """An edge with a NULL endpoint is no edge (``superstep.valid_edges``):
+    every operator gives the same result with such rows as without them
+    — no NULL node, no share of the teleport mass for it, no degree or
+    message along the NULL edge, and no node kept only by a NULL edge
+    (7 below)."""
+    ops = {
+        "pagerank": lambda e: an.pagerank(e, n_iter=2),
+        "personalized_pagerank": lambda e: an.personalized_pagerank(e, [1], n_iter=2),
+        "label_propagation": lambda e: an.label_propagation(e, 2),
+        "hits": lambda e: an.hits(e, 2),
+        "bfs_distances": lambda e: an.bfs_distances(e, 1, 3),
+        "multi_source_bfs": lambda e: an.multi_source_bfs(e, [1, 3], 3),
+        "k_core": lambda e: an.k_core(e, 2, 2),
+        "strongly_connected_components": lambda e: an.strongly_connected_components(e),
+    }
+    rows = [(1, 2), (2, 1), (2, 3), (3, 1)]
+    clean = spark.createDataFrame(rows, "src long, dst long")
+    dirty = spark.createDataFrame(
+        rows + [(3, None), (1, None), (None, 2), (7, None)], "src long, dst long"
+    )
+    for name, run in ops.items():
+        got, want = (sorted(map(tuple, run(e).collect()), key=repr) for e in (dirty, clean))
+        assert got == want, name
 
 
 def test_scc_backstop_raises_not_truncates(spark):
