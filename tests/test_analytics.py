@@ -603,6 +603,34 @@ def _bfs_ref(rows, source, hops):
     return dist
 
 
+def test_multi_source_bfs_matches_per_seed_runs(spark):
+    """One joint superstep loop must equal k independent single-source
+    BFS runs on a random graph — the correctness contract for carrying
+    the seed as a payload column."""
+    import random
+
+    from advanced_technologies_of_china_graph_database_construction_spark.operators.analytics import (
+        bfs_distances,
+        multi_source_bfs,
+    )
+
+    rng = random.Random(7)
+    rows = list({(rng.randrange(30), rng.randrange(30)) for _ in range(80)})
+    rows = [(a, b) for a, b in rows if a != b]
+    df = spark.createDataFrame(rows, "src long, dst long")
+    seeds = [0, 1, 2]
+    got = {
+        (r["seed"], r["node"]): r["dist"]
+        for r in multi_source_bfs(df, seeds, max_hops=3).collect()
+    }
+    want = {}
+    for s in seeds:
+        for r in bfs_distances(df, s, max_hops=3).collect():
+            want[(s, r["node"])] = r["dist"]
+    ref = {(s, n): d for s in seeds for n, d in _bfs_ref(rows, s, 3).items()}
+    assert got == want == ref and len(got) > len(seeds)
+
+
 def test_multi_source_bfs_equals_per_seed_bfs_on_random_graphs(spark):
     """The joint loop must return exactly the union of per-seed
     ``bfs_distances`` runs — the contract its docstring names — and of
@@ -622,7 +650,6 @@ def test_multi_source_bfs_equals_per_seed_bfs_on_random_graphs(spark):
         (11, 25, 60, [0, 3, 99], 3),
         (23, 25, 60, [0, 3, 99], 2),
         (37, 25, 60, [0, 3, 99], 5),
-        (7, 30, 80, [0, 1, 2], 3),
     ]
     for seed_val, n_ids, n_draws, seeds, hops in cases:
         rng = random.Random(seed_val)
